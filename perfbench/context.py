@@ -17,6 +17,7 @@ class Context:
     seconds: float
     trace: bool
     cores: int  # Spark local[k]: one core fewer than the machine has
+    sf_dir: str  # the input tables (perfbench/fixtures/sf0.01)
     tracer: Tracer
     tally: Tally = field(default_factory=Tally)
 
@@ -24,14 +25,6 @@ class Context:
         p = os.path.join(self.work, *parts)
         os.makedirs(os.path.dirname(p), exist_ok=True)
         return p
-
-    def data_dir(self, sf: float, tables: list[str] | None = None) -> str:
-        """Generate this run's input tables (before any set-up is timed)."""
-        import datagen
-
-        out = os.path.join(self.work, "data", f"seed{self.seed}", f"sf{sf:g}")
-        datagen.write(sf, self.seed, out, tables)
-        return out
 
     def repeated_setup(self, build, teardown, repeats: int = 3):
         """Run ``build`` ``repeats`` times, tearing down all but the last;

@@ -23,7 +23,10 @@ from typing import Any
 import numpy as np
 import pandas as pd
 
-from datagen import TABLES
+TABLES = (
+    "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
+    "events", "documents", "embeddings",
+)
 
 
 def connect(sf_dir: str):

@@ -1,10 +1,11 @@
 """Untimed priming of a fresh checkout, run once before any measured run.
 
 Fills the on-disk and OS caches a user pays for once per install: the
-bytecode of the engine and the benchmark (``__pycache__``), and the pages
-of the Spark jars (one throwaway local session runs a trivial job). Runs
-in its own process so the measured process starts exactly as cold as
-every later run.
+bytecode of the engine and the benchmark (``__pycache__``), the pages of
+the Spark jars, and the replay chunks the streaming ops read
+(``streaming.replay.ensure_chunks`` over the fixture ``events`` table,
+written under the engine's ``.scratch/replay``). Runs in its own process,
+so every measured process starts in a JVM that has run no job.
 
     python3 perfbench/prime.py
 """
@@ -15,7 +16,14 @@ import compileall
 import os
 import sys
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+ROOT = os.path.dirname(HERE)
+sys.path[:0] = [HERE, ROOT]
+
+from layers import FIXTURES  # noqa: E402
+
+#: (variant, chunks) of the replay ops in ``layers.COLD_OPS``.
+REPLAY_CHUNKS = ("plain", 4)
 
 
 def main() -> None:
@@ -25,15 +33,18 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    import __spark_entry__  # noqa: F401  (first import of the registry)
+    from python_kinesis_streaming_spark.streaming.replay import ensure_chunks
+
     spark = (
         SparkSession.builder.master("local[1]").appName("perfbench-prime")
         .config("spark.ui.showConsoleProgress", "false").getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    spark.stop()
-    sys.path.insert(0, ROOT)
-    import __spark_entry__  # noqa: F401  (first import of the registry)
+    try:
+        ensure_chunks(spark, FIXTURES, *REPLAY_CHUNKS)
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

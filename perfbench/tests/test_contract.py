@@ -2,13 +2,14 @@
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 
 import pandas as pd
 
 import oracle
-from layers import END_TO_END, PER_LAYER
+from layers import END_TO_END, FIXTURES, PER_LAYER
 
 ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -28,6 +29,15 @@ def test_listed_workloads_exist():
     from run import WORKLOADS
 
     assert {w["name"] for w in _bench()["workloads"]} <= set(WORKLOADS)
+
+
+def test_fixtures_match_their_checksums():
+    with open(os.path.join(FIXTURES, "SHA256SUMS")) as f:
+        sums = dict(reversed(line.split()) for line in f if line.strip())
+    assert set(sums) == {f"{t}.parquet" for t in oracle.TABLES}
+    for name, digest in sums.items():
+        with open(os.path.join(FIXTURES, name), "rb") as f:
+            assert hashlib.sha256(f.read()).hexdigest() == digest, name
 
 
 def test_mismatch_keeps_ints_and_floats_apart():

@@ -8,27 +8,22 @@ of the first-call times (op call to DataFrame, then ``toPandas``). One
 pass is one sample, however long ``--seconds`` is, because a second pass
 in the same process would be warm.
 
-``setup_s`` is the process-cold set-up the grader pays (JVM
-launch, session, registry import), measured once: repeated in-process
-set-ups of this workload cost ~0.15 s each and spread 27% across runs,
-so their median says little. After it, an untimed throwaway session
-materializes the replay chunks (``streaming.replay.ensure_chunks``) for
-this run's inputs, which a user pays once per dataset, on disk; the pass
-then runs in a new bare session. Every result is checked against its
-``oracle_sql()`` twin in DuckDB, outside the timed region.
+``setup_s`` is the process-cold set-up the grader pays (JVM launch,
+session, registry import), measured once: repeated in-process set-ups of
+this workload cost ~0.15 s each and spread 27% across runs, so their
+median says little. The pass runs right after it in the same session, in
+a JVM that has run no job; the replay chunks the streaming ops read were
+built once per checkout by ``prime.py``, in its own process. Every result
+is checked against its ``oracle_sql()`` twin in DuckDB, outside the timed
+region.
 """
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
 import time
 
 from context import Context, Outcome
 from layers import COLD_OPS
-
-SF = 0.01
 
 
 def _bare_session(ctx: Context, confs: dict[str, str]):
@@ -42,29 +37,6 @@ def _bare_session(ctx: Context, confs: dict[str, str]):
     return spark
 
 
-def _prime_replay_chunks(ctx: Context, sf_dir: str) -> None:
-    from python_kinesis_streaming_spark.streaming.replay import ensure_chunks
-
-    spark = _bare_session(ctx, {})
-    try:
-        ensure_chunks(spark, sf_dir, "plain", 4)  # the only variant COLD_OPS replay
-    finally:
-        spark.stop()
-
-
-def _drop_scratch(ctx: Context, sf_dir: str) -> None:
-    """Remove what the ops left under the engine's ``.scratch/`` for this
-    run's inputs (replay chunks, table copies): the directories carry the
-    inputs' ``sf_tag`` and would pile up with every seed."""
-    from python_kinesis_streaming_spark.sources.tables import sf_tag
-
-    tag = sf_tag(sf_dir)
-    scratch = os.path.join(ctx.root, ".scratch")
-    for pattern in (f"*{tag}*", f"*/*{tag}*"):
-        for d in glob.glob(os.path.join(scratch, pattern)):
-            shutil.rmtree(d, ignore_errors=True)
-
-
 def run(ctx: Context) -> Outcome:
     import oracle
     from measure import summarize_progress
@@ -73,7 +45,7 @@ def run(ctx: Context) -> Outcome:
         purge_program_modules, trace_confs,
     )
 
-    sf_dir = ctx.data_dir(SF)
+    sf_dir = ctx.sf_dir
     tr = ctx.tracer
     confs = trace_confs(ctx.work) if ctx.trace else {}
 
@@ -88,9 +60,6 @@ def run(ctx: Context) -> Outcome:
         return spark, queries, oracles
 
     (spark, queries, oracles), setup_times = ctx.repeated_setup(build, None, repeats=1)
-    spark.stop()
-    _prime_replay_chunks(ctx, sf_dir)
-    spark = _bare_session(ctx, confs)
     sc = spark.sparkContext
     listener = None
     if ctx.trace:
@@ -153,5 +122,4 @@ def run(ctx: Context) -> Outcome:
             pl[f"streaming.{key}"] = prog[key]
         out.eventlog = (eventlog_path(spark, ctx.work), t0_ms, t1_ms, 1)
     spark.stop()
-    _drop_scratch(ctx, sf_dir)
     return out
