@@ -1,6 +1,6 @@
 """Run one benchmark workload against the engine in this checkout.
 
-    python3 perfbench/run.py --workload kinesis_ingest --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload kinesis_ingest --seed 1 --seconds 10 --trace 0
 
 Prints each end-to-end metric with its unit and sample count, then, as the
 last line of stdout, one JSON object: ``{"correct", "attempted", "failed",

@@ -12,10 +12,13 @@ partition key ``<salt>-<user_id>``) through three legs:
    to terminated (driver-side reads).
 
 The unit of work is a round; ``latency_s`` is the median of at least
-``MIN_ROUNDS`` measured rounds. The first round of the process is
-discarded because it pays Python-worker start and JIT warm-up that later
-rounds do not. (Discarding a second round as well left the spread across
-runs unchanged, 10.7% against 10.6% over ten runs, and cost 5 s a run.)
+``MIN_ROUNDS`` measured rounds. The first ``WARMUP_ROUNDS`` rounds of
+the process are discarded: they pay Python-worker start and JIT warm-up
+that later rounds do not. With only the first round discarded, the next
+one was still the slowest of its run in nine of ten runs (median 5.14 s
+against 4.54 s for the fourth measured round, on a 4-vCPU VM); at the
+same five rounds a run, discarding two and taking the median of three
+would have cut the spread across those ten runs from 14.7% to 11.8%.
 The seed sets the record order and the partition-key salt; the records
 themselves are always the fixture ``events`` table. Every leg is checked
 against DuckDB over the same parquet: per ``event_type`` count, sum of
@@ -34,8 +37,8 @@ from context import Context, Outcome
 from measure import median, summarize_progress
 
 SHARDS = 4
-MIN_ROUNDS = 4
-WARMUP_ROUNDS = 1
+MIN_ROUNDS = 3
+WARMUP_ROUNDS = 2
 RECORD_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
