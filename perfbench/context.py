@@ -26,10 +26,11 @@ class Context:
         os.makedirs(os.path.dirname(p), exist_ok=True)
         return p
 
-    def repeated_setup(self, build, teardown, repeats: int = 3):
+    def repeated_setup(self, build, teardown, repeats: int):
         """Run ``build`` ``repeats`` times, tearing down all but the last;
         returns (last state, set-up times). Only the first set-up of a
-        process pays the JVM launch, so the median is a warm-JVM set-up."""
+        process pays the JVM launch, so with three or more the median is a
+        warm-JVM set-up."""
         times, state = [], None
         for _ in range(repeats):
             if state is not None:
