@@ -1,12 +1,8 @@
-"""Promotion ops: the r6/r7 library surface behind registry-shaped specs.
+"""Promotion ops: the r6/r7 library surface (codecs, lakehouse, Kinesis,
+tokenizer/classifier trainers, web/text parity) in the driver contract.
 
-The registry is frozen at 391 while the driver's grading window drains
-the backlog (PROMOTION.md has the ledger). Each op here is ALREADY in
-the driver's contract shape — a ``(spark, sf_dir) -> DataFrame``
-callable plus a DuckDB oracle — but lives in a parallel
-``PROMOTION_OPS`` dict that nothing imports in production, so
-``queries()`` stays at 391. At flip time (r9/r10) ``register_all()``
-pushes every spec through ``registry.op`` — one ``_OP_MODULES`` line.
+Each op registers with ``registry.op`` like every other operator module;
+PROMOTION.md keeps the inventory and the oracle strategy of each one.
 
 Oracle discipline (PROMOTION.md "Oracle strategies"):
 - closed-form arithmetic: payloads are built from deterministic integer
@@ -29,43 +25,13 @@ from __future__ import annotations
 
 import os
 import shutil
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from python_kinesis_streaming_spark.operators.scans import SCRATCH
-from python_kinesis_streaming_spark.registry import QueryFn
+from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table, sf_tag
-
-
-@dataclass
-class PromoSpec:
-    name: str
-    fn: QueryFn
-    oracle: str | None = None
-    scale_notes: str = field(default="")
-
-
-PROMOTION_OPS: dict[str, PromoSpec] = {}
-
-
-def promo_op(name: str, oracle: str | None = None, scale: str = ""):
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in PROMOTION_OPS:
-            raise ValueError(f"duplicate promotion op: {name}")
-        PROMOTION_OPS[name] = PromoSpec(name, fn, oracle, scale)
-        return fn
-
-    return deco
-
-
-def register_all() -> None:
-    """Flip: push every promotion spec into the global registry (r9/r10)."""
-    from python_kinesis_streaming_spark.registry import op
-
-    for spec in PROMOTION_OPS.values():
-        op(spec.name, oracle=spec.oracle, scale=spec.scale_notes)(spec.fn)
 
 
 def _clear_scratch(path: str) -> None:
@@ -103,7 +69,7 @@ class _bounded_shuffle:
 # ---------------------------------------------------------------------------
 
 
-@promo_op(
+@op(
     "media_png_roundtrip_stats",
     oracle="""
         WITH px AS (
@@ -194,7 +160,7 @@ def media_png_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "media_image_resize_checksum",
     oracle="""
         SELECT d.doc_id,
@@ -263,7 +229,7 @@ def media_image_resize_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "media_wav_roundtrip_stats",
     oracle="""
         WITH s AS (
@@ -348,7 +314,7 @@ def media_wav_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "media_flac_roundtrip_stats",
     oracle="""
         WITH s AS (
@@ -434,7 +400,7 @@ def media_flac_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "media_avi_demux_index",
     oracle="""
         WITH p AS (
@@ -550,7 +516,7 @@ def media_avi_demux_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@promo_op(
+@op(
     "shards_tar_roundtrip",
     oracle="""
         SELECT doc_id,
@@ -589,7 +555,7 @@ def shards_tar_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "warc_response_parity",
     oracle="""
         SELECT doc_id,
@@ -670,7 +636,7 @@ def warc_response_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "avro_ocf_roundtrip",
     oracle="""
         SELECT lang,
@@ -712,7 +678,7 @@ def avro_ocf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@promo_op(
+@op(
     "lakehouse_delete_modes_parity",
     oracle="""
         SELECT 'dv' AS mode,
@@ -768,7 +734,7 @@ def lakehouse_delete_modes_parity(
     return outs[0].unionByName(outs[1])
 
 
-@promo_op(
+@op(
     "lakehouse_merge_upsert_audit",
     oracle="""
         WITH merged AS (
@@ -840,7 +806,7 @@ def lakehouse_merge_upsert_audit(
 # ---------------------------------------------------------------------------
 
 
-@promo_op(
+@op(
     "pack_chunk_histogram",
     oracle="""
         WITH t AS (
@@ -886,7 +852,7 @@ def pack_chunk_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(F.count(F.lit(1)).alias("n_chunks"))
 
 
-@promo_op(
+@op(
     "pack_concat_audit",
     oracle="""
         SELECT CAST(sum(len(list_filter(string_split(text, ' '),
@@ -955,7 +921,7 @@ def pack_concat_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "span_dedup_parity",
     oracle="""
         WITH corpus AS (
@@ -1021,7 +987,7 @@ def span_dedup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "classifier_train_audit",
     oracle="""
         SELECT 256 AS dim,
@@ -1087,7 +1053,7 @@ def classifier_train_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "tokenizer_train_audit",
     oracle="""
         SELECT 'bpe' AS tokenizer, 10 AS units, TRUE AS lossless
@@ -1164,7 +1130,7 @@ def _tokenizer_train_audit_body(spark, docs):
 # ---------------------------------------------------------------------------
 
 
-@promo_op(
+@op(
     "html_extract_parity",
     oracle="""
         SELECT doc_id,
@@ -1210,7 +1176,7 @@ def html_extract_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "urls_normalize_parity",
     oracle="""
         SELECT doc_id,
@@ -1255,7 +1221,7 @@ def urls_normalize_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "robots_verdict_parity",
     oracle="""
         SELECT doc_id,
@@ -1314,7 +1280,7 @@ def robots_verdict_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return robots_allowed(urls, "url", rules)
 
 
-@promo_op(
+@op(
     "subtitles_align_parity",
     oracle="""
         WITH vids AS (
@@ -1412,7 +1378,7 @@ def subtitles_align_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@promo_op(
+@op(
     "mpegts_psi_parity",
     oracle="""
         WITH f AS (
@@ -1503,7 +1469,7 @@ def mpegts_psi_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "eventstream_framing_parity",
     oracle="""
         SELECT doc_id,
@@ -1561,7 +1527,7 @@ def eventstream_framing_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "media_jpeg_tolerance_audit",
     oracle="""
         SELECT doc_id,
@@ -1652,7 +1618,7 @@ def media_jpeg_tolerance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "snapshot_cdc_diff",
     oracle="""
         SELECT 'seed' AS stage,
@@ -1722,7 +1688,7 @@ def snapshot_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-@promo_op(
+@op(
     "kinesis_loopback_agg",
     oracle="""
         SELECT CAST(count(*) AS BIGINT) AS n_records,
@@ -1797,7 +1763,7 @@ def kinesis_loopback_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@promo_op(
+@op(
     "zip_shards_roundtrip",
     oracle="""
         SELECT doc_id,
@@ -1833,7 +1799,7 @@ def zip_shards_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "gopher_quality_parity",
     oracle="""
         WITH t AS (
@@ -1889,7 +1855,7 @@ def gopher_quality_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "media_gif_roundtrip_stats",
     oracle="""
         WITH px AS (
@@ -1977,7 +1943,7 @@ def media_gif_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "media_bmp_decode_stats",
     oracle="""
         WITH px AS (
@@ -2065,7 +2031,7 @@ def media_bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "audio_resample_parity",
     oracle="""
         WITH s AS (
@@ -2145,7 +2111,7 @@ def audio_resample_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "lakehouse_zorder_prune_audit",
     oracle="""
         SELECT 'a' AS col,
@@ -2217,7 +2183,7 @@ def lakehouse_zorder_prune_audit(
     )
 
 
-@promo_op(
+@op(
     "lakehouse_vacuum_audit",
     oracle="""
         SELECT CAST(count(*) AS BIGINT) AS n_rows,
@@ -2274,7 +2240,7 @@ def lakehouse_vacuum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@promo_op(
+@op(
     "media_mkv_demux_parity",
     oracle="""
         WITH f AS (
@@ -2386,7 +2352,7 @@ def media_mkv_demux_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "media_mp4_demux_parity",
     oracle="""
         SELECT doc_id,
@@ -2484,7 +2450,7 @@ def media_mp4_demux_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "kpl_roundtrip_parity",
     oracle="""
         WITH r AS (
@@ -2582,7 +2548,7 @@ def kpl_roundtrip_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "media_au_roundtrip_stats",
     oracle="""
         WITH s AS (
@@ -2666,7 +2632,7 @@ def media_au_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "avro_schema_evolution_agg",
     oracle="""
         SELECT CAST(count(*) AS BIGINT) AS n_docs,
@@ -2727,7 +2693,7 @@ def avro_schema_evolution_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@promo_op(
+@op(
     "media_tiff_decode_stats",
     oracle="""
         WITH px AS (
@@ -2944,7 +2910,7 @@ def media_tiff_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "media_exif_orientation_parity",
     oracle="""
         SELECT doc_id,
@@ -3045,7 +3011,7 @@ def media_exif_orientation_parity(
     )
 
 
-@promo_op(
+@op(
     "media_aiff_au_mulaw_stats",
     oracle="""
         WITH be AS (
@@ -3199,7 +3165,7 @@ def media_aiff_au_mulaw_stats(
     )
 
 
-@promo_op(
+@op(
     "image_transform_pipeline_checksum",
     oracle="""
         SELECT doc_id,
@@ -3321,7 +3287,7 @@ def image_transform_pipeline_checksum(
     )
 
 
-@promo_op(
+@op(
     "audio_standardize_roundtrip",
     oracle="""
         WITH m AS (
@@ -3459,7 +3425,7 @@ def audio_standardize_roundtrip(
     )
 
 
-@promo_op(
+@op(
     "pack_best_fit_audit",
     oracle="""
         SELECT CAST(sum(len(list_filter(string_split(text, ' '),
@@ -3551,7 +3517,7 @@ def pack_best_fit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "kcl_lease_coordination_agg",
     oracle="""
         SELECT CAST(count(*) AS BIGINT) AS n_records,
@@ -3647,7 +3613,7 @@ def kcl_lease_coordination_agg(
     )
 
 
-@promo_op(
+@op(
     "tokenizer_eval_report_audit",
     oracle="""
         SELECT t.tokenizer,
@@ -3716,7 +3682,7 @@ def tokenizer_eval_report_audit(
     )
 
 
-@promo_op(
+@op(
     "video_frames_seam_stats",
     oracle="""
         SELECT doc_id,
@@ -3812,7 +3778,7 @@ def video_frames_seam_stats(
     )
 
 
-@promo_op(
+@op(
     "kinesis_stream_source_agg",
     oracle="""
         SELECT CAST(count(*) AS BIGINT) AS n_records,
@@ -3909,7 +3875,7 @@ def kinesis_stream_source_agg(
     )
 
 
-@promo_op(
+@op(
     "kinesis_efo_fanout_agg",
     oracle="""
         SELECT CAST(count(*) AS BIGINT) AS n_records_a,
@@ -3991,7 +3957,7 @@ def kinesis_efo_fanout_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "lakehouse_compact_audit",
     oracle="""
         SELECT CAST(count(*) AS BIGINT) AS n_rows,
@@ -4043,7 +4009,7 @@ def lakehouse_compact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "lakehouse_schema_evolution_agg",
     oracle="""
         WITH old AS (
@@ -4135,7 +4101,7 @@ def lakehouse_schema_evolution_agg(
     )
 
 
-@promo_op(
+@op(
     "txn_exactly_once_agg",
     oracle="""
         SELECT CAST((SELECT count(*) FROM documents WHERE doc_id % 2 = 0)
@@ -4196,7 +4162,7 @@ def txn_exactly_once_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@promo_op(
+@op(
     "sim_ann_ivf",
     oracle="""
         WITH c AS (

@@ -90,5 +90,8 @@ def plan_corpus(spark, sf_dir):
             os.environ.pop("SPARK_GRAFT_NO_TABLE_CACHE", None)
         else:
             os.environ["SPARK_GRAFT_NO_TABLE_CACHE"] = prev
-        _tables._CACHE.clear()  # later tests re-cache lazily
+        # later tests re-cache lazily; drop the op-level caches the build
+        # registered so later plan pins start from an empty CacheManager
+        _tables._CACHE.clear()
+        spark.catalog.clearCache()
     return corpus

@@ -38,12 +38,50 @@ EXECUTES_EXTRA = {
     "lakehouse_snapshot_restore_audit",  # v0/v1/restore commits on build
 }
 
+#: promotion ops whose builder executes work (snapshot writes, trainer
+#: loops, a loopback server, shard/file materialization) — their plan is
+#: the final small aggregate, and their scale properties are pinned by
+#: their library module's own plan tests. Every other promotion op is
+#: lazy: its returned plan IS the op, and the corpus gates it.
+EXECUTING_OPS = {
+    "shards_tar_roundtrip",
+    "zip_shards_roundtrip",
+    "warc_response_parity",
+    "avro_ocf_roundtrip",
+    "lakehouse_delete_modes_parity",
+    "lakehouse_merge_upsert_audit",
+    "lakehouse_zorder_prune_audit",
+    "lakehouse_vacuum_audit",
+    "snapshot_cdc_diff",
+    "kinesis_loopback_agg",
+    "classifier_train_audit",
+    "tokenizer_train_audit",
+    "avro_schema_evolution_agg",
+    "kcl_lease_coordination_agg",
+    "tokenizer_eval_report_audit",
+    "kinesis_stream_source_agg",
+    "kinesis_efo_fanout_agg",
+    "lakehouse_compact_audit",
+    "lakehouse_schema_evolution_agg",
+    "txn_exactly_once_agg",
+}
+
+PROMOTIONS_MODULE = "python_kinesis_streaming_spark.promotions"
+
+
+def promotion_names() -> list[str]:
+    """The ops ``promotions.py`` registers, in ``queries()`` order."""
+    from python_kinesis_streaming_spark.registry import all_queries
+
+    return [
+        n for n, fn in all_queries().items()
+        if fn.__module__ == PROMOTIONS_MODULE
+    ]
+
 
 def executing_on_build() -> set[str]:
-    """Every op name the plan corpus must NOT build (incl. the executing
-    promotions, classified in tests/test_promotion_plans.py)."""
+    """Every op name the plan corpus must NOT build."""
     from python_kinesis_streaming_spark.registry import all_queries
-    from tests.test_promotion_plans import EXECUTING_OPS
 
     names = set(all_queries())
     out = {n for n in names if n.startswith(EXECUTES_PREFIXES)}
@@ -59,7 +97,6 @@ def scratch_or_stateful() -> set[str]:
     servers. Conservatively includes every promotion op — several run
     trainer loops / kinesis mocks / shard writes, and their combined
     sequential cost is small."""
-    from python_kinesis_streaming_spark.promotions import PROMOTION_OPS
     from python_kinesis_streaming_spark.registry import all_queries
 
     names = set(all_queries())
@@ -69,5 +106,5 @@ def scratch_or_stateful() -> set[str]:
     )
     out = {n for n in names if n.startswith(prefixes)}
     out |= {"join_bucketed", "join_dpp_partition_pruned"} & names
-    out |= set(PROMOTION_OPS) & names
+    out |= set(promotion_names())
     return out

@@ -91,6 +91,7 @@ def test_grading_priority_is_the_full_registry():
     stale = set(pri) - set(QUERIES)
     assert not missing, f"registered ops missing from the list: {sorted(missing)[:5]}"
     assert not stale, f"priority names not in the registry: {sorted(stale)[:5]}"
+    assert list(QUERIES) == pri, "queries() order drifted from _GRADING_PRIORITY"
 
 
 def test_claude_md_registry_count():

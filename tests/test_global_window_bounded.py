@@ -15,33 +15,12 @@ now uses the two-level range-bucket prefix sum and passes.)
 from __future__ import annotations
 
 from python_kinesis_streaming_spark.plans.audit import global_window_violations
-from python_kinesis_streaming_spark.registry import all_queries
-from python_kinesis_streaming_spark.sources import tables
+from tests.corpus_sets import promotion_names
 
 #: ops whose builder executes a streaming query / writes side outputs —
 #: they are audited by their own suites, and the global-window rule is a
 #: batch-plan property.
 SKIP_PREFIXES = ("stream_", "source_stream", "sink_", "join_stream", "source_python")
-
-#: non-prefixed ops whose builder executes work (snapshot writes) —
-#: their returned plan is a handful of one-row aggregates.
-SKIP_NAMES = {
-    "lakehouse_incremental_dedup",
-    "lakehouse_time_travel_diff",
-    "lakehouse_manifest_prune_audit",
-    "lakehouse_snapshot_restore_audit",
-}
-
-#: The 51 r9-flip promotion ops get the SAME three gates from
-#: tests/test_promotion_plans.py, which additionally classifies
-#: lazy vs executing builders (trainer loops, loopback servers, shard
-#: materialization) — re-running the executing ones here would execute
-#: them a second time just to look at the final aggregate's plan.
-def _promotion_names() -> set[str]:
-    from python_kinesis_streaming_spark.promotions import PROMOTION_OPS
-
-    return set(PROMOTION_OPS)
-
 
 #: Max shuffle Exchanges any single batch op may plan. The r6 census:
 #: 62 ops at 0, 129 at 1, 87 at 2, and a thin tail of deliberately
@@ -99,16 +78,14 @@ def test_global_windows_only_consume_bounded_inputs(plan_corpus):
     session instead of three times (VERDICT r14 item 2)."""
     from python_kinesis_streaming_spark.plans.explain import shuffle_count
 
-    promotions = _promotion_names()
+    # the promotion ops get the same three gates, with a tighter shuffle
+    # budget, per op in tests/test_promotion_plans.py over this corpus
+    promotions = set(promotion_names())
     offenders: dict[str, object] = {}
     over_budget: dict[str, int] = {}
     row_python: list[str] = []
     for name, (df, plan) in plan_corpus.items():
-        if (
-            name.startswith(SKIP_PREFIXES)
-            or name in promotions
-            or name in SKIP_NAMES
-        ):
+        if name.startswith(SKIP_PREFIXES) or name in promotions:
             continue
         violations = global_window_violations(df)
         if violations:

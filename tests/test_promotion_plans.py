@@ -1,8 +1,12 @@
-"""Physical-plan pins for the promotion ops (PROMOTION.md) — the same
-mechanical scale gates the registry gets from
-tests/test_global_window_bounded.py, applied before the r9/r10
-registration flip: bounded global windows, a per-op shuffle budget, and
-zero row-at-a-time Python (every promotion kernel is an Arrow seam).
+"""Physical-plan pins for the lazy promotion ops (PROMOTION.md) — the
+mechanical scale gates tests/test_global_window_bounded.py applies to the
+rest of the registry, with a tighter shuffle budget: bounded global
+windows, a per-op shuffle budget, and zero row-at-a-time Python (every
+promotion kernel is an Arrow seam).
+
+Plans come from the session-shared ``plan_corpus`` (tests/conftest.py),
+which already builds every lazy op once; the executing promotions are
+classified in tests/corpus_sets.py ``EXECUTING_OPS`` and stay out of it.
 """
 
 from __future__ import annotations
@@ -12,39 +16,8 @@ import pytest
 from python_kinesis_streaming_spark.plans.audit import (
     global_window_violations,
 )
-from python_kinesis_streaming_spark.plans.explain import (
-    plan_of,
-    shuffle_count,
-)
-from python_kinesis_streaming_spark.promotions import PROMOTION_OPS
-
-#: Ops whose BUILDER executes work (snapshot writes, trainer loops, a
-#: loopback server, shard/file materialization) — their plan is the
-#: final small aggregate, and their scale properties are pinned by their
-#: library module's own plan tests. The lazy ops below are the ones
-#: whose returned plan IS the op.
-EXECUTING_OPS = {
-    "shards_tar_roundtrip",
-    "zip_shards_roundtrip",
-    "warc_response_parity",
-    "avro_ocf_roundtrip",
-    "lakehouse_delete_modes_parity",
-    "lakehouse_merge_upsert_audit",
-    "lakehouse_zorder_prune_audit",
-    "lakehouse_vacuum_audit",
-    "snapshot_cdc_diff",
-    "kinesis_loopback_agg",
-    "classifier_train_audit",
-    "tokenizer_train_audit",
-    "avro_schema_evolution_agg",
-    "kcl_lease_coordination_agg",
-    "tokenizer_eval_report_audit",
-    "kinesis_stream_source_agg",
-    "kinesis_efo_fanout_agg",
-    "lakehouse_compact_audit",
-    "lakehouse_schema_evolution_agg",
-    "txn_exactly_once_agg",
-}
+from python_kinesis_streaming_spark.plans.explain import shuffle_count
+from tests.corpus_sets import EXECUTING_OPS, promotion_names
 
 #: Max shuffle Exchanges a lazy promotion op may plan. Census at r8:
 #: the codec/transport parity ops plan 0 (pure mapInPandas over one
@@ -64,22 +37,21 @@ SHUFFLE_CEILING = {
 }
 DEFAULT_CEILING = 4
 
-LAZY_OPS = sorted(set(PROMOTION_OPS) - EXECUTING_OPS)
+LAZY_OPS = sorted(set(promotion_names()) - EXECUTING_OPS)
 
 
 def test_every_promotion_op_is_classified():
-    unknown = EXECUTING_OPS - set(PROMOTION_OPS)
+    unknown = EXECUTING_OPS - set(promotion_names())
     assert not unknown, f"stale names in EXECUTING_OPS: {unknown}"
 
 
 @pytest.mark.parametrize("name", LAZY_OPS)
-def test_promotion_plan_gates(name, spark, sf_dir):
-    df = PROMOTION_OPS[name].fn(spark, sf_dir)
+def test_promotion_plan_gates(name, plan_corpus):
+    df, plan = plan_corpus[name]
     violations = global_window_violations(df)
     assert not violations, (
         f"{name}: global Window over unbounded input: {violations}"
     )
-    plan = plan_of(df, "formatted")
     shuffles = shuffle_count(plan)
     ceiling = SHUFFLE_CEILING.get(name, DEFAULT_CEILING)
     assert shuffles <= ceiling, (

@@ -1,126 +1,36 @@
-"""Twin gates for the promotion ops (PROMOTION.md).
+"""Pins for the promotion ops (PROMOTION.md).
 
-Promotion ops are the r6-r8 library surface pre-packaged in the driver
-contract shape. They were staged OUT of the frozen 391-op registry
-until the grading backlog drained; the r9 flip (promotions_flip in
-_OP_MODULES) registered all 51 (the running total lives in CLAUDE.md's
-"Registry total" line, itself pinned against the live registry by
-test_correctness_canary — the flip tests read THAT number instead of a
-third hand-maintained literal, which drifted twice). This file
-applies the exact driver comparison (column-sorted canonical multiset,
-tests/twin.py) to every promotion op at sf0.01, and pins that the flip
-landed completely.
+Promotion ops are the r6-r8 library surface in the driver contract
+shape, registered with ``@op`` in ``promotions.py`` like every other
+operator module. Their twin gates run registry-wide in
+tests/test_oracle_parity.py; the registry total is pinned by
+test_correctness_canary::test_claude_md_registry_count. This file pins
+what is specific to them: every promotion carries an oracle and scale
+notes, and PROMOTION.md documents each one.
 """
 
 from __future__ import annotations
 
 import os
-import re
 
-from python_kinesis_streaming_spark.promotions import PROMOTION_OPS
-from python_kinesis_streaming_spark.registry import all_queries
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _expected_registry_total() -> int:
-    """The 'Registry total N' from CLAUDE.md — the single prose source
-    of truth, kept honest by test_claude_md_registry_count."""
-    text = open(os.path.join(_REPO, "CLAUDE.md")).read()
-    counts = {
-        int(m)
-        for m in re.findall(
-            r"Registry total (?:at end of r\d+: )?(\d+)", text
-        )
-    }
-    assert len(counts) == 1, f"CLAUDE.md registry totals disagree: {counts}"
-    return counts.pop()
-
-
-def test_promotion_specs_are_the_registered_ops():
-    """Since the r9 flip, tests/test_oracle_parity.py twin-gates every
-    promotion op through the registry (same assert_twin_match, same
-    fixtures) — this pin guarantees the registered callable IS the
-    promotion spec's, so that coverage transfers and the old
-    per-promotion twin parametrization stays retired (running the 51
-    twins twice per suite would double the heavy codec/tokenizer cost
-    for zero extra evidence)."""
-    from python_kinesis_streaming_spark.registry import get_op
-
-    for name, spec in PROMOTION_OPS.items():
-        reg = get_op(name)
-        assert reg.fn is spec.fn, name
-        assert reg.oracle == spec.oracle, name
+from python_kinesis_streaming_spark.registry import get_op
+from tests.corpus_sets import promotion_names
 
 
 def test_promotions_all_have_oracles_and_scale_notes():
-    for spec in PROMOTION_OPS.values():
-        assert spec.oracle, f"{spec.name}: missing oracle"
-        assert spec.scale_notes, f"{spec.name}: missing scale notes"
-
-
-def test_promotions_registered_by_the_r9_flip():
-    """The r9 flip (promotions_flip in _OP_MODULES) must register every
-    promotion name — a partial flip would silently orphan ops from the
-    driver's grading rotation."""
-    qs = all_queries()
-    missing = [n for n in PROMOTION_OPS if n not in qs]
-    assert not missing, f"promotion ops missing from the registry: {missing}"
-    assert len(qs) == _expected_registry_total(), len(qs)
+    for name in promotion_names():
+        spec = get_op(name)
+        assert spec.oracle, f"{name}: missing oracle"
+        assert spec.scale_notes, f"{name}: missing scale notes"
 
 
 def test_promotion_names_match_promotion_md():
-    import os
-
     md = open(
         os.path.join(os.path.dirname(os.path.dirname(__file__)),
                      "PROMOTION.md")
     ).read()
-    missing = [n for n in PROMOTION_OPS if n not in md]
+    missing = [n for n in promotion_names() if n not in md]
     assert not missing, f"ops not documented in PROMOTION.md: {missing}"
-
-
-def test_register_all_flip_is_live_and_idempotent():
-    """Post-flip pin (rehearsed pre-flip in r8, live since r9): a fresh
-    process's registry must load 494 ops with every promotion name
-    carrying its oracle and scale notes, and re-importing the flip hook
-    must be a no-op (module caching — register_all runs once; a second
-    run would raise duplicate-registration)."""
-    import os
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    total = _expected_registry_total()
-    code = """
-import sys
-import importlib
-sys.path.insert(0, %r)
-from python_kinesis_streaming_spark import registry
-from python_kinesis_streaming_spark.promotions import PROMOTION_OPS
-qs = registry.all_queries()
-oracles = registry.all_oracles()
-assert len(qs) == %d, len(qs)
-missing = [n for n in PROMOTION_OPS if n not in qs]
-assert not missing, missing
-no_oracle = [n for n in PROMOTION_OPS if not oracles.get(n)]
-assert no_oracle == [], no_oracle
-no_scale = [
-    n for n in PROMOTION_OPS if not registry.get_op(n).scale_notes
-]
-assert no_scale == [], no_scale
-importlib.import_module("python_kinesis_streaming_spark.promotions_flip")
-assert len(registry.all_queries()) == %d
-print("FLIP-OK", len(qs))
-""" % (repo, total, total)
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        timeout=300,
-    )
-    assert out.returncode == 0, out.stderr
-    assert f"FLIP-OK {total}" in out.stdout, out.stdout
 
 
 def test_bounded_shuffle_restores_conf(spark):

@@ -48,8 +48,6 @@ FAKE_REGISTRY = textwrap.dedent(
     '''
 )
 
-FAKE_PROMOTIONS = 'PROMOTION_OPS = {"p1": None, "p2": None}\n'
-
 GREEN = {"rows_match": True, "schema_match": True, "hash_match": True}
 
 
@@ -57,8 +55,7 @@ def _make_sandbox(tmp_path, results: dict[str, dict]) -> str:
     """Build a minimal repo tree the tool can run against.
 
     ``results`` maps CORRECTNESS filename -> {op: row} content. The fake
-    registry's current priority is [a, c, b, e, d] and the fake
-    promotions surface is [p1, p2].
+    registry's current priority is [a, c, b, e, d].
     """
     work = tmp_path / "repo"
     pkg = work / "python_kinesis_streaming_spark"
@@ -66,7 +63,6 @@ def _make_sandbox(tmp_path, results: dict[str, dict]) -> str:
     pkg.mkdir()
     (pkg / "__init__.py").write_text("")
     (pkg / "registry.py").write_text(FAKE_REGISTRY)
-    (pkg / "promotions.py").write_text(FAKE_PROMOTIONS)
     import shutil
 
     shutil.copy(TOOL, work / "tools" / "rotate_priority.py")
@@ -107,30 +103,13 @@ def test_rotation_rules_failed_then_never_then_back(tmp_path):
     assert "next window (first 50): c .. d" in out.stdout
     listed = [
         line.strip() for line in out.stdout.splitlines()
-        if line.startswith("  ") and line.strip() in ("a", "b", "c", "d",
-                                                      "e", "p1", "p2")
+        if line.startswith("  ") and line.strip() in ("a", "b", "c", "d", "e")
     ]
     assert listed == ["c", "e", "a", "b", "d"], listed
     assert "dry run" in out.stdout
     # dry run never touches the sandbox registry
     reg = os.path.join(work, "python_kinesis_streaming_spark", "registry.py")
     assert open(reg).read() == FAKE_REGISTRY
-
-
-def test_with_promotions_appends_behind_never_graded_block(tmp_path):
-    work = _make_sandbox(tmp_path, BASE_RESULTS)
-    out = _run_in(
-        work, os.path.join(work, "CORRECTNESS_r02.json"), "--with-promotions"
-    )
-    assert out.returncode == 0, out.stderr
-    assert "promotion block: 2" in out.stdout
-    listed = [
-        line.strip() for line in out.stdout.splitlines()
-        if line.startswith("  ") and line.strip() in ("a", "b", "c", "d",
-                                                      "e", "p1", "p2")
-    ]
-    # promotions land BEHIND the never-graded block, ahead of the greens
-    assert listed == ["c", "e", "p1", "p2", "a", "b", "d"], listed
 
 
 def test_tolerates_new_driver_artifacts(tmp_path):
@@ -145,41 +124,6 @@ def test_tolerates_new_driver_artifacts(tmp_path):
     assert out.returncode == 0, out.stderr
     assert "never-graded block: 0" in out.stdout
     assert "rotated-to-back (driver-green): 4" in out.stdout
-
-
-def test_write_with_promotions_is_a_complete_flip(tmp_path):
-    """--write --with-promotions must rewrite the priority literal AND
-    insert the promotions_flip hook into _OP_MODULES in one command."""
-    work = _make_sandbox(tmp_path, BASE_RESULTS)
-    out = _run_in(
-        work,
-        os.path.join(work, "CORRECTNESS_r02.json"),
-        "--write",
-        "--with-promotions",
-    )
-    assert out.returncode == 0, out.stderr
-    assert "inserted" in out.stdout and "promotions_flip" in out.stdout
-    src = open(
-        os.path.join(work, "python_kinesis_streaming_spark", "registry.py")
-    ).read()
-    assert '"python_kinesis_streaming_spark.promotions_flip",' in src
-    # the rewritten literal must evaluate to the rotated order
-    scope: dict = {}
-    exec(compile(src, "registry.py", "exec"), scope)
-    assert scope["_GRADING_PRIORITY"] == ["c", "e", "p1", "p2", "a", "b", "d"]
-    # and the hook insertion is idempotent: a second --write run must not
-    # duplicate the _OP_MODULES line
-    out2 = _run_in(
-        work,
-        os.path.join(work, "CORRECTNESS_r02.json"),
-        "--write",
-        "--with-promotions",
-    )
-    assert out2.returncode == 0, out2.stderr
-    src2 = open(
-        os.path.join(work, "python_kinesis_streaming_spark", "registry.py")
-    ).read()
-    assert src2.count("promotions_flip") == 1
 
 
 def test_real_tree_dry_run_is_nondestructive():

@@ -9,6 +9,9 @@ comparison as the driver (tests/twin.py).
 Usage:
     python tools/drive_driver.py                # full sweep, every op
     python tools/drive_driver.py name1 name2    # just the named ops
+    python tools/drive_driver.py --double-run   # each op TWICE in the same
+                                                # session (scratch
+                                                # idempotency gate)
     SPARK_GRAFT_SIM_SF=/root/testdata/sf0.001 python tools/drive_driver.py
 
 Run it from anywhere — it chdirs to a scratch dir so any accidental
@@ -38,12 +41,19 @@ spark = (
 )
 import __spark_entry__ as e  # noqa: E402
 
+qs, os_ = e.queries(), e.oracle_sql()
+args = sys.argv[1:]
+runs = 2 if "--double-run" in args else 1
+names = [a for a in args if not a.startswith("--")] or list(qs)
+unknown = [n for n in names if n not in qs]
+if unknown:
+    print(f"unknown op(s): {unknown}")
+    sys.exit(2)
+
 t0 = time.time()
 rows = e.entry(spark).collect()
 print(f"entry: {len(rows)} rows ({time.time()-t0:.1f}s)")
 assert len(rows) > 0
-
-qs, os_ = e.queries(), e.oracle_sql()
 print(f"queries: {len(qs)}  oracles: {len(os_)}")
 
 import duckdb  # noqa: E402
@@ -59,28 +69,30 @@ for t in [
 
 from twin import assert_twin_match  # noqa: E402
 
-names = sys.argv[1:] if len(sys.argv) > 1 else list(qs)
 fails = []
 for i, name in enumerate(names):
-    t0 = time.time()
-    try:
-        sdf = qs[name](spark, SF)
-        if name in os_:
-            spdf = sdf.toPandas()
-            dpdf = con.execute(os_[name]).fetchdf()
-            assert_twin_match(spdf, dpdf, name)
-            status = "ok"
-        else:
-            n = sdf.count()
-            status = f"rows-only({n})"
-    except Exception:
-        status = "FAIL"
-        fails.append(name)
-        traceback.print_exc()
-    print(
-        f"[{i+1}/{len(names)}] {name}: {status} ({time.time()-t0:.1f}s)",
-        flush=True,
-    )
+    for run in range(1, runs + 1):
+        tag = f"{name}#r{run}" if runs > 1 else name
+        t0 = time.time()
+        try:
+            sdf = qs[name](spark, SF)
+            if name in os_:
+                spdf = sdf.toPandas()
+                dpdf = con.execute(os_[name]).fetchdf()
+                assert_twin_match(spdf, dpdf, tag)
+                status = "ok"
+            else:
+                n = sdf.count()
+                status = f"rows-only({n})"
+        except Exception:
+            status = "FAIL"
+            fails.append(tag)
+            traceback.print_exc()
+        print(
+            f"[{i+1}/{len(names)}] {tag}: {status} ({time.time()-t0:.1f}s)",
+            flush=True,
+        )
 
-print(f"\n{len(names)-len(fails)}/{len(names)} pass; fails: {fails}")
+total = len(names) * runs
+print(f"\n{total-len(fails)}/{total} pass; fails: {fails}")
 sys.exit(1 if fails else 0)

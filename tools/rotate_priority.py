@@ -7,20 +7,13 @@ tool mechanizes the rewrite the rounds have been doing by hand:
 
     python tools/rotate_priority.py CORRECTNESS_r08.json            # dry run
     python tools/rotate_priority.py CORRECTNESS_r08.json --write
-    python tools/rotate_priority.py CORRECTNESS_r08.json --write \\
-        --with-promotions   # r9/r10 flip: append PROMOTION_OPS names
-                            # (PROMOTION.md order) behind the
-                            # never-graded block
 
 Rules (same as every manual rotation since r4):
 1. ops the given CORRECTNESS file graded FAILED stay at the very front
    (regrade after fixing);
 2. ops never graded green in ANY CORRECTNESS_r*.json come next, in
    their current relative order;
-3. with ``--with-promotions``, the promotion names follow the
-   never-graded block (they are the next fresh window once the
-   backlog drains);
-4. everything driver-green rotates to the back, current order kept.
+3. everything driver-green rotates to the back, current order kept.
 
 Dry run prints the new head (next window) and the diff summary; only
 ``--write`` rewrites the literal list between ``_GRADING_PRIORITY = [``
@@ -78,7 +71,6 @@ def all_green_ever() -> set[str]:
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     write = "--write" in sys.argv
-    with_promos = "--with-promotions" in sys.argv
     if len(args) != 1:
         print(__doc__)
         return 2
@@ -123,15 +115,6 @@ def main() -> int:
     if unlisted:
         print(f"WARNING: registered but unlisted ops fronted: {unlisted}")
         never = never + unlisted
-    promos: list[str] = []
-    if with_promos:
-        from python_kinesis_streaming_spark.promotions import PROMOTION_OPS
-
-        promos = [n for n in PROMOTION_OPS if n not in current]
-        # the names are only real once the flip hook is in _OP_MODULES —
-        # validate against the POST-flip registry, and on --write make
-        # sure the hook line lands too (see below)
-        all_names = all_names | set(PROMOTION_OPS)
     back = [n for n in current if n in green_ever and n not in latest_failed]
     # full-list invariant (VERDICT r13 item 7): every registered name
     # appears explicitly — green ops that rode the unlisted-union rule
@@ -146,7 +129,7 @@ def main() -> int:
     if unlisted_green:
         print(f"appending {len(unlisted_green)} green-but-unlisted names "
               "to the back (full-list invariant)")
-    new = front + never + promos + back + unlisted_green
+    new = front + never + back + unlisted_green
 
     stale = [n for n in new if n not in all_names]
     if stale:
@@ -154,8 +137,6 @@ def main() -> int:
     print(f"regrade-first (failed in {os.path.basename(latest)}): "
           f"{len(front)}")
     print(f"never-graded block: {len(never)}")
-    if with_promos:
-        print(f"promotion block: {len(promos)}")
     print(f"rotated-to-back (driver-green): {len(back)}")
     print(f"total: {len(new)} (was {len(current)})")
     window = new[:50]
@@ -168,22 +149,6 @@ def main() -> int:
         return 0
 
     src = open(REGISTRY_PATH).read()
-    FLIP_MOD = "python_kinesis_streaming_spark.promotions_flip"
-    if with_promos and FLIP_MOD not in src:
-        # the priority names do NOTHING without the registration hook:
-        # _ensure_loaded only imports _OP_MODULES, and promotions.py's
-        # decorators never touch the registry — insert the hook line so
-        # one command performs the WHOLE flip
-        m_mods = re.search(r"_OP_MODULES = \[\n(.*?)^\]", src, re.S | re.M)
-        if not m_mods:
-            print("ERROR: could not locate the _OP_MODULES literal")
-            return 1
-        src = (
-            src[: m_mods.end(1)]
-            + f'    "{FLIP_MOD}",\n'
-            + src[m_mods.end(1):]
-        )
-        print(f"inserted {FLIP_MOD} into _OP_MODULES (the flip hook)")
     m = re.search(
         r"(_GRADING_PRIORITY = \[\n)(.*?)(^\])", src, re.S | re.M
     )
@@ -195,7 +160,7 @@ def main() -> int:
         "    # regenerated by tools/rotate_priority.py from "
         f"{os.path.basename(latest)}:\n"
         f"    # {len(front)} regrades, {len(never)} never-graded, "
-        f"{len(promos)} promotions, {len(back)} rotated back\n"
+        f"{len(back)} rotated back\n"
     )
     src = src[: m.start(2)] + header + body + src[m.end(2):]
     open(REGISTRY_PATH, "w").write(src)
