@@ -2,14 +2,21 @@
 
 This is the reference genre made executable in-sandbox: a Kinesis consumer
 is a poll–decode–checkpoint loop over the public HTTP API (SURVEY §3.1) —
-enumerate shards, get a shard iterator, GetRecords with backoff on
-empty/throttle, decode the base64 Data blob, persist the last sequence
-number per shard, resume AFTER_SEQUENCE_NUMBER on restart (at-least-once).
+enumerate shards, get a shard iterator, GetRecords (backing off on
+throttle) until caught up, decode the base64 Data blob, persist the last
+sequence number per shard, resume AFTER_SEQUENCE_NUMBER on restart
+(at-least-once).
 ``sources/kinesis.py`` wires the DSv2 connector surface for clusters that
 carry the connector jar; this module implements the protocol itself so the
 whole loop is integration-tested here against the loopback mock service
 (``sources/kinesis_mock.py``) — the only untested residue vs real AWS is
 SigV4 signing and TLS.
+
+It is the only module that speaks that protocol: ``KinesisClient`` builds
+every request and decodes every error, ``read_shard`` is the one shard
+drain loop and ``decode_record`` the one wire-record decode. The streaming
+source (``kinesis_stream_source.py``), the producer sink
+(``kinesis_sink.py``) and the EFO consumer (``kinesis_efo.py``) call them.
 
 Spark bridges, in ascending scale order:
 
@@ -18,7 +25,7 @@ Spark bridges, in ascending scale order:
   streams; the driver is the single consumer.
 - ``distributed_poll``   — the DSv2-connector architecture demonstrated:
   one Spark TASK per shard (mapInPandas over a shard-id frame), each task
-  polling its own shard over HTTP and owning its own checkpoint file. At
+  polling its own shard over HTTP from that shard's checkpoint. At
   100 TB this is the shape that scales: shard count = input parallelism,
   executors do the network I/O, no driver fan-in of raw records, and
   resharding just changes the shard frame. The loopback mock serves
@@ -59,7 +66,9 @@ class KinesisClient:
         self.endpoint_url = endpoint_url.rstrip("/")
         self.timeout = timeout
 
-    def call(self, action: str, body: dict) -> dict:
+    def open(self, action: str, body: dict):
+        """POST one action; returns the open HTTP response (the caller
+        reads and closes it). An HTTP error raises ``KinesisApiError``."""
         req = urllib.request.Request(
             self.endpoint_url + "/",
             data=json.dumps(body).encode(),
@@ -70,14 +79,17 @@ class KinesisClient:
             method="POST",
         )
         try:
-            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                return json.loads(resp.read() or b"{}")
+            return urllib.request.urlopen(req, timeout=self.timeout)
         except urllib.error.HTTPError as e:
             payload = json.loads(e.read() or b"{}")
             raise KinesisApiError(
                 payload.get("__type", "UnknownError"),
                 payload.get("message", str(e)),
             ) from None
+
+    def call(self, action: str, body: dict) -> dict:
+        with self.open(action, body) as resp:
+            return json.loads(resp.read() or b"{}")
 
     # convenience wrappers -------------------------------------------------
 
@@ -113,7 +125,6 @@ class ShardCheckpointer:
 
     def __init__(self, checkpoint_dir: str):
         self.dir = checkpoint_dir
-        os.makedirs(checkpoint_dir, exist_ok=True)
 
     def _path(self, shard_id: str) -> str:
         return os.path.join(self.dir, f"{shard_id}.json")
@@ -126,10 +137,75 @@ class ShardCheckpointer:
             return None
 
     def save(self, shard_id: str, sequence_number: str) -> None:
+        os.makedirs(self.dir, exist_ok=True)
         tmp = self._path(shard_id) + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"sequence_number": sequence_number}, f)
         os.replace(tmp, self._path(shard_id))
+
+
+#: Throttle retry schedule shared by every reader and the producer sink:
+#: up to ``RETRY_ATTEMPTS`` retries, sleeping ``RETRY_BACKOFF_S * 2**n``.
+RETRY_ATTEMPTS = 8
+RETRY_BACKOFF_S = 0.02
+
+
+def read_shard(
+    client: KinesisClient,
+    stream: str,
+    shard_id: str,
+    after: str | None = None,
+    starting_position: str = "TRIM_HORIZON",
+    limit: int = 1000,
+):
+    """The one shard drain loop: yields each non-empty GetRecords page
+    (a list of wire records) until the shard is caught up.
+
+    Starts AFTER_SEQUENCE_NUMBER ``after``, or at ``starting_position``
+    when ``after`` is None. Retries ProvisionedThroughputExceededException
+    on the ``RETRY_*`` schedule. Stops at a null NextShardIterator (a
+    closed shard fully drained) or at an empty page with
+    MillisBehindLatest == 0. A caller that stops iterating early issues
+    no further calls.
+    """
+    if after is None:
+        it = client.get_shard_iterator(stream, shard_id, starting_position)
+    else:
+        it = client.get_shard_iterator(
+            stream, shard_id, "AFTER_SEQUENCE_NUMBER", after
+        )
+    attempt = 0
+    while True:
+        try:
+            resp = client.get_records(it, limit=limit)
+        except KinesisApiError as e:
+            if (
+                e.type.endswith("ProvisionedThroughputExceededException")
+                and attempt < RETRY_ATTEMPTS
+            ):
+                time.sleep(RETRY_BACKOFF_S * (2**attempt))
+                attempt += 1
+                continue
+            raise
+        attempt = 0
+        recs = resp["Records"]
+        if recs:
+            yield recs
+        it = resp.get("NextShardIterator")
+        if it is None or (not recs and resp.get("MillisBehindLatest", 0) == 0):
+            return
+
+
+def decode_record(shard_id: str, r: dict) -> dict:
+    """One wire record (GetRecords or SubscribeToShardEvent) → record dict
+    with the ``Data`` blob base64-decoded and arrival as epoch seconds."""
+    return {
+        "shard_id": shard_id,
+        "partition_key": r["PartitionKey"],
+        "sequence_number": r["SequenceNumber"],
+        "approximate_arrival": float(r["ApproximateArrivalTimestamp"]),
+        "data": base64.b64decode(r["Data"]),
+    }
 
 
 def poll_shard(
@@ -139,75 +215,32 @@ def poll_shard(
     checkpointer: ShardCheckpointer | None = None,
     starting_position: str = "TRIM_HORIZON",
     limit: int = 1000,
-    max_empty_polls: int = 1,
-    backoff_base_s: float = 0.02,
-    max_attempts: int = 8,
     sink: list | None = None,
 ) -> list[dict]:
     """Drain one shard's currently-available records (at-least-once).
 
     Resumes AFTER_SEQUENCE_NUMBER from the checkpoint when one exists,
-    else from ``starting_position``. Retries throttle errors with
-    exponential backoff (the reference genre's
-    ProvisionedThroughputExceededException loop). The checkpoint is saved
-    AFTER records are returned to the caller's batch list — a crash
-    between delivery and checkpoint re-delivers, never skips.
+    else from ``starting_position``, and reads until caught up
+    (``read_shard``). The checkpoint is saved AFTER each page's records
+    are appended to the caller's batch list — a crash between delivery
+    and checkpoint re-delivers, never skips.
 
     ``sink``: caller-owned list the drained records are appended to
-    batch-by-batch (and also the return value). Pass it when the
+    page-by-page (and also the return value). Pass it when the
     checkpointer can raise mid-drain (fenced lease steal): records from
-    batches whose checkpoint already committed stay delivered in the
+    pages whose checkpoint already committed stay delivered in the
     caller's list instead of vanishing with the exception — dropping
     them would break at-least-once, because the successor resumes after
     the fence checkpoint and never re-reads them.
     """
-    seq = checkpointer.load(shard_id) if checkpointer else None
-    if seq is not None:
-        it = client.get_shard_iterator(
-            stream, shard_id, "AFTER_SEQUENCE_NUMBER", seq
-        )
-    else:
-        it = client.get_shard_iterator(stream, shard_id, starting_position)
-
     out: list[dict] = [] if sink is None else sink
-    empty = 0
-    attempt = 0
-    while empty < max_empty_polls:
-        try:
-            resp = client.get_records(it, limit=limit)
-        except KinesisApiError as e:
-            if (
-                e.type.endswith("ProvisionedThroughputExceededException")
-                and attempt < max_attempts
-            ):
-                time.sleep(backoff_base_s * (2**attempt))
-                attempt += 1
-                continue
-            raise
-        attempt = 0
-        recs = resp["Records"]
-        if recs:
-            for r in recs:
-                out.append(
-                    {
-                        "shard_id": shard_id,
-                        "partition_key": r["PartitionKey"],
-                        "sequence_number": r["SequenceNumber"],
-                        "approximate_arrival": float(
-                            r["ApproximateArrivalTimestamp"]
-                        ),
-                        "data": base64.b64decode(r["Data"]),
-                    }
-                )
-            if checkpointer:
-                checkpointer.save(shard_id, recs[-1]["SequenceNumber"])
-        else:
-            empty += 1
-        if resp.get("NextShardIterator") is None:
-            break  # closed shard fully drained (post-reshard parent)
-        if resp.get("MillisBehindLatest", 0) == 0 and not recs:
-            break
-        it = resp["NextShardIterator"]
+    after = checkpointer.load(shard_id) if checkpointer else None
+    for recs in read_shard(
+        client, stream, shard_id, after, starting_position, limit
+    ):
+        out.extend(decode_record(shard_id, r) for r in recs)
+        if checkpointer:
+            checkpointer.save(shard_id, recs[-1]["SequenceNumber"])
     return out
 
 
@@ -216,7 +249,6 @@ def poll_stream(
     stream: str,
     checkpoint_dir: str | None = None,
     starting_position: str = "TRIM_HORIZON",
-    limit: int = 1000,
 ) -> list[dict]:
     """Drain every shard once (driver-side). Returns decoded record dicts."""
     cp = ShardCheckpointer(checkpoint_dir) if checkpoint_dir else None
@@ -229,7 +261,6 @@ def poll_stream(
                 shard_id,
                 checkpointer=cp,
                 starting_position=starting_position,
-                limit=limit,
             )
         )
     return out
@@ -241,6 +272,24 @@ POLLED_SCHEMA = (
     "shard_id string, partition_key string, sequence_number string, "
     "approximate_arrival timestamp, data binary"
 )
+_POLLED_COLUMNS = [c.split()[0] for c in POLLED_SCHEMA.split(", ")]
+
+
+def _polled_row(rec: dict) -> tuple:
+    """A ``decode_record`` dict as a ``POLLED_SCHEMA`` row (arrival as a
+    naive UTC datetime)."""
+    import datetime
+
+    arrival = datetime.datetime.fromtimestamp(
+        rec["approximate_arrival"], tz=datetime.timezone.utc
+    ).replace(tzinfo=None)
+    return (
+        rec["shard_id"],
+        rec["partition_key"],
+        rec["sequence_number"],
+        arrival,
+        rec["data"],
+    )
 
 
 def poll_to_dataframe(
@@ -255,29 +304,15 @@ def poll_to_dataframe(
     Driver-side consumer — the single-process ingest rung. Use
     ``distributed_poll`` when shard count (and so throughput) matters.
     """
-    import datetime
-
-    from pyspark.sql import functions as F  # noqa: F401 (callers chain)
-
     recs = poll_stream(
         KinesisClient(endpoint_url),
         stream,
         checkpoint_dir=checkpoint_dir,
         starting_position=starting_position,
     )
-    rows = [
-        (
-            r["shard_id"],
-            r["partition_key"],
-            r["sequence_number"],
-            datetime.datetime.fromtimestamp(
-                r["approximate_arrival"], tz=datetime.timezone.utc
-            ).replace(tzinfo=None),
-            r["data"],
-        )
-        for r in recs
-    ]
-    return spark.createDataFrame(rows, POLLED_SCHEMA)
+    return spark.createDataFrame(
+        [_polled_row(r) for r in recs], POLLED_SCHEMA
+    )
 
 
 def distributed_poll(
@@ -290,132 +325,50 @@ def distributed_poll(
     """One task per shard, executors poll over HTTP — the connector shape.
 
     The shard list becomes a repartitioned DataFrame (one shard per
-    partition); each mapInPandas task runs the poll loop against its
-    single shard. The task body is fully self-contained (stdlib only,
-    cloudpickle by value — bare-session safe, CLAUDE.md invariant 1: no
-    package import on the worker).
+    partition); each mapInPandas task drains its single shard with the
+    same ``read_shard`` loop and ``decode_record`` the driver-side poll
+    uses. This module is registered with cloudpickle by value, so the
+    task body ships together with the code it calls and the workers never
+    import the package (bare-session safe, CLAUDE.md invariant 1).
 
     Checkpointing is two-phase: tasks only READ ``checkpoint_dir`` to
-    pick their resume point; nothing is written during the drain. After
-    the caller has materialized (and durably persisted) the result, it
-    advances the checkpoints with ``commit_poll_checkpoints``. Writing
-    from inside the task would advance the checkpoint before the task's
-    output is committed, so a task retry — or a second evaluation of
-    this lazy DataFrame — would resume past records the failed attempt
-    never delivered and silently drop them.
+    pick their resume point; nothing is written during the drain (not
+    even the directory). After the caller has materialized (and durably
+    persisted) the result, it advances the checkpoints with
+    ``commit_poll_checkpoints``. Writing from inside the task would
+    advance the checkpoint before the task's output is committed, so a
+    task retry — or a second evaluation of this lazy DataFrame — would
+    resume past records the failed attempt never delivered and silently
+    drop them.
     """
+    import sys
+
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
     client = KinesisClient(endpoint_url)
     shard_ids = client.list_shard_ids(stream)
     shards_df = spark.createDataFrame(
         [(s,) for s in shard_ids], "shard_id string"
     ).repartition(len(shard_ids), "shard_id")
-
-    endpoint = endpoint_url.rstrip("/")
-    stream_name = stream
-    cp_dir = checkpoint_dir
-    start_pos = starting_position
+    cp = ShardCheckpointer(checkpoint_dir) if checkpoint_dir else None
 
     def poll_partition(batches):
-        import base64 as _b64
-        import datetime as _dt
-        import json as _json
-        import os as _os
-        import time as _time
-        import urllib.request as _rq
-
         import pandas as pd
-
-        def call(action, body):
-            req = _rq.Request(
-                endpoint + "/",
-                data=_json.dumps(body).encode(),
-                headers={
-                    "Content-Type": "application/x-amz-json-1.1",
-                    "X-Amz-Target": f"Kinesis_20131202.{action}",
-                },
-                method="POST",
-            )
-            import urllib.error as _err
-
-            try:
-                with _rq.urlopen(req, timeout=10.0) as resp:
-                    return _json.loads(resp.read() or b"{}"), None
-            except _err.HTTPError as e:
-                payload = _json.loads(e.read() or b"{}")
-                return None, payload.get("__type", "UnknownError")
-
-        def cp_path(shard_id):
-            return _os.path.join(cp_dir, f"{shard_id}.json")
-
-        def cp_load(shard_id):
-            try:
-                with open(cp_path(shard_id)) as f:
-                    return _json.load(f)["sequence_number"]
-            except FileNotFoundError:
-                return None
-
-        def drain(shard_id):
-            seq = cp_load(shard_id) if cp_dir else None
-            body = {
-                "StreamName": stream_name,
-                "ShardId": shard_id,
-                "ShardIteratorType": (
-                    "AFTER_SEQUENCE_NUMBER" if seq is not None else start_pos
-                ),
-            }
-            if seq is not None:
-                body["StartingSequenceNumber"] = seq
-            resp, err = call("GetShardIterator", body)
-            if err:
-                raise RuntimeError(err)
-            it = resp["ShardIterator"]
-            out, attempt = [], 0
-            while True:
-                resp, err = call(
-                    "GetRecords", {"ShardIterator": it, "Limit": 1000}
-                )
-                if err:
-                    if (
-                        err.endswith("ProvisionedThroughputExceededException")
-                        and attempt < 8
-                    ):
-                        _time.sleep(0.02 * (2**attempt))
-                        attempt += 1
-                        continue
-                    raise RuntimeError(err)
-                attempt = 0
-                recs = resp["Records"]
-                out.extend(recs)
-                if resp.get("NextShardIterator") is None:
-                    return out  # closed shard fully drained
-                if not recs and resp.get("MillisBehindLatest", 0) == 0:
-                    return out
-                it = resp["NextShardIterator"]
 
         for pdf in batches:
             for shard_id in pdf["shard_id"]:
-                recs = drain(shard_id)
-                if not recs:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "shard_id": [shard_id] * len(recs),
-                        "partition_key": [r["PartitionKey"] for r in recs],
-                        "sequence_number": [
-                            r["SequenceNumber"] for r in recs
-                        ],
-                        "approximate_arrival": [
-                            _dt.datetime.fromtimestamp(
-                                float(r["ApproximateArrivalTimestamp"]),
-                                tz=_dt.timezone.utc,
-                            ).replace(tzinfo=None)
-                            for r in recs
-                        ],
-                        "data": [
-                            _b64.b64decode(r["Data"]) for r in recs
-                        ],
-                    }
-                )
+                after = cp.load(shard_id) if cp else None
+                rows = [
+                    _polled_row(decode_record(shard_id, r))
+                    for recs in read_shard(
+                        client, stream, shard_id, after, starting_position
+                    )
+                    for r in recs
+                ]
+                if rows:
+                    yield pd.DataFrame(rows, columns=_POLLED_COLUMNS)
 
     return shards_df.mapInPandas(poll_partition, schema=POLLED_SCHEMA)
 

@@ -39,11 +39,8 @@ entire point of EFO for multi-consumer 100 TB pipelines.
 
 from __future__ import annotations
 
-import base64
 import json
 import time
-import urllib.error
-import urllib.request
 
 from python_kinesis_streaming_spark.sources.eventstream import (
     EventStreamDecoder,
@@ -51,9 +48,9 @@ from python_kinesis_streaming_spark.sources.eventstream import (
 from python_kinesis_streaming_spark.sources.kinesis_consumer import (
     KinesisApiError,
     KinesisClient,
+    ShardCheckpointer,
+    decode_record,
 )
-
-_JSON11 = "application/x-amz-json-1.1"
 
 
 def stream_arn(stream: str) -> str:
@@ -104,29 +101,14 @@ def subscribe_to_shard(
     (caught-up in the mock; the 5-minute boundary on real AWS) — callers
     re-subscribe from the last event's ContinuationSequenceNumber.
     """
-    req = urllib.request.Request(
-        endpoint_url.rstrip("/") + "/",
-        data=json.dumps(
-            {
-                "ConsumerARN": consumer_arn,
-                "ShardId": shard_id,
-                "StartingPosition": starting_position,
-            }
-        ).encode(),
-        headers={
-            "Content-Type": _JSON11,
-            "X-Amz-Target": "Kinesis_20131202.SubscribeToShard",
+    resp = KinesisClient(endpoint_url, timeout).open(
+        "SubscribeToShard",
+        {
+            "ConsumerARN": consumer_arn,
+            "ShardId": shard_id,
+            "StartingPosition": starting_position,
         },
-        method="POST",
     )
-    try:
-        resp = urllib.request.urlopen(req, timeout=timeout)
-    except urllib.error.HTTPError as e:
-        payload = json.loads(e.read() or b"{}")
-        raise KinesisApiError(
-            payload.get("__type", "UnknownError"),
-            payload.get("message", str(e)),
-        ) from None
     decoder = EventStreamDecoder()
     with resp:
         while True:
@@ -180,18 +162,7 @@ def efo_poll_shard(
             client.endpoint_url, consumer_arn, shard_id, position
         ):
             recs = event["Records"]
-            for r in recs:
-                out.append(
-                    {
-                        "shard_id": shard_id,
-                        "partition_key": r["PartitionKey"],
-                        "sequence_number": r["SequenceNumber"],
-                        "approximate_arrival": float(
-                            r["ApproximateArrivalTimestamp"]
-                        ),
-                        "data": base64.b64decode(r["Data"]),
-                    }
-                )
+            out.extend(decode_record(shard_id, r) for r in recs)
             if recs and checkpointer:
                 checkpointer.save(shard_id, recs[-1]["SequenceNumber"])
             continuation = event["ContinuationSequenceNumber"]
@@ -217,10 +188,6 @@ def efo_poll_stream(
     """Drain every shard once through the fan-out consumer (driver-side),
     resuming each shard from its checkpoint; the push twin of
     ``poll_stream``."""
-    from python_kinesis_streaming_spark.sources.kinesis_consumer import (
-        ShardCheckpointer,
-    )
-
     cp = ShardCheckpointer(checkpoint_dir) if checkpoint_dir else None
     out: list[dict] = []
     for shard_id in client.list_shard_ids(stream):

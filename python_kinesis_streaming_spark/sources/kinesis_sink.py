@@ -22,9 +22,11 @@ Scale shape: the send runs inside ``mapInPandas`` tasks — executors own
 the HTTP calls and the retry state, the driver only collects one summary
 row per partition (records/calls/retries), never record data. Input
 partitioning is respected, so upstream ``repartition(N)`` directly sets
-producer parallelism. Task bodies are self-contained nested functions
-(cloudpickle by value; bare-session safe) with the KPL module registered
-by value for the aggregation path.
+producer parallelism. The task body speaks the wire protocol through
+``kinesis_consumer.KinesisClient`` and retries rejected entries on that
+module's ``RETRY_*`` schedule. ``kinesis_consumer`` and ``kpl.py`` are
+registered with cloudpickle by value, so they ship with the task and the
+workers never import the package (bare-session safe).
 """
 
 from __future__ import annotations
@@ -49,8 +51,6 @@ def write_batch_to_kinesis(
     data_col: str = "data",
     aggregate: bool = False,
     aggregate_max_bytes: int = 64 * 1024,
-    max_retries: int = 8,
-    backoff_base_s: float = 0.02,
 ) -> dict:
     """Send ``df`` rows as Kinesis records; returns aggregate send stats.
 
@@ -69,16 +69,15 @@ def write_batch_to_kinesis(
     from pyspark import cloudpickle
     from pyspark.sql import functions as F
 
+    import python_kinesis_streaming_spark.sources.kinesis_consumer as _kc
     import python_kinesis_streaming_spark.sources.kpl as _kpl
 
+    cloudpickle.register_pickle_by_value(_kc)
     cloudpickle.register_pickle_by_value(_kpl)
 
-    endpoint = endpoint_url.rstrip("/")
     stream_name = stream
     do_aggregate = aggregate
     agg_bytes = aggregate_max_bytes
-    retries = max_retries
-    backoff = backoff_base_s
 
     payload = df.select(
         F.col(pk_col).cast("string").alias("pk"),
@@ -87,38 +86,18 @@ def write_batch_to_kinesis(
 
     def send_partition(batches):
         import base64 as _b64
-        import json as _json
         import time as _time
-        import urllib.error as _err
-        import urllib.request as _rq
 
         import pandas as pd
 
-        def call(action, body):
-            req = _rq.Request(
-                endpoint + "/",
-                data=_json.dumps(body).encode(),
-                headers={
-                    "Content-Type": "application/x-amz-json-1.1",
-                    "X-Amz-Target": f"Kinesis_20131202.{action}",
-                },
-                method="POST",
-            )
-            try:
-                with _rq.urlopen(req, timeout=10.0) as resp:
-                    return _json.loads(resp.read() or b"{}")
-            except _err.HTTPError as e:
-                payload = _json.loads(e.read() or b"{}")
-                raise RuntimeError(
-                    payload.get("__type", "UnknownError")
-                ) from None
+        call = _kc.KinesisClient(endpoint_url).call
 
         stats = {"sent": 0, "wire": 0, "calls": 0, "retried": 0}
 
         def put_with_retry(entries):
             """PutRecords one chunk; retry only rejected entries."""
             pending = entries
-            for attempt in range(retries + 1):
+            for attempt in range(_kc.RETRY_ATTEMPTS + 1):
                 resp = call(
                     "PutRecords",
                     {"StreamName": stream_name, "Records": pending},
@@ -132,11 +111,11 @@ def write_batch_to_kinesis(
                     if "ErrorCode" in r
                 ]
                 stats["retried"] += len(pending)
-                if attempt < retries:
-                    _time.sleep(backoff * (2**attempt))
+                if attempt < _kc.RETRY_ATTEMPTS:
+                    _time.sleep(_kc.RETRY_BACKOFF_S * (2**attempt))
             raise RuntimeError(
                 f"{len(pending)} records still failing after "
-                f"{retries} retries"
+                f"{_kc.RETRY_ATTEMPTS} retries"
             )
 
         def flush_chunked(wire_records):

@@ -65,7 +65,6 @@ def register_kinesis_stream_source(spark: SparkSession) -> str:
         def __init__(self, options: dict):
             self.endpoint = options["endpoint_url"]
             self.stream = options["stream_name"]
-            self.limit = int(options.get("batch_limit", "1000"))
 
         def _client(self):
             return _kc.KinesisClient(self.endpoint)
@@ -74,47 +73,17 @@ def register_kinesis_stream_source(spark: SparkSession) -> str:
             shards = self._client().list_shard_ids(self.stream)
             return {"shards": {s: None for s in shards}}
 
-        def _drain_shard(
-            self, client, shard_id: str, last: str | None, upto: str | None
-        ):
-            """Records after ``last`` (exclusive), optionally bounded by
-            ``upto`` (inclusive) for deterministic replay."""
-            if last is None:
-                it = client.get_shard_iterator(
-                    self.stream, shard_id, "TRIM_HORIZON"
-                )
-            else:
-                it = client.get_shard_iterator(
-                    self.stream, shard_id, "AFTER_SEQUENCE_NUMBER", last
-                )
-            out = []
-            while True:
-                resp = client.get_records(it, limit=self.limit)
-                recs = resp["Records"]
+        def _rows(self, client, shard_id: str, last, upto=None) -> list:
+            """Rows after ``last`` (exclusive), optionally bounded by
+            ``upto`` (inclusive) for deterministic replay. The values of a
+            ``decode_record`` dict are in ``STREAM_SCHEMA`` order."""
+            rows = []
+            for recs in _kc.read_shard(client, self.stream, shard_id, last):
                 for r in recs:
                     if upto is not None and int(r["SequenceNumber"]) > int(upto):
-                        return out
-                    out.append(r)
-                if resp.get("NextShardIterator") is None:
-                    return out  # closed shard fully drained
-                if not recs and resp.get("MillisBehindLatest", 0) == 0:
-                    return out
-                it = resp["NextShardIterator"]
-
-        @staticmethod
-        def _to_rows(shard_id: str, recs) -> list[tuple]:
-            import base64
-
-            return [
-                (
-                    shard_id,
-                    r["PartitionKey"],
-                    r["SequenceNumber"],
-                    float(r["ApproximateArrivalTimestamp"]),
-                    base64.b64decode(r["Data"]),
-                )
-                for r in recs
-            ]
+                        return rows
+                    rows.append(tuple(_kc.decode_record(shard_id, r).values()))
+            return rows
 
         def read(self, start: dict):
             client = self._client()
@@ -124,10 +93,10 @@ def register_kinesis_stream_source(spark: SparkSession) -> str:
                 new.setdefault(s, None)
             rows: list[tuple] = []
             for shard_id, last in new.items():
-                recs = self._drain_shard(client, shard_id, last, None)
-                if recs:
-                    new[shard_id] = recs[-1]["SequenceNumber"]
-                    rows.extend(self._to_rows(shard_id, recs))
+                shard_rows = self._rows(client, shard_id, last)
+                if shard_rows:
+                    new[shard_id] = shard_rows[-1][2]  # sequence_number
+                    rows.extend(shard_rows)
             return iter(rows), {"shards": new}
 
         def readBetweenOffsets(self, start: dict, end: dict):
@@ -137,8 +106,7 @@ def register_kinesis_stream_source(spark: SparkSession) -> str:
                 last = start["shards"].get(shard_id)
                 if upto is None or upto == last:
                     continue
-                recs = self._drain_shard(client, shard_id, last, upto)
-                rows.extend(self._to_rows(shard_id, recs))
+                rows.extend(self._rows(client, shard_id, last, upto))
             return iter(rows)
 
         def commit(self, end: dict) -> None:

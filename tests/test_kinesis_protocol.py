@@ -100,13 +100,50 @@ def test_latest_iterator_skips_history(mock_stream):
     assert poll_stream(client, STREAM, starting_position="LATEST") == []
 
 
-def test_throttle_backoff_still_delivers_everything():
+def _read_streaming_available_now(spark, endpoint_url, tmp_path):
+    from python_kinesis_streaming_spark.sources.kinesis_stream_source import (
+        read_kinesis_stream,
+    )
+
+    q = (
+        read_kinesis_stream(spark, endpoint_url, STREAM)
+        .writeStream.format("memory")
+        .queryName("kin_throttle")
+        .option("checkpointLocation", str(tmp_path / "cp"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+        return [
+            bytes(r["data"]) for r in spark.table("kin_throttle").collect()
+        ]
+    finally:
+        q.stop()
+
+
+_THROTTLE_READERS = {
+    "poll_stream": lambda spark, url, tmp_path: [
+        r["data"] for r in poll_stream(KinesisClient(url), STREAM)
+    ],
+    "distributed_poll": lambda spark, url, tmp_path: [
+        bytes(r["data"])
+        for r in distributed_poll(spark, url, STREAM).collect()
+    ],
+    "read_kinesis_stream": _read_streaming_available_now,
+}
+
+
+@pytest.mark.parametrize("reader", list(_THROTTLE_READERS))
+def test_throttle_backoff_still_delivers_everything(reader, spark, tmp_path):
+    """Every reader drains through the shared ``read_shard`` loop, so each
+    survives GetRecords throttling and still delivers every record once."""
     with MockKinesisServer(throttle_every=3) as srv:  # every 3rd call 400s
         client = KinesisClient(srv.endpoint_url)
         client.call("CreateStream", {"StreamName": STREAM, "ShardCount": 4})
         _put_batch(client, 120)
-        recs = poll_stream(client, STREAM)
-        ids = sorted(json.loads(r["data"])["event_id"] for r in recs)
+        data = _THROTTLE_READERS[reader](spark, srv.endpoint_url, tmp_path)
+        ids = sorted(json.loads(d)["event_id"] for d in data)
         assert ids == list(range(120))
 
 
@@ -161,9 +198,10 @@ def test_distributed_poll_one_task_per_shard(mock_stream, spark, tmp_path):
     # lazy DataFrame re-delivers everything — pre-fix the first
     # evaluation's executor-side saves made a re-run come back empty,
     # silently dropping records on any task retry (ADVICE r6)
-    assert not list((tmp_path / "dcp").glob("*.json"))
+    assert not (tmp_path / "dcp").exists()
     rows_again = df.collect()
     assert len(rows_again) == 150
+    assert not (tmp_path / "dcp").exists()
     # the caller commits AFTER materializing; one checkpoint per shard
     committed = commit_poll_checkpoints(rows, cp)
     assert len(committed) == 4

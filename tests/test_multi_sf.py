@@ -118,11 +118,11 @@ def test_representative_split_is_complete():
     assert sorted(_PURE_REPR + _SEQ_REPR) == sorted(REPRESENTATIVE)
 
 
-# The round-4 streaming oracles (stream_watermark_late, stream_output_modes,
-# join_stream_stream_outer, multimodal_decode) model batch boundaries and
-# watermark cutoffs as size-parametric SQL (n, ceil(n/4), 0.3n computed in
-# the query). Calibrated at sf0.01 — verify the model generalizes by running
-# the FULL oracle comparison at sf0.001 too.
+# Round-4 streaming oracles, run in FULL at sf0.001 as well as sf0.01. The
+# ones that still encode chunk boundaries as size-parametric SQL (n,
+# ceil(n/4), 0.3n computed in the query) are stream_watermark_late, the
+# update leg of stream_output_modes and multimodal_decode; the sf0.001 run
+# checks that this sf0.01-calibrated model generalizes.
 ROUND4_ORACLED = [
     "stream_watermark_late",
     "stream_output_modes",
