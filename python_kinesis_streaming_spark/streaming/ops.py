@@ -42,12 +42,6 @@ from python_kinesis_streaming_spark.streaming.replay import (
 #: DuckDB-side µs-truncated event time (matches the engine's ns→µs load).
 TS = "CAST(ts AS TIMESTAMP)"
 
-#: Per-batch StreamingQueryProgress dicts of the LAST applyInPandasWithState
-#: op run (sessionizer / FSM) — lets the state-store provider-parity tests
-#: assert on real state traffic instead of only sink contents (the wave-2
-#: stream_minhash_dedup pattern, extended per VERDICT r11 item 7).
-LAST_STREAM_PROGRESS: list = []
-
 
 @op(
     "source_stream_replay",
@@ -167,8 +161,15 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     Consolidated replay (r15): session_window state merges overlapping
     per-key gap intervals — interval merging is associative/commutative
     over arrival order, and complete mode emits the final merged state,
-    so the declared output is batch-boundary-independent."""
-    s = replay_stream(spark, sf_dir, files_per_trigger=None)
+    so the declared output is batch-boundary-independent. The multi-batch
+    proof is ``tests/test_streaming_state_providers.py::
+    test_stream_session_multi_batch_matches_one_batch``."""
+    return session_windows(replay_stream(spark, sf_dir, files_per_trigger=None))
+
+
+def session_windows(s: DataFrame, progress: list | None = None) -> DataFrame:
+    """stream_session's complete-mode session_window aggregate over the
+    streaming DataFrame ``s``; ``progress`` collects per-batch progress."""
     agg = (
         s.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), F.max("ts").alias("session_last"),
@@ -177,6 +178,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_to_memory(
         agg.select("user_id", "session_start", "session_last", "n_events"),
         "complete",
+        progress=progress,
     )
 
 
@@ -718,7 +720,22 @@ def join_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_stateful_sessionizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user session statistics (count, longest, events) maintained as
     custom streaming state across micro-batches; final snapshot == the
-    batch lag-gap sessionization."""
+    batch lag-gap sessionization.
+
+    Consolidated replay: the chunks are cut in ``(ts, event_id)`` order and
+    the UDF sorts each key's rows by ``(ts, event_id)`` before folding them
+    into its per-key state, so one fold over all rows equals four folds
+    over consecutive slices, and the final snapshot is a monotone max. One
+    micro-batch gives the same output; the four-batch run is proved equal
+    in ``tests/test_streaming_state_providers.py::
+    test_rocksdb_provider_parity``."""
+    return session_stats(replay_stream(spark, sf_dir, files_per_trigger=None))
+
+
+def session_stats(s: DataFrame, progress: list | None = None) -> DataFrame:
+    """stream_stateful_sessionizer's applyInPandasWithState sessionizer over
+    the streaming DataFrame ``s``, reduced to each user's final snapshot;
+    ``progress`` collects per-batch progress."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     GAP_NS = 1_800_000_000_000  # 30 min in pandas int64 ns
@@ -767,7 +784,6 @@ def stream_stateful_sessionizer(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    s = replay_stream(spark, sf_dir)
     updates = s.groupBy("user_id").applyInPandasWithState(
         update_sessions,
         outputStructType=(
@@ -779,8 +795,7 @@ def stream_stateful_sessionizer(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    LAST_STREAM_PROGRESS.clear()
-    mem = run_to_memory(updates, "update", progress=LAST_STREAM_PROGRESS)
+    mem = run_to_memory(updates, "update", progress=progress)
     # Final snapshot = the row with the largest n_events per key (monotone).
     return (
         mem.groupBy("user_id")
@@ -1287,7 +1302,22 @@ def stream_scd_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_fsm_pattern_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incidents of an error within 30 min after a purchase, per user,
-    detected incrementally with one-timestamp-per-key streaming state."""
+    detected incrementally with one-timestamp-per-key streaming state.
+
+    Consolidated replay: the chunks are cut in ``(ts, event_id)`` order and
+    the UDF sorts each key's rows by ``(ts, event_id)`` before folding them
+    into its per-key state, so one fold over all rows equals four folds
+    over consecutive slices, and the final snapshot is a monotone max. One
+    micro-batch gives the same output; the four-batch run is proved equal
+    in ``tests/test_streaming_state_providers.py::
+    test_rocksdb_provider_parity``."""
+    return fsm_incidents(replay_stream(spark, sf_dir, files_per_trigger=None))
+
+
+def fsm_incidents(s: DataFrame, progress: list | None = None) -> DataFrame:
+    """stream_fsm_pattern_alert's applyInPandasWithState pattern detector
+    over the streaming DataFrame ``s``, reduced to each incident user's
+    final count; ``progress`` collects per-batch progress."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     GAP_NS = 1_800_000_000_000  # 30 min in pandas int64 ns
@@ -1316,7 +1346,6 @@ def stream_fsm_pattern_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((last_p, n_inc))
         yield pd.DataFrame({"user_id": [key[0]], "n_incidents": [n_inc]})
 
-    s = replay_stream(spark, sf_dir)
     updates = s.groupBy("user_id").applyInPandasWithState(
         detect,
         outputStructType="user_id long, n_incidents long",
@@ -1324,8 +1353,7 @@ def stream_fsm_pattern_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    LAST_STREAM_PROGRESS.clear()
-    mem = run_to_memory(updates, "update", progress=LAST_STREAM_PROGRESS)
+    mem = run_to_memory(updates, "update", progress=progress)
     # Final snapshot per key (monotone counter), incident users only.
     return (
         mem.groupBy("user_id")

@@ -136,13 +136,17 @@ def replay_stream(
     chunk in ONE micro-batch — the r15 consolidation (guide §1.2: fewer
     passes) for ops whose DECLARED OUTPUT is provably independent of
     batch boundaries (complete-mode aggregations, final-snapshot update
-    ops, final-watermark append ops). Ops whose oracle models the 4-chunk
+    ops such as stream_stateful_sessionizer and stream_fsm_pattern_alert,
+    final-watermark append ops). Ops whose oracle models the 4-chunk
     boundaries (stream_metrics_progress, stream_state_metrics,
     stream_idempotent_sink, stream_scd_merge_sink, stream_watermark_late,
-    stream_output_modes' update leg) and the cross-batch state showcases
-    pinned by the provider-parity tests (stream_stateful_sessionizer,
-    stream_fsm_pattern_alert, wave2's stream_minhash_dedup) keep the
-    default. The chunk files on disk are identical either way.
+    stream_output_modes' update leg) and wave2's stream_minhash_dedup,
+    whose provider-parity test reads its per-batch progress, keep the
+    default. The multi-batch proofs of the consolidated stateful ops live
+    in tests/test_streaming_state_providers.py: test_rocksdb_provider_parity
+    (sessionizer and FSM) and
+    test_stream_session_multi_batch_matches_one_batch (stream_session).
+    The chunk files on disk are identical either way.
     """
     d = data_dir or ensure_chunks(spark, sf_dir, variant, chunks)
     schema = spark.read.parquet(d).schema
