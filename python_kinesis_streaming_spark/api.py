@@ -22,6 +22,14 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from python_kinesis_streaming_spark.functions.vectors import (
+    centroid_ord,
+    cosine,
+    dot,
+    l2norm,
+    sign_bits,
+    sq_l2,
+)
 from python_kinesis_streaming_spark.llm.bpe import (
     apply_bpe,
     train_bpe,
@@ -111,7 +119,6 @@ from python_kinesis_streaming_spark.llm.shards import (
     write_tar_shards,
     write_zip_shards,
 )
-from python_kinesis_streaming_spark.llm.similarity import cosine, dot, l2norm
 from python_kinesis_streaming_spark.llm.warc import read_warc
 from python_kinesis_streaming_spark.sources.avro_codec import (
     read_avro,
@@ -794,16 +801,7 @@ def kmeans_step(df: DataFrame, vec_col: str, centroids: DataFrame) -> DataFrame:
     ``df``; returns df plus a ``cid`` column (nearest centroid by L2²,
     6-dp-rounded distance, cid tie-break). Loop this + a groupBy mean for
     full k-means; per iteration cost is scan + broadcast + k·d exchange."""
-    dist = F.expr(
-        f"aggregate(zip_with({vec_col}, cv, (a, b) -> "
-        "(CAST(a AS DOUBLE) - CAST(b AS DOUBLE)) * "
-        "(CAST(a AS DOUBLE) - CAST(b AS DOUBLE))), 0D, (acc, x) -> acc + x)"
-    )
-    k = centroids.count()
-    ordinal = (
-        F.floor(dist * F.lit(1000000.0) + F.lit(0.505)).cast("long") * F.lit(int(k))
-        + F.col("cid")
-    )
+    ordinal = centroid_ord(sq_l2(vec_col, "cv"), int(centroids.count()), "cid")
     cols = df.columns
     return (
         df.crossJoin(F.broadcast(centroids))
@@ -836,15 +834,11 @@ def hamming_knn(df: DataFrame, vec_col: str, id_col: str, query_id, k: int = 10)
     re-rank the survivors with exact cosine."""
     dim = 64
 
-    def sig(lo: int, hi: int, alias: str):
-        return F.expr(
-            f"aggregate(sequence({lo}, {hi}), 0L, (acc, i) -> "
-            f"acc + IF(element_at({vec_col}, i) > 0, shiftleft(1L, i - {lo}), 0L))"
-        ).alias(alias)
-
     half = dim // 2
     sigs = df.select(
-        F.col(id_col), sig(1, half, "sig_lo"), sig(half + 1, dim, "sig_hi")
+        F.col(id_col),
+        sign_bits(vec_col, 1, half).alias("sig_lo"),
+        sign_bits(vec_col, half + 1, dim).alias("sig_hi"),
     )
     q = sigs.where(F.col(id_col) == query_id).select(
         F.col("sig_lo").alias("q_lo"), F.col("sig_hi").alias("q_hi")

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
-from python_kinesis_streaming_spark.llm.similarity import cosine
+from python_kinesis_streaming_spark.functions.vectors import cosine
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 

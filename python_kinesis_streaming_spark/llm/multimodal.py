@@ -361,7 +361,7 @@ def multimodal_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join captions, payload stats, embedding norm, and shard route into
     one training-manifest record per document."""
     from python_kinesis_streaming_spark.llm.dedup import md5_hash64
-    from python_kinesis_streaming_spark.llm.similarity import l2norm
+    from python_kinesis_streaming_spark.functions.vectors import l2norm
 
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings")

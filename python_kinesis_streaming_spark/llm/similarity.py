@@ -1,10 +1,11 @@
 """Vector-similarity operators over the ``embeddings`` table (SURVEY §2.11).
 
-Cosine math is pure higher-order-function Spark SQL (``zip_with`` dot
-product + ``aggregate`` fold) — JVM-side, codegen, no Python. Floats are
-accumulated in double and every emitted similarity is rounded to 4 dp with
-the shared cross-engine rounding expression; all ORDER BY / thresholds
-operate on the ROUNDED value with integer tie-breaks, so Spark and DuckDB
+Cosine math is pure higher-order-function Spark SQL (the ``zip_with`` dot
+product + ``aggregate`` fold kernels of ``functions/vectors.py``) —
+JVM-side, codegen, no Python. Floats are accumulated in double and every
+emitted similarity is rounded to 4 dp with the shared cross-engine
+rounding expression; all ORDER BY / thresholds operate on the ROUNDED
+value with integer tie-breaks, so Spark and DuckDB
 (`list_cosine_similarity`) select identical row sets.
 
 Scale notes (100 TB / billions of vectors):
@@ -23,31 +24,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.vectors import (
+    centroid_ord,
+    cosine,
+    dot,
+    l2norm,
+    sign_bits,
+    sq_l2,
+)
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Σ aᵢbᵢ in double precision (HOF fold — no Python)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def l2norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2norm(a) * l2norm(b))
 QUERY_VEC_ID = 0  # the deterministic "query" for knn ops
 
 #: (session, sf_dir) → embeddings with a precomputed L2 norm column, cached.
@@ -63,6 +51,26 @@ def emb_with_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb = load_table(spark, sf_dir, "embeddings")
         _NORM_CACHE[key] = emb.withColumn("norm", l2norm(F.col("embedding"))).cache()
     return _NORM_CACHE[key]
+
+
+def ivf_centroid_dists(v: Column) -> Column:
+    """``array<struct<d2, j>>``: the 6-dp squared distance from ``v`` to
+    each of the 16 formula centroids c_j[d] = (((37j + 11d) mod 19) − 9)/9
+    of the IVF ops; ``array_min`` of it is the nearest list (ties → lower
+    j) and ``array_sort`` ranks the probe order."""
+    centroids = F.array(*[
+        F.array(*[
+            F.lit((((j * 37 + d * 11) % 19) - 9) / 9.0) for d in range(64)
+        ])
+        for j in range(16)
+    ])
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(15)),
+        lambda j: F.struct(
+            rnd(sq_l2(v, F.element_at(centroids, j + 1)), 6).alias("d2"),
+            j.alias("j"),
+        ),
+    )
 
 
 @op(
@@ -300,16 +308,9 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     def bucket_col() -> Column:
         acc = F.lit(0)
         for p in range(LSH_PLANES):
-            proj = F.aggregate(
-                F.zip_with(
-                    "embedding",
-                    F.array(
-                        *[F.lit(_hyperplane_weight(p, d)) for d in range(dims)]
-                    ),
-                    lambda x, w: x.cast("double") * w,
-                ),
-                F.lit(0.0),
-                lambda a, x: a + x,
+            proj = dot(
+                "embedding",
+                F.array(*[F.lit(_hyperplane_weight(p, d)) for d in range(dims)]),
             )
             acc = acc + F.when(proj > 0, F.lit(1 << p)).otherwise(F.lit(0))
         return acc
@@ -568,26 +569,13 @@ def emb_kmeans_one_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
     )
-    dist = F.expr(
-        "aggregate(zip_with(embedding, cv, (a, b) -> "
-        "(CAST(a AS DOUBLE) - CAST(b AS DOUBLE)) * "
-        "(CAST(a AS DOUBLE) - CAST(b AS DOUBLE))), 0D, (acc, x) -> acc + x)"
-    )
     assigned = (
         emb.crossJoin(F.broadcast(cent))
         .select(
             "vec_id",
             "embedding",
             "cid",
-            # (dist, cid) argmin encoded as ONE integer ordinal —
-            # floor(d*1e6 + .505) IS the 6-dp rounding scaled to int, so the
-            # ordering matches DuckDB's min_by exactly (structs don't order
-            # portably across the two engines).
-            (
-                F.floor(dist * F.lit(1000000.0) + F.lit(0.505)).cast("long")
-                * F.lit(8)
-                + F.col("cid")
-            ).alias("ord"),
+            centroid_ord(sq_l2("embedding", "cv"), 8, "cid").alias("ord"),
         )
         .groupBy("vec_id")
         .agg(
@@ -855,15 +843,10 @@ def emb_hamming_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 nearest neighbours by sign-bit Hamming distance to vec 0."""
     emb = load_table(spark, sf_dir, "embeddings")
 
-    def sig(lo_bit: int, hi_bit: int, alias: str):
-        return F.expr(
-            f"aggregate(sequence({lo_bit}, {hi_bit}), 0L, (acc, i) -> "
-            f"acc + IF(element_at(embedding, i) > 0, "
-            f"shiftleft(1L, i - {lo_bit}), 0L))"
-        ).alias(alias)
-
     sigs = emb.select(
-        "vec_id", sig(1, 32, "sig_lo"), sig(33, 64, "sig_hi")
+        "vec_id",
+        sign_bits("embedding", 1, 32).alias("sig_lo"),
+        sign_bits("embedding", 33, 64).alias("sig_hi"),
     )
     q = (
         sigs.where(F.col("vec_id") == 0)
@@ -1100,11 +1083,7 @@ def sim_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cw = sub.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("code"), "s", F.col("v").alias("c")
     )
-    sqdist = F.aggregate(
-        F.zip_with("v", "c", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    sqdist = sq_l2("v", "c")
     d = sub.join(F.broadcast(cw), "s").select(
         "vec_id",
         "s",
@@ -1253,14 +1232,11 @@ def emb_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
 
-    def sig(lo_bit: int, hi_bit: int, alias: str):
-        return F.expr(
-            f"aggregate(sequence({lo_bit}, {hi_bit}), 0L, (acc, i) -> "
-            f"acc + IF(element_at(embedding, i) > 0, "
-            f"shiftleft(1L, i - {lo_bit}), 0L))"
-        ).alias(alias)
-
-    sigs = emb.select("vec_id", sig(1, 32, "sig_lo"), sig(33, 64, "sig_hi"))
+    sigs = emb.select(
+        "vec_id",
+        sign_bits("embedding", 1, 32).alias("sig_lo"),
+        sign_bits("embedding", 33, 64).alias("sig_hi"),
+    )
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )

@@ -388,10 +388,8 @@ def text_ql_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RRF top-10 fusing lexical-Jaccard and cosine legs for doc 0."""
-    from python_kinesis_streaming_spark.llm.similarity import (
-        emb_with_norm,
-        dot,
-    )
+    from python_kinesis_streaming_spark.functions.vectors import dot
+    from python_kinesis_streaming_spark.llm.similarity import emb_with_norm
 
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
@@ -539,10 +537,8 @@ def sim_negative_mining_audit(
 ) -> DataFrame:
     """Top-5 semi-hard negatives per 1-in-50 anchor (other-label,
     cosine in [0.20, 0.35))."""
-    from python_kinesis_streaming_spark.llm.similarity import (
-        emb_with_norm,
-        dot,
-    )
+    from python_kinesis_streaming_spark.functions.vectors import dot
+    from python_kinesis_streaming_spark.llm.similarity import emb_with_norm
 
     emb = emb_with_norm(spark, sf_dir)
     q = emb.where(F.col("vec_id") % 50 == 0).select(

@@ -427,7 +427,7 @@ def dq_label_noise_confident(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_rank_quality_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 / MRR / nDCG@10 of the truncated-dims prefilter
     ranking vs the exact cosine top-10, per sampled query."""
-    from python_kinesis_streaming_spark.llm.similarity import dot, l2norm
+    from python_kinesis_streaming_spark.functions.vectors import dot, l2norm
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")

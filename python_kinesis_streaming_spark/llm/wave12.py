@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.vectors import sq_norm
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -749,7 +750,7 @@ def corpus_cluster_balanced_sample(
 def emb_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row isotropy report: anisotropy ratio, adjacent-pair mean
     cosine, top-16 variance share."""
-    from python_kinesis_streaming_spark.llm.similarity import cosine
+    from python_kinesis_streaming_spark.functions.vectors import cosine
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -786,11 +787,7 @@ def emb_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("v_micro").cast("long").alias("total_micro"),
         )
     )
-    norm_sq = F.aggregate(
-        F.transform(F.col("v"), lambda t: t * t),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
+    norm_sq = sq_norm("v")
     # freeze per-row norm^2 to integer micro BEFORE the N-row sum —
     # cross-partition double sums are order-dependent, BIGINTs are not
     nn = emb.agg(

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.vectors import dot, sq_norm
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -417,26 +418,17 @@ def sim_distance_contrast_audit(
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    n2 = F.aggregate(
-        F.transform(F.col("v"), lambda t: t * t),
-        F.lit(0.0),
-        lambda acc, t: acc + t,
-    )
-    e = emb.withColumn("n2", n2)
+    e = emb.withColumn("n2", sq_norm("v"))
     q = e.select(
         F.col("vec_id").alias("qid"),
         F.col("v").alias("qv"),
         F.col("n2").alias("qn2"),
     ).where(F.col("qid") % 50 == 0)
-    dot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("v"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     d = e.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
         "qid",
         F.floor(
-            (F.col("qn2") + F.col("n2") - 2 * dot) * F.lit(1000000.0)
+            (F.col("qn2") + F.col("n2") - 2 * dot("qv", "v"))
+            * F.lit(1000000.0)
             + F.lit(0.505)
         )
         .cast("long")

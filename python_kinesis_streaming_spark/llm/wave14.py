@@ -650,7 +650,7 @@ def ts_croston_intermittent(
 def sim_graph_beam_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-hop beam-8 graph search recall@5 vs the exact in-cell
     top-5, per sampled query."""
-    from python_kinesis_streaming_spark.llm.similarity import dot
+    from python_kinesis_streaming_spark.functions.vectors import dot
     from python_kinesis_streaming_spark.llm.wave7 import (
         _semdedup_assigned_pairs,
     )

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.vectors import sq_l2
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -379,10 +380,7 @@ def sim_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     cw = sub.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("code"), "s", F.col("v").alias("c")
     )
-    sqd = F.expr(
-        "aggregate(zip_with(v, c, (a, b) -> (a - b) * (a - b)), "
-        "0D, (acc, x) -> acc + x)"
-    )
+    sqd = sq_l2("v", "c")
     d = sub.join(F.broadcast(cw), "s").select(
         "vec_id",
         "s",
@@ -404,10 +402,7 @@ def sim_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = sub.where(F.col("vec_id") == 0).select(
         "s", F.col("v").alias("qv")
     )
-    lutd = F.expr(
-        "aggregate(zip_with(qv, c, (a, b) -> (a - b) * (a - b)), "
-        "0D, (acc, x) -> acc + x)"
-    )
+    lutd = sq_l2("qv", "c")
     lut = q.join(cw, "s").select(
         "s",
         "code",
@@ -433,10 +428,7 @@ def sim_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     qq = emb.where(F.col("vec_id") == 0).select(
         F.col("emb").alias("qemb")
     )
-    exd = F.expr(
-        "aggregate(zip_with(emb, qemb, (a, b) -> (a - b) * (a - b)), "
-        "0D, (acc, x) -> acc + x)"
-    )
+    exd = sq_l2("emb", "qemb")
     ex = emb.where(F.col("vec_id") != 0).crossJoin(F.broadcast(qq)).select(
         "vec_id",
         F.floor(exd * F.lit(1000000.0) + F.lit(0.505))

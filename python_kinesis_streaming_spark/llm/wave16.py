@@ -229,7 +229,7 @@ def events_power_analysis_mde(
 )
 def sim_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-occurrence skewness + antihub rate over in-cell 10-NN lists."""
-    from python_kinesis_streaming_spark.llm.similarity import dot
+    from python_kinesis_streaming_spark.functions.vectors import dot
     from python_kinesis_streaming_spark.llm.wave7 import (
         _semdedup_assigned_pairs,
     )

@@ -426,7 +426,7 @@ def graph_adamic_adar_linkpred(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Top-20 Adamic-Adar predicted links on the in-cell 8-NN graph."""
-    from python_kinesis_streaming_spark.llm.similarity import dot
+    from python_kinesis_streaming_spark.functions.vectors import dot
     from python_kinesis_streaming_spark.llm.wave7 import (
         _semdedup_assigned_pairs,
     )

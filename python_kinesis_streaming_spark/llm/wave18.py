@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.vectors import centroid_ord, sq_l2
 from python_kinesis_streaming_spark.llm.wave7 import (
     _SEMDEDUP_CTES,
     _semdedup_assigned_pairs,
@@ -623,20 +624,11 @@ def emb_ivf_staleness_audit(
     base = emb.where(F.col("vec_id") % 5 != 0)
     appended = emb.where(F.col("vec_id") % 5 == 0)
 
-    def dist_ord(vcol: str, ccol: str, cidcol: str):
-        d = F.expr(
-            f"aggregate(zip_with({vcol}, {ccol}, "
-            "(a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x)"
-        )
-        return (
-            F.floor(d * F.lit(1000000.0) + F.lit(0.505)).cast("long")
-            * F.lit(16)
-            + F.col(cidcol)
-        )
-
     ab = (
         base.crossJoin(F.broadcast(cent))
-        .select("vec_id", "v", dist_ord("v", "cv", "cid").alias("o"))
+        .select(
+            "vec_id", "v", centroid_ord(sq_l2("v", "cv"), 16, "cid").alias("o")
+        )
         .groupBy("vec_id")
         .agg(F.min("o").alias("o"), F.first("v").alias("v"))
         .select(
@@ -668,14 +660,18 @@ def emb_ivf_staleness_audit(
     )
     app_old = (
         appended.crossJoin(F.broadcast(cent))
-        .select("vec_id", "v", dist_ord("v", "cv", "cid").alias("o"))
+        .select(
+            "vec_id", "v", centroid_ord(sq_l2("v", "cv"), 16, "cid").alias("o")
+        )
         .groupBy("vec_id")
         .agg(F.min("o").alias("o"), F.first("v").alias("v"))
     )
     app_new = (
         app_old.select("vec_id", "v")
         .crossJoin(F.broadcast(newc))
-        .select("vec_id", dist_ord("v", "cvn", "cid").alias("o"))
+        .select(
+            "vec_id", centroid_ord(sq_l2("v", "cvn"), 16, "cid").alias("o")
+        )
         .groupBy("vec_id")
         .agg(F.min("o").alias("on"))
     )
@@ -690,14 +686,7 @@ def emb_ivf_staleness_audit(
     )
     shift = cent.join(newc, "cid").select(
         "cid",
-        F.floor(
-            F.expr(
-                "aggregate(zip_with(cv, cvn, "
-                "(a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x)"
-            )
-            * F.lit(1000000.0)
-            + F.lit(0.505)
-        )
+        F.floor(sq_l2("cv", "cvn") * F.lit(1000000.0) + F.lit(0.505))
         .cast("long")
         .alias("sh_micro"),
     )

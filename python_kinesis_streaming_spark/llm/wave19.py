@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.vectors import centroid_ord, sq_l2
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -427,21 +428,13 @@ def emb_pq_train_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s", F.col("vec_id").alias("cid"), F.col("sv").alias("cv")
     )
 
-    def dist_ord(vcol: str, ccol: str, cidcol: str):
-        d = F.expr(
-            f"aggregate(zip_with({vcol}, {ccol}, "
-            "(a, b) -> (a - b) * (a - b)), 0D, (acc, x) -> acc + x)"
-        )
-        return (
-            F.floor(d * F.lit(1000000.0) + F.lit(0.505)).cast("long")
-            * F.lit(_PQ_K)
-            + F.col(cidcol)
-        )
-
     a0 = (
         sub.join(F.broadcast(cw), "s")
         .select(
-            "vec_id", "s", "sv", dist_ord("sv", "cv", "cid").alias("o")
+            "vec_id",
+            "s",
+            "sv",
+            centroid_ord(sq_l2("sv", "cv"), _PQ_K, "cid").alias("o"),
         )
         .groupBy("vec_id", "s")
         .agg(F.min("o").alias("o"), F.first("sv").alias("sv"))
@@ -479,7 +472,9 @@ def emb_pq_train_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         a0.select("vec_id", "s", "sv")
         .join(F.broadcast(newc), "s")
         .select(
-            "vec_id", "s", dist_ord("sv", "cvn", "cid").alias("o")
+            "vec_id",
+            "s",
+            centroid_ord(sq_l2("sv", "cvn"), _PQ_K, "cid").alias("o"),
         )
         .groupBy("vec_id", "s")
         .agg(F.min("o").alias("on"))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.vectors import cosine
 from python_kinesis_streaming_spark.llm.dedup import (
     LSH_BANDS,
     LSH_ROWS,
@@ -32,7 +33,8 @@ from python_kinesis_streaming_spark.llm.dedup import (
     minhash_signatures,
     word_shingles,
 )
-from python_kinesis_streaming_spark.llm.similarity import cosine
+from python_kinesis_streaming_spark.llm.similarity import ivf_centroid_dists
+from python_kinesis_streaming_spark.operators.timeseries import _ORD_SQL, _ord_col
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -260,31 +262,7 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    centroids = F.array(*[
-        F.array(*[
-            F.lit((((j * 37 + d * 11) % 19) - 9) / 9.0) for d in range(64)
-        ])
-        for j in range(16)
-    ])
-    dists = F.transform(
-        F.sequence(F.lit(0), F.lit(15)),
-        lambda j: F.struct(
-            rnd(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("v"),
-                        F.element_at(centroids, j + 1),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("d2"),
-            j.alias("j"),
-        ),
-    )
-    tagged = emb.withColumn("ds", dists)
+    tagged = emb.withColumn("ds", ivf_centroid_dists(F.col("v")))
     assigned = tagged.select(
         "vec_id", F.col("v").alias("cv"),
         F.array_min("ds").getField("j").alias("bucket"),
@@ -1564,24 +1542,6 @@ def lakehouse_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # batch 3: time-series downsampling, vocab drift, weighted near-dup
 # ---------------------------------------------------------------------------
-
-#: the repo's cross-engine event ordinal (CLAUDE.md quirk list): DuckDB
-#: max_by rejects STRUCT order keys, so both engines order first/last
-#: picks by this int64 (ms since the fixture epoch, spread by event_id).
-_ORD_SQL = (
-    "CAST(floor((epoch_us(CAST(ts AS TIMESTAMP)) - 1704067200000000)"
-    " / 1000.0) AS BIGINT) * 3500000 + event_id"
-)
-
-
-def _ord_col():
-    return (
-        F.floor((F.unix_micros("ts") - F.lit(1704067200000000)) / F.lit(1000.0))
-        .cast("long")
-        * F.lit(3500000)
-        + F.col("event_id")
-    )
-
 
 @op(
     "ts_downsample_m4",

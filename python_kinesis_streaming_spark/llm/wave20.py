@@ -594,7 +594,7 @@ def emb_sign_binarize_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Recall@10 of 64-bit sign-Hamming retrieval vs exact cosine."""
-    from python_kinesis_streaming_spark.llm.similarity import dot, l2norm
+    from python_kinesis_streaming_spark.functions.vectors import dot, l2norm
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")

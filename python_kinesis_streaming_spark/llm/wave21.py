@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.vectors import centroid_ord, sq_l2
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -304,21 +305,10 @@ def emb_kmeans_init_sensitivity(
     ).select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
 
     def assign(cents: DataFrame, oname: str) -> DataFrame:
-        d = F.expr(
-            "aggregate(zip_with(v, cv, (a, b) -> (a - b) * (a - b)), "
-            "0D, (acc, x) -> acc + x)"
-        )
         return (
             emb.crossJoin(F.broadcast(cents))
             .select(
-                "vec_id",
-                (
-                    F.floor(d * F.lit(1000000.0) + F.lit(0.505)).cast(
-                        "long"
-                    )
-                    * F.lit(16)
-                    + F.col("cid")
-                ).alias("o"),
+                "vec_id", centroid_ord(sq_l2("v", "cv"), 16, "cid").alias("o")
             )
             .groupBy("vec_id")
             .agg(F.min("o").alias(oname))

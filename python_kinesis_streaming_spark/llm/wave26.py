@@ -351,7 +351,7 @@ def emb_triplet_margin_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Per-cell best-pos vs best-neg cosine margins for anchors."""
-    from python_kinesis_streaming_spark.llm.similarity import dot, l2norm
+    from python_kinesis_streaming_spark.functions.vectors import dot, l2norm
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",

@@ -41,7 +41,12 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
-from python_kinesis_streaming_spark.llm.similarity import dot, l2norm
+from python_kinesis_streaming_spark.functions.vectors import (
+    dot,
+    guarded_cos,
+    l2norm,
+    sql_guarded_cos,
+)
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -104,7 +109,7 @@ _DIMS = 64  # embedding dimensionality (FIXTURES.md)
         ),
         ts AS (
             SELECT prefilter, qid, vec_id,
-                   {sql_rnd("tdot / (nnq * nnv)", 4)} AS tsim
+                   {sql_rnd(sql_guarded_cos("tdot", "nnq", "nnv"), 4)} AS tsim
             FROM td
         ),
         cand AS (
@@ -294,9 +299,7 @@ def sim_cascade_sketch_recall_audit(
                 "qid",
                 "vec_id",
                 rnd(
-                    dot(F.col("arr"), F.col("qarr"))
-                    / (F.col("nnq") * F.col("nn")),
-                    4,
+                    guarded_cos(dot("arr", "qarr"), F.col("nnq"), F.col("nn")), 4
                 ).alias("tsim"),
             )
         )

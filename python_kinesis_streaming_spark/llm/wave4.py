@@ -24,7 +24,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
-from python_kinesis_streaming_spark.llm.similarity import cosine, dot, l2norm
+from python_kinesis_streaming_spark.functions.vectors import (
+    cosine,
+    dot,
+    guarded_cos,
+    l2norm,
+    sign_bits,
+    sql_guarded_cos,
+)
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -129,9 +136,7 @@ _ETOP_SQL = """
         ),
         ts AS (
             SELECT prefilter, qid, vec_id,
-                   {sql_rnd(
-                       "CASE WHEN nnq * nnv = 0 THEN 0 "
-                       "ELSE tdot / (nnq * nnv) END", 4)} AS tsim
+                   {sql_rnd(sql_guarded_cos("tdot", "nnq", "nnv"), 4)} AS tsim
             FROM td
         ),
         cand AS (
@@ -332,13 +337,7 @@ def sim_prefilter_quality_report(
                 "qid",
                 "vec_id",
                 rnd(
-                    F.when(
-                        F.col("nnq") * F.col("nn") == 0, F.lit(0.0)
-                    ).otherwise(
-                        dot(F.col("arr"), F.col("qarr"))
-                        / (F.col("nnq") * F.col("nn"))
-                    ),
-                    4,
+                    guarded_cos(dot("arr", "qarr"), F.col("nnq"), F.col("nn")), 4
                 ).alias("tsim"),
             )
         )
@@ -794,15 +793,10 @@ def emb_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     raw = load_table(spark, sf_dir, "embeddings")
 
-    def sig(lo_bit: int, hi_bit: int, alias: str):
-        return F.expr(
-            f"aggregate(sequence({lo_bit}, {hi_bit}), 0L, (acc, i) -> "
-            f"acc + IF(element_at(embedding, i) > 0, "
-            f"shiftleft(1L, i - {lo_bit}), 0L))"
-        ).alias(alias)
-
     b = raw.select(
-        "vec_id", sig(1, 32, "sig_lo"), sig(33, 64, "sig_hi")
+        "vec_id",
+        sign_bits("embedding", 1, 32).alias("sig_lo"),
+        sign_bits("embedding", 33, 64).alias("sig_hi"),
     ).withColumn(
         "bucket", F.expr("CAST(shiftright(sig_hi, 28) & 15 AS INT)")
     )

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
-from python_kinesis_streaming_spark.llm.similarity import cosine
+from python_kinesis_streaming_spark.functions.vectors import cosine
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 

@@ -98,7 +98,12 @@ def _semdedup_assigned_pairs(
     doubles are bit-identical, but the per-pair cost drops from three
     interpreted HOFs (zip_with dot + two norms) to one (measured 8.5x
     on the x3 synthetic: 31 s → 3.7 s for the pair stage)."""
-    from python_kinesis_streaming_spark.llm.similarity import dot, l2norm
+    from python_kinesis_streaming_spark.functions.vectors import (
+        centroid_ord,
+        dot,
+        l2norm,
+        sq_l2,
+    )
 
     key = (id(spark), sf_dir)
     if key not in _ASSIGNED_CACHE:
@@ -106,28 +111,13 @@ def _semdedup_assigned_pairs(
         cent = emb.where(F.col("vec_id") < 8).select(
             F.col("vec_id").alias("cid"), F.col("embedding").alias("cv")
         )
-        dist = F.expr(
-            "aggregate(zip_with(embedding, cv, (a, b) -> "
-            "(CAST(a AS DOUBLE) - CAST(b AS DOUBLE)) * "
-            "(CAST(a AS DOUBLE) - CAST(b AS DOUBLE))), 0D, "
-            "(acc, x) -> acc + x)"
-        )
         _ASSIGNED_CACHE[key] = (
             emb.crossJoin(F.broadcast(cent))
             .select(
                 "vec_id",
                 "embedding",
                 "cid",
-                # (dist, cid) argmin as ONE integer ordinal —
-                # floor(d*1e6+.505) IS the 6-dp rounding scaled to int,
-                # matching DuckDB min_by
-                (
-                    F.floor(
-                        dist * F.lit(1000000.0) + F.lit(0.505)
-                    ).cast("long")
-                    * F.lit(8)
-                    + F.col("cid")
-                ).alias("ord"),
+                centroid_ord(sq_l2("embedding", "cv"), 8, "cid").alias("ord"),
             )
             .groupBy("vec_id")
             .agg(

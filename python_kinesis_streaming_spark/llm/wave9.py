@@ -95,7 +95,7 @@ def sim_topk_incremental_delta(
     """Top-10 for query vec 0: frozen base top-10 merged with the
     scored delta batch (vec_id >= 0.8*max) — delta-only scoring."""
     from pyspark.sql.window import Window
-    from python_kinesis_streaming_spark.llm.similarity import cosine
+    from python_kinesis_streaming_spark.functions.vectors import cosine
 
     emb = load_table(spark, sf_dir, "embeddings")
     cut = emb.agg(

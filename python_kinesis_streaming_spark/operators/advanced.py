@@ -310,16 +310,10 @@ def join_dim_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join each event to the dimension version (state) valid at its
     timestamp; distribution of events over point-in-time states."""
     ev = load_table(spark, sf_dir, "events")
-    ord_col = (
-        F.floor((F.unix_micros("ts") - F.lit(1704067200000000)) / F.lit(1000.0))
-        .cast("long")
-        * F.lit(3500000)
-        + F.col("event_id")
-    )
     w = Window.partitionBy("user_id").orderBy("ord")
     changes = (
         ev.select("user_id", "event_type", F.col("ts").alias("ts_us"),
-                  ord_col.alias("ord"))
+                  _ord_col().alias("ord"))
         .withColumn("prev_type", F.lag("event_type").over(w))
         .where(F.col("prev_type").isNull()
                | (F.col("event_type") != F.col("prev_type")))

@@ -24,6 +24,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.operators.timeseries import _ord_col
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -1796,13 +1797,7 @@ def events_path_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordered = ev.select(
         "user_id",
         sym.alias("sym"),
-        (
-            F.floor(
-                (F.unix_micros("ts") - F.lit(1704067200000000)) / F.lit(1000.0)
-            ).cast("long")
-            * F.lit(3500000)
-            + F.col("event_id")
-        ).alias("ord"),
+        _ord_col().alias("ord"),
     )
     paths = ordered.groupBy("user_id").agg(
         F.concat_ws(

@@ -4229,38 +4229,14 @@ def txn_exactly_once_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Formula-centroid IVF: assign → probe 2 lists → top-5 cosine."""
     from python_kinesis_streaming_spark.functions.rounding import rnd
-    from python_kinesis_streaming_spark.llm.similarity import cosine
+    from python_kinesis_streaming_spark.functions.vectors import cosine
+    from python_kinesis_streaming_spark.llm.similarity import ivf_centroid_dists
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
-    centroids = F.array(*[
-        F.array(*[
-            F.lit((((j * 37 + d * 11) % 19) - 9) / 9.0)
-            for d in range(64)
-        ])
-        for j in range(16)
-    ])
-    dists = F.transform(
-        F.sequence(F.lit(0), F.lit(15)),
-        lambda j: F.struct(
-            rnd(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("v"),
-                        F.element_at(centroids, j + 1),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ).alias("d2"),
-            j.alias("j"),
-        ),
-    )
-    tagged = emb.withColumn("ds", dists)
+    tagged = emb.withColumn("ds", ivf_centroid_dists(F.col("v")))
     assigned = tagged.select(
         "vec_id", "v", F.array_min("ds").getField("j").alias("bucket")
     )

@@ -324,8 +324,9 @@ def distributed_poll(
 ):
     """One task per shard, executors poll over HTTP — the connector shape.
 
-    The shard list becomes a repartitioned DataFrame (one shard per
-    partition); each mapInPandas task drains its single shard with the
+    The shard list becomes a ``range`` DataFrame with one partition per
+    shard (no shuffle: row i of partition i picks shard i from the literal
+    list); each mapInPandas task drains its single shard with the
     same ``read_shard`` loop and ``decode_record`` the driver-side poll
     uses. This module is registered with cloudpickle by value, so the
     task body ships together with the code it calls and the workers never
@@ -344,14 +345,18 @@ def distributed_poll(
     import sys
 
     from pyspark import cloudpickle
+    from pyspark.sql import functions as F
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
     client = KinesisClient(endpoint_url)
     shard_ids = client.list_shard_ids(stream)
-    shards_df = spark.createDataFrame(
-        [(s,) for s in shard_ids], "shard_id string"
-    ).repartition(len(shard_ids), "shard_id")
+    n = len(shard_ids)
+    shards_df = spark.range(0, n, 1, n).select(
+        F.element_at(
+            F.array(*[F.lit(s) for s in shard_ids]), F.col("id").cast("int") + 1
+        ).alias("shard_id")
+    )
     cp = ShardCheckpointer(checkpoint_dir) if checkpoint_dir else None
 
     def poll_partition(batches):

@@ -23,13 +23,13 @@ Scale notes (100 TB / unbounded):
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from python_kinesis_streaming_spark.functions.rounding import rnd
+from python_kinesis_streaming_spark.operators.timeseries import _ord_col
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table, sf_tag
 from python_kinesis_streaming_spark.streaming.replay import (
@@ -873,28 +873,15 @@ def stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_metrics_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-micro-batch input-row counts from the streaming progress API
     (one row per data batch of the 4-chunk replay)."""
-    import uuid as _uuid
-
-    s = replay_stream(spark, sf_dir)
-    name = f"prog_{_uuid.uuid4().hex[:10]}"
-    ckpt = os.path.join(SCRATCH, "ckpt", name)
-    q = (
-        s.select("event_id")
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    progress: list = []
+    run_to_memory(
+        replay_stream(spark, sf_dir).select("event_id"), "append", progress=progress
     )
-    q.awaitTermination()
-    progresses = [
-        json.loads(pr.json) if hasattr(pr, "json") else pr
-        for pr in q.recentProgress
+    data = [
+        (int(p["batchId"]), int(p["numInputRows"]))
+        for p in progress
+        if int(p["numInputRows"]) > 0
     ]
-    rows = [(int(p["batchId"]), int(p["numInputRows"])) for p in progresses]
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    data = [(b, n) for b, n in rows if n > 0]
     return spark.createDataFrame(data, "batch_id long, input_rows long")
 
 
@@ -993,32 +980,19 @@ def stream_union_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_state_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Final state-store row count (and data-batch count) of the tumbling
     agg, read from the streaming progress metrics."""
-    import uuid as _uuid
-
     s = replay_stream(spark, sf_dir)
     agg = s.groupBy(F.window("ts", "1 hour").alias("w"), "event_type").agg(
         F.count("*").alias("n")
     )
-    name = f"state_{_uuid.uuid4().hex[:10]}"
-    ckpt = os.path.join(SCRATCH, "ckpt", name)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    progresses = [json.loads(p.json) for p in q.recentProgress]
+    progress: list = []
+    run_to_memory(agg, "complete", progress=progress)
     state_rows = 0
-    for p in reversed(progresses):
+    for p in reversed(progress):
         ops_ = p.get("stateOperators") or []
         if ops_:
             state_rows = int(ops_[0]["numRowsTotal"])
             break
-    n_data = sum(1 for p in progresses if int(p["numInputRows"]) > 0)
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    n_data = sum(1 for p in progress if int(p["numInputRows"]) > 0)
     return spark.createDataFrame(
         [(state_rows, n_data)], "state_rows long, n_data_batches long"
     )
@@ -1215,15 +1189,8 @@ def stream_scd_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def merge_batch(bdf, bid):
         ss = bdf.sparkSession
-        ord_col = (
-            F.floor(
-                (F.unix_micros("ts") - F.lit(1704067200000000)) / F.lit(1000.0)
-            ).cast("long")
-            * F.lit(3500000)
-            + F.col("event_id")
-        )
         newest = (
-            bdf.withColumn("ord", ord_col)
+            bdf.withColumn("ord", _ord_col())
             .groupBy("user_id")
             .agg(F.max_by("event_type", "ord").alias("new_type"))
         )

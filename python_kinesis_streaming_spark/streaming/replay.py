@@ -173,9 +173,11 @@ def run_to_memory(
 
     Trigger ``availableNow`` drains every chunk (respecting
     maxFilesPerTrigger → one micro-batch per chunk) then stops. Returns the
-    final memory-sink table as a batch DataFrame. Shuffle partitions are
-    pinned low around start because the query's state partitioning is
-    frozen at first checkpoint (restored afterwards).
+    final memory-sink table as a batch DataFrame; the sink's temp view is
+    dropped once that frame is bound, so the session keeps a result only
+    while the caller holds it. Shuffle partitions are pinned low around
+    start because the query's state partitioning is frozen at first
+    checkpoint (restored afterwards).
     """
     spark = sdf_sink_ready.sparkSession
     name = f"mem_{uuid.uuid4().hex[:10]}"
@@ -203,4 +205,6 @@ def run_to_memory(
         # The memory-sink table is already materialized; the uuid-named
         # checkpoint would otherwise accumulate forever under .scratch/.
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.table(name)
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result

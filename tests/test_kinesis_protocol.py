@@ -194,6 +194,15 @@ def test_distributed_poll_one_task_per_shard(mock_stream, spark, tmp_path):
     )
     assert ids == list(range(150))
     assert {r["shard_id"] for r in rows} == set(client.list_shard_ids(STREAM))
+    # one shard per task: every non-empty partition drains exactly one
+    # shard, and each of the 4 shards has its own partition
+    per_task = (
+        df.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.countDistinct("shard_id").alias("n_shards"))
+        .collect()
+    )
+    assert len(per_task) == 4
+    assert all(r["n_shards"] == 1 for r in per_task), per_task
     # tasks never write checkpoints (two-phase): re-evaluating the SAME
     # lazy DataFrame re-delivers everything — pre-fix the first
     # evaluation's executor-side saves made a re-run come back empty,

@@ -54,7 +54,7 @@ def test_ann_lsh_recall_vs_brute_force(spark, sf_dir):
 
 
 def test_cosine_self_similarity_is_one(spark, sf_dir):
-    from python_kinesis_streaming_spark.llm.similarity import cosine
+    from python_kinesis_streaming_spark.functions.vectors import cosine
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(20)
     bad = (

@@ -66,12 +66,26 @@ def test_replay_is_really_chunked(spark, sf_dir):
 def test_rocksdb_state_store_provider(spark, sf_dir):
     """The big-state path (SURVEY §4): the same windowed agg must produce
     identical results with the RocksDB state store provider — proving the
-    state backend is swappable by config alone (the 100 TB setting)."""
+    state backend is swappable by config alone (the 100 TB setting).
+
+    Also pins ``run_to_memory``'s cleanup: after two calls (default and
+    RocksDB provider) the session holds no ``mem_*`` sink view, and both
+    returned frames still read."""
     from python_kinesis_streaming_spark.streaming.replay import (
         replay_stream,
         run_to_memory,
     )
 
+    def windowed_counts():
+        agg = replay_stream(spark, sf_dir).groupBy(
+            F.window("ts", "1 hour").alias("w"), "event_type"
+        ).agg(F.count("*").alias("n"))
+        return run_to_memory(
+            agg.select(F.col("w.start").alias("w_start"), "event_type", "n"),
+            "complete",
+        )
+
+    default_mem = windowed_counts()
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, "")
     spark.conf.set(
@@ -79,20 +93,19 @@ def test_rocksdb_state_store_provider(spark, sf_dir):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        s = replay_stream(spark, sf_dir)
-        agg = s.groupBy(
-            F.window("ts", "1 hour").alias("w"), "event_type"
-        ).agg(F.count("*").alias("n"))
-        mem = run_to_memory(
-            agg.select(F.col("w.start").alias("w_start"), "event_type", "n"),
-            "complete",
-        )
-        got = {(r.w_start, r.event_type): r.n for r in mem.collect()}
+        mem = windowed_counts()
     finally:
         if prev:
             spark.conf.set(key, prev)
         else:
             spark.conf.unset(key)
+    assert not [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")
+    ]
+    got = {(r.w_start, r.event_type): r.n for r in mem.collect()}
+    assert got == {
+        (r.w_start, r.event_type): r.n for r in default_mem.collect()
+    }
     ev = load_table(spark, sf_dir, "events")
     expected = {
         (r.w_start, r.event_type): r.n
