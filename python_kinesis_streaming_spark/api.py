@@ -2,10 +2,14 @@
 
 The registry ops (SURVEY §2) are fixture-bound callables for the driver's
 correctness gate; THIS module is what an application imports: the same
-algorithms as general functions over arbitrary DataFrames. Each function is
-a thin, documented generalization of a hash-verified registry op (named in
-the docstring), so the oracle gate transitively pins these too — and
-tests/test_api.py asserts API(fixtures) ≡ registry op output.
+algorithms as general functions over arbitrary DataFrames. Where a registry
+op generalizes to a library function, the op is a binding of this
+function: the function lives in the op's module, the op loads the fixture
+tables, calls it with its constants and applies its final projection, and
+this module re-exports it, so the oracle gate pins the function directly.
+The functions defined below are the ones whose op keeps its own plan or
+output shape (named in each docstring); tests/test_api.py asserts each
+against its op.
 
 Everything returns lazy DataFrames built from built-in expressions; nothing
 here collects, nothing is Python-per-row (the documented exceptions:
@@ -27,7 +31,6 @@ from python_kinesis_streaming_spark.functions.vectors import (
     cosine,
     dot,
     l2norm,
-    sign_bits,
     sq_l2,
 )
 from python_kinesis_streaming_spark.llm.bpe import (
@@ -38,11 +41,11 @@ from python_kinesis_streaming_spark.llm.bpe import (
 from python_kinesis_streaming_spark.llm.html_extract import (
     extract_text_frame,
 )
-from python_kinesis_streaming_spark.llm.dedup import (
-    lsh_candidate_pairs,
-    minhash_signatures,
-    word_shingles,
+from python_kinesis_streaming_spark.llm.corpus import (
+    decontaminate,
+    shard_assign,
 )
+from python_kinesis_streaming_spark.llm.dedup import near_dup_candidates
 from python_kinesis_streaming_spark.llm.audio_ops import (
     audio_standardize_frame,
     fit_length,
@@ -67,6 +70,10 @@ from python_kinesis_streaming_spark.llm.image_ops import (
     resize_nearest,
 )
 from python_kinesis_streaming_spark.llm.media_codecs import media_features_frame
+from python_kinesis_streaming_spark.llm.ops import (
+    pack_sequences,
+    train_test_split,
+)
 from python_kinesis_streaming_spark.llm.packing import (
     pack_concat,
     pack_best_fit,
@@ -81,6 +88,11 @@ from python_kinesis_streaming_spark.llm.subtitles import (
     align_frames_to_cues,
     parse_subtitles,
     subtitles_frame,
+)
+from python_kinesis_streaming_spark.llm.text import (
+    chunk_documents,  # noqa: F401  (re-exported, not in __all__)
+    quality_features,
+    tokenize,
 )
 from python_kinesis_streaming_spark.llm.tokenizer_eval import (
     compare_tokenizers,
@@ -113,6 +125,10 @@ from python_kinesis_streaming_spark.llm.video_codecs import (
     video_frames_frame,
 )
 from python_kinesis_streaming_spark.llm.quality_rules import gopher_rules
+from python_kinesis_streaming_spark.llm.similarity import (
+    gram_matrix,  # noqa: F401  (re-exported, not in __all__)
+    hamming_knn,
+)
 from python_kinesis_streaming_spark.llm.shards import (
     read_tar_shards,
     read_zip_shards,
@@ -120,6 +136,11 @@ from python_kinesis_streaming_spark.llm.shards import (
     write_zip_shards,
 )
 from python_kinesis_streaming_spark.llm.warc import read_warc
+from python_kinesis_streaming_spark.operators.analytics import triangle_stats
+from python_kinesis_streaming_spark.operators.timeseries import (
+    ewma,  # noqa: F401  (re-exported, not in __all__)
+    interpolate_hourly,
+)
 from python_kinesis_streaming_spark.sources.avro_codec import (
     read_avro,
     write_avro,
@@ -136,9 +157,8 @@ from python_kinesis_streaming_spark.sources.lakehouse import (
 )
 from python_kinesis_streaming_spark.sources.lakehouse import (
     cluster_zorder,
-    compact_small_files,
+    compact_small_files,  # noqa: F401  (re-exported, not in __all__)
     delete_where,
-    merge_upsert,
     purge_deletes,
     read_table,
     vacuum,
@@ -362,19 +382,6 @@ def dedup_exact(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     return df.withColumn("_h", h).dropDuplicates(["_h"]).drop("_h")
 
 
-def near_dup_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """MinHash-LSH near-duplicate candidate pairs (registry op
-    ``dedup_near_minhash`` without the fixture-demo injection)."""
-    base = df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
-    sigs = minhash_signatures(word_shingles(base, n=shingle_n))
-    return lsh_candidate_pairs(sigs)
-
-
 def knn_cosine(df: DataFrame, vec_col: str, query: Sequence[float], k: int = 10) -> DataFrame:
     """Exact top-k cosine neighbors of a literal query vector (registry op
     ``sim_knn_cosine``): literal-coefficient dot product, codegen'd scan →
@@ -386,13 +393,6 @@ def knn_cosine(df: DataFrame, vec_col: str, query: Sequence[float], k: int = 10)
         d = d + F.col(vec_col)[i].cast("double") * F.lit(wgt)
     sim = d / (l2norm(F.col(vec_col)) * F.lit(qnorm))
     return df.withColumn("sim", sim).orderBy(F.desc("sim")).limit(k)
-
-
-def tokenize(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, tok) whitespace tokens, one row per occurrence (llm.text)."""
-    return df.select(
-        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).where(F.length("tok") > 0)
 
 
 def tfidf(df: DataFrame, id_col: str, text_col: str, top_k: int = 3) -> DataFrame:
@@ -410,43 +410,6 @@ def tfidf(df: DataFrame, id_col: str, text_col: str, top_k: int = 3) -> DataFram
     return scored.withColumn("_rn", F.row_number().over(w)).where(
         F.col("_rn") <= top_k
     ).drop("_rn")
-
-
-def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Per-document quality gate features (registry op ``text_quality``)."""
-    tok = tokenize(df, id_col, text_col)
-    stats = tok.groupBy(id_col).agg(
-        F.count("*").alias("n_tokens"),
-        F.countDistinct("tok").alias("n_distinct"),
-        F.sum(F.length("tok")).alias("chars_in_tokens"),
-    )
-    ttr = F.col("n_distinct").cast("double") / F.col("n_tokens")
-    return stats.select(
-        id_col,
-        "n_tokens",
-        ttr.alias("ttr"),
-        (F.col("chars_in_tokens").cast("double") / F.col("n_tokens")).alias(
-            "avg_tok_len"
-        ),
-        F.when(F.col("n_tokens").between(20, 80) & (ttr >= 0.25), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("keep"),
-    )
-
-
-def train_test_split(
-    df: DataFrame, key_col: str, train_pct: int = 90, seed: int = 13
-) -> DataFrame:
-    """Deterministic, leakage-proof train/test assignment: adds a ``split``
-    column ('train'/'test') decided by a portable keyed hash of ``key_col``
-    (registry op ``pipeline_train_test_split``). Same key → same split on
-    every engine, retry, and cluster size; no RNG state, no sampling job."""
-    from python_kinesis_streaming_spark.llm.dedup import md5_hash64
-
-    bucket = md5_hash64(F.col(key_col).cast("string"), seed=seed) % 100
-    return df.withColumn(
-        "split", F.when(bucket < train_pct, "train").otherwise("test")
-    )
 
 
 def stratified_sample(
@@ -470,31 +433,6 @@ def stratified_sample(
         )
     rate100 = F.lit(100) if rate100 is None else rate100.otherwise(F.lit(100))
     return df.where(bucket < rate100)
-
-
-def pack_sequences(
-    df: DataFrame,
-    part_col: str,
-    order_col: str,
-    size_col: Column | str,
-    budget: int = 2048,
-) -> DataFrame:
-    """Assign each row a ``bin`` id packing rows (in ``order_col`` order,
-    within ``part_col`` partitions) into fixed ``budget``-sized bins via an
-    exclusive prefix sum (registry op ``corpus_pack_sequences``). One window
-    pass, no driver loop."""
-    size = F.col(size_col) if isinstance(size_col, str) else size_col
-    w = (
-        Window.partitionBy(part_col)
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return df.withColumn(
-        "bin",
-        F.floor(F.coalesce(F.sum(size).over(w), F.lit(0)) / F.lit(float(budget))).cast(
-            "long"
-        ),
-    )
 
 
 def quantize_embeddings(df: DataFrame, vec_col: str) -> DataFrame:
@@ -676,125 +614,6 @@ def nearest_event_join(
     )
 
 
-def decontaminate(
-    train: DataFrame,
-    eval_df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 4,
-) -> DataFrame:
-    """Flag training docs sharing any word ``n``-gram with the eval corpus
-    (generalizes registry op ``corpus_decontaminate``): broadcast semi-join
-    on the shingle key — the eval shingle set is benchmark-sized, so
-    checking a 100 TB corpus is one map-side pass. Returns
-    (id, n_shared_shingles) for contaminated docs only."""
-    tr = word_shingles(
-        train.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
-        n=n,
-    )
-    ev = (
-        word_shingles(
-            eval_df.select(
-                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-            ),
-            n=n,
-        )
-        .select("shingle")
-        .distinct()
-    )
-    return (
-        tr.join(F.broadcast(ev), "shingle", "left_semi")
-        .groupBy(F.col("doc_id").alias(id_col))
-        .agg(F.count(F.lit(1)).alias("n_shared_shingles"))
-    )
-
-
-def chunk_documents(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    window: int = 32,
-    stride: int = 24,
-) -> DataFrame:
-    """Overlapping fixed-stride token chunks (registry op
-    ``text_chunk_overlap`` generalized): one row per (doc, chunk) with
-    ``chunk_id``, ``n_in_chunk``, ``first_tok``, ``chunk_md5``. Map-only —
-    sequence+slice codegen expressions, zero shuffles at any corpus size."""
-    base = df.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("_toks")
-    )
-    n_chunks = F.ceil(F.size("_toks") / F.lit(float(stride))).cast("int")
-    return (
-        base.select(
-            id_col,
-            "_toks",
-            F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_id"),
-        )
-        .withColumn("_piece", F.expr(f"slice(_toks, chunk_id * {stride} + 1, {window})"))
-        .select(
-            id_col,
-            "chunk_id",
-            F.size("_piece").alias("n_in_chunk"),
-            F.element_at("_piece", 1).alias("first_tok"),
-            F.md5(F.concat_ws(" ", "_piece")).alias("chunk_md5"),
-        )
-    )
-
-
-def ewma(
-    df: DataFrame,
-    part_col: str,
-    order_cols: Sequence[str],
-    value_col: str,
-    alpha: float = 0.5,
-) -> DataFrame:
-    """Per-partition exponentially weighted moving average of ``value_col``
-    folded in ``order_cols`` order (registry op ``ts_ewma`` generalized):
-    returns (part_col, n_events, ewma). The recursion runs as a bounded
-    in-row HOF fold after one partial-agg shuffle — no window sort, no
-    Python, bit-reproducible across engines for a fixed order."""
-    a = float(alpha)
-    arr = F.array_sort(
-        F.collect_list(F.struct(*order_cols, F.col(value_col).alias("_v")))
-    )
-    grouped = df.groupBy(part_col).agg(arr.alias("_a"))
-    return grouped.select(
-        part_col,
-        F.size("_a").cast("long").alias("n_events"),
-        F.expr(
-            f"aggregate(slice(_a, 2, size(_a) - 1), "
-            f"CAST(element_at(_a, 1)._v AS DOUBLE), "
-            f"(acc, s) -> {a} * s._v + {1.0 - a} * acc)"
-        ).alias("ewma"),
-    )
-
-
-def gram_matrix(df: DataFrame, vec_col: str) -> DataFrame:
-    """Upper-triangle gram matrix of a vector column (registry op
-    ``emb_gram_matrix``): per-Arrow-batch numpy E^T·E partials merged
-    through one d²-row shuffle. Returns (j, k, g) with raw double sums
-    (caller rounds/normalizes); eigendecompose driver-side for PCA."""
-    src = df.select(F.col(vec_col).alias("embedding"))
-
-    def partial_gram(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            gram = mat.T @ mat
-            ju, ku = np.triu_indices(gram.shape[0])
-            yield pd.DataFrame(
-                {"j": ju.astype(np.int32), "k": ku.astype(np.int32),
-                 "partial": gram[ju, ku]}
-            )
-
-    partials = src.mapInPandas(partial_gram, schema="j int, k int, partial double")
-    return partials.groupBy("j", "k").agg(F.sum("partial").alias("g"))
-
-
 def kmeans_step(df: DataFrame, vec_col: str, centroids: DataFrame) -> DataFrame:
     """One Lloyd assignment pass (registry op ``emb_kmeans_one_iter``
     generalized): ``centroids`` is a (cid, cv) frame, broadcast against
@@ -826,38 +645,6 @@ def weighted_sample(df: DataFrame, id_col: str, rates: DataFrame, key_col: str) 
     )
 
 
-def hamming_knn(df: DataFrame, vec_col: str, id_col: str, query_id, k: int = 10) -> DataFrame:
-    """Sign-bit Hamming top-k (registry op ``emb_hamming_knn`` generalized):
-    vectors compress to two packed 32-bit sign halves; distance is
-    popcount(xor). Returns (id_col, hamming) for the ``k`` nearest to
-    ``query_id``'s vector, ties broken by id. First-pass ANN filter —
-    re-rank the survivors with exact cosine."""
-    dim = 64
-
-    half = dim // 2
-    sigs = df.select(
-        F.col(id_col),
-        sign_bits(vec_col, 1, half).alias("sig_lo"),
-        sign_bits(vec_col, half + 1, dim).alias("sig_hi"),
-    )
-    q = sigs.where(F.col(id_col) == query_id).select(
-        F.col("sig_lo").alias("q_lo"), F.col("sig_hi").alias("q_hi")
-    )
-    return (
-        sigs.where(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            id_col,
-            (
-                F.bit_count(F.expr("sig_lo ^ q_lo"))
-                + F.bit_count(F.expr("sig_hi ^ q_hi"))
-            ).cast("int").alias("hamming"),
-        )
-        .orderBy("hamming", id_col)
-        .limit(k)
-    )
-
-
 def power_iteration_step(df: DataFrame, vec_col: str, id_col: str, v: DataFrame) -> DataFrame:
     """One distributed power-iteration matvec (registry op
     ``emb_pca_power_iter`` generalized): given ``v`` as a (j, vj) frame,
@@ -879,46 +666,6 @@ def power_iteration_step(df: DataFrame, vec_col: str, id_col: str, v: DataFrame)
         x.join(s, "_rid")
         .groupBy("j")
         .agg(F.sum(F.col("x") * F.col("s")).alias("vj"))
-    )
-
-
-def triangle_stats(edges: DataFrame, u_col: str = "u", v_col: str = "v") -> DataFrame:
-    """Edge/wedge/triangle counts + clustering coefficient of an undirected
-    graph (registry op ``graph_triangle_count`` generalized). ``edges``
-    must hold each undirected edge once with u < v; triangles enumerate
-    once via the u<v<w ordering. See the registry op's scale note for the
-    degree-ordered-orientation refinement at web-graph scale."""
-    e = edges.select(F.col(u_col).alias("u"), F.col(v_col).alias("v")).persist()
-    deg = (
-        e.select(F.col("u").alias("n"))
-        .unionAll(e.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    wedges = deg.agg(
-        F.sum(F.col("d") * (F.col("d") - 1) / F.lit(2)).cast("long").alias("n_wedges")
-    )
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.v") == F.col("e2.u"))
-        .join(
-            e3,
-            (F.col("e3.u") == F.col("e1.u")) & (F.col("e3.v") == F.col("e2.v")),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
-    n_e = e.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    return (
-        n_e.crossJoin(F.broadcast(wedges))
-        .crossJoin(F.broadcast(tri))
-        .select(
-            "n_edges",
-            "n_wedges",
-            "n_triangles",
-            (F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges")).alias(
-                "clustering_coeff"
-            ),
-        )
     )
 
 
@@ -1104,23 +851,6 @@ def holt_smooth(
     )
 
 
-def shard_assign(
-    df: DataFrame, id_col: str, n_shards: int = 16, seed: int = 7
-) -> DataFrame:
-    """Reproducible global shuffle + sharding (registry op
-    ``corpus_shard_assign`` generalized): appends ``shard`` (md5-uniform,
-    skew-free) and ``pos_key`` (independent md5 — rank by it within shard
-    for the within-shard order). Deterministic across runs, engines, and
-    stage retries: a resumed training job reads the identical order."""
-    from python_kinesis_streaming_spark.llm.dedup import md5_hash64
-
-    return df.withColumn(
-        "shard", md5_hash64(F.col(id_col).cast("string"), seed=seed) % n_shards
-    ).withColumn(
-        "pos_key", md5_hash64(F.col(id_col).cast("string"), seed=seed + 4)
-    )
-
-
 def time_weighted_avg(
     df: DataFrame, key: str, ts: str, value_col: str
 ) -> DataFrame:
@@ -1129,7 +859,6 @@ def time_weighted_avg(
     until the next one. Returns (key, n_segments, twa_value, naive_avg);
     the twa-vs-naive gap measures sampling bias. One lead() per key, two
     mergeable sums."""
-    w = Window.partitionBy(key).orderBy(ts)
     seg = (
         df.select(
             key,
@@ -1142,7 +871,6 @@ def time_weighted_avg(
         .where(F.col("_next").isNotNull())
         .withColumn("_dur", F.col("_next") - F.col("_us"))
     )
-    _ = w  # single ordering reused above
     return seg.groupBy(key).agg(
         F.count(F.lit(1)).alias("n_segments"),
         (F.sum(F.col("_v") * F.col("_dur")) / F.sum("_dur")).alias(
@@ -1168,73 +896,3 @@ def velocity_features(
         )
         out = out.withColumn(f"n_{h}h", F.count(F.lit(1)).over(w))
     return out.drop("_us")
-
-
-def interpolate_hourly(
-    df: DataFrame, key: str, ts: str, value_col: str
-) -> DataFrame:
-    """Linear interpolation of an irregular gauge onto hourly marks
-    (registry op ``ts_linear_interpolate`` generalized): union-spine +
-    IGNORE NULLS bracketing, zero joins between spine and points."""
-    pts = df.select(
-        F.col(key).alias("_k"),
-        F.unix_micros(F.col(ts)).alias("_us"),
-        F.col(value_col).cast("double").alias("_v"),
-        F.lit(0).alias("_sp"),
-    )
-    bounds = df.groupBy(F.col(key).alias("_k")).agg(
-        (
-            F.date_trunc("hour", F.min(ts)) + F.expr("INTERVAL 1 HOUR")
-        ).alias("_h0"),
-        F.date_trunc("hour", F.max(ts)).alias("_h1"),
-    )
-    spine = bounds.select(
-        "_k",
-        F.explode(F.sequence("_h0", "_h1", F.expr("INTERVAL 1 HOUR"))).alias(
-            "_h"
-        ),
-    ).select(
-        "_k",
-        F.unix_micros("_h").alias("_us"),
-        F.lit(None).cast("double").alias("_v"),
-        F.lit(1).alias("_sp"),
-    )
-    u = pts.unionByName(spine)
-    wp = (
-        Window.partitionBy("_k")
-        .orderBy("_us", "_sp")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wn = (
-        Window.partitionBy("_k")
-        .orderBy("_us", "_sp")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    pus = F.when(F.col("_v").isNotNull(), F.col("_us"))
-    ctx = u.select(
-        "_k",
-        "_us",
-        "_sp",
-        F.last("_v", ignorenulls=True).over(wp).alias("_pv"),
-        F.last(pus, ignorenulls=True).over(wp).alias("_pus"),
-        F.first("_v", ignorenulls=True).over(wn).alias("_nv"),
-        F.first(pus, ignorenulls=True).over(wn).alias("_nus"),
-    )
-    interp = F.when(F.col("_nus") == F.col("_pus"), F.col("_pv")).otherwise(
-        F.col("_pv")
-        + (F.col("_nv") - F.col("_pv"))
-        * (F.col("_us") - F.col("_pus"))
-        / (F.col("_nus") - F.col("_pus"))
-    )
-    return (
-        ctx.where(
-            (F.col("_sp") == 1)
-            & F.col("_pv").isNotNull()
-            & F.col("_nv").isNotNull()
-        )
-        .select(
-            F.col("_k").alias(key),
-            F.timestamp_micros(F.col("_us")).alias("hour"),
-            interp.alias("interp_value"),
-        )
-    )

@@ -286,6 +286,34 @@ def sim_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def decontaminate(
+    train: DataFrame,
+    eval_df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 4,
+) -> DataFrame:
+    """Flag training docs sharing any word ``n``-gram with the eval corpus:
+    broadcast semi-join on the shingle key — the eval shingle set is
+    benchmark-sized, so checking a 100 TB corpus is one map-side pass.
+    Returns (id, n_shared_shingles) for contaminated docs only."""
+    from python_kinesis_streaming_spark.llm.dedup import word_shingles
+
+    def shingles(df: DataFrame) -> DataFrame:
+        return word_shingles(
+            df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")),
+            n=n,
+        )
+
+    ev = shingles(eval_df).select("shingle").distinct()
+    return (
+        shingles(train)
+        .join(F.broadcast(ev), "shingle", "left_semi")
+        .groupBy(F.col("doc_id").alias(id_col))
+        .agg(F.count(F.lit(1)).alias("n_shared_shingles"))
+    )
+
+
 @op(
     "corpus_decontaminate",
     oracle="""
@@ -319,19 +347,13 @@ def sim_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training documents contaminated by eval-set 4-grams, with the count
     of distinct shared shingles per document."""
-    from python_kinesis_streaming_spark.llm.dedup import word_shingles
-
     docs = load_table(spark, sf_dir, "documents")
-    ev_sh = (
-        word_shingles(docs.where(F.col("source") == "src0"), n=4)
-        .select("shingle")
-        .distinct()
-    )
-    tr_sh = word_shingles(docs.where(F.col("source") != "src0"), n=4)
-    return (
-        tr_sh.join(F.broadcast(ev_sh), "shingle", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_shared_shingles"))
+    return decontaminate(
+        docs.where(F.col("source") != "src0"),
+        docs.where(F.col("source") == "src0"),
+        "doc_id",
+        "text",
+        n=4,
     )
 
 
@@ -553,6 +575,23 @@ def corpus_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def shard_assign(
+    df: DataFrame, id_col: str, n_shards: int = 16, seed: int = 7
+) -> DataFrame:
+    """Reproducible global shuffle + sharding: appends ``shard``
+    (md5-uniform, skew-free) and ``pos_key`` (independent md5 — rank by it
+    within shard for the within-shard order). Deterministic across runs,
+    engines, and stage retries: a resumed training job reads the identical
+    order."""
+    from python_kinesis_streaming_spark.llm.dedup import md5_hash64
+
+    return df.withColumn(
+        "shard", md5_hash64(F.col(id_col).cast("string"), seed=seed) % n_shards
+    ).withColumn(
+        "pos_key", md5_hash64(F.col(id_col).cast("string"), seed=seed + 4)
+    )
+
+
 @op(
     "corpus_shard_assign",
     oracle="""
@@ -591,16 +630,8 @@ def corpus_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def corpus_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministically shuffle + shard the corpus; emit per-shard manifest."""
-    from python_kinesis_streaming_spark.llm.dedup import md5_hash64
-
-    docs = load_table(spark, sf_dir, "documents")
-    assigned = docs.select(
-        "doc_id",
-        "n_chars",
-        (md5_hash64(F.col("doc_id").cast("string"), seed=7) % 16).alias("shard"),
-        md5_hash64(F.col("doc_id").cast("string"), seed=11).alias("pos_key"),
-    )
-    ranked = assigned.withColumn(
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    ranked = shard_assign(docs, "doc_id").withColumn(
         "pos",
         F.row_number().over(
             Window.partitionBy("shard").orderBy("pos_key", "doc_id")

@@ -207,6 +207,20 @@ def _minhash_oracle() -> str:
     """
 
 
+def near_dup_candidates(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    shingle_n: int = 3,
+) -> DataFrame:
+    """MinHash-LSH near-duplicate candidate pairs (doc_a, doc_b) over
+    ``shingle_n``-word shingles."""
+    if id_col != "doc_id":  # a same-name alias would add a Project over a union
+        df = df.select(F.col(id_col).alias("doc_id"), text_col)
+    sigs = minhash_signatures(word_shingles(df, n=shingle_n, text_col=text_col))
+    return lsh_candidate_pairs(sigs)
+
+
 @op(
     "dedup_near_minhash",
     oracle=_minhash_oracle(),
@@ -223,8 +237,7 @@ def dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     have no natural near-dups), then surfaces (doc_a, doc_b) candidates.
     """
     docs = inject_near_dups(load_table(spark, sf_dir, "documents"))
-    sigs = minhash_signatures(word_shingles(docs))
-    return lsh_candidate_pairs(sigs).orderBy("doc_a", "doc_b")
+    return near_dup_candidates(docs).orderBy("doc_a", "doc_b")
 
 
 def _simhash_oracle() -> str:

@@ -26,7 +26,7 @@ from python_kinesis_streaming_spark.llm import (  # noqa: F401
 # Flagship composition: the full training-data cleaning pipeline as ONE op.
 # ---------------------------------------------------------------------------
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F  # noqa: E402
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F  # noqa: E402
 
 from python_kinesis_streaming_spark.functions.rounding import rnd  # noqa: E402
 from python_kinesis_streaming_spark.registry import op  # noqa: E402
@@ -105,6 +105,21 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def train_test_split(
+    df: DataFrame, key_col: str, train_pct: int = 90, seed: int = 13
+) -> DataFrame:
+    """Deterministic, leakage-proof train/test assignment: adds a ``split``
+    column ('train'/'test') decided by a portable keyed hash of ``key_col``.
+    Same key → same split on every engine, retry, and cluster size; no RNG
+    state, no sampling job."""
+    from python_kinesis_streaming_spark.llm.dedup import md5_hash64
+
+    bucket = md5_hash64(F.col(key_col).cast("string"), seed=seed) % 100
+    return df.withColumn(
+        "split", F.when(bucket < train_pct, "train").otherwise("test")
+    )
+
+
 @op(
     "pipeline_train_test_split",
     oracle="""
@@ -127,19 +142,39 @@ def pipeline_clean_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipeline_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-deterministic 90/10 split of documents; per (lang, split)
     doc and char counts."""
-    from python_kinesis_streaming_spark.llm.dedup import md5_hash64
-
     docs = load_table(spark, sf_dir, "documents")
-    split = F.when(
-        md5_hash64(F.col("doc_id").cast("string"), seed=13) % 100 < 90, "train"
-    ).otherwise("test")
     return (
-        docs.select("lang", split.alias("split"), "n_chars")
+        train_test_split(docs, "doc_id", train_pct=90, seed=13)
+        .select("lang", "split", "n_chars")
         .groupBy("lang", "split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").alias("n_chars_sum"),
         )
+    )
+
+
+def pack_sequences(
+    df: DataFrame,
+    part_col: str,
+    order_col: str,
+    size_col: Column | str,
+    budget: int = 2048,
+) -> DataFrame:
+    """Assign each row a ``bin`` id packing rows (in ``order_col`` order,
+    within ``part_col`` partitions) into fixed ``budget``-sized bins via an
+    exclusive prefix sum. One window pass, no driver loop."""
+    size = F.col(size_col) if isinstance(size_col, str) else size_col
+    w = (
+        Window.partitionBy(part_col)
+        .orderBy(order_col)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    return df.withColumn(
+        "bin",
+        F.floor(F.coalesce(F.sum(size).over(w), F.lit(0)) / F.lit(float(budget))).cast(
+            "long"
+        ),
     )
 
 
@@ -179,16 +214,12 @@ def corpus_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bin doc and token counts."""
     docs = load_table(spark, sf_dir, "documents")
     n_tok = F.size(F.split("text", " "))
-    w = (
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    packed = docs.select("lang", "doc_id", n_tok.alias("n_tok")).withColumn(
-        "bin",
-        F.floor(F.coalesce(F.sum("n_tok").over(w), F.lit(0)) / F.lit(2048.0)).cast(
-            "long"
-        ),
+    packed = pack_sequences(
+        docs.select("lang", "doc_id", n_tok.alias("n_tok")),
+        "lang",
+        "doc_id",
+        "n_tok",
+        budget=2048,
     )
     return packed.groupBy("lang", "bin").agg(
         F.count(F.lit(1)).alias("n_docs"),

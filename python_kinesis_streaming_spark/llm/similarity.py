@@ -470,6 +470,37 @@ def emb_normalize_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def gram_matrix(df: DataFrame, vec_col: str) -> DataFrame:
+    """Upper-triangle gram matrix of a vector column: per-Arrow-batch numpy
+    E^T·E partials merged through one d²-row shuffle. Returns (j, k, g)
+    with raw double sums (caller rounds/normalizes); eigendecompose
+    driver-side for PCA."""
+    src = df.select(F.col(vec_col).alias("embedding"))
+
+    def partial_gram(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            gram = mat.T @ mat
+            ju, ku = np.triu_indices(gram.shape[0])
+            yield pd.DataFrame(
+                {
+                    "j": ju.astype(np.int32),
+                    "k": ku.astype(np.int32),
+                    "partial": gram[ju, ku],
+                }
+            )
+
+    partials = src.mapInPandas(
+        partial_gram, schema="j int, k int, partial double"
+    )
+    return partials.groupBy("j", "k").agg(F.sum("partial").alias("g"))
+
+
 @op(
     "emb_gram_matrix",
     oracle="""
@@ -496,31 +527,9 @@ def emb_normalize_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def emb_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Upper-triangle gram matrix G[j,k] = Σ_vec e_j·e_k over all
     embeddings (float64 accumulation, rounded 4 dp)."""
-    emb = load_table(spark, sf_dir, "embeddings").select("embedding")
-
-    def partial_gram(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            gram = mat.T @ mat
-            ju, ku = np.triu_indices(gram.shape[0])
-            yield pd.DataFrame(
-                {
-                    "j": ju.astype(np.int32),
-                    "k": ku.astype(np.int32),
-                    "partial": gram[ju, ku],
-                }
-            )
-
-    partials = emb.mapInPandas(
-        partial_gram, schema="j int, k int, partial double"
-    )
-    return partials.groupBy("j", "k").agg(
-        rnd(F.sum("partial"), 4).alias("g")
+    emb = load_table(spark, sf_dir, "embeddings")
+    return gram_matrix(emb, "embedding").select(
+        "j", "k", rnd(F.col("g"), 4).alias("g")
     )
 
 
@@ -803,6 +812,36 @@ def emb_outlier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def hamming_knn(
+    df: DataFrame, vec_col: str, id_col: str, query_id, k: int = 10
+) -> DataFrame:
+    """Sign-bit Hamming top-k of 64-dim vectors: vectors compress to two
+    packed 32-bit sign halves; distance is popcount(xor). Returns (id_col,
+    hamming) for the ``k`` nearest to ``query_id``'s vector, ties broken by
+    id. First-pass ANN filter — re-rank the survivors with exact cosine."""
+    sigs = df.select(
+        id_col,
+        sign_bits(vec_col, 1, 32).alias("sig_lo"),
+        sign_bits(vec_col, 33, 64).alias("sig_hi"),
+    )
+    q = sigs.where(F.col(id_col) == query_id).select(
+        F.col("sig_lo").alias("q_lo"), F.col("sig_hi").alias("q_hi")
+    )
+    return (
+        sigs.where(F.col(id_col) != query_id)
+        .crossJoin(F.broadcast(q))
+        .select(
+            id_col,
+            (
+                F.bit_count(F.expr("sig_lo ^ q_lo"))
+                + F.bit_count(F.expr("sig_hi ^ q_hi"))
+            ).cast("int").alias("hamming"),
+        )
+        .orderBy("hamming", id_col)
+        .limit(k)
+    )
+
+
 @op(
     "emb_hamming_knn",
     oracle="""
@@ -842,31 +881,7 @@ def emb_outlier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def emb_hamming_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 nearest neighbours by sign-bit Hamming distance to vec 0."""
     emb = load_table(spark, sf_dir, "embeddings")
-
-    sigs = emb.select(
-        "vec_id",
-        sign_bits("embedding", 1, 32).alias("sig_lo"),
-        sign_bits("embedding", 33, 64).alias("sig_hi"),
-    )
-    q = (
-        sigs.where(F.col("vec_id") == 0)
-        .select(
-            F.col("sig_lo").alias("q_lo"), F.col("sig_hi").alias("q_hi")
-        )
-    )
-    return (
-        sigs.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            (
-                F.bit_count(F.expr("sig_lo ^ q_lo"))
-                + F.bit_count(F.expr("sig_hi ^ q_hi"))
-            ).cast("int").alias("hamming"),
-        )
-        .orderBy("hamming", "vec_id")
-        .limit(10)
-    )
+    return hamming_knn(emb, "embedding", "vec_id", 0, k=10)
 
 
 @op(

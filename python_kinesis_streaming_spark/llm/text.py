@@ -26,11 +26,16 @@ from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
 
+def tokenize(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, tok) whitespace tokens, one row per occurrence."""
+    return df.select(
+        F.col(id_col), F.explode(F.split(F.col(text_col), " ")).alias("tok")
+    ).where(F.length("tok") > 0)
+
+
 def doc_tokens(docs: DataFrame) -> DataFrame:
-    """(doc_id, tok) — whitespace tokens, one row per occurrence."""
-    return docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok")).where(
-        F.length("tok") > 0
-    )
+    """(doc_id, tok) — whitespace tokens of ``documents``."""
+    return tokenize(docs, "doc_id", "text")
 
 
 @op(
@@ -182,6 +187,28 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def quality_features(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """Per-document quality gate features: token count, type-token ratio,
+    average token length, and a keep flag (20-80 tokens and ttr >= 0.25)."""
+    stats = tokenize(df, id_col, text_col).groupBy(id_col).agg(
+        F.count("*").alias("n_tokens"),
+        F.countDistinct("tok").alias("n_distinct"),
+        F.sum(F.length("tok")).alias("chars_in_tokens"),
+    )
+    ttr = F.col("n_distinct").cast("double") / F.col("n_tokens")
+    return stats.select(
+        id_col,
+        "n_tokens",
+        ttr.alias("ttr"),
+        (F.col("chars_in_tokens").cast("double") / F.col("n_tokens")).alias(
+            "avg_tok_len"
+        ),
+        F.when(
+            F.col("n_tokens").between(20, 80) & (ttr >= 0.25), F.lit(1)
+        ).otherwise(F.lit(0)).alias("keep"),
+    )
+
+
 @op(
     "text_quality",
     oracle="""
@@ -216,22 +243,12 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality features per doc: token count, type-token ratio, avg token
     length, and a keep/drop gate (the LLM-pipeline quality filter)."""
     docs = load_table(spark, sf_dir, "documents")
-    stats = doc_tokens(docs).groupBy("doc_id").agg(
-        F.count("*").alias("n_tokens"),
-        F.countDistinct("tok").alias("n_distinct"),
-        F.sum(F.length("tok")).alias("chars_in_tokens"),
-    )
-    ttr = F.col("n_distinct").cast("double") / F.col("n_tokens")
-    return stats.select(
+    return quality_features(docs, "doc_id", "text").select(
         "doc_id",
         "n_tokens",
-        rnd(ttr, 4).alias("ttr"),
-        rnd(F.col("chars_in_tokens").cast("double") / F.col("n_tokens"), 4).alias(
-            "avg_tok_len"
-        ),
-        F.when(
-            F.col("n_tokens").between(20, 80) & (ttr >= 0.25), F.lit(1)
-        ).otherwise(F.lit(0)).alias("keep"),
+        rnd(F.col("ttr"), 4).alias("ttr"),
+        rnd(F.col("avg_tok_len"), 4).alias("avg_tok_len"),
+        "keep",
     )
 
 
@@ -415,6 +432,32 @@ def text_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def chunk_documents(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    window: int = 32,
+    stride: int = 24,
+) -> DataFrame:
+    """Overlapping fixed-stride token chunks: one row per (doc, chunk) with
+    ``chunk_id``, ``n_in_chunk``, ``first_tok``, ``chunk_md5``. Map-only —
+    sequence+slice codegen expressions, zero shuffles at any corpus size."""
+    base = df.select(id_col, F.split(F.col(text_col), " ").alias("toks"))
+    n_chunks = F.ceil(F.size("toks") / F.lit(float(stride))).cast("int")
+    chunked = base.select(
+        id_col,
+        "toks",
+        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_id"),
+    ).withColumn("piece", F.expr(f"slice(toks, chunk_id * {stride} + 1, {window})"))
+    return chunked.select(
+        id_col,
+        "chunk_id",
+        F.size("piece").alias("n_in_chunk"),
+        F.element_at("piece", 1).alias("first_tok"),
+        F.md5(F.concat_ws(" ", "piece")).alias("chunk_md5"),
+    )
+
+
 @op(
     "text_chunk_overlap",
     oracle="""
@@ -443,20 +486,8 @@ def text_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping fixed-stride token chunks per document (window 32,
     stride 24); per chunk: token count, first token, md5 fingerprint."""
-    docs = load_table(spark, sf_dir, "documents")
-    base = docs.select("doc_id", F.split("text", " ").alias("toks"))
-    n_chunks = F.ceil(F.size("toks") / F.lit(24.0)).cast("int")
-    chunked = base.select(
-        "doc_id",
-        "toks",
-        F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_id"),
-    ).withColumn("piece", F.expr("slice(toks, chunk_id * 24 + 1, 32)"))
-    return chunked.select(
-        "doc_id",
-        "chunk_id",
-        F.size("piece").alias("n_in_chunk"),
-        F.element_at("piece", 1).alias("first_tok"),
-        F.md5(F.concat_ws(" ", "piece")).alias("chunk_md5"),
+    return chunk_documents(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", window=32, stride=24
     )
 
 

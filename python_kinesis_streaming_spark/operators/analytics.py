@@ -19,8 +19,6 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
@@ -1396,6 +1394,49 @@ def agg_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stat.crossJoin(F.broadcast(dof))
 
 
+def triangle_stats(edges: DataFrame, u_col: str = "u", v_col: str = "v") -> DataFrame:
+    """Edge/wedge/triangle counts + clustering coefficient of an undirected
+    graph. ``edges`` must hold each undirected edge once with u < v;
+    triangles enumerate once via the u<v<w ordering. See
+    ``graph_triangle_count``'s scale note for the degree-ordered-orientation
+    refinement at web-graph scale."""
+    e = edges.select(F.col(u_col).alias("u"), F.col(v_col).alias("v")).persist()
+    deg = (
+        e.select(F.col("u").alias("n"))
+        .unionAll(e.select(F.col("v").alias("n")))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+    wedges = deg.agg(
+        F.sum(F.col("d") * (F.col("d") - 1) / F.lit(2))
+        .cast("long")
+        .alias("n_wedges")
+    )
+    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
+    tri = (
+        e1.join(e2, F.col("e1.v") == F.col("e2.u"))
+        .join(
+            e3,
+            (F.col("e3.u") == F.col("e1.u"))
+            & (F.col("e3.v") == F.col("e2.v")),
+        )
+        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
+    )
+    n_edges = e.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
+    return (
+        n_edges.crossJoin(F.broadcast(wedges))
+        .crossJoin(F.broadcast(tri))
+        .select(
+            "n_edges",
+            "n_wedges",
+            "n_triangles",
+            (F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges")).alias(
+                "clustering_coeff"
+            ),
+        )
+    )
+
+
 @op(
     "graph_triangle_count",
     oracle=f"""
@@ -1445,7 +1486,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     pairs = li.select("l_orderkey", "l_suppkey").distinct()
     a, b = pairs.alias("a"), pairs.alias("b")
-    e = (
+    edges = (
         a.join(
             b,
             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -1455,41 +1496,12 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.l_suppkey").alias("u"), F.col("b.l_suppkey").alias("v")
         )
         .distinct()
-        .persist()
     )
-    deg = (
-        e.select(F.col("u").alias("n"))
-        .unionAll(e.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    wedges = deg.agg(
-        F.sum(F.col("d") * (F.col("d") - 1) / F.lit(2))
-        .cast("long")
-        .alias("n_wedges")
-    )
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.v") == F.col("e2.u"))
-        .join(
-            e3,
-            (F.col("e3.u") == F.col("e1.u"))
-            & (F.col("e3.v") == F.col("e2.v")),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
-    edges = e.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    return (
-        edges.crossJoin(F.broadcast(wedges))
-        .crossJoin(F.broadcast(tri))
-        .select(
-            "n_edges",
-            "n_wedges",
-            "n_triangles",
-            rnd(
-                F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges"), 6
-            ).alias("clustering_coeff"),
-        )
+    return triangle_stats(edges).select(
+        "n_edges",
+        "n_wedges",
+        "n_triangles",
+        rnd(F.col("clustering_coeff"), 6).alias("clustering_coeff"),
     )
 
 

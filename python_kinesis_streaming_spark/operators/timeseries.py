@@ -31,6 +31,8 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
@@ -303,6 +305,33 @@ def interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def ewma(
+    df: DataFrame,
+    part_col: str,
+    order_cols: Sequence[str],
+    value_col: str,
+    alpha: float = 0.5,
+) -> DataFrame:
+    """Per-partition exponentially weighted moving average of ``value_col``
+    folded in ``order_cols`` order, seeded with the first value: returns
+    (part_col, n_events, ewma). The recursion runs as a bounded in-row HOF
+    fold after one partial-agg shuffle — no window sort, no Python,
+    bit-reproducible across engines for a fixed order."""
+    a = float(alpha)
+    grouped = df.groupBy(part_col).agg(
+        F.array_sort(F.collect_list(F.struct(*order_cols, value_col))).alias("a")
+    )
+    return grouped.select(
+        part_col,
+        F.size("a").cast("long").alias("n_events"),
+        F.expr(
+            f"aggregate(slice(a, 2, size(a) - 1), "
+            f"CAST(element_at(a, 1).`{value_col}` AS DOUBLE), "
+            f"(acc, s) -> {a} * s.`{value_col}` + {1.0 - a} * acc)"
+        ).alias("ewma"),
+    )
+
+
 @op(
     "ts_ewma",
     oracle=f"""
@@ -327,22 +356,8 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user exponentially weighted moving average (alpha=0.5) of event
     values in event-time order, seeded with the first value."""
     ev = load_table(spark, sf_dir, "events")
-    grouped = ev.groupBy("user_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("ts", "event_id", "value"))
-        ).alias("a")
-    )
-    return grouped.select(
-        "user_id",
-        F.size("a").cast("long").alias("n_events"),
-        rnd(
-            F.expr(
-                "aggregate(slice(a, 2, size(a) - 1), "
-                "CAST(element_at(a, 1).value AS DOUBLE), "
-                "(acc, s) -> 0.5 * s.value + 0.5 * acc)"
-            ),
-            6,
-        ).alias("ewma"),
+    return ewma(ev, "user_id", ["ts", "event_id"], "value").select(
+        "user_id", "n_events", rnd(F.col("ewma"), 6).alias("ewma")
     )
 
 
@@ -1106,6 +1121,77 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def interpolate_hourly(
+    df: DataFrame, key: str, ts: str, value_col: str
+) -> DataFrame:
+    """Linear interpolation of each ``key``'s irregular ``value_col`` gauge
+    onto the hourly marks inside its observed span: returns (key, hour,
+    interp_value). Union-spine + IGNORE NULLS bracketing, zero joins
+    between spine and points."""
+    pts = df.select(
+        key,
+        F.unix_micros(F.col(ts)).alias("us"),
+        F.col(value_col).cast("double").alias("v"),
+        F.lit(0).alias("is_spine"),
+    )
+    bounds = df.groupBy(key).agg(
+        (
+            F.date_trunc("hour", F.min(ts)) + F.expr("INTERVAL 1 HOUR")
+        ).alias("h0"),
+        F.date_trunc("hour", F.max(ts)).alias("h1"),
+    )
+    spine = bounds.select(
+        key,
+        F.explode(
+            F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
+        ).alias("h"),
+    ).select(
+        key,
+        F.unix_micros("h").alias("us"),
+        F.lit(None).cast("double").alias("v"),
+        F.lit(1).alias("is_spine"),
+    )
+    u = pts.unionByName(spine)
+    w_prev = (
+        Window.partitionBy(key)
+        .orderBy("us", "is_spine")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    w_next = (
+        Window.partitionBy(key)
+        .orderBy("us", "is_spine")
+        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    )
+    point_us = F.when(F.col("v").isNotNull(), F.col("us"))
+    ctx = u.select(
+        key,
+        "us",
+        "is_spine",
+        F.last("v", ignorenulls=True).over(w_prev).alias("pv"),
+        F.last(point_us, ignorenulls=True).over(w_prev).alias("pus"),
+        F.first("v", ignorenulls=True).over(w_next).alias("nv"),
+        F.first(point_us, ignorenulls=True).over(w_next).alias("nus"),
+    )
+    interp = F.when(F.col("nus") == F.col("pus"), F.col("pv")).otherwise(
+        F.col("pv")
+        + (F.col("nv") - F.col("pv"))
+        * (F.col("us") - F.col("pus"))
+        / (F.col("nus") - F.col("pus"))
+    )
+    return (
+        ctx.where(
+            (F.col("is_spine") == 1)
+            & F.col("pv").isNotNull()
+            & F.col("nv").isNotNull()
+        )
+        .select(
+            key,
+            F.timestamp_micros(F.col("us")).alias("hour"),
+            interp.alias("interp_value"),
+        )
+    )
+
+
 @op(
     "ts_linear_interpolate",
     oracle="""
@@ -1180,67 +1266,8 @@ def ts_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ts_linear_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Each user's value gauge linearly interpolated at hourly marks."""
     ev = load_table(spark, sf_dir, "events")
-    pts = ev.select(
-        "user_id",
-        F.unix_micros("ts").alias("us"),
-        F.col("value").cast("double").alias("v"),
-        F.lit(0).alias("is_spine"),
-    )
-    bounds = ev.groupBy("user_id").agg(
-        (
-            F.date_trunc("hour", F.min("ts")) + F.expr("INTERVAL 1 HOUR")
-        ).alias("h0"),
-        F.date_trunc("hour", F.max("ts")).alias("h1"),
-    )
-    spine = bounds.select(
-        "user_id",
-        F.explode(
-            F.sequence("h0", "h1", F.expr("INTERVAL 1 HOUR"))
-        ).alias("h"),
-    ).select(
-        "user_id",
-        F.unix_micros("h").alias("us"),
-        F.lit(None).cast("double").alias("v"),
-        F.lit(1).alias("is_spine"),
-    )
-    u = pts.unionByName(spine)
-    w_prev = (
-        Window.partitionBy("user_id")
-        .orderBy("us", "is_spine")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_next = (
-        Window.partitionBy("user_id")
-        .orderBy("us", "is_spine")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    point_us = F.when(F.col("v").isNotNull(), F.col("us"))
-    ctx = u.select(
-        "user_id",
-        "us",
-        "is_spine",
-        F.last("v", ignorenulls=True).over(w_prev).alias("pv"),
-        F.last(point_us, ignorenulls=True).over(w_prev).alias("pus"),
-        F.first("v", ignorenulls=True).over(w_next).alias("nv"),
-        F.first(point_us, ignorenulls=True).over(w_next).alias("nus"),
-    )
-    interp = F.when(F.col("nus") == F.col("pus"), F.col("pv")).otherwise(
-        F.col("pv")
-        + (F.col("nv") - F.col("pv"))
-        * (F.col("us") - F.col("pus"))
-        / (F.col("nus") - F.col("pus"))
-    )
-    return (
-        ctx.where(
-            (F.col("is_spine") == 1)
-            & F.col("pv").isNotNull()
-            & F.col("nv").isNotNull()
-        )
-        .select(
-            "user_id",
-            F.timestamp_micros(F.col("us")).alias("hour"),
-            rnd(interp, 4).alias("interp_value"),
-        )
+    return interpolate_hourly(ev, "user_id", "ts", "value").select(
+        "user_id", "hour", rnd(F.col("interp_value"), 4).alias("interp_value")
     )
 
 

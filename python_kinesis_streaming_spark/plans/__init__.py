@@ -11,6 +11,7 @@ from python_kinesis_streaming_spark.plans.explain import (  # noqa: F401
     codegen_stage_count,
     has_partial_aggregation,
     is_take_ordered,
+    normalized_plan,
     plan_of,
     pushed_filters,
     read_schemas,

@@ -16,6 +16,7 @@ parquet scan. Audit with ``SPARK_GRAFT_NO_TABLE_CACHE=1`` and
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
 from pyspark.sql import DataFrame
 
@@ -48,6 +49,63 @@ def uncached_plan_of(df_builder, spark, *args, mode: str = "formatted") -> str:
         else:
             os.environ["SPARK_GRAFT_NO_TABLE_CACHE"] = prev
         tables._CACHE.clear()
+
+
+#: the checkout root, as it appears in scan locations and scratch paths
+_ROOT = str(Path(__file__).resolve().parents[2])
+
+
+def _split_top_level(body: str) -> list[str]:
+    """Split ``body`` on the commas that sit outside every bracket."""
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(body):
+        if ch in "[(":
+            depth += 1
+        elif ch in "])":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append(body[start:i].strip())
+            start = i + 1
+    parts.append(body[start:].strip())
+    return parts
+
+
+def _sort_expand_groups(line: str) -> str:
+    """Sort the projection groups of an ``Expand`` argument list
+    (``[[g0], [g1], ...], [output]``) found at the first ``[[``."""
+    start = line.find("[[")
+    if start < 0:
+        return line
+    depth = 0
+    for end in range(start, len(line)):
+        depth += line[end] in "[("
+        depth -= line[end] in "])"
+        if depth == 0:
+            break
+    groups = sorted(_split_top_level(line[start + 1 : end]))
+    return line[:start] + "[" + ", ".join(groups) + "]" + line[end + 1 :]
+
+
+def normalized_plan(plan: str) -> str:
+    """``plan`` with everything that varies between two builds of the same
+    query stripped, so two dumps compare as text: expression ``#id``s,
+    ``plan_id=``, ``RDD[n]``, the checkout path, the numeric suffix of
+    lambda variables, and the order of each ``Expand``'s projection groups
+    (Spark lists the groups of several ``count(DISTINCT ...)`` aggregates
+    in a different order from one session to the next)."""
+    text = plan.replace(_ROOT, "<root>")
+    text = re.sub(r"#\d+", "", text)
+    text = re.sub(r"plan_id=\d+", "plan_id=", text)
+    text = re.sub(r"RDD\[\d+\]", "RDD[]", text)
+    text = re.sub(r"\b(lambda \w+?)_\d+\b", r"\1", text)
+    lines = text.splitlines()
+    in_expand = False
+    for i, line in enumerate(lines):
+        if re.match(r"^\(\d+\) ", line):
+            in_expand = line.split()[1] == "Expand"
+        if (in_expand and line.startswith("Arguments: ")) or "Expand [[" in line:
+            lines[i] = _sort_expand_groups(line)
+    return "\n".join(lines)
 
 
 def pushed_filters(plan: str) -> list[str]:

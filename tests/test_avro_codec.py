@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import datetime
 import json
-import zlib
 
 import pytest
 

@@ -11,8 +11,6 @@ from __future__ import annotations
 import re
 from collections import Counter
 
-import pytest
-
 from python_kinesis_streaming_spark.llm.bpe import (
     PRETOKEN_RE,
     apply_bpe,

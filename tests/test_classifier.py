@@ -5,7 +5,6 @@ gradient-descent updates, and end-to-end separation on synthetic text."""
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from python_kinesis_streaming_spark.llm.classifier import (
     binary_metrics,

@@ -8,7 +8,6 @@ Arrow seams) rather than each only working in isolation."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from python_kinesis_streaming_spark.llm.shards import (

@@ -8,7 +8,6 @@ hashed doc ids, array<string> token columns) — not just in isolation."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from python_kinesis_streaming_spark.llm.classifier import (
@@ -22,7 +21,6 @@ from python_kinesis_streaming_spark.llm.html_extract import (
 from python_kinesis_streaming_spark.llm.packing import (
     pack_concat,
     packing_report,
-    with_token_lengths,
 )
 from python_kinesis_streaming_spark.llm.span_dedup import (
     cut_duplicated_spans,

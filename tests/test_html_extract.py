@@ -4,8 +4,6 @@ a page with explicit nav chrome vs. article body."""
 
 from __future__ import annotations
 
-import pytest
-
 from python_kinesis_streaming_spark.llm.html_extract import (
     extract_document,
     extract_text_frame,

@@ -3,8 +3,6 @@ determinism, and exact agreement with a reference BFD implementation."""
 
 from __future__ import annotations
 
-import pytest
-
 from python_kinesis_streaming_spark.llm.packing import (
     pack_best_fit,
     pack_concat,

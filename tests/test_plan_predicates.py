@@ -15,6 +15,7 @@ from python_kinesis_streaming_spark.plans.explain import (
     codegen_stage_count,
     has_partial_aggregation,
     is_take_ordered,
+    normalized_plan,
     plan_of,
     pushed_filters,
     read_schemas,
@@ -138,6 +139,35 @@ def test_broadcast_partial_takeordered_predicates():
     assert has_partial_aggregation(FORMATTED_PLAN)
     assert not is_take_ordered(FORMATTED_PLAN)
     assert is_take_ordered("TakeOrderedAndProject(limit=10, ...)")
+
+
+# Two builds of one count(DISTINCT a), count(DISTINCT b) query: fresh
+# expression ids, exchange ids and lambda suffixes, and the Expand groups
+# listed in the other order.
+EXPAND_PLAN_A = """\
+(3) Expand [codegen id : 1]
+Input [2]: [a#11L, b#12]
+Arguments: [[a#11L, null, 1], [null, b#12, 2]], [a#20L, b#21, gid#19]
+(4) Exchange
+Arguments: hashpartitioning(a#20L, 8), ENSURE_REQUIREMENTS, [plan_id=41]
+Output [1]: [transform(v#7, lambdafunction(lambda x_12#30, lambda x_12#30, false)) AS t#31]
+"""
+EXPAND_PLAN_B = """\
+(3) Expand [codegen id : 1]
+Input [2]: [a#511L, b#512]
+Arguments: [[null, b#512, 2], [a#511L, null, 1]], [a#520L, b#521, gid#519]
+(4) Exchange
+Arguments: hashpartitioning(a#520L, 8), ENSURE_REQUIREMENTS, [plan_id=977]
+Output [1]: [transform(v#507, lambdafunction(lambda x_98#530, lambda x_98#530, false)) AS t#531]
+"""
+
+
+def test_normalized_plan_strips_ids_and_sorts_expand_groups():
+    assert EXPAND_PLAN_A != EXPAND_PLAN_B
+    assert normalized_plan(EXPAND_PLAN_A) == normalized_plan(EXPAND_PLAN_B)
+    # a real difference survives normalization
+    changed = EXPAND_PLAN_B.replace("hashpartitioning(a#520L, 8)", "hashpartitioning(a#520L, 16)")
+    assert normalized_plan(EXPAND_PLAN_A) != normalized_plan(changed)
 
 
 def test_live_plan_modes_agree(spark, sf_dir):

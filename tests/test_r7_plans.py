@@ -4,7 +4,6 @@ JVM-only hot paths) asserted against the optimizer's actual output."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from python_kinesis_streaming_spark.llm.classifier import (

@@ -12,13 +12,11 @@ from __future__ import annotations
 
 import glob
 import hashlib
-import io
 import os
 import tarfile
 import zlib
 
 import numpy as np
-import pytest
 
 from python_kinesis_streaming_spark.llm.jpeg_codec import encode_jpeg
 from python_kinesis_streaming_spark.llm.shards import (

@@ -1,0 +1,68 @@
+"""Source hygiene read from the AST alone (no Spark): test modules define
+each ``test_*`` name once, and package and test modules import nothing
+they never use."""
+
+from __future__ import annotations
+
+import ast
+from collections import Counter
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parents[1]
+
+
+def unused_imports(tree: ast.Module, lines: list[str]) -> list[str]:
+    """Names a module-level import binds that the module never reads,
+    unless listed in ``__all__`` or imported on a ``# noqa: F401`` line."""
+    strings: dict[str, set[str]] = {}  # module-level name -> its str literals
+    bound: dict[str, tuple[int, int]] = {}  # name -> (statement, alias) line
+    for node in tree.body:
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            if getattr(node, "module", None) == "__future__":
+                continue
+            for alias in node.names:
+                name = alias.asname or alias.name.split(".")[0]
+                bound[name] = (node.lineno, alias.lineno)
+        elif isinstance(node, ast.Assign):
+            # a list may splice earlier module-level lists: ``_SURFACE + [...]``
+            literals: set[str] = set()
+            for c in ast.walk(node.value):
+                if isinstance(c, ast.Constant) and isinstance(c.value, str):
+                    literals.add(c.value)
+                elif isinstance(c, ast.Name):
+                    literals |= strings.get(c.id, set())
+            for target in node.targets:
+                if isinstance(target, ast.Name):
+                    strings[target.id] = literals
+    used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    return sorted(
+        f"{name} (line {line})"
+        for name, (stmt, line) in bound.items()
+        if name not in used | strings.get("__all__", set())
+        and "noqa: F401" not in lines[stmt - 1] + lines[line - 1]
+    )
+
+
+def test_no_test_name_defined_twice():
+    """Python keeps only the last of two same-named tests; the first never runs."""
+    found = {}
+    for path in sorted((ROOT / "tests").glob("test_*.py")):
+        names = Counter(
+            node.name
+            for node in ast.parse(path.read_text()).body
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+            and node.name.startswith("test_")
+        )
+        if dups := sorted(n for n, k in names.items() if k > 1):
+            found[path.name] = dups
+    assert found == {}
+
+
+def test_no_unused_module_level_import():
+    found = {}
+    paths = [*ROOT.glob("python_kinesis_streaming_spark/**/*.py"), *ROOT.glob("tests/*.py")]
+    for path in sorted(paths):
+        text = path.read_text()
+        if unused := unused_imports(ast.parse(text), text.splitlines()):
+            found[str(path.relative_to(ROOT))] = unused
+    assert found == {}

@@ -5,8 +5,6 @@ from __future__ import annotations
 
 from collections import Counter
 
-import pytest
-
 from python_kinesis_streaming_spark.llm.span_dedup import (
     cut_duplicated_spans,
     doc_kgrams,

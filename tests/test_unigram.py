@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import math
 
-import pytest
-
 from python_kinesis_streaming_spark.llm.unigram import (
     _lattice_expected_counts,
     corpus_loglik,

@@ -12,7 +12,6 @@ from python_kinesis_streaming_spark.llm.urls import (
     parse_robots_frame,
     registered_domain,
     robots_allowed,
-    url_host,
 )
 
 
