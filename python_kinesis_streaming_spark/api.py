@@ -26,6 +26,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from python_kinesis_streaming_spark.functions.rounding import cents
 from python_kinesis_streaming_spark.functions.vectors import (
     centroid_ord,
     cosine,
@@ -678,14 +679,13 @@ def target_encode(
     Values are quantized to integer cents before summation so the encoding
     is deterministic under any partial-agg order; the category stats are a
     tiny broadcast, the input never shuffles."""
-    cents = F.floor(F.col(value_col) * 100 + 0.5).cast("long")
     stats = (
-        df.select(F.col(cat_col), cents.alias("_cents"))
+        df.select(F.col(cat_col), cents(value_col).alias("_cents"))
         .groupBy(cat_col)
         .agg(F.sum("_cents").alias("_s"), F.count("*").alias("_n"))
     )
     return (
-        df.withColumn("_cents", cents)
+        df.withColumn("_cents", cents(value_col))
         .join(F.broadcast(stats), cat_col)
         .withColumn(
             out_col,

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.registry import op
-from python_kinesis_streaming_spark.sources.tables import load_table
+from python_kinesis_streaming_spark.sources.tables import load_table, table_view
 
 
 @op(
@@ -540,15 +540,6 @@ def fn_map_construct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _view(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Register the fixture table as a temp view (sf-tagged, idempotent)."""
-    from python_kinesis_streaming_spark.sources.tables import sf_tag
-
-    vname = f"v_{name}_{sf_tag(sf_dir)}"
-    load_table(spark, sf_dir, name).createOrReplaceTempView(vname)
-    return vname
-
-
 @op(
     "agg_filter_clause",
     oracle="""
@@ -569,7 +560,7 @@ def _view(spark: SparkSession, sf_dir: str, name: str) -> str:
 )
 def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type conditional metrics via the SQL FILTER (WHERE ...) clause."""
-    v = _view(spark, sf_dir, "events")
+    v = table_view(spark, sf_dir, "events")
     return spark.sql(f"""
         SELECT event_type,
                count(*) AS n,
@@ -606,7 +597,7 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def win_named_window_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared named windows: row_number + running sum + lag in one pass."""
-    v = _view(spark, sf_dir, "events")
+    v = table_view(spark, sf_dir, "events")
     return spark.sql(f"""
         SELECT event_id, user_id,
                row_number() OVER wo AS rn,
@@ -814,7 +805,7 @@ def fn_variant_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def fn_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUP BY ALL shorthand over the Q1 grouping."""
-    v = _view(spark, sf_dir, "lineitem")
+    v = table_view(spark, sf_dir, "lineitem")
     return spark.sql(
         f"""
         SELECT l_returnflag, l_linestatus,

@@ -1,9 +1,9 @@
 """Wave-11 pipeline ops (round 12, fifth batch) — corpus word
-burstiness, confident-learning label noise, ranking-quality metrics,
-seasonal Holt-Winters and token-mass concentration.
+burstiness, confident-learning label noise, ranking-quality metrics
+and token-mass concentration.
 
-Five capabilities extending the corpus-statistics / retrieval-eval /
-forecasting story:
+Four capabilities extending the corpus-statistics / retrieval-eval
+story:
 
 - ``corpus_word_burstiness``: Church & Gale (1995) word burstiness —
   for the top collection-frequency words, cf/df and the probability a
@@ -18,11 +18,6 @@ forecasting story:
   prefilter vs the exact cosine ranking — recall@10, MRR and nDCG@10
   with integer-micro frozen DCG terms (the metrics a retrieval stack
   reports, beyond the recall audits the registry already has).
-- ``ts_holt_winters_seasonal``: additive Holt-Winters (level + trend +
-  weekly seasonal) over per-type daily series — the seasonal recursion
-  ts_holt_linear's two-state fold can't express; LIST accumulator on
-  the DuckDB side (its STRUCT list_reduce accumulator mis-evaluates,
-  see ts_holt_linear).
 - ``corpus_token_concentration``: token-mass concentration — exact
   integer-rank Gini per source, top-decile share, and the global HHI
   across sources. The diversity audit run before weighting a mixture.
@@ -568,218 +563,6 @@ def sim_rank_quality_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("ndcg_at_10"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# additive Holt-Winters with weekly seasonality
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "ts_holt_winters_seasonal",
-    oracle=f"""
-        WITH daily AS (
-            SELECT event_type,
-                   date_trunc('day', CAST(ts AS TIMESTAMP)) AS d,
-                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS cents
-            FROM events GROUP BY 1, 2
-        ),
-        idx AS (
-            SELECT event_type, cents,
-                   CAST(row_number() OVER (
-                       PARTITION BY event_type ORDER BY d
-                   ) - 1 AS BIGINT) AS t
-            FROM daily
-        ),
-        seq AS (
-            SELECT event_type,
-                   list([CAST(cents AS DOUBLE), CAST(t AS DOUBLE)]
-                        ORDER BY t) AS xs,
-                   CAST(count(*) AS BIGINT) AS n_days
-            FROM idx GROUP BY event_type
-        ),
-        init AS (
-            SELECT event_type, xs, n_days,
-                   (xs[1][1] + xs[2][1] + xs[3][1] + xs[4][1]
-                    + xs[5][1] + xs[6][1] + xs[7][1]) / 7.0 AS l0
-            FROM seq WHERE n_days >= 8
-        ),
-        folded AS (
-            -- accumulator is a flat DOUBLE[9]: [level, trend, s0..s6].
-            -- DuckDB 1.0's list_reduce mis-evaluates STRUCT
-            -- accumulators (see ts_holt_linear) — LIST accumulators
-            -- fold correctly and match Spark bit-for-bit.
-            SELECT event_type, n_days,
-                   list_reduce(
-                       list_prepend(
-                           [l0, 0.0]
-                               || list_transform(xs[1:7],
-                                                 e -> e[1] - l0),
-                           xs[8:CAST(n_days AS INT)]),
-                       (acc, s) -> [
-                           0.5 * (s[1]
-                               - acc[3 + (CAST(s[2] AS INT) % 7)])
-                               + 0.5 * (acc[1] + acc[2]),
-                           0.3 * ((0.5 * (s[1]
-                               - acc[3 + (CAST(s[2] AS INT) % 7)])
-                               + 0.5 * (acc[1] + acc[2])) - acc[1])
-                               + 0.7 * acc[2]
-                       ]
-                       || acc[3:2 + (CAST(s[2] AS INT) % 7)]
-                       || [0.2 * (s[1] - (0.5 * (s[1]
-                               - acc[3 + (CAST(s[2] AS INT) % 7)])
-                               + 0.5 * (acc[1] + acc[2])))
-                               + 0.8 * acc[3
-                                   + (CAST(s[2] AS INT) % 7)]]
-                       || acc[4 + (CAST(s[2] AS INT) % 7):9]
-                   ) AS hw
-            FROM init
-        )
-        SELECT event_type, n_days,
-               {sql_rnd("hw[1] / 100.0", 6)} AS level,
-               {sql_rnd("hw[2] / 100.0", 6)} AS trend,
-               {sql_rnd(
-                   "hw[3 + (CAST(n_days AS INT) % 7)] / 100.0", 6
-               )} AS s_next,
-               {sql_rnd(
-                   "(hw[1] + 1 * hw[2]"
-                   " + hw[3 + (CAST(n_days AS INT) % 7)]) / 100.0", 6
-               )} AS forecast_h1,
-               {sql_rnd(
-                   "(hw[1] + 7 * hw[2]"
-                   " + hw[3 + (CAST((n_days + 6) AS INT) % 7)]) / 100.0",
-                   6
-               )} AS forecast_h7
-        FROM folded
-    """,
-    scale=(
-        "Additive Holt-Winters (alpha=0.5, beta=0.3, gamma=0.2, m=7) "
-        "over per-type daily value totals — the level+trend+seasonal "
-        "recursion ts_holt_linear's two-state fold cannot express. "
-        "Same bounded in-row fold shape: one event_type shuffle "
-        "collects the daily series (days, not events — the "
-        "aggregation happens first, so the array is |days| long no "
-        "matter the row count), then a codegen HOF folds a 9-slot "
-        "accumulator [l, b, s0..s6], rebuilding the seasonal slot by "
-        "slice-concat. Day values enter as exact integer cents; init "
-        "is the first-7-day mean with s_j = x_j - l0; slots key on "
-        "the POSITIONAL day index (identical groupBy output both "
-        "engines), so a sparse day at tiny SF shifts both engines "
-        "identically. Both engines fold the identical order with "
-        "identical double arithmetic — level/trend/seasonal and the "
-        "h=1/h=7 forecasts are bit-reproducible at 1e-6. Unbounded "
-        "keys -> the applyInPandasWithState shape, state = "
-        "(l, b, s[0..6])."
-    ),
-)
-def ts_holt_winters_seasonal(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-event-type additive Holt-Winters over daily value cents
-    (weekly season): final level/trend/next-slot seasonal + h=1, h=7
-    forecasts."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("d")
-    ).agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-        .cast("long")
-        .alias("cents")
-    )
-    idx = daily.select(
-        "event_type",
-        F.col("cents").cast("double").alias("x"),
-        (
-            F.row_number().over(
-                Window.partitionBy("event_type").orderBy("d")
-            )
-            - 1
-        )
-        .cast("long")
-        .alias("t"),
-    )
-    seq = idx.groupBy("event_type").agg(
-        F.array_sort(F.collect_list(F.struct("t", "x"))).alias("a"),
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-    ).where(F.col("n_days") >= 8)
-    withl0 = seq.withColumn(
-        "l0",
-        (
-            F.element_at("a", 1).getField("x")
-            + F.element_at("a", 2).getField("x")
-            + F.element_at("a", 3).getField("x")
-            + F.element_at("a", 4).getField("x")
-            + F.element_at("a", 5).getField("x")
-            + F.element_at("a", 6).getField("x")
-            + F.element_at("a", 7).getField("x")
-        )
-        / F.lit(7.0),
-    )
-    hw = F.expr(
-        """
-        aggregate(
-            slice(a, 8, CAST(n_days AS INT) - 7),
-            named_struct(
-                'l', l0,
-                'b', CAST(0.0 AS DOUBLE),
-                's', transform(slice(a, 1, 7), e -> e.x - l0)),
-            (acc, s) -> named_struct(
-                'l', 0.5D * (s.x
-                        - element_at(acc.s, CAST(s.t % 7 AS INT) + 1))
-                        + 0.5D * (acc.l + acc.b),
-                'b', 0.3D * ((0.5D * (s.x
-                        - element_at(acc.s, CAST(s.t % 7 AS INT) + 1))
-                        + 0.5D * (acc.l + acc.b)) - acc.l)
-                        + 0.7D * acc.b,
-                's', concat(
-                        slice(acc.s, 1, CAST(s.t % 7 AS INT)),
-                        array(0.2D * (s.x - (0.5D * (s.x
-                            - element_at(acc.s,
-                                         CAST(s.t % 7 AS INT) + 1))
-                            + 0.5D * (acc.l + acc.b)))
-                            + 0.8D * element_at(
-                                acc.s, CAST(s.t % 7 AS INT) + 1)),
-                        slice(acc.s, CAST(s.t % 7 AS INT) + 2,
-                              6 - CAST(s.t % 7 AS INT)))))
-        """
-    )
-    folded = withl0.select(
-        "event_type", "n_days", hw.alias("hw")
-    )
-    s_next = F.element_at(
-        F.col("hw").getField("s"),
-        (F.col("n_days") % 7).cast("int") + 1,
-    )
-    s_h7 = F.element_at(
-        F.col("hw").getField("s"),
-        ((F.col("n_days") + 6) % 7).cast("int") + 1,
-    )
-    return folded.select(
-        "event_type",
-        "n_days",
-        rnd(F.col("hw").getField("l") / F.lit(100.0), 6).alias("level"),
-        rnd(F.col("hw").getField("b") / F.lit(100.0), 6).alias("trend"),
-        rnd(s_next / F.lit(100.0), 6).alias("s_next"),
-        rnd(
-            (
-                F.col("hw").getField("l")
-                + F.lit(1) * F.col("hw").getField("b")
-                + s_next
-            )
-            / F.lit(100.0),
-            6,
-        ).alias("forecast_h1"),
-        rnd(
-            (
-                F.col("hw").getField("l")
-                + F.lit(7) * F.col("hw").getField("b")
-                + s_h7
-            )
-            / F.lit(100.0),
-            6,
-        ).alias("forecast_h7"),
     )
 
 

@@ -1,8 +1,8 @@
 """Wave-12 pipeline ops (round 12, sixth batch) — mergeable
-heavy-hitter sketches, z-order layout pruning, robust MAD anomalies,
-cluster-balanced sampling and embedding isotropy.
+heavy-hitter sketches, z-order layout pruning, cluster-balanced
+sampling and embedding isotropy.
 
-Five capabilities extending the sketch/layout/robust-statistics story:
+Four capabilities extending the sketch/layout/sampling story:
 
 - ``text_heavy_hitters_mg``: Misra-Gries heavy hitters with MERGEABLE
   per-partition summaries (Agarwal et al. 2012) — the top-k sketch
@@ -14,10 +14,6 @@ Five capabilities extending the sketch/layout/robust-statistics story:
   clustering vs natural key order — per-bucket min/max spans and the
   fraction of buckets a point-range probe grid can skip; the
   data-layout audit behind OPTIMIZE ZORDER decisions.
-- ``ts_anomaly_mad``: robust anomaly detection via median / MAD with
-  the 1.4826 normal-consistency factor — the exact-integer rank
-  median (no percentile_approx), with the 3-sigma-equivalent flag
-  decided by a pure BIGINT comparison.
 - ``corpus_cluster_balanced_sample``: cluster-stratified downsampling
   — at most 16 hash-rank winners per SemDeDup cell; the diverse-
   subset selection step run after semantic dedup, mergeable and
@@ -351,187 +347,6 @@ def lakehouse_zorder_layout_audit(
             / (F.max("n_buckets") * F.count(F.lit(1))),
             4,
         ).alias("avg_skip_frac"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# robust MAD anomaly detection
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "ts_anomaly_mad",
-    oracle="""
-        WITH c AS (
-            SELECT event_type,
-                   CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
-                   event_id
-            FROM events
-        ),
-        r AS (
-            SELECT event_type, cents,
-                   CAST(row_number() OVER (
-                       PARTITION BY event_type ORDER BY cents, event_id
-                   ) AS BIGINT) AS rn,
-                   CAST(count(*) OVER (PARTITION BY event_type)
-                        AS BIGINT) AS cnt
-            FROM c
-        ),
-        med AS (
-            -- exact integer median, doubled to stay integral for even n
-            SELECT event_type, cnt,
-                   CAST(CASE WHEN cnt % 2 = 1 THEN 2 * sum(picked)
-                        ELSE sum(picked) END AS BIGINT) AS med2
-            FROM (
-                SELECT event_type, cnt,
-                       CASE WHEN rn IN ((cnt + 1) // 2, (cnt + 2) // 2)
-                            THEN cents END AS picked
-                FROM r
-            ) GROUP BY event_type, cnt
-        ),
-        dev AS (
-            SELECT c.event_type, c.event_id, m.cnt, m.med2,
-                   abs(2 * c.cents - m.med2) AS dh
-            FROM c JOIN med m ON m.event_type = c.event_type
-        ),
-        dr AS (
-            SELECT event_type, dh, cnt, med2,
-                   CAST(row_number() OVER (
-                       PARTITION BY event_type ORDER BY dh, event_id
-                   ) AS BIGINT) AS rn
-            FROM dev
-        ),
-        mad AS (
-            SELECT event_type, cnt, med2,
-                   CAST(CASE WHEN cnt % 2 = 1 THEN 2 * sum(picked)
-                        ELSE sum(picked) END AS BIGINT) AS mad2
-            FROM (
-                SELECT event_type, cnt, med2,
-                       CASE WHEN rn IN ((cnt + 1) // 2, (cnt + 2) // 2)
-                            THEN dh END AS picked
-                FROM dr
-            ) GROUP BY event_type, cnt, med2
-        )
-        SELECT d.event_type,
-               CAST(m.cnt AS BIGINT) AS n,
-               CAST(m.med2 / 200.0 AS DOUBLE) AS median_value,
-               CAST(m.mad2 / 400.0 AS DOUBLE) AS mad_value,
-               CAST(sum(CASE WHEN 20000 * d.dh > 44478 * m.mad2
-                        THEN 1 ELSE 0 END) AS BIGINT) AS n_anomalies,
-               floor(sum(CASE WHEN 20000 * d.dh > 44478 * m.mad2
-                              THEN 1 ELSE 0 END) * 1.0 / m.cnt
-                     * 10000.0 + 0.505) / 10000.0 AS anomaly_rate,
-               CAST(max(d.dh) / 200.0 AS DOUBLE) AS max_dev_value
-        FROM dev d JOIN mad m ON m.event_type = d.event_type
-        GROUP BY d.event_type, m.cnt, m.med2, m.mad2
-    """,
-    scale=(
-        "Robust anomaly detection: flag |x - median| > 3 * 1.4826 * "
-        "MAD (the normal-consistency factor makes MAD a sigma "
-        "estimate outliers cannot poison, unlike mean/stddev). Every "
-        "quantity is an exact integer — values in cents, the median "
-        "DOUBLED (med2 = one or two middle ranks summed) so even-n "
-        "medians stay integral, deviations as dh = |2*cents - med2|, "
-        "the MAD doubled again — and the flag is the pure-BIGINT "
-        "comparison 20000*dh > 44478*mad2 (3*1.4826 scaled by 1e4), "
-        "so NO float enters a branch: both engines flag the identical "
-        "set at any partitioning. percentile_approx is banned here "
-        "(partition-order-dependent, the engine-quirks lesson); the "
-        "exact rank median costs one in-partition sort per key. "
-        "100 TB: windows are PARTITIONED BY event_type; a skewed key "
-        "uses the two-level rank pattern, and streaming deployments "
-        "swap the exact median for a P2/moments sketch with the "
-        "heavy-hitters-style checked bound."
-    ),
-)
-def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type exact median/MAD and 3-sigma-equivalent robust anomaly
-    counts over event value cents."""
-    ev = load_table(spark, sf_dir, "events")
-    c = ev.select(
-        "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias(
-            "cents"
-        ),
-        "event_id",
-    )
-    w = Window.partitionBy("event_type")
-    r = c.select(
-        "event_type",
-        "cents",
-        F.row_number()
-        .over(w.orderBy("cents", "event_id"))
-        .cast("long")
-        .alias("rn"),
-        F.count(F.lit(1)).over(w).cast("long").alias("cnt"),
-    )
-    lo = F.floor((F.col("cnt") + 1) / 2).cast("long")
-    hi = F.floor((F.col("cnt") + 2) / 2).cast("long")
-    picked = F.when(
-        (F.col("rn") == lo) | (F.col("rn") == hi), F.col("cents")
-    )
-    med = (
-        r.select("event_type", "cnt", picked.alias("picked"))
-        .groupBy("event_type", "cnt")
-        .agg(
-            F.when(F.col("cnt") % 2 == 1, 2 * F.sum("picked"))
-            .otherwise(F.sum("picked"))
-            .cast("long")
-            .alias("med2")
-        )
-    )
-    dev = c.join(med, "event_type").select(
-        "event_type",
-        "event_id",
-        "cnt",
-        "med2",
-        F.abs(2 * F.col("cents") - F.col("med2")).alias("dh"),
-    )
-    dr = dev.select(
-        "event_type",
-        "dh",
-        "cnt",
-        "med2",
-        F.row_number()
-        .over(w.orderBy("dh", "event_id"))
-        .cast("long")
-        .alias("rn"),
-    )
-    picked_dh = F.when(
-        (F.col("rn") == lo) | (F.col("rn") == hi), F.col("dh")
-    )
-    mad = (
-        dr.select("event_type", "cnt", "med2", picked_dh.alias("picked"))
-        .groupBy("event_type", "cnt", "med2")
-        .agg(
-            F.when(F.col("cnt") % 2 == 1, 2 * F.sum("picked"))
-            .otherwise(F.sum("picked"))
-            .cast("long")
-            .alias("mad2")
-        )
-    )
-    flag = F.when(
-        F.lit(20000) * F.col("dh") > F.lit(44478) * F.col("mad2"), 1
-    ).otherwise(0)
-    return (
-        dev.drop("cnt", "med2")
-        .join(mad, "event_type")
-        .groupBy("event_type", "cnt", "med2", "mad2")
-        .agg(
-            F.sum(flag).cast("long").alias("n_anomalies"),
-            F.max("dh").alias("max_dh"),
-        )
-        .select(
-            "event_type",
-            F.col("cnt").alias("n"),
-            (F.col("med2") / F.lit(200.0)).alias("median_value"),
-            (F.col("mad2") / F.lit(400.0)).alias("mad_value"),
-            "n_anomalies",
-            rnd(
-                F.col("n_anomalies") * F.lit(1.0) / F.col("cnt"), 4
-            ).alias("anomaly_rate"),
-            (F.col("max_dh") / F.lit(200.0)).alias("max_dev_value"),
-        )
     )
 
 

@@ -1,16 +1,9 @@
-"""Wave-13 pipeline ops (round 12, seventh batch) — frequency-domain
-periodicity, quality-gate ablation, distance-concentration, b-bit
-minhash and pseudo-relevance-feedback retrieval.
+"""Wave-13 pipeline ops (round 12, seventh batch) — quality-gate
+ablation, distance-concentration, b-bit minhash and
+pseudo-relevance-feedback retrieval.
 
-Five capabilities extending the forecasting/filter-tuning/dedup/IR
-story:
+Four capabilities extending the filter-tuning/dedup/IR story:
 
-- ``ts_periodogram_dominant``: discrete-Fourier periodogram of the
-  per-type daily series at k=1..8 cycles — the frequency-domain
-  dominant-period detector (the calendar-free complement of
-  ts_seasonal_profile). The cos/sin tables are PYTHON-GENERATED
-  LITERALS injected into both engines, so no libm cos() ulp can ever
-  flip a floor boundary.
 - ``dq_quality_gate_sweep``: threshold ablation for the quality
   score — docs kept, token mass kept and lang-mix shift per literal
   threshold grid; the table a filtering pipeline reads before picking
@@ -37,8 +30,6 @@ literal spines shared verbatim between engines.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
@@ -46,190 +37,6 @@ from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.functions.vectors import dot, sq_norm
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
-
-
-# ---------------------------------------------------------------------------
-# DFT periodogram with Python-literal trig tables
-# ---------------------------------------------------------------------------
-
-_PG_N = 30  # fixture day count (positional ordinals past it just drop)
-_PG_FREQS = range(1, 9)
-
-#: (k, t) -> exact literal doubles; repr() round-trips IEEE-754 exactly,
-#: so BOTH engines consume bit-identical trig values and the only
-#: remaining arithmetic is one multiply (exact in both) + BIGINT sums.
-_PG_TABLE = [
-    (
-        k,
-        t,
-        math.cos(2.0 * math.pi * k * t / _PG_N),
-        math.sin(2.0 * math.pi * k * t / _PG_N),
-    )
-    for k in _PG_FREQS
-    for t in range(_PG_N)
-]
-
-_PG_VALUES_SQL = ",\n            ".join(
-    f"({k}, {t}, {c!r}, {s!r})" for (k, t, c, s) in _PG_TABLE
-)
-
-
-@op(
-    "ts_periodogram_dominant",
-    oracle=f"""
-        WITH daily AS (
-            SELECT event_type,
-                   date_trunc('day', CAST(ts AS TIMESTAMP)) AS d,
-                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS cents
-            FROM events GROUP BY 1, 2
-        ),
-        idx AS (
-            SELECT event_type, cents,
-                   CAST(row_number() OVER (
-                       PARTITION BY event_type ORDER BY d
-                   ) - 1 AS BIGINT) AS t
-            FROM daily
-        ),
-        spine(k, t, cosv, sinv) AS (VALUES
-            {_PG_VALUES_SQL}
-        ),
-        terms AS (
-            SELECT i.event_type, s.k,
-                   CAST(floor(i.cents * s.cosv * 1000000.0 + 0.505)
-                        AS BIGINT) AS c_micro,
-                   CAST(floor(i.cents * s.sinv * 1000000.0 + 0.505)
-                        AS BIGINT) AS s_micro
-            FROM idx i JOIN spine s ON s.t = i.t
-        ),
-        nd AS (
-            SELECT event_type, CAST(count(*) AS BIGINT) AS n_days
-            FROM idx GROUP BY event_type
-        ),
-        spec AS (
-            SELECT t.event_type, t.k, nd.n_days,
-                   (sum(t.c_micro) / (100000000.0 * nd.n_days))
-                       * (sum(t.c_micro) / (100000000.0 * nd.n_days))
-                   + (sum(t.s_micro) / (100000000.0 * nd.n_days))
-                       * (sum(t.s_micro) / (100000000.0 * nd.n_days))
-                       AS power
-            FROM terms t JOIN nd ON nd.event_type = t.event_type
-            GROUP BY t.event_type, t.k, nd.n_days
-        ),
-        ranked AS (
-            SELECT event_type, k, n_days,
-                   {sql_rnd("power", 2)} AS power_r,
-                   row_number() OVER (
-                       PARTITION BY event_type
-                       ORDER BY {sql_rnd("power", 2)} DESC, k
-                   ) AS rk
-            FROM spec
-        )
-        SELECT event_type, CAST(k AS BIGINT) AS k,
-               {sql_rnd("n_days * 1.0 / k", 2)} AS period_days,
-               power_r AS power,
-               CAST(CASE WHEN rk = 1 THEN 1 ELSE 0 END AS BIGINT)
-                   AS is_dominant
-        FROM ranked
-    """,
-    scale=(
-        "Discrete-Fourier periodogram at k=1..8 cycles over the "
-        "per-type daily series — the frequency-domain dominant-period "
-        "detector (ts_seasonal_profile's calendar-free complement: it "
-        "finds the period instead of assuming one). Cross-engine "
-        "determinism is structural: the cos/sin tables are "
-        "PYTHON-GENERATED repr() literals injected verbatim into both "
-        "engines (libm cos differs by ulps between JVM and C — with "
-        "literals the only float op is one multiply, bit-identical "
-        "everywhere), each term freezes to integer micro before the "
-        "per-(type,k) BIGINT sum, and power is computed from exact "
-        "integer sums. Shape: the day aggregation happens FIRST, so "
-        "the spine join fans out |days|x|freqs| rows no matter the "
-        "event count; one (type,k) agg ends it. 100 TB: map-only "
-        "after a |days|-row broadcast join."
-    ),
-)
-def ts_periodogram_dominant(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Periodogram power at k=1..8 cycles per type; dominant flagged."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("d")
-    ).agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-        .cast("long")
-        .alias("cents")
-    )
-    idx = daily.select(
-        "event_type",
-        "cents",
-        (
-            F.row_number().over(
-                Window.partitionBy("event_type").orderBy("d")
-            )
-            - 1
-        )
-        .cast("long")
-        .alias("t"),
-    )
-    spine = spark.createDataFrame(
-        _PG_TABLE, "k long, t long, cosv double, sinv double"
-    )
-    terms = idx.join(F.broadcast(spine), "t").select(
-        "event_type",
-        "k",
-        F.floor(F.col("cents") * F.col("cosv") * F.lit(1000000.0) + F.lit(0.505))
-        .cast("long")
-        .alias("c_micro"),
-        F.floor(F.col("cents") * F.col("sinv") * F.lit(1000000.0) + F.lit(0.505))
-        .cast("long")
-        .alias("s_micro"),
-    )
-    nd = idx.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days")
-    )
-    spec = (
-        terms.groupBy("event_type", "k")
-        .agg(
-            F.sum("c_micro").cast("long").alias("sc"),
-            F.sum("s_micro").cast("long").alias("ss"),
-        )
-        .join(nd, "event_type")
-        .select(
-            "event_type",
-            "k",
-            "n_days",
-            (
-                (F.col("sc") / (F.lit(100000000.0) * F.col("n_days")))
-                * (F.col("sc") / (F.lit(100000000.0) * F.col("n_days")))
-                + (F.col("ss") / (F.lit(100000000.0) * F.col("n_days")))
-                * (F.col("ss") / (F.lit(100000000.0) * F.col("n_days")))
-            ).alias("power"),
-        )
-    )
-    ranked = spec.select(
-        "event_type",
-        "k",
-        "n_days",
-        rnd(F.col("power"), 2).alias("power_r"),
-    ).withColumn(
-        "rk",
-        F.row_number().over(
-            Window.partitionBy("event_type").orderBy(
-                F.desc("power_r"), "k"
-            )
-        ),
-    )
-    return ranked.select(
-        "event_type",
-        F.col("k").cast("long").alias("k"),
-        rnd(F.col("n_days") * F.lit(1.0) / F.col("k"), 2).alias(
-            "period_days"
-        ),
-        F.col("power_r").alias("power"),
-        F.when(F.col("rk") == 1, 1).otherwise(0).cast("long").alias(
-            "is_dominant"
-        ),
-    )
 
 
 # ---------------------------------------------------------------------------

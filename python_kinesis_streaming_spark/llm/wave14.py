@@ -1,8 +1,8 @@
 """Wave-14 pipeline ops (round 12, eighth batch) — Kneser-Ney
-smoothing, count-min sketches, leave-one-out target encoding, Croston
-intermittent forecasting and graph beam-search retrieval.
+smoothing, count-min sketches, leave-one-out target encoding and graph
+beam-search retrieval.
 
-Five capabilities extending the LM/sketch/feature/forecast/ANN story:
+Four capabilities extending the LM/sketch/feature/ANN story:
 
 - ``text_kneser_ney_bigram``: interpolated Kneser-Ney bigram
   probabilities (the canonical LM smoothing — absolute discount
@@ -19,11 +19,6 @@ Five capabilities extending the LM/sketch/feature/forecast/ANN story:
   m-estimate smoothing (the feature-store classic) — per-row encoding
   (sum_y - y_i + m*prior) / (n - 1 + m) from exact integer group
   sums, emitted for a deterministic 1-in-97 row sample.
-- ``ts_croston_intermittent``: Croston's method for intermittent
-  demand — paired EWMAs of nonzero demand size and inter-demand
-  interval, updated only at demand points; the forecasting family
-  Holt/Holt-Winters cannot express (their error explodes on sparse
-  series).
 - ``sim_graph_beam_recall``: greedy beam search over the in-cell
   top-8 neighbor graph (two unrolled hops from a deterministic entry
   point, beam=8) with recall@5 against the exact in-cell ranking —
@@ -391,135 +386,6 @@ def feat_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("naive_enc"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Croston's method for intermittent demand
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "ts_croston_intermittent",
-    oracle=f"""
-        WITH p AS (
-            SELECT user_id,
-                   CAST(date_diff('day',
-                        DATE '2024-01-01',
-                        CAST(date_trunc('day', CAST(ts AS TIMESTAMP))
-                             AS DATE)) AS BIGINT) AS t,
-                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS cents
-            FROM events WHERE event_type = 'purchase'
-            GROUP BY user_id, date_trunc('day', CAST(ts AS TIMESTAMP))
-        ),
-        seq AS (
-            SELECT user_id,
-                   list([CAST(cents AS DOUBLE), CAST(t AS DOUBLE)]
-                        ORDER BY t) AS xs,
-                   CAST(count(*) AS BIGINT) AS n_demands
-            FROM p GROUP BY user_id
-        ),
-        folded AS (
-            -- flat DOUBLE[3] accumulator [z, per, last_t] (LIST, not
-            -- STRUCT: the ts_holt_linear DuckDB lambda bug)
-            SELECT user_id, n_demands,
-                   list_reduce(
-                       list_prepend(
-                           [xs[1][1], xs[2][2] - xs[1][2], xs[1][2]],
-                           xs[2:CAST(n_demands AS INT)]),
-                       (acc, s) -> [
-                           0.3 * s[1] + 0.7 * acc[1],
-                           0.3 * (s[2] - acc[3]) + 0.7 * acc[2],
-                           s[2]
-                       ]
-                   ) AS cr
-            FROM seq WHERE n_demands >= 3
-        )
-        SELECT user_id, n_demands,
-               {sql_rnd("cr[1] / 100.0", 6)} AS demand_size,
-               {sql_rnd("cr[2]", 6)} AS demand_interval,
-               {sql_rnd("cr[1] / (100.0 * cr[2])", 6)}
-                   AS forecast_per_day
-        FROM folded
-    """,
-    scale=(
-        "Croston's method — THE estimator for intermittent demand "
-        "(sparse event streams where Holt/Holt-Winters smear zeros "
-        "into the level): two EWMAs (alpha=0.3), one over nonzero "
-        "demand sizes and one over inter-demand intervals, updated "
-        "ONLY at demand points; forecast rate = size/interval. Same "
-        "bounded in-row fold as the Holt family: per-user demand "
-        "days collected once (|demand days| elements, not |events|), "
-        "a flat [z, p, last_t] LIST accumulator folded by codegen "
-        "HOF (DuckDB STRUCT accumulators mis-evaluate — the "
-        "ts_holt_linear lesson), init z=first size / p=first gap. "
-        "Demand values enter as exact integer cents; both engines "
-        "fold the identical order with identical double arithmetic "
-        "— bit-reproducible at 1e-6. 100 TB: unbounded keys -> the "
-        "applyInPandasWithState shape, state = 3 doubles/user."
-    ),
-)
-def ts_croston_intermittent(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-user Croston size/interval EWMAs over purchase days."""
-    ev = load_table(spark, sf_dir, "events")
-    p = (
-        ev.where(F.col("event_type") == "purchase")
-        .groupBy(
-            "user_id", F.date_trunc("day", F.col("ts")).alias("d")
-        )
-        .agg(
-            F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-            .cast("long")
-            .alias("cents")
-        )
-        .select(
-            "user_id",
-            F.col("cents").cast("double").alias("x"),
-            F.datediff(F.col("d").cast("date"), F.lit("2024-01-01").cast("date"))
-            .cast("long")
-            .alias("t"),
-        )
-    )
-    seq = (
-        p.groupBy("user_id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("t", "x"))).alias("a"),
-            F.count(F.lit(1)).cast("long").alias("n_demands"),
-        )
-        .where(F.col("n_demands") >= 3)
-    )
-    cr = F.expr(
-        """
-        aggregate(
-            slice(a, 2, CAST(n_demands AS INT) - 1),
-            named_struct(
-                'z', element_at(a, 1).x,
-                'p', CAST(element_at(a, 2).t - element_at(a, 1).t
-                          AS DOUBLE),
-                'lt', CAST(element_at(a, 1).t AS DOUBLE)),
-            (acc, s) -> named_struct(
-                'z', 0.3D * s.x + 0.7D * acc.z,
-                'p', 0.3D * (CAST(s.t AS DOUBLE) - acc.lt)
-                     + 0.7D * acc.p,
-                'lt', CAST(s.t AS DOUBLE)))
-        """
-    )
-    folded = seq.select("user_id", "n_demands", cr.alias("cr"))
-    return folded.select(
-        "user_id",
-        "n_demands",
-        rnd(F.col("cr").getField("z") / F.lit(100.0), 6).alias(
-            "demand_size"
-        ),
-        rnd(F.col("cr").getField("p"), 6).alias("demand_interval"),
-        rnd(
-            F.col("cr").getField("z")
-            / (F.lit(100.0) * F.col("cr").getField("p")),
-            6,
-        ).alias("forecast_per_day"),
     )
 
 

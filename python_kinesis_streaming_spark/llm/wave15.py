@@ -1,9 +1,9 @@
 """Wave-15 pipeline ops (round 12, ninth batch) — CUPED variance
-reduction, Horvitz-Thompson estimation, PQ-ADC retrieval, span-mask
-planning and Hyndman decomposition strengths.
+reduction, Horvitz-Thompson estimation, PQ-ADC retrieval and span-mask
+planning.
 
-Five capabilities extending the experimentation/estimation/ANN/
-training-prep/forecasting story:
+Four capabilities extending the experimentation/estimation/ANN/
+training-prep story:
 
 - ``events_cuped_adjustment``: CUPED (Deng et al. 2013) — the
   pre-period covariate adjustment every experimentation platform
@@ -22,11 +22,6 @@ training-prep/forecasting story:
   deterministic 3-token span per 20-token block (exactly 15% mask,
   mean span 3) placed by the md5 hash of (doc, block); per-doc and
   corpus accounting of the realized plan.
-- ``ts_decomposition_strength``: Hyndman's seasonal/trend strength
-  measures over per-type daily series — centered MA(7) trend, per-DOW
-  seasonal means, F_s = max(0, 1 - var(resid)/var(detrended)) — with
-  every intermediate frozen to integer micro before any
-  cross-partition variance.
 
 Same discipline as waves 7-14: exact integers before any
 cross-partition sum, identical aliases, BIGINT casts in oracles,
@@ -38,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.rounding import cents, rnd, sql_rnd
 from python_kinesis_streaming_spark.functions.vectors import sq_l2
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
@@ -118,13 +113,12 @@ def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED theta + variance-reduction report (pre = Jan 1-15,
     post = Jan 16-30, per-user value cents)."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     cut = F.lit("2024-01-16 00:00:00").cast("timestamp")
     u = ev.groupBy("user_id").agg(
-        F.sum(F.when(F.col("ts") < cut, cents).otherwise(0))
+        F.sum(F.when(F.col("ts") < cut, cents()).otherwise(0))
         .cast("long")
         .alias("x"),
-        F.sum(F.when(F.col("ts") >= cut, cents).otherwise(0))
+        F.sum(F.when(F.col("ts") >= cut, cents()).otherwise(0))
         .cast("long")
         .alias("y"),
     )
@@ -589,192 +583,4 @@ def corpus_span_mask_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         rnd(F.col("n_masked") * F.lit(1.0) / F.col("n_tok"), 4).alias(
             "mask_ratio"
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Hyndman decomposition strengths
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "ts_decomposition_strength",
-    oracle=f"""
-        WITH daily AS (
-            SELECT event_type,
-                   date_trunc('day', CAST(ts AS TIMESTAMP)) AS d,
-                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS cents
-            FROM events GROUP BY 1, 2
-        ),
-        idx AS (
-            SELECT event_type, cents,
-                   CAST(row_number() OVER (
-                       PARTITION BY event_type ORDER BY d
-                   ) - 1 AS BIGINT) AS t
-            FROM daily
-        ),
-        ma AS (
-            -- centered MA(7) trend: exact integer 7-day sums
-            SELECT a.event_type, a.t, a.cents,
-                   CAST(sum(b.cents) AS BIGINT) AS w_sum,
-                   CAST(count(*) AS BIGINT) AS w_n
-            FROM idx a JOIN idx b
-              ON b.event_type = a.event_type
-             AND b.t BETWEEN a.t - 3 AND a.t + 3
-            GROUP BY a.event_type, a.t, a.cents
-        ),
-        det AS (
-            -- detrended series frozen to WHOLE CENTS (not micro):
-            -- det^2 sums must stay inside int64 at 10-100x the
-            -- fixture's daily totals
-            SELECT event_type, t, CAST(t % 7 AS BIGINT) AS dow,
-                   CAST(floor((cents - w_sum * 1.0 / w_n)
-                        + 0.505) AS BIGINT) AS det_c
-            FROM ma WHERE w_n = 7
-        ),
-        seas AS (
-            SELECT event_type, dow,
-                   CAST(sum(det_c) AS BIGINT) AS s_sum,
-                   CAST(count(*) AS BIGINT) AS s_n
-            FROM det GROUP BY event_type, dow
-        ),
-        resid AS (
-            SELECT d.event_type,
-                   d.det_c,
-                   CAST(floor((d.det_c - s.s_sum * 1.0 / s.s_n)
-                        + 0.505) AS BIGINT) AS r_c
-            FROM det d
-            JOIN seas s ON s.event_type = d.event_type
-                       AND s.dow = d.dow
-        ),
-        v AS (
-            SELECT event_type,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(det_c) AS BIGINT) AS sd,
-                   CAST(sum(det_c * det_c) AS BIGINT) AS sdd,
-                   CAST(sum(r_c) AS BIGINT) AS sr,
-                   CAST(sum(r_c * r_c) AS BIGINT) AS srr
-            FROM resid GROUP BY event_type
-        )
-        SELECT event_type, n,
-               {sql_rnd(
-                   "greatest(0.0, 1.0"
-                   " - (srr * 1.0 / n - (sr * 1.0 / n) * (sr * 1.0 / n))"
-                   "   / (sdd * 1.0 / n - (sd * 1.0 / n) * (sd * 1.0 / n)))",
-                   4
-               )} AS seasonal_strength,
-               {sql_rnd(
-                   "(sdd * 1.0 / n - (sd * 1.0 / n) * (sd * 1.0 / n))"
-                   " / 10000.0", 4
-               )} AS var_detrended,
-               {sql_rnd(
-                   "(srr * 1.0 / n - (sr * 1.0 / n) * (sr * 1.0 / n))"
-                   " / 10000.0", 4
-               )} AS var_residual
-        FROM v
-    """,
-    scale=(
-        "Hyndman's seasonal-strength measure F_s = max(0, 1 - "
-        "var(remainder)/var(detrended)) over per-type daily series: "
-        "centered MA(7) trend from exact integer 7-day sums (a "
-        "self-range-join on t — |days| rows per key, never the event "
-        "table), per-positional-DOW seasonal means, remainder "
-        "variance vs detrended variance. The detrended series "
-        "freezes to integer micro BEFORE the seasonal/variance "
-        "stages, so every downstream moment is a BIGINT sum — "
-        "bit-identical at any partitioning. The statistic feeds the "
-        "forecaster choice: F_s near 0 says ts_holt_linear suffices, "
-        "near 1 says ts_holt_winters_seasonal earns its state. "
-        "100 TB: the day table is tiny after the first agg; "
-        "everything downstream is |days|x|types| arithmetic."
-    ),
-)
-def ts_decomposition_strength(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-type seasonal strength from MA(7)-detrended daily series."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("d")
-    ).agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-        .cast("long")
-        .alias("cents")
-    )
-    idx = daily.select(
-        "event_type",
-        "cents",
-        (
-            F.row_number().over(
-                Window.partitionBy("event_type").orderBy("d")
-            )
-            - 1
-        )
-        .cast("long")
-        .alias("t"),
-    )
-    a, b = idx.alias("a"), idx.alias("b")
-    ma = (
-        a.join(
-            b,
-            (F.col("b.event_type") == F.col("a.event_type"))
-            & (F.col("b.t") >= F.col("a.t") - 3)
-            & (F.col("b.t") <= F.col("a.t") + 3),
-        )
-        .groupBy(
-            F.col("a.event_type").alias("event_type"),
-            F.col("a.t").alias("t"),
-            F.col("a.cents").alias("cents"),
-        )
-        .agg(
-            F.sum("b.cents").cast("long").alias("w_sum"),
-            F.count(F.lit(1)).cast("long").alias("w_n"),
-        )
-    )
-    det = ma.where(F.col("w_n") == 7).select(
-        "event_type",
-        (F.col("t") % 7).cast("long").alias("dow"),
-        F.floor(
-            (F.col("cents") - F.col("w_sum") * F.lit(1.0) / F.col("w_n"))
-            + F.lit(0.505)
-        )
-        .cast("long")
-        .alias("det_c"),
-    )
-    seas = det.groupBy("event_type", "dow").agg(
-        F.sum("det_c").cast("long").alias("s_sum"),
-        F.count(F.lit(1)).cast("long").alias("s_n"),
-    )
-    resid = det.join(seas, ["event_type", "dow"]).select(
-        "event_type",
-        "det_c",
-        F.floor(
-            (F.col("det_c") - F.col("s_sum") * F.lit(1.0) / F.col("s_n"))
-            + F.lit(0.505)
-        )
-        .cast("long")
-        .alias("r_c"),
-    )
-    v = resid.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("det_c").cast("long").alias("sd"),
-        F.sum(F.col("det_c") * F.col("det_c")).cast("long").alias("sdd"),
-        F.sum("r_c").cast("long").alias("sr"),
-        F.sum(F.col("r_c") * F.col("r_c")).cast("long").alias("srr"),
-    )
-    vd = F.col("sdd") * F.lit(1.0) / F.col("n") - (
-        F.col("sd") * F.lit(1.0) / F.col("n")
-    ) * (F.col("sd") * F.lit(1.0) / F.col("n"))
-    vr = F.col("srr") * F.lit(1.0) / F.col("n") - (
-        F.col("sr") * F.lit(1.0) / F.col("n")
-    ) * (F.col("sr") * F.lit(1.0) / F.col("n"))
-    return v.select(
-        "event_type",
-        "n",
-        rnd(F.greatest(F.lit(0.0), F.lit(1.0) - vr / vd), 4).alias(
-            "seasonal_strength"
-        ),
-        rnd(vd / F.lit(10000.0), 4).alias("var_detrended"),
-        rnd(vr / F.lit(10000.0), 4).alias("var_residual"),
     )

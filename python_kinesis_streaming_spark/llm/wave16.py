@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.rounding import cents, rnd, sql_rnd
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -107,9 +107,7 @@ def events_power_analysis_mde(
     """MDE + required-n report from per-user value-cent moments."""
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-        .cast("long")
-        .alias("y")
+        F.sum(cents()).cast("long").alias("y")
     )
     s = u.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -565,9 +563,7 @@ def events_bootstrap_ci_hash(
     for k in range(len(_POIS_CDF_MICRO) - 1, -1, -1):
         m_expr = F.when(u < _POIS_CDF_MICRO[k], k).otherwise(m_expr)
     reps = ev.select(
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long").alias(
-            "cents"
-        ),
+        cents().alias("cents"),
         "event_id",
         reps_spine,
     ).select("rep", "cents", m_expr.alias("m"))
@@ -597,9 +593,7 @@ def events_bootstrap_ci_hash(
     base = ev.agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         rnd(
-            F.sum(
-                F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-            )
+            F.sum(cents())
             * F.lit(1.0)
             / (F.lit(100.0) * F.count(F.lit(1))),
             4,

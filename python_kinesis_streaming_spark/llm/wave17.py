@@ -1,8 +1,8 @@
 """Wave-17 pipeline ops (round 12, eleventh batch) — lexical
-diversity, EWMA control charts, link prediction, Bayesian A/B and
-context-window truncation planning.
+diversity, link prediction, Bayesian A/B and context-window
+truncation planning.
 
-Five capabilities extending the corpus-quality/SPC/graph/
+Four capabilities extending the corpus-quality/graph/
 experimentation/training-prep story:
 
 - ``text_mattr_lexical_diversity``: moving-average type-token ratio
@@ -10,11 +10,6 @@ experimentation/training-prep story:
   the length-robust lexical-diversity statistic (plain TTR collapses
   with document length; Heaps' law fits growth, MATTR scores docs);
   per-window TTRs are exact rationals (distinct*20000 micro).
-- ``ts_ewma_control_chart``: EWMA control chart (Roberts 1959 /
-  Montgomery SPC): lambda=0.2 smoothing with time-varying 3-sigma
-  limits — BOTH the geometric weights and the limit-width factors are
-  Python-literal tables shared verbatim by the engines, so no libm
-  pow() ulp exists anywhere.
 - ``graph_adamic_adar_linkpred``: Adamic-Adar link prediction over
   the symmetrized in-cell 8-NN graph — AA(a,b) = sum 1/ln(deg(z))
   over common neighbors, per-term frozen to integer micro; the top-20
@@ -129,208 +124,6 @@ def text_mattr_lexical_diversity(
         ).alias("mattr"),
         rnd(F.min("ttr_micro") / F.lit(1000000.0), 4).alias("min_ttr"),
         rnd(F.max("ttr_micro") / F.lit(1000000.0), 4).alias("max_ttr"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# EWMA control chart with literal weight tables
-# ---------------------------------------------------------------------------
-
-_EWMA_LAM = 0.2
-_EWMA_L = 3.0
-_EWMA_MAX_T = 30
-
-#: geometric weights lambda*(1-lambda)^k, k = 0..29 — Python literals
-#: shared verbatim by both engines (no libm pow anywhere).
-_EWMA_W = [
-    _EWMA_LAM * (1.0 - _EWMA_LAM) ** k for k in range(_EWMA_MAX_T)
-]
-#: residual weight (1-lambda)^(t+1) for the z_{-1} = center term.
-_EWMA_R = [(1.0 - _EWMA_LAM) ** (t + 1) for t in range(_EWMA_MAX_T)]
-#: limit-width factor sqrt(lam/(2-lam) * (1-(1-lam)^(2(t+1)))).
-_EWMA_S = [
-    (
-        _EWMA_LAM
-        / (2.0 - _EWMA_LAM)
-        * (1.0 - (1.0 - _EWMA_LAM) ** (2 * (t + 1)))
-    )
-    ** 0.5
-    for t in range(_EWMA_MAX_T)
-]
-
-_EWMA_W_SQL = ",\n            ".join(
-    f"({k}, {w!r})" for k, w in enumerate(_EWMA_W)
-)
-_EWMA_RS_SQL = ",\n            ".join(
-    f"({t}, {r!r}, {s!r})"
-    for t, (r, s) in enumerate(zip(_EWMA_R, _EWMA_S))
-)
-
-
-@op(
-    "ts_ewma_control_chart",
-    oracle=f"""
-        WITH daily AS (
-            SELECT event_type,
-                   date_trunc('day', CAST(ts AS TIMESTAMP)) AS d,
-                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS cents
-            FROM events GROUP BY 1, 2
-        ),
-        idx AS (
-            SELECT event_type, cents,
-                   CAST(row_number() OVER (
-                       PARTITION BY event_type ORDER BY d
-                   ) - 1 AS BIGINT) AS t
-            FROM daily
-        ),
-        base AS (
-            SELECT event_type,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(cents) AS BIGINT) AS s1,
-                   CAST(sum(cents * cents) AS BIGINT) AS s2
-            FROM idx GROUP BY event_type
-        ),
-        wtab(k, w) AS (VALUES
-            {_EWMA_W_SQL}
-        ),
-        rstab(t, r, s) AS (VALUES
-            {_EWMA_RS_SQL}
-        ),
-        z AS (
-            SELECT a.event_type, a.t,
-                   CAST(sum(CAST(floor(b.cents * w.w * 100.0 + 0.505)
-                        AS BIGINT)) AS BIGINT) AS zw_centi
-            FROM idx a
-            JOIN idx b ON b.event_type = a.event_type
-                      AND b.t <= a.t
-            JOIN wtab w ON w.k = a.t - b.t
-            GROUP BY a.event_type, a.t
-        ),
-        flags AS (
-            SELECT z.event_type, z.t,
-                   abs(z.zw_centi / 100.0
-                       + rs.r * (base.s1 * 1.0 / base.n)
-                       - base.s1 * 1.0 / base.n)
-                   / (sqrt(base.s2 * 1.0 / base.n
-                           - (base.s1 * 1.0 / base.n)
-                             * (base.s1 * 1.0 / base.n)) * rs.s)
-                       AS zscore
-            FROM z
-            JOIN rstab rs ON rs.t = z.t
-            JOIN base ON base.event_type = z.event_type
-        )
-        SELECT event_type,
-               CAST(count(*) AS BIGINT) AS n_days,
-               CAST(sum(CASE WHEN zscore > {_EWMA_L} THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_out_of_control,
-               {sql_rnd("max(zscore)", 4)} AS max_zscore
-        FROM flags GROUP BY event_type
-    """,
-    scale=(
-        "EWMA control chart (Roberts 1959; the SPC standard for "
-        "small persistent shifts that Shewhart charts miss, the "
-        "complement of ts_changepoint_cusum): z_t = lam*sum "
-        "(1-lam)^k x_(t-k) + (1-lam)^(t+1)*center, flagged when "
-        "|z_t - center| exceeds L*sigma*sqrt(lam/(2-lam)*"
-        "(1-(1-lam)^(2(t+1)))). EVERY transcendental — the geometric "
-        "weights, the residual weight and the limit-width factor — "
-        "is a Python-literal table shared verbatim by both engines "
-        "(the ts_periodogram_dominant trick), so the only float ops "
-        "are multiplies of exact integer cents by identical "
-        "literals; weighted terms freeze to integer centi before the "
-        "per-(type, t) BIGINT sums. Shape: the day table is tiny "
-        "after the first agg; the weight join is |days|^2/2 rows per "
-        "key. 100 TB: identical — the chart runs on aggregated days, "
-        "never events; streaming deployments fold z_t as one state "
-        "double per key."
-    ),
-)
-def ts_ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type EWMA chart summary: out-of-control days + max z."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("d")
-    ).agg(
-        F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long"))
-        .cast("long")
-        .alias("cents")
-    )
-    idx = daily.select(
-        "event_type",
-        "cents",
-        (
-            F.row_number().over(
-                Window.partitionBy("event_type").orderBy("d")
-            )
-            - 1
-        )
-        .cast("long")
-        .alias("t"),
-    )
-    base = idx.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("cents").cast("long").alias("s1"),
-        F.sum(F.col("cents") * F.col("cents")).cast("long").alias("s2"),
-    )
-    wtab = spark.createDataFrame(
-        list(enumerate(_EWMA_W)), "k long, w double"
-    )
-    rstab = spark.createDataFrame(
-        [(t, r, s) for t, (r, s) in enumerate(zip(_EWMA_R, _EWMA_S))],
-        "t long, r double, s double",
-    )
-    a, b = idx.alias("a"), idx.alias("b")
-    z = (
-        a.join(
-            b,
-            (F.col("b.event_type") == F.col("a.event_type"))
-            & (F.col("b.t") <= F.col("a.t")),
-        )
-        .join(
-            F.broadcast(wtab),
-            F.col("k") == F.col("a.t") - F.col("b.t"),
-        )
-        .groupBy(
-            F.col("a.event_type").alias("event_type"),
-            F.col("a.t").alias("t"),
-        )
-        .agg(
-            F.sum(
-                F.floor(
-                    F.col("b.cents") * F.col("w") * F.lit(100.0)
-                    + F.lit(0.505)
-                ).cast("long")
-            )
-            .cast("long")
-            .alias("zw_centi")
-        )
-    )
-    mean_c = F.col("s1") * F.lit(1.0) / F.col("n")
-    sigma = F.sqrt(
-        F.col("s2") * F.lit(1.0) / F.col("n") - mean_c * mean_c
-    )
-    flags = (
-        z.join(F.broadcast(rstab), "t")
-        .join(base, "event_type")
-        .select(
-            "event_type",
-            (
-                F.abs(
-                    F.col("zw_centi") / F.lit(100.0)
-                    + F.col("r") * mean_c
-                    - mean_c
-                )
-                / (sigma * F.col("s"))
-            ).alias("zscore"),
-        )
-    )
-    return flags.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum(F.when(F.col("zscore") > _EWMA_L, 1).otherwise(0))
-        .cast("long")
-        .alias("n_out_of_control"),
-        rnd(F.max("zscore"), 4).alias("max_zscore"),
     )
 
 

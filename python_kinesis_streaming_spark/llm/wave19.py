@@ -1,5 +1,5 @@
 """Round-13 wave-19 ops (SURVEY §2.31): vocab planning, memorization
-risk, sampling degeneracy, PQ training, and changepoint detection.
+risk, sampling degeneracy and PQ training.
 
 - ``text_vocab_coverage_curve``: OOV share per source at vocab sizes
   V = 4/8/16 (global top-V words) — the table that sizes a vocabulary
@@ -18,10 +18,6 @@ risk, sampling degeneracy, PQ training, and changepoint detection.
   vs after update+reassign, with the Lloyd non-increase theorem
   checked as a boolean — completes sim_pq_adc_recall's query path
   with the training path.
-- ``ts_cusum_page_alarm``: two-sided CUSUM (Page 1954) on daily
-  revenue, computed EXACTLY in integers via the prefix-sum identity
-  C+_t = P_t - min(P_0..P_t) with P scaled by N (no mean division) —
-  the classic drift detector next to the EWMA chart's step detector.
 
 Same discipline as waves 7-18: exact integers before any
 cross-partition sum, identical aliases, BIGINT casts in oracles,
@@ -510,141 +506,4 @@ def emb_pq_train_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("lloyd_nonincrease"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# CUSUM changepoint detection on daily revenue
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "ts_cusum_page_alarm",
-    oracle="""
-        WITH daily AS (
-            SELECT CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
-                        AS BIGINT) AS day_num,
-                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS cents
-            FROM events GROUP BY day_num
-        ),
-        tot AS (
-            SELECT CAST(count(*) AS BIGINT) AS nd,
-                   CAST(sum(cents) AS BIGINT) AS s
-            FROM daily
-        ),
-        pre AS (
-            -- P_t = sum_{i<=t} (N*x_i - S): exact BIGINT prefix sums
-            -- (the mean never divides — everything scales by N)
-            SELECT d.day_num, d.cents, t.nd, t.s,
-                   CAST(sum(d.cents * t.nd - t.s) OVER (
-                        ORDER BY d.day_num
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW) AS BIGINT) AS p
-            FROM daily d CROSS JOIN tot t
-        ),
-        c AS (
-            -- one-sided CUSUMs via the prefix-extrema identity:
-            -- C+_t = P_t - min(0, P_1..P_t); C-_t = max(0, ...) - P_t
-            SELECT day_num, cents, nd, s, p,
-                   CAST(p - least(CAST(0 AS BIGINT), min(p) OVER (
-                        ORDER BY day_num
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW)) AS BIGINT) AS cpos,
-                   CAST(greatest(CAST(0 AS BIGINT), max(p) OVER (
-                        ORDER BY day_num
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW)) - p AS BIGINT) AS cneg
-            FROM pre
-        )
-        SELECT day_num, cents,
-               floor((cpos * 1.0 / (nd * 100.0)) * 100.0 + 0.505)
-                   / 100.0 AS cusum_pos_dollars,
-               floor((cneg * 1.0 / (nd * 100.0)) * 100.0 + 0.505)
-                   / 100.0 AS cusum_neg_dollars,
-               -- alarm: cumulated one-sided excess > 5% of the grand
-               -- total (20*C > N*S), an exact BIGINT comparison
-               CAST(CASE WHEN cpos * 20 > nd * s
-                    THEN 1 ELSE 0 END AS BIGINT) AS alarm_up,
-               CAST(CASE WHEN cneg * 20 > nd * s
-                    THEN 1 ELSE 0 END AS BIGINT) AS alarm_down
-        FROM c
-    """,
-    scale=(
-        "Two-sided CUSUM changepoint detection (Page 1954) on daily "
-        "revenue — the drift detector the EWMA chart (step detector) "
-        "pairs with. EXACT integer arithmetic throughout: with P_t = "
-        "Σ(N·x_i − S) (cents scaled by the day count, so the "
-        "reference mean never divides), the one-sided statistics are "
-        "the prefix-extrema identities C+_t = P_t − min(0, P_≤t) and "
-        "C−_t = max(0, P_≤t) − P_t, and the 5%-of-total alarm is the "
-        "cross-multiplied comparison 20·C > N·S — no float anywhere "
-        "until the display columns. The running windows are over the "
-        "DAY AGGREGATE (|days| rows — bounded input, the repo's "
-        "global-window rule). 100 TB: one day-keyed agg with map-side "
-        "combine feeds a |days|-row window — the ts_gap_fill shape; "
-        "overflow headroom: cents·N at 10^12 daily cents × 10^4 days "
-        "is 10^16 < 2^63."
-    ),
-)
-def ts_cusum_page_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-integer two-sided CUSUM over daily revenue totals."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.expr("unix_micros(ts) div 86400000000").alias("day_num")
-    ).agg(
-        F.sum(
-            F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-        )
-        .cast("long")
-        .alias("cents")
-    )
-    tot = daily.agg(
-        F.count(F.lit(1)).cast("long").alias("nd"),
-        F.sum("cents").cast("long").alias("s"),
-    )
-    w = (
-        Window.orderBy("day_num")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pre = daily.crossJoin(F.broadcast(tot)).withColumn(
-        "p",
-        F.sum(F.col("cents") * F.col("nd") - F.col("s"))
-        .over(w)
-        .cast("long"),
-    )
-    c = pre.select(
-        "day_num",
-        "cents",
-        "nd",
-        "s",
-        "p",
-        (
-            F.col("p")
-            - F.least(F.lit(0).cast("long"), F.min("p").over(w))
-        )
-        .cast("long")
-        .alias("cpos"),
-        (
-            F.greatest(F.lit(0).cast("long"), F.max("p").over(w))
-            - F.col("p")
-        )
-        .cast("long")
-        .alias("cneg"),
-    )
-    return c.select(
-        "day_num",
-        "cents",
-        rnd(F.col("cpos") * F.lit(1.0) / (F.col("nd") * F.lit(100.0)), 2)
-        .alias("cusum_pos_dollars"),
-        rnd(F.col("cneg") * F.lit(1.0) / (F.col("nd") * F.lit(100.0)), 2)
-        .alias("cusum_neg_dollars"),
-        F.when(F.col("cpos") * 20 > F.col("nd") * F.col("s"), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("alarm_up"),
-        F.when(F.col("cneg") * 20 > F.col("nd") * F.col("s"), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("alarm_down"),
     )

@@ -34,14 +34,8 @@ from python_kinesis_streaming_spark.llm.dedup import (
     word_shingles,
 )
 from python_kinesis_streaming_spark.llm.similarity import ivf_centroid_dists
-from python_kinesis_streaming_spark.operators.timeseries import _ORD_SQL, _ord_col
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
-
-# Per-batch StreamingQueryProgress dicts from stream_minhash_dedup's last
-# run — a test-inspection seam so the RocksDB state-store test can assert
-# on state metrics (rows in state, update counts), not just sink contents.
-LAST_STREAM_PROGRESS: list = []
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments
@@ -1263,6 +1257,15 @@ def stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MinHash-LSH dedup: per-doc band verdicts maintained as
     bucket state across micro-batches; final result == the batch
     min-ordinal-per-bucket rule."""
+    return minhash_dedup_stream(spark, sf_dir, 1024)
+
+
+def minhash_dedup_stream(
+    spark: SparkSession, sf_dir: str, nshards: int, progress: list | None = None
+) -> DataFrame:
+    """stream_minhash_dedup's replay with its bucket state split over
+    ``nshards`` hash shards; ``progress`` collects per-batch progress.
+    The verdicts do not depend on ``nshards``."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.streaming.state import GroupStateTimeout
 
@@ -1348,12 +1351,6 @@ def stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bottleneck); sharding amortizes it to once per shard. Entries
     # per shard stay bounded at |buckets|/NSHARDS; NSHARDS is the
     # scale knob (1024 local, 2^20+ on a RocksDB-backed cluster).
-    # SPARK_GRAFT_MINHASH_NSHARDS overrides it (read driver-side at plan
-    # time) so tests/test_wave2.py can demonstrate the knob against the
-    # RocksDB state-store provider — output is shard-count-invariant.
-    import os as _os
-
-    nshards = int(_os.environ.get("SPARK_GRAFT_MINHASH_NSHARDS", "1024"))
     banded = (
         sdf.select(
             "doc_id", "ord", F.posexplode(band_keys(F.col("text"))).alias("band", "bid")
@@ -1413,8 +1410,7 @@ def stream_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    LAST_STREAM_PROGRESS.clear()
-    mem = run_to_memory(verdicts, "append", progress=LAST_STREAM_PROGRESS)
+    mem = run_to_memory(verdicts, "append", progress=progress)
     return mem.groupBy("doc_id", "ord").agg(
         F.sum(F.when(F.col("dup"), 1).otherwise(0))
         .cast("long")
@@ -1540,52 +1536,8 @@ def lakehouse_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# batch 3: time-series downsampling, vocab drift, weighted near-dup
+# batch 3: vocab drift, weighted near-dup
 # ---------------------------------------------------------------------------
-
-@op(
-    "ts_downsample_m4",
-    oracle=f"""
-        WITH o AS (
-            SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket,
-                   value, {_ORD_SQL} AS ord
-            FROM events
-        )
-        SELECT CAST(bucket AS TIMESTAMP) AS bucket,
-               CAST(count(*) AS BIGINT) AS n,
-               {sql_rnd("min_by(value, ord)")} AS v_first,
-               {sql_rnd("max_by(value, ord)")} AS v_last,
-               {sql_rnd("min(value)")} AS v_min,
-               {sql_rnd("max(value)")} AS v_max
-        FROM o GROUP BY bucket
-    """,
-    scale=(
-        "M4 downsampling — the error-free line-chart reduction "
-        "(per pixel-column bucket keep first/last/min/max): the standard "
-        "way to ship a 100 TB series to a dashboard without losing "
-        "extremes. One mergeable aggregate per bucket (min_by/max_by/"
-        "min/max are all partial-agg friendly, 4 scalars of state), so "
-        "the shuffle carries |buckets| rows regardless of event count. "
-        "First/last ordering uses the repo's cross-engine int64 event "
-        "ordinal (DuckDB max_by rejects STRUCT order keys)."
-    ),
-)
-def ts_downsample_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First/last/min/max of value per hour bucket (M4 reduction)."""
-    ev = load_table(spark, sf_dir, "events")
-    o = ev.select(
-        F.date_trunc("hour", F.col("ts")).alias("bucket"),
-        "value",
-        _ord_col().alias("ord"),
-    )
-    return o.groupBy("bucket").agg(
-        F.count("*").alias("n"),
-        rnd(F.min_by("value", "ord")).alias("v_first"),
-        rnd(F.max_by("value", "ord")).alias("v_last"),
-        rnd(F.min("value")).alias("v_min"),
-        rnd(F.max("value")).alias("v_max"),
-    )
-
 
 @op(
     "text_source_kl_divergence",

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.rounding import cents, rnd, sql_rnd
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -760,9 +760,7 @@ def events_winsorize_sensitivity(
     )
     t = ev.select(
         (F.col("user_id") % 2).cast("long").alias("arm"),
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        cents().alias("cents"),
     )
     s = t.crossJoin(F.broadcast(grid)).groupBy("cap", "arm").agg(
         F.count(F.lit(1)).cast("long").alias("n"),

@@ -42,7 +42,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.rounding import cents, rnd, sql_rnd
 from python_kinesis_streaming_spark.llm.dedup import md5_hash64, _sql_hash64
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table, sf_tag
@@ -190,9 +190,7 @@ def agg_mergeable_quantile_audit(
 ) -> DataFrame:
     """Merged per-shard quantile summaries vs exact ranks + bound."""
     ev = load_table(spark, sf_dir, "events").select(
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        cents().alias("cents"),
         (md5_hash64(F.col("event_id").cast("string")) % _QS_SHARDS).alias(
             "shard"
         ),
@@ -945,9 +943,7 @@ def sample_neyman_allocation_audit(
     """Neyman vs proportional allocation + variance-reduction boolean."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        cents().alias("cents"),
     )
     mom = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_h"),

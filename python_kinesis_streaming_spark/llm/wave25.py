@@ -1,15 +1,10 @@
-"""Round-14 wave-25 ops (SURVEY §2.37): feature encoding, whiteness
-testing, hash-bit quality, distributional treatment effects,
-boilerplate detection.
+"""Round-14 wave-25 ops (SURVEY §2.37): feature encoding, hash-bit
+quality, distributional treatment effects, boilerplate detection.
 
 - ``feat_woe_iv_encoding``: weight-of-evidence / information value of
   literal value bands against the purchase label — the classic
   credit-scoring feature audit (pairs feat_target_encode_loo with an
   interpretable strength score).
-- ``ts_ljung_box_whiteness``: Ljung-Box portmanteau Q over lags 1-7 of
-  the DIFFERENCED daily series — is what's left after removing the
-  trend white noise? (the residual-diagnostic companion of
-  ts_autocorr's raw ACF screen), critical value as a literal.
 - ``emb_sign_bit_balance_audit``: per-bit 1-share and adjacent-bit
   agreement of the 64-bit sign signatures — a usable binary index
   needs ~50/50 bits with independent neighbors (the index-quality
@@ -35,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.rounding import cents, rnd, sql_rnd
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -132,11 +127,10 @@ def _band_case_sql() -> str:
 def feat_woe_iv_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WoE per literal value band + feature IV vs purchase label."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
     band = F.lit(len(_WOE_BANDS)).cast("long")
     for i in range(len(_WOE_BANDS) - 1, -1, -1):
         band = F.when(
-            cents <= _WOE_BANDS[i], F.lit(i).cast("long")
+            cents() <= _WOE_BANDS[i], F.lit(i).cast("long")
         ).otherwise(band)
     per = (
         ev.select(
@@ -207,191 +201,6 @@ def feat_woe_iv_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         rnd(F.col("iv_total_micro") / F.lit(1000000.0), 4).alias(
             "iv_total"
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Ljung-Box whiteness of the differenced daily series
-# ---------------------------------------------------------------------------
-
-#: lags tested; chi-square 95% critical value for df=7 (literal)
-_LB_LAGS = 7
-_LB_CHI2_95 = 14.0671
-
-
-@op(
-    "ts_ljung_box_whiteness",
-    oracle=f"""
-        WITH daily AS (
-            SELECT CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
-                        AS BIGINT) AS d,
-                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS cents
-            FROM events GROUP BY 1
-        ),
-        diff AS (
-            -- day-over-day difference removes the level: whiteness of
-            -- the differences is the random-walk diagnostic
-            SELECT d, cents - lag(cents) OVER (ORDER BY d) AS x
-            FROM daily
-        ),
-        xs AS (SELECT d, x FROM diff WHERE x IS NOT NULL),
-        lagk AS (
-            SELECT a.x AS x, b.x AS y, k.k
-            FROM xs a
-            JOIN (SELECT CAST(u.k AS BIGINT) AS k
-                  FROM unnest(range(1, {_LB_LAGS + 1})) AS u(k)) k
-              ON true
-            JOIN xs b ON b.d = a.d - k.k
-        ),
-        mom AS (
-            SELECT k,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(x) AS BIGINT) AS sx,
-                   CAST(sum(y) AS BIGINT) AS sy,
-                   CAST(sum(x * x) AS BIGINT) AS sxx,
-                   CAST(sum(y * y) AS BIGINT) AS syy,
-                   CAST(sum(x * y) AS BIGINT) AS sxy
-            FROM lagk GROUP BY k
-        ),
-        nn AS (SELECT CAST(count(*) AS BIGINT) AS n_obs FROM xs),
-        r AS (
-            SELECT m.k, nn.n_obs,
-                   -- lag-k Pearson r from BIGINT moments (1.0::DOUBLE
-                   -- load-bearing), zero-variance guarded
-                   CASE WHEN (m.n * 1.0::DOUBLE * m.sxx
-                              - m.sx * 1.0::DOUBLE * m.sx)
-                             * (m.n * 1.0::DOUBLE * m.syy
-                                - m.sy * 1.0::DOUBLE * m.sy) > 0
-                        THEN (m.n * 1.0::DOUBLE * m.sxy
-                              - m.sx * 1.0::DOUBLE * m.sy)
-                             / sqrt((m.n * 1.0::DOUBLE * m.sxx
-                                     - m.sx * 1.0::DOUBLE * m.sx)
-                                    * (m.n * 1.0::DOUBLE * m.syy
-                                       - m.sy * 1.0::DOUBLE * m.sy))
-                        ELSE 0.0 END AS rk
-            FROM mom m CROSS JOIN nn
-        ),
-        q AS (
-            -- Q = n(n+2) * sum rk^2/(n-k); terms nano-frozen before
-            -- the cross-lag BIGINT sum (order-free)
-            SELECT CAST(sum(CAST(floor(rk * rk / (n_obs - k)
-                       * 1000000000.0 + 0.505) AS BIGINT)) AS BIGINT)
-                       AS s_nano,
-                   max(n_obs) AS n_obs
-            FROM r
-        )
-        SELECT r.k AS lag, {sql_rnd("r.rk", 4)} AS acf_diff,
-               {sql_rnd(
-                   "q.n_obs * (q.n_obs + 2.0)"
-                   " * (q.s_nano / 1000000000.0)", 4
-               )} AS q_stat,
-               {_LB_CHI2_95} AS chi2_crit_95,
-               (q.n_obs * (q.n_obs + 2.0)
-                * (q.s_nano / 1000000000.0) <= {_LB_CHI2_95})
-                   AS is_white_95
-        FROM r CROSS JOIN q
-    """,
-    scale=(
-        "Ljung-Box portmanteau whiteness test on the day-over-day "
-        "differenced series: lag-1..7 autocorrelations from exact "
-        "BIGINT cent moments (the wave-21 Pearson template per lag, "
-        "zero-variance guarded), Q = n(n+2)*sum(rk^2/(n-k)) with "
-        "each term nano-frozen before the order-free sum, compared "
-        "to the LITERAL chi-square 95% critical value for df=7 (no "
-        "p-value transcendentals). Differences white -> the daily "
-        "series is a random walk and ts_holt_linear's trend is "
-        "noise; Q blowing past 14.07 -> real structure remains and "
-        "the seasonal models (HW/Croston) have something to model. "
-        "Shape: one day agg, a |days|-row bounded lag window + "
-        "7-lag equi self-join on day index, a 7-key moment agg, "
-        "7-row report. 100 TB: everything after the first agg is "
-        "|days|-bounded."
-    ),
-)
-def ts_ljung_box_whiteness(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Lag-1..7 ACF of daily differences + Ljung-Box Q vs literal."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            (F.unix_micros(F.col("ts")) / F.lit(86400000000))
-            .cast("long")
-            .alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("c"),
-        )
-        .groupBy("d")
-        .agg(F.sum("c").cast("long").alias("cents"))
-    )
-    diff = daily.select(
-        "d",
-        (
-            F.col("cents")
-            - F.lag("cents").over(Window.orderBy("d"))
-        ).alias("x"),
-    )
-    # xs feeds both lag-join ends and the n_obs scalar — cached, the
-    # |days|-row diamond plans once (wave-22 Exchange-count precedent)
-    xs = diff.where(F.col("x").isNotNull()).cache()
-    kgrid = spark.range(1, _LB_LAGS + 1).select(F.col("id").alias("k"))
-    a = xs.select(F.col("d").alias("da"), F.col("x").alias("x"))
-    b = xs.select(F.col("d").alias("db"), F.col("x").alias("y"))
-    lagk = (
-        a.crossJoin(F.broadcast(kgrid))
-        .join(b, F.col("db") == F.col("da") - F.col("k"))
-    )
-    mom = lagk.groupBy("k").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-    )
-    nn = xs.agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
-    vx = F.col("n") * F.lit(1.0) * F.col("sxx") - F.col("sx") * F.lit(
-        1.0
-    ) * F.col("sx")
-    vy = F.col("n") * F.lit(1.0) * F.col("syy") - F.col("sy") * F.lit(
-        1.0
-    ) * F.col("sy")
-    rk = (
-        F.col("n") * F.lit(1.0) * F.col("sxy")
-        - F.col("sx") * F.lit(1.0) * F.col("sy")
-    ) / F.sqrt(vx * vy)
-    r = mom.crossJoin(F.broadcast(nn)).select(
-        "k",
-        "n_obs",
-        F.when(vx * vy > 0, rk).otherwise(F.lit(0.0)).alias("rk"),
-    )
-    q = r.agg(
-        F.sum(
-            F.floor(
-                F.col("rk")
-                * F.col("rk")
-                / (F.col("n_obs") - F.col("k"))
-                * F.lit(1000000000.0)
-                + F.lit(0.505)
-            ).cast("long")
-        )
-        .cast("long")
-        .alias("s_nano"),
-        F.max("n_obs").alias("n_obs2"),
-    )
-    qstat = (
-        F.col("n_obs2")
-        * (F.col("n_obs2") + F.lit(2.0))
-        * (F.col("s_nano") / F.lit(1000000000.0))
-    )
-    return r.crossJoin(F.broadcast(q)).select(
-        F.col("k").alias("lag"),
-        rnd(F.col("rk"), 4).alias("acf_diff"),
-        rnd(qstat, 4).alias("q_stat"),
-        F.lit(_LB_CHI2_95).alias("chi2_crit_95"),
-        (qstat <= F.lit(_LB_CHI2_95)).alias("is_white_95"),
     )
 
 
@@ -616,9 +425,7 @@ def events_quantile_treatment_effect(
     ev = load_table(spark, sf_dir, "events")
     t = ev.select(
         (F.col("user_id") % 2).cast("long").alias("arm"),
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        cents().alias("cents"),
     )
     # vc feeds the cumulative AND the per-arm totals — cached
     vc = (

@@ -1,6 +1,5 @@
 """Round-14 wave-26 ops (SURVEY §2.38): multi-touch attribution,
-instrumentation QA, metric-space labels, budget planning, seasonal
-ANOVA.
+instrumentation QA, metric-space labels, budget planning.
 
 - ``events_attribution_position``: U-shaped (40/20/40) position-based
   credit per touch type — the multi-touch member of the attribution
@@ -18,10 +17,6 @@ ANOVA.
 - ``corpus_token_budget_plan``: greedy half-budget source selection
   by integer-frozen quality rank with running token cost — the
   knapsack-lite plan corpus_mixture_temperature's weights feed into.
-- ``ts_weekday_anova``: one-way ANOVA of daily cent totals across the
-  7 day-of-week classes from exact BIGINT moments, F against a
-  LITERAL conservative 95% critical value — is the weekly cycle
-  real before ts_holt_winters_seasonal models it?
 
 Same discipline as waves 7-25: exact integers before any
 cross-partition sum, identical aliases both engines, BIGINT casts in
@@ -556,151 +551,4 @@ def corpus_token_budget_plan(
         rnd(F.col("cum_toks") * F.lit(1.0) / F.col("total"), 4).alias(
             "cum_share"
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# weekday one-way ANOVA of daily totals
-# ---------------------------------------------------------------------------
-
-#: conservative literal F critical value: F(6, 20) at 95% = 2.599;
-#: for df2 > 20 the true critical is smaller, so F > this is
-#: significant at 95% for ANY df2 >= 20 (documented one-sided gate)
-_AN_F_CRIT = 2.599
-
-
-@op(
-    "ts_weekday_anova",
-    oracle=f"""
-        WITH daily AS (
-            SELECT CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
-                        AS BIGINT) AS d,
-                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS cents
-            FROM events GROUP BY 1
-        ),
-        grp AS (
-            SELECT d % 7 AS wd, cents FROM daily
-        ),
-        per AS (
-            SELECT wd,
-                   CAST(count(*) AS BIGINT) AS n_g,
-                   CAST(sum(cents) AS BIGINT) AS s1_g,
-                   CAST(sum(cents * cents) AS BIGINT) AS s2_g
-            FROM grp GROUP BY wd
-        ),
-        w2 AS (
-            -- per-group s1^2/n term, frozen to WHOLE cents^2 BEFORE
-            -- the cross-group sum (order-free): a micro freeze of a
-            -- squared-cents quantity overflows int64 (the wave-15
-            -- lesson); 1.0::DOUBLE load-bearing
-            SELECT wd, n_g, s1_g, s2_g,
-                   CAST(floor(s1_g * 1.0::DOUBLE * s1_g / n_g
-                        + 0.505) AS BIGINT) AS t_int
-            FROM per
-        ),
-        tot AS (
-            SELECT CAST(sum(n_g) AS BIGINT) AS n,
-                   CAST(sum(s1_g) AS BIGINT) AS s1,
-                   CAST(sum(s2_g) AS BIGINT) AS s2,
-                   CAST(sum(t_int) AS BIGINT) AS t_int,
-                   CAST(count(*) AS BIGINT) AS k
-            FROM w2
-        ),
-        f AS (
-            -- SSB = sum(s1_g^2/n_g) - S1^2/N; SSW = S2 - sum(...)
-            SELECT n, k,
-                   (t_int * 1.0::DOUBLE
-                    - s1 * 1.0::DOUBLE * s1 / n) AS ssb,
-                   (s2 * 1.0::DOUBLE - t_int * 1.0::DOUBLE) AS ssw
-            FROM tot
-        )
-        SELECT n AS n_days, k AS n_groups,
-               {sql_rnd("ssb", 2)} AS ss_between,
-               {sql_rnd("ssw", 2)} AS ss_within,
-               {sql_rnd(
-                   "(ssb / (k - 1)) / (ssw / (n - k))", 4
-               )} AS f_stat,
-               {_AN_F_CRIT} AS f_crit_95,
-               ((ssb / (k - 1)) / (ssw / (n - k)) > {_AN_F_CRIT})
-                   AS weekday_effect_95
-        FROM f
-    """,
-    scale=(
-        "One-way ANOVA of daily cent totals across the 7 day-of-week "
-        "classes: F = (SSB/(k-1))/(SSW/(N-k)) from exact BIGINT "
-        "moments (per-group s1^2/n micro-frozen before the only "
-        "cross-group sum; N and k are data-derived), compared to a "
-        "LITERAL conservative critical value — F(6,20) at 95% = "
-        "2.599 bounds the true critical from above for any df2 >= "
-        "20, so the boolean is a sound one-sided 95% gate (no "
-        "F-distribution transcendentals). Significant -> the weekly "
-        "cycle is real and ts_holt_winters_seasonal has something "
-        "to model; not -> ts_holt_linear suffices. Shape: one day "
-        "agg, a 7-key moment agg, 1-row report. 100 TB: everything "
-        "after the first agg is 7 rows."
-    ),
-)
-def ts_weekday_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-row weekday ANOVA F report on daily cent totals."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            (F.unix_micros(F.col("ts")) / F.lit(86400000000))
-            .cast("long")
-            .alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("c"),
-        )
-        .groupBy("d")
-        .agg(F.sum("c").cast("long").alias("cents"))
-    )
-    per = (
-        daily.select((F.col("d") % 7).alias("wd"), "cents")
-        .groupBy("wd")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_g"),
-            F.sum("cents").cast("long").alias("s1_g"),
-            F.sum(F.col("cents") * F.col("cents"))
-            .cast("long")
-            .alias("s2_g"),
-        )
-    )
-    w2 = per.select(
-        "wd",
-        "n_g",
-        "s1_g",
-        "s2_g",
-        # WHOLE-cents^2 freeze: micro^2 overflows int64 (wave-15)
-        F.floor(
-            F.col("s1_g")
-            * F.lit(1.0)
-            * F.col("s1_g")
-            / F.col("n_g")
-            + F.lit(0.505)
-        )
-        .cast("long")
-        .alias("t_int"),
-    )
-    tot = w2.agg(
-        F.sum("n_g").cast("long").alias("n"),
-        F.sum("s1_g").cast("long").alias("s1"),
-        F.sum("s2_g").cast("long").alias("s2"),
-        F.sum("t_int").cast("long").alias("t_int"),
-        F.count(F.lit(1)).cast("long").alias("k"),
-    )
-    ssb = F.col("t_int") * F.lit(1.0) - F.col("s1") * F.lit(
-        1.0
-    ) * F.col("s1") / F.col("n")
-    ssw = F.col("s2") * F.lit(1.0) - F.col("t_int") * F.lit(1.0)
-    fstat = (ssb / (F.col("k") - 1)) / (ssw / (F.col("n") - F.col("k")))
-    return tot.select(
-        F.col("n").alias("n_days"),
-        F.col("k").alias("n_groups"),
-        rnd(ssb, 2).alias("ss_between"),
-        rnd(ssw, 2).alias("ss_within"),
-        rnd(fstat, 4).alias("f_stat"),
-        F.lit(_AN_F_CRIT).alias("f_crit_95"),
-        (fstat > F.lit(_AN_F_CRIT)).alias("weekday_effect_95"),
     )

@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.rounding import cents, rnd, sql_rnd
 from python_kinesis_streaming_spark.llm.dedup import md5_hash64, _sql_hash64
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
@@ -693,9 +693,7 @@ def events_simpson_paradox_check(
     t = ev.select(
         "event_type",
         (F.col("user_id") % 2).cast("long").alias("arm"),
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
+        cents().alias("cents"),
     )
     seg = t.groupBy("event_type").agg(
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
@@ -858,9 +856,7 @@ def sample_cluster_design_effect(
     per = (
         ev.select(
             "user_id",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
+            cents().alias("cents"),
         )
         .groupBy("user_id")
         .agg(

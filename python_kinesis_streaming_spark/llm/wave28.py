@@ -1,6 +1,5 @@
 """Round-14 wave-28 ops (SURVEY §2.40): sampling-vs-dedup methodology,
-snapshot rollback, rollup fidelity, churn dynamics, distributional
-fit.
+snapshot rollback, churn dynamics, distributional fit.
 
 - ``dedup_sample_bias_audit``: measuring dup rates on a SAMPLE
   underestimates them (pair retention scales with r^2, not r) — this
@@ -12,10 +11,6 @@ fit.
   v0's file set the head again; the head read must equal the v0 read
   EXACTLY (anti-join emptiness, not just counts), history keeps all
   three versions.
-- ``ts_rollup_variance_retention``: how much of the daily series'
-  variance survives rollup to w-day buckets (between-bucket share of
-  total, the ANOVA decomposition as a fidelity metric) — the table
-  read before materializing any coarser rollup.
 - ``events_weekly_churn_hazard``: week-over-week hazard (1 - share of
   this week's actives still active next week) — the marginal-dynamics
   view the retention cohort matrix integrates.
@@ -328,151 +323,6 @@ def lakehouse_snapshot_restore_audit(
         "v1_differs boolean",
     )
     return out
-
-
-# ---------------------------------------------------------------------------
-# rollup variance retention
-# ---------------------------------------------------------------------------
-
-#: literal rollup widths in days
-_RV_WIDTHS = (1, 2, 7)
-
-
-@op(
-    "ts_rollup_variance_retention",
-    oracle=f"""
-        WITH daily AS (
-            SELECT CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
-                        AS BIGINT) AS d,
-                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS cents
-            FROM events GROUP BY 1
-        ),
-        grid(w) AS (VALUES {", ".join(f"({w})" for w in _RV_WIDTHS)}),
-        bkt AS (
-            SELECT g.w, daily.d // g.w AS b, daily.cents
-            FROM daily CROSS JOIN grid g
-        ),
-        per AS (
-            SELECT w, b,
-                   CAST(count(*) AS BIGINT) AS n_g,
-                   CAST(sum(cents) AS BIGINT) AS s1_g
-            FROM bkt GROUP BY w, b
-        ),
-        w2 AS (
-            -- s1^2/n frozen to WHOLE cents^2 (wave-15/26 lesson)
-            SELECT w, b, n_g, s1_g,
-                   CAST(floor(s1_g * 1.0::DOUBLE * s1_g / n_g + 0.505)
-                        AS BIGINT) AS t_int
-            FROM per
-        ),
-        tots AS (
-            SELECT w,
-                   CAST(sum(n_g) AS BIGINT) AS n,
-                   CAST(sum(s1_g) AS BIGINT) AS s1,
-                   CAST(sum(t_int) AS BIGINT) AS t_int,
-                   CAST(count(*) AS BIGINT) AS n_buckets,
-                   CAST(max(s1_g) AS BIGINT) AS peak_bucket_cents
-            FROM w2 GROUP BY w
-        ),
-        base AS (
-            SELECT CAST(sum(cents * cents) AS BIGINT) AS s2,
-                   CAST(sum(cents) AS BIGINT) AS s1,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM daily
-        )
-        SELECT CAST(t.w AS BIGINT) AS width_days, t.n_buckets,
-               t.peak_bucket_cents,
-               -- between-bucket share of the daily series' total
-               -- sum of squares (ANOVA decomposition as fidelity)
-               {sql_rnd(
-                   "(t.t_int * 1.0::DOUBLE - b.s1 * 1.0::DOUBLE * b.s1"
-                   " / b.n) / (b.s2 * 1.0::DOUBLE - b.s1 * 1.0::DOUBLE"
-                   " * b.s1 / b.n)", 4
-               )} AS variance_retained
-        FROM tots t CROSS JOIN base b
-    """,
-    scale=(
-        "Rollup fidelity: the share of the daily cent series' total "
-        "variance that survives aggregation to w-day buckets — the "
-        "between-bucket sum of squares over the total (the ANOVA "
-        "decomposition repurposed; w=1 retains 1.0 by construction, "
-        "the pinned anchor). A weekly rollup retaining 20% of the "
-        "daily variance is a bad table to alert on. All moments "
-        "exact BIGINTs; s1^2/n frozen to WHOLE cents^2 (the "
-        "wave-15/26 int64 lesson applied at authoring time). Shape: "
-        "one day agg, a 3-width literal fan-out over the ~|days| "
-        "rows, two tiny aggs, 3-row report. 100 TB: everything "
-        "after the day agg is |days|-bounded — run it before "
-        "materializing any coarser rollup."
-    ),
-)
-def ts_rollup_variance_retention(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Between-bucket variance share per literal rollup width."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            (F.unix_micros(F.col("ts")) / F.lit(86400000000))
-            .cast("long")
-            .alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("c"),
-        )
-        .groupBy("d")
-        .agg(F.sum("c").cast("long").alias("cents"))
-        .cache()  # ~30 rows; feeds every width leg AND the base
-    )
-    grid = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(int(w)) for w in _RV_WIDTHS])
-        ).alias("w0")
-    ).select(F.col("w0").cast("long").alias("w"))
-    bkt = daily.crossJoin(F.broadcast(grid)).select(
-        "w", F.expr("d div w").alias("b"), "cents"
-    )
-    per = bkt.groupBy("w", "b").agg(
-        F.count(F.lit(1)).cast("long").alias("n_g"),
-        F.sum("cents").cast("long").alias("s1_g"),
-    )
-    w2 = per.select(
-        "w",
-        "n_g",
-        "s1_g",
-        F.floor(
-            F.col("s1_g") * F.lit(1.0) * F.col("s1_g") / F.col("n_g")
-            + F.lit(0.505)
-        )
-        .cast("long")
-        .alias("t_int"),
-    )
-    tots = w2.groupBy("w").agg(
-        F.sum("n_g").cast("long").alias("n"),
-        F.sum("s1_g").cast("long").alias("s1"),
-        F.sum("t_int").cast("long").alias("t_int"),
-        F.count(F.lit(1)).cast("long").alias("n_buckets"),
-        F.max("s1_g").cast("long").alias("peak_bucket_cents"),
-    )
-    base = daily.agg(
-        F.sum(F.col("cents") * F.col("cents")).cast("long").alias("s2"),
-        F.sum("cents").cast("long").alias("bs1"),
-        F.count(F.lit(1)).cast("long").alias("bn"),
-    )
-    retained = (
-        F.col("t_int") * F.lit(1.0)
-        - F.col("bs1") * F.lit(1.0) * F.col("bs1") / F.col("bn")
-    ) / (
-        F.col("s2") * F.lit(1.0)
-        - F.col("bs1") * F.lit(1.0) * F.col("bs1") / F.col("bn")
-    )
-    return tots.crossJoin(F.broadcast(base)).select(
-        F.col("w").cast("long").alias("width_days"),
-        "n_buckets",
-        "peak_bucket_cents",
-        rnd(retained, 4).alias("variance_retained"),
-    )
 
 
 # ---------------------------------------------------------------------------

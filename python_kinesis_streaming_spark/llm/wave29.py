@@ -1,6 +1,5 @@
 """Round-14 wave-29 ops (SURVEY §2.41, r15 queue): out-of-order
-arrivals, truncation planning, bipartite cohesion, classical SPC,
-shard balance.
+arrivals, truncation planning, bipartite cohesion, shard balance.
 
 - ``events_arrival_inversion_audit``: under hash-jittered arrivals,
   how often does a later event overtake an earlier one (the
@@ -15,11 +14,6 @@ shard balance.
   the order-supplier graph — supplier pairs sharing 2+ orders are
   the bipartite analogue of triangles, the redundancy structure
   sampling and link prediction both lean on.
-- ``ts_individuals_control_chart``: the classical Shewhart I-MR
-  chart on daily totals with EXACT-integer alarm arithmetic
-  (|x*n - S| * 1128 * (n-1) > 3000 * MRsum * n — the d2 = 1.128
-  constant as an integer ratio, zero float booleans), the
-  companion of ts_ewma_control_chart.
 - ``corpus_shard_balance_plan``: hash-shard assignment balance (16
   shards): per-shard doc/token mass, imbalance ratio, largest-shard
   share vs the uniform ideal — the pre-write audit for
@@ -34,7 +28,6 @@ windows, broadcast-bounded joins; no exp/pow.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.llm.dedup import md5_hash64, _sql_hash64
@@ -414,147 +407,6 @@ def graph_bipartite_square_density(
         rnd(
             F.col("n_wedges") * F.lit(1.0) / F.col("n_copairs"), 4
         ).alias("mean_shared_orders"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Shewhart individuals (I-MR) chart, exact integers
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "ts_individuals_control_chart",
-    oracle=f"""
-        WITH daily AS (
-            SELECT CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
-                        AS BIGINT) AS d,
-                   CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT))
-                        AS BIGINT) AS cents
-            FROM events GROUP BY 1
-        ),
-        mr AS (
-            SELECT d, cents,
-                   abs(cents - lag(cents) OVER (ORDER BY d)) AS mr
-            FROM daily
-        ),
-        tot AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(cents) AS BIGINT) AS s,
-                   CAST(sum(mr) AS BIGINT) AS mrsum,
-                   CAST(count(mr) AS BIGINT) AS n_mr
-            FROM mr
-        ),
-        flag AS (
-            -- EXACT alarm: |x - S/n| > 3*(MRbar/1.128)  <=>
-            -- |x*n - S| * 1128 * n_mr > 3000 * mrsum * n
-            -- (all BIGINT; d2 = 1.128 as the integer ratio 1128/1000)
-            SELECT m.d, m.cents, m.mr, t.n, t.s, t.mrsum, t.n_mr,
-                   (abs(m.cents * t.n - t.s) * 1128 * t.n_mr
-                    > 3000 * t.mrsum * t.n) AS is_alarm
-            FROM mr m CROSS JOIN tot t
-        ),
-        na AS (
-            SELECT CAST(sum(CASE WHEN is_alarm THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_alarms
-            FROM flag
-        )
-        SELECT f.d AS day, f.cents,
-               CAST(COALESCE(f.mr, 0) AS BIGINT) AS moving_range,
-               {sql_rnd("f.s * 1.0 / f.n", 2)} AS center_cents,
-               {sql_rnd(
-                   "f.s * 1.0 / f.n + 3.0::DOUBLE"
-                   " * (f.mrsum * 1.0::DOUBLE / f.n_mr) / 1.128", 2
-               )} AS ucl_cents,
-               {sql_rnd(
-                   "f.s * 1.0 / f.n - 3.0::DOUBLE"
-                   " * (f.mrsum * 1.0::DOUBLE / f.n_mr) / 1.128", 2
-               )} AS lcl_cents,
-               f.is_alarm, na.n_alarms
-        FROM flag f CROSS JOIN na
-    """,
-    scale=(
-        "The classical Shewhart individuals chart (I-MR) on daily "
-        "cent totals — the simplest SPC the EWMA chart (wave-17) "
-        "refines: sigma is estimated from the mean moving range "
-        "(MRbar/d2, d2 = 1.128 for n=2), limits at +-3 sigma. The "
-        "alarm boolean is decided in EXACT integer arithmetic — "
-        "|x*n - S| * 1128 * n_mr > 3000 * MRsum * n — so both "
-        "engines derive identical flags with zero float "
-        "comparisons; the displayed center/limits are frozen "
-        "rationals. Overflow audit: cents*n ~ 1e8*30 and "
-        "*1128*29 ~ 1e14 at x10, inside int64 with 1e4 margin. "
-        "Shape: one day agg, one |days|-row bounded lag window, a "
-        "1-row scalar, |days|-row report. 100 TB: |days|-bounded "
-        "after the first agg."
-    ),
-)
-def ts_individuals_control_chart(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Daily I-chart rows with exact-integer alarms."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = (
-        ev.select(
-            (F.unix_micros(F.col("ts")) / F.lit(86400000000))
-            .cast("long")
-            .alias("d"),
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("c"),
-        )
-        .groupBy("d")
-        .agg(F.sum("c").cast("long").alias("cents"))
-    )
-    mr = daily.select(
-        "d",
-        "cents",
-        F.abs(
-            F.col("cents") - F.lag("cents").over(Window.orderBy("d"))
-        ).alias("mr"),
-    ).cache()  # ~30 rows; feeds the scalar AND the report
-    tot = mr.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("cents").cast("long").alias("s"),
-        F.sum("mr").cast("long").alias("mrsum"),
-        F.count("mr").cast("long").alias("n_mr"),
-    )
-    flag = mr.crossJoin(F.broadcast(tot)).withColumn(
-        "is_alarm",
-        F.abs(F.col("cents") * F.col("n") - F.col("s"))
-        * 1128
-        * F.col("n_mr")
-        > 3000 * F.col("mrsum") * F.col("n"),
-    )
-    na = flag.agg(
-        F.sum(F.when(F.col("is_alarm"), 1).otherwise(0))
-        .cast("long")
-        .alias("n_alarms")
-    )
-    return flag.crossJoin(F.broadcast(na)).select(
-        F.col("d").alias("day"),
-        "cents",
-        F.coalesce(F.col("mr"), F.lit(0))
-        .cast("long")
-        .alias("moving_range"),
-        rnd(F.col("s") * F.lit(1.0) / F.col("n"), 2).alias(
-            "center_cents"
-        ),
-        rnd(
-            F.col("s") * F.lit(1.0) / F.col("n")
-            + F.lit(3.0)
-            * (F.col("mrsum") * F.lit(1.0) / F.col("n_mr"))
-            / F.lit(1.128),
-            2,
-        ).alias("ucl_cents"),
-        rnd(
-            F.col("s") * F.lit(1.0) / F.col("n")
-            - F.lit(3.0)
-            * (F.col("mrsum") * F.lit(1.0) / F.col("n_mr"))
-            / F.lit(1.128),
-            2,
-        ).alias("lcl_cents"),
-        "is_alarm",
-        "n_alarms",
     )
 
 

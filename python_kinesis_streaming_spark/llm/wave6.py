@@ -1,12 +1,9 @@
-"""Wave-6 pipeline ops (round 11, third batch) — state-space smoothing,
-source fingerprinting, differential-privacy release, stratified splits
-and an expectations-suite report.
+"""Wave-6 pipeline ops (round 11, third batch) — source fingerprinting,
+differential-privacy release, stratified splits and an
+expectations-suite report.
 
-Five more capabilities over the fixture tables: a 1-D Kalman filter
-(random-walk + observation noise) folded per key with the proven
-list-accumulator HOF shape (ts_holt_linear precedent — DuckDB 1.0
-mis-evaluates STRUCT accumulators, LIST accumulators fold correctly),
-per-source TF-IDF signature terms (the dataset-card "what is this
+Four more capabilities over the fixture tables: per-source TF-IDF
+signature terms (the dataset-card "what is this
 source about" row), a deterministic-Laplace DP count release (noise
 derived from an md5-uniform via the inverse CDF — reproducible on both
 engines, no RNG), a hash-bucketed stratified train/val/test split with
@@ -30,89 +27,6 @@ from python_kinesis_streaming_spark.sources.tables import load_table
 
 # 16^15 — the span of a 15-hex-digit md5 prefix (fits in int64)
 _HEX15 = float(16**15)
-
-
-# ---------------------------------------------------------------------------
-# 1-D Kalman level filter per event_type (hourly means)
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "ts_kalman_filter_level",
-    oracle=f"""
-        WITH hourly AS (
-            SELECT event_type,
-                   time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP))
-                       AS hour,
-                   {sql_rnd("avg(value)", 4)} AS z
-            FROM events GROUP BY 1, 2
-        ),
-        seq AS (
-            SELECT event_type, list(z ORDER BY hour) AS xs
-            FROM hourly GROUP BY event_type
-        ),
-        folded AS (
-            -- LIST accumulator [est, p]: DuckDB 1.0 list_reduce
-            -- mis-evaluates STRUCT accumulators (ts_holt_linear note)
-            SELECT event_type, len(xs) AS n_hours, xs[len(xs)] AS last_z,
-                   list_reduce(
-                       list_prepend([xs[1], 1.0::DOUBLE],
-                           list_transform(xs[2:], x -> [x, 0.0::DOUBLE])),
-                       (acc, s) -> [
-                           acc[1] + ((acc[2] + 0.01) / (acc[2] + 1.01))
-                               * (s[1] - acc[1]),
-                           (acc[2] + 0.01) / (acc[2] + 1.01)]) AS kf
-            FROM seq
-        )
-        SELECT event_type, CAST(n_hours AS BIGINT) AS n_hours,
-               {sql_rnd("last_z", 4)} AS last_z,
-               {sql_rnd("kf[1]", 6)} AS level,
-               {sql_rnd("kf[2]", 6)} AS err_var
-        FROM folded
-    """,
-    scale=(
-        "1-D Kalman filter (random-walk state, process var q=0.01, "
-        "observation var r=1): the optimal recursive level estimate "
-        "under Gaussian noise — the state-space upgrade of ts_ewma's "
-        "fixed-alpha smoothing (here the gain ADAPTS: p'=(p+q)/(p+q+r) "
-        "shrinks as evidence accumulates). Same bounded fold shape as "
-        "ts_holt_linear: hourly means pre-aggregate the stream "
-        "(map-side partials, one event_type shuffle), the per-key "
-        "sequence folds in a codegen HOF with a [est, p] accumulator, "
-        "identical double arithmetic on both engines makes the "
-        "recursion bit-reproducible. Observations round at 1e-4 "
-        "before the fold; hour keys give the total order. Unbounded "
-        "keys or unbounded history -> the applyInPandasWithState "
-        "shape with (est, p) as the state row."
-    ),
-)
-def ts_kalman_filter_level(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type Kalman level over hourly means (q=.01, r=1)."""
-    ev = load_table(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(rnd(F.avg("value"), 4).alias("z"))
-    seq = hourly.groupBy("event_type").agg(
-        F.expr(
-            "transform(array_sort(collect_list(struct(hour, z))), s -> s.z)"
-        ).alias("xs")
-    )
-    kf = F.expr(
-        "aggregate(slice(xs, 2, size(xs) - 1), "
-        "named_struct('e', CAST(element_at(xs, 1) AS DOUBLE), "
-        "             'p', CAST(1.0 AS DOUBLE)), "
-        "(acc, z) -> named_struct("
-        "  'e', acc.e + ((acc.p + 0.01D) / (acc.p + 1.01D)) "
-        "       * (z - acc.e), "
-        "  'p', (acc.p + 0.01D) / (acc.p + 1.01D)))"
-    )
-    return seq.select(
-        "event_type",
-        F.size("xs").cast("long").alias("n_hours"),
-        rnd(F.element_at("xs", -1), 4).alias("last_z"),
-        rnd(kf.getField("e"), 6).alias("level"),
-        rnd(kf.getField("p"), 6).alias("err_var"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,18 +1,14 @@
 """Wave-9 pipeline ops (round 12, third batch) — incremental top-k
-maintenance, time-series similarity search, dedup/length bias, lexicon
-scoring and near-dup label agreement.
+maintenance, dedup/length bias, lexicon scoring and near-dup label
+agreement.
 
-Five capabilities rounding out the retrieval/quality story, three of
+Four capabilities rounding out the retrieval/quality story, two of
 them keyed to the retrieved-paper corpus (PAPERS.md):
 
 - ``sim_topk_incremental_delta``: incremental top-k similarity
   maintenance (the EDBT 2020 interactive-session pattern) — a frozen
   base top-k plus a scored DELTA batch merge into the updated top-k
   without rescoring the base corpus.
-- ``ts_znorm_series_search``: z-normalized Euclidean similarity search
-  over per-type daily series (the EDBT 2019 streaming-similarity
-  shape) — which event types move together after level/scale are
-  removed.
 - ``corpus_length_dup_bias``: is duplication concentrated in long or
   short documents? Repeated-span coverage (wave-7's islands) crossed
   with value-bucketed length bands.
@@ -138,116 +134,6 @@ def sim_topk_incremental_delta(
         "vec_id",
         "sim",
         F.col("from_delta").cast("long").alias("from_delta"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# z-normalized daily-series similarity search
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "ts_znorm_series_search",
-    oracle=f"""
-        WITH daily AS (
-            SELECT event_type,
-                   date_trunc('day', CAST(ts AS TIMESTAMP)) AS d,
-                   {sql_rnd("avg(value)", 4)} AS v
-            FROM events GROUP BY 1, 2
-        ),
-        stats AS (
-            SELECT event_type, avg(v) AS mu,
-                   sqrt(avg(v * v) - avg(v) * avg(v)) AS sd
-            FROM daily GROUP BY event_type
-        ),
-        z AS (
-            SELECT d.event_type, d.d,
-                   CASE WHEN s.sd = 0 THEN 0.0
-                        ELSE (d.v - s.mu) / s.sd END AS z
-            FROM daily d JOIN stats s USING (event_type)
-        ),
-        dist AS (
-            SELECT a.event_type AS type_a, b.event_type AS type_b,
-                   CAST(count(*) AS BIGINT) AS n_days,
-                   {sql_rnd("sqrt(sum((a.z - b.z) ^ 2) / count(*))", 4)}
-                       AS znorm_dist
-            FROM z a JOIN z b
-              ON b.d = a.d AND b.event_type > a.event_type
-            GROUP BY 1, 2
-        )
-        SELECT type_a, type_b, n_days, znorm_dist FROM (
-            SELECT *, row_number() OVER (
-                ORDER BY znorm_dist ASC, type_a, type_b) AS rn
-            FROM dist
-        ) WHERE rn <= 3
-    """,
-    scale=(
-        "Z-normalized series similarity (the streaming-similarity "
-        "search shape, EDBT 2019): per-type daily means, z-normalize "
-        "each series (level and scale removed — the normalization that "
-        "makes Euclidean distance meaningful for co-movement), then "
-        "per-day-aligned pairwise RMS distance and the 3 closest "
-        "pairs. Keys bound everything: |types| series of |days| "
-        "points; the pair join is day-aligned (equi on d), never a "
-        "series cross product. At 100 TB the daily pre-agg is the "
-        "whole cost (map-side partials); with many series, LSH over "
-        "SAX words or the wave-3 sketch prefilter bounds the pair "
-        "set. Day means round at 1e-4 before the z-score; zero-"
-        "variance series hit the sd=0 guard on both engines."
-    ),
-)
-def ts_znorm_series_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3 closest event-type pairs by z-normalized daily-series RMS."""
-    from pyspark.sql.window import Window
-
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("d")
-    ).agg(rnd(F.avg("value"), 4).alias("v"))
-    stats = daily.groupBy("event_type").agg(
-        F.avg("v").alias("mu"),
-        F.sqrt(
-            F.avg(F.col("v") * F.col("v")) - F.avg("v") * F.avg("v")
-        ).alias("sd"),
-    )
-    z = daily.join(F.broadcast(stats), "event_type").select(
-        "event_type",
-        "d",
-        F.when(F.col("sd") == 0, F.lit(0.0))
-        .otherwise((F.col("v") - F.col("mu")) / F.col("sd"))
-        .alias("z"),
-    )
-    a = z.alias("a")
-    b = z.alias("b")
-    dist = (
-        a.join(
-            b,
-            (F.col("b.d") == F.col("a.d"))
-            & (F.col("b.event_type") > F.col("a.event_type")),
-        )
-        .groupBy(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-        )
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_days"),
-            rnd(
-                F.sqrt(
-                    F.sum(
-                        (F.col("a.z") - F.col("b.z"))
-                        * (F.col("a.z") - F.col("b.z"))
-                    )
-                    / F.count(F.lit(1))
-                ),
-                4,
-            ).alias("znorm_dist"),
-        )
-    )
-    wr = Window.orderBy(F.asc("znorm_dist"), F.asc("type_a"), F.asc("type_b"))
-    return (
-        dist.withColumn("rn", F.row_number().over(wr))
-        .where(F.col("rn") <= 3)
-        .select("type_a", "type_b", "n_days", "znorm_dist")
     )
 
 

@@ -21,19 +21,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.rounding import cents, rnd, sql_rnd
 from python_kinesis_streaming_spark.operators.timeseries import _ord_col
 from python_kinesis_streaming_spark.registry import op
-from python_kinesis_streaming_spark.sources.tables import load_table
-
-
-def _view(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Register the fixture table as a temp view (sf-tagged, idempotent)."""
-    from python_kinesis_streaming_spark.sources.tables import sf_tag
-
-    vname = f"v_{name}_{sf_tag(sf_dir)}"
-    load_table(spark, sf_dir, name).createOrReplaceTempView(vname)
-    return vname
+from python_kinesis_streaming_spark.sources.tables import load_table, table_view
 
 
 @op(
@@ -55,7 +46,7 @@ def _view(spark: SparkSession, sf_dir: str, name: str) -> str:
 def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows above the (scalar-subquery) global average quantity — via
     spark.sql, exercising the parser entry point."""
-    v = _view(spark, sf_dir, "lineitem")
+    v = table_view(spark, sf_dir, "lineitem")
     return spark.sql(f"""
         SELECT l_orderkey, l_linenumber, l_quantity
         FROM {v}
@@ -85,8 +76,8 @@ def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 def subquery_exists_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with at least one >400k order, written as correlated
     EXISTS through the SQL parser."""
-    vc = _view(spark, sf_dir, "customer")
-    vo = _view(spark, sf_dir, "orders")
+    vc = table_view(spark, sf_dir, "customer")
+    vo = table_view(spark, sf_dir, "orders")
     return spark.sql(f"""
         SELECT c_custkey, c_name
         FROM {vc} c
@@ -203,7 +194,7 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q17_correlated_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-quantity revenue vs the per-part average (correlated scalar
     subquery through the SQL parser, decorrelated by Catalyst)."""
-    v = _view(spark, sf_dir, "lineitem")
+    v = table_view(spark, sf_dir, "lineitem")
     # CAST to double: Spark parses `100.0` literals as DECIMAL, and
     # bigint(floor)/decimal would yield a Decimal result vs DuckDB's double.
     return spark.sql(f"""
@@ -2090,7 +2081,7 @@ def events_weekend_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.select(
         "event_type",
         is_wk.alias("is_weekend"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
+        cents().alias("cents"),
     ).groupBy("event_type").agg(
         F.sum("is_weekend").cast("long").alias("wk_events"),
         F.sum(1 - F.col("is_weekend")).cast("long").alias("wd_events"),

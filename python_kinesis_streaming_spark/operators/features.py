@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.rounding import cents, rnd, sql_rnd
 from python_kinesis_streaming_spark.llm.dedup import _sql_hash64, md5_hash64
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
@@ -222,7 +222,7 @@ def feat_hashing_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws(
             ":", "event_type", F.regexp_extract("props", "[0-9]+", 0)
         ).alias("feature"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
+        cents().alias("cents"),
     )
     return (
         feat.select(
@@ -402,7 +402,7 @@ def feat_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.col("value"))
     clamped = ev.join(F.broadcast(cuts), "event_type").select(
         "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
+        cents().alias("cents"),
         F.floor(w * 100 + 0.5).cast("long").alias("wcents"),
         (F.col("value") < F.col("lo")).cast("int").alias("is_lo"),
         (F.col("value") > F.col("hi")).cast("int").alias("is_hi"),
@@ -691,7 +691,7 @@ def feat_pit_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     us = F.unix_micros("ts")
     base = ev.select(
         "event_id", "user_id", "event_type", us.alias("us"),
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
+        cents().alias("cents"),
     )
     w_range = (
         Window.partitionBy("user_id")
@@ -806,9 +806,7 @@ def dq_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         obs,
         F.count(F.lit(1)).alias("n_rows"),
         F.count(F.when(F.col("event_type") == "error", 1)).alias("n_errors"),
-        F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias(
-            "sum_cents"
-        ),
+        F.sum(cents()).alias("sum_cents"),
         F.max("event_id").alias("max_id"),
     )
     observed.count()  # the host action the metrics piggyback on

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.operators.scans import SCRATCH
 from python_kinesis_streaming_spark.registry import op
-from python_kinesis_streaming_spark.sources.tables import load_table
+from python_kinesis_streaming_spark.sources.tables import load_table, table_view
 from python_kinesis_streaming_spark.sources.tables import sf_tag as fixture_tag
 
 
@@ -579,10 +579,8 @@ def join_null_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders by price for each customer below key 50, written as a
     correlated LATERAL subquery through the SQL parser."""
-    from python_kinesis_streaming_spark.operators.analytics import _view
-
-    vc = _view(spark, sf_dir, "customer")
-    vo = _view(spark, sf_dir, "orders")
+    vc = table_view(spark, sf_dir, "customer")
+    vo = table_view(spark, sf_dir, "orders")
     return spark.sql(f"""
         SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
         FROM {vc} c, LATERAL (

@@ -17,6 +17,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from python_kinesis_streaming_spark.functions.rounding import cents
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 from python_kinesis_streaming_spark.sources.tables import sf_tag as fixture_tag
@@ -516,7 +517,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.dataSource.register(JsonlSink)
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.floor(F.col("value") * 100 + 0.5).cast("long").alias("cents"),
+        cents().alias("cents"),
     )
     ev.write.format("pkss_jsonl_sink").option("path", out_dir).mode(
         "append"

@@ -31,16 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.registry import op
-from python_kinesis_streaming_spark.sources.tables import load_table
-
-
-def _view(spark: SparkSession, sf_dir: str, name: str) -> str:
-    """Register the fixture table as a temp view (sf-tagged, idempotent)."""
-    from python_kinesis_streaming_spark.sources.tables import sf_tag
-
-    vname = f"v_{name}_{sf_tag(sf_dir)}"
-    load_table(spark, sf_dir, name).createOrReplaceTempView(vname)
-    return vname
+from python_kinesis_streaming_spark.sources.tables import load_table, table_view
 
 
 @op(
@@ -496,9 +487,9 @@ def q12_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_hinted_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation order totals through spark.sql with explicit join-strategy
     hints (MERGE on the big join, BROADCAST on the dim)."""
-    v_o = _view(spark, sf_dir, "orders")
-    v_c = _view(spark, sf_dir, "customer")
-    v_n = _view(spark, sf_dir, "nation")
+    v_o = table_view(spark, sf_dir, "orders")
+    v_c = table_view(spark, sf_dir, "customer")
+    v_n = table_view(spark, sf_dir, "nation")
     # CAST AS DOUBLE: Spark SQL decimal literals (100.0) otherwise infect
     # the floor()/division chain into a DecimalType result (round-1 quirk).
     return spark.sql(f"""

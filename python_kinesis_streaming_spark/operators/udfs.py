@@ -41,7 +41,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import PandasUDFType, pandas_udf, udf
 
-from python_kinesis_streaming_spark.functions.rounding import rnd
+from python_kinesis_streaming_spark.functions.rounding import cents, rnd
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -443,7 +443,7 @@ def udtf_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     per_type = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.floor(F.col("value") * 100 + 0.5).cast("long")).alias("cents"),
+        F.sum(cents()).alias("cents"),
     )
     per_type.createOrReplaceTempView("pkss_udtf_pertype")
     return spark.sql(

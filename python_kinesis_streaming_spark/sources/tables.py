@@ -100,6 +100,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def table_view(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """Register the fixture table as a temp view (sf-tagged, idempotent)
+    and return the view's name."""
+    vname = f"v_{name}_{sf_tag(sf_dir)}"
+    load_table(spark, sf_dir, name).createOrReplaceTempView(vname)
+    return vname
+
+
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     """Load several tables at once: ``t = load_tables(spark, d, 'orders', ...)``."""
     return {name: load_table(spark, sf_dir, name) for name in names or TABLE_NAMES}

@@ -1,6 +1,7 @@
 """Source hygiene read from the AST alone (no Spark): test modules define
-each ``test_*`` name once, and package and test modules import nothing
-they never use."""
+each ``test_*`` name once, package and test modules import nothing they
+never use, the ``ts`` op family lives in one module, and the cents freeze
+is written once."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parents[1]
+PKG = ROOT / "python_kinesis_streaming_spark"
 
 
 def unused_imports(tree: ast.Module, lines: list[str]) -> list[str]:
@@ -66,3 +68,31 @@ def test_no_unused_module_level_import():
         if unused := unused_imports(ast.parse(text), text.splitlines()):
             found[str(path.relative_to(ROOT))] = unused
     assert found == {}
+
+
+def test_ts_ops_are_defined_in_timeseries():
+    """Every ``@op("ts_...")`` is registered by ``operators/timeseries.py``."""
+    stray = [
+        f"{path.relative_to(ROOT)}: {node.args[0].value}"
+        for path in sorted(PKG.glob("**/*.py"))
+        if path != PKG / "operators" / "timeseries.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "op"
+        and node.args
+        and isinstance(node.args[0], ast.Constant)
+        and str(node.args[0].value).startswith("ts_")
+    ]
+    assert stray == []
+
+
+def test_cents_freeze_is_written_once():
+    """Spark code freezes ``value`` to integer cents through ``rounding.cents``."""
+    needle = 'F.floor(F.col("value") * 100'
+    copies = [
+        f"{path.relative_to(ROOT)}:{i}"
+        for path in sorted(PKG.glob("**/*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if needle in line
+    ]
+    assert copies == []

@@ -209,35 +209,33 @@ def test_shard_drift_is_a_full_upper_triangle(spark, sf_dir):
 
 def test_stream_minhash_dedup_rocksdb_state_at_4096_shards(spark, sf_dir):
     """The 100 TB scale knobs demonstrated, not narrated (VERDICT r10
-    item 7): stream_minhash_dedup re-run with the RocksDB state-store
-    provider and NSHARDS=4096 must yield verdicts identical to the
-    default provider at NSHARDS=1024 — shard count and provider are
-    pure physical knobs — and the per-batch progress must show real
+    item 7): stream_minhash_dedup's replay re-run with the RocksDB
+    state-store provider and 4096 shards must yield verdicts identical
+    to the op (default provider, 1024 shards) — shard count and provider
+    are pure physical knobs — and the per-batch progress must show real
     state-store traffic (rows kept across micro-batches)."""
-    import os
+    from python_kinesis_streaming_spark.llm.wave2 import minhash_dedup_stream
 
-    from python_kinesis_streaming_spark.llm import wave2
-
-    def run():
+    def verdicts(df):
         return sorted(
             (r["doc_id"], r["ord"], r["n_dup_bands"], r["survived"])
-            for r in Q["stream_minhash_dedup"](spark, sf_dir).collect()
+            for r in df.collect()
         )
 
-    base = run()
+    base = verdicts(Q["stream_minhash_dedup"](spark, sf_dir))
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)
-    os.environ["SPARK_GRAFT_MINHASH_NSHARDS"] = "4096"
+    prog: list = []
     try:
         spark.conf.set(
             key,
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
-        rocks = run()
-        prog = list(wave2.LAST_STREAM_PROGRESS)
+        rocks = verdicts(
+            minhash_dedup_stream(spark, sf_dir, nshards=4096, progress=prog)
+        )
     finally:
-        os.environ.pop("SPARK_GRAFT_MINHASH_NSHARDS", None)
         if prev is None:
             spark.conf.unset(key)
         else:
