@@ -1,14 +1,13 @@
 """Wave-10 pipeline ops (round 12, fourth batch) — classic text
-retrieval (BM25, query-likelihood), hybrid rank fusion, contrastive
-negative mining, and doc↔vector referential coverage.
+retrieval (BM25, query-likelihood), hybrid rank fusion and contrastive
+negative mining.
 
 The retrieval family the registry lacked: the embedding side has
 knn/ANN/rerank cascades, but nothing ranked documents by TERM
 statistics. These add the two canonical lexical scorers, the standard
 hybrid fusion over a lexical and a vector leg, the training-side
 consumer of a retrieval index (semi-hard negative mining for
-contrastive embedding training), and the integrity audit that joins
-the two modalities.
+contrastive embedding training).
 
 Hash discipline for scorers: every per-term contribution freezes to
 integer micro-units BEFORE the per-doc sum (floor(x*1e6+0.505) —
@@ -578,78 +577,3 @@ def sim_negative_mining_audit(
             F.col("label_n").cast("long").alias("label_n"),
         )
     )
-
-
-@op(
-    "dq_doc_vector_coverage",
-    oracle="""
-        WITH m AS (
-            SELECT d.source, d.doc_id, e.vec_id
-            FROM documents d LEFT JOIN embeddings e
-              ON e.vec_id = d.doc_id
-        ),
-        per_src AS (
-            SELECT source,
-                   CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(count(vec_id) AS BIGINT) AS n_with_vec
-            FROM m GROUP BY source
-        ),
-        orphans AS (
-            SELECT CAST(count(*) AS BIGINT) AS n FROM embeddings e
-            WHERE NOT EXISTS (
-                SELECT 1 FROM documents d WHERE d.doc_id = e.vec_id)
-        )
-        SELECT source, n_docs, n_with_vec,
-               floor((n_with_vec * 1.0 / n_docs) * 10000.0 + 0.505)
-                   / 10000.0 AS coverage,
-               CAST(0 AS BIGINT) AS n_orphan_vectors
-        FROM per_src
-        UNION ALL
-        SELECT '_orphan_vectors', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-               0.0, n
-        FROM orphans
-    """,
-    scale=(
-        "The two-modality referential audit: which documents have no "
-        "embedding (stale index — must re-embed before any semantic "
-        "dedup/retrieval claims coverage) and which vectors have no "
-        "document (leaked deletions). One co-partitioned left join on "
-        "the doc_id=vec_id key (both sides hash the same key — no "
-        "extra exchange at scale if both are bucketed on it, the "
-        "multimodal_cols note) + one anti-join for orphans. The sf0.1 "
-        "fixture REALLY exercises it: 5,000 docs vs 2,000 vectors — "
-        "60% of docs uncovered, exactly what the audit must surface."
-    ),
-)
-def dq_doc_vector_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source embedding coverage + orphan-vector count."""
-    docs = load_table(spark, sf_dir, "documents")
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id")
-    m = docs.select("source", "doc_id").join(
-        emb, docs.doc_id == emb.vec_id, "left"
-    )
-    per_src = m.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.count("vec_id").cast("long").alias("n_with_vec"),
-    )
-    src_rows = per_src.select(
-        "source",
-        "n_docs",
-        "n_with_vec",
-        rnd(F.col("n_with_vec") * F.lit(1.0) / F.col("n_docs"), 4).alias(
-            "coverage"
-        ),
-        F.lit(0).cast("long").alias("n_orphan_vectors"),
-    )
-    orphans = (
-        emb.join(docs.select("doc_id"), emb.vec_id == docs.doc_id, "left_anti")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .select(
-            F.lit("_orphan_vectors").alias("source"),
-            F.lit(0).cast("long").alias("n_docs"),
-            F.lit(0).cast("long").alias("n_with_vec"),
-            F.lit(0.0).alias("coverage"),
-            F.col("n").alias("n_orphan_vectors"),
-        )
-    )
-    return src_rows.unionByName(orphans)

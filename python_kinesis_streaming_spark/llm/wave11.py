@@ -1,8 +1,7 @@
 """Wave-11 pipeline ops (round 12, fifth batch) — corpus word
-burstiness, confident-learning label noise, ranking-quality metrics
-and token-mass concentration.
+burstiness, ranking-quality metrics and token-mass concentration.
 
-Four capabilities extending the corpus-statistics / retrieval-eval
+Three capabilities extending the corpus-statistics / retrieval-eval
 story:
 
 - ``corpus_word_burstiness``: Church & Gale (1995) word burstiness —
@@ -10,10 +9,6 @@ story:
   word re-occurs in a document that already contains it. The corpus
   statistic that separates topical words from function words before
   building LM training mixes.
-- ``dq_label_noise_confident``: confident-learning label-noise
-  estimation (Northcutt et al. 2021) — per-class self-confidence
-  thresholds, the confident joint count matrix, and the off-diagonal
-  noise-rate estimate, all from exact integer counts.
 - ``sim_rank_quality_ndcg``: ranking-quality metrics of the truncated
   prefilter vs the exact cosine ranking — recall@10, MRR and nDCG@10
   with integer-micro frozen DCG terms (the metrics a retrieval stack
@@ -115,184 +110,6 @@ def corpus_word_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         rnd(F.col("df") * F.lit(1.0) / F.col("n_docs"), 4).alias(
             "doc_share"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# confident-learning label-noise estimate
-# ---------------------------------------------------------------------------
-
-#: Deterministic logistic score in integer micro-units — the same
-#: stand-in for a trained quality classifier's probability that
-#: dq_calibration_report and dq_temperature_scaling use (wave-7/8).
-_SCORE_MICRO_SQL = """CAST(floor(1000000.0
-        / (1.0 + exp(-((n_chars - 250.0) / 100.0)))
-        + 0.505) AS BIGINT)"""
-
-
-@op(
-    "dq_label_noise_confident",
-    oracle=f"""
-        WITH scored AS (
-            SELECT {_SCORE_MICRO_SQL} AS s_micro,
-                   CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-            FROM documents
-        ),
-        thr AS (
-            SELECT sum(CASE WHEN y = 1 THEN s_micro ELSE 0 END) * 1.0
-                       / sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS t1,
-                   sum(CASE WHEN y = 0 THEN 1000000 - s_micro ELSE 0 END)
-                       * 1.0
-                       / sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS t0
-            FROM scored
-        ),
-        conf AS (
-            SELECT y,
-                   CASE
-                       WHEN s_micro >= t1
-                            AND (1000000 - s_micro) >= t0
-                       THEN CASE WHEN 2 * s_micro >= 1000000
-                                 THEN 1 ELSE 0 END
-                       WHEN s_micro >= t1 THEN 1
-                       WHEN (1000000 - s_micro) >= t0 THEN 0
-                       ELSE CAST(NULL AS INTEGER)
-                   END AS y_hat
-            FROM scored CROSS JOIN thr
-        ),
-        cm AS (
-            SELECT y, y_hat, CAST(count(*) AS BIGINT) AS n
-            FROM conf WHERE y_hat IS NOT NULL GROUP BY y, y_hat
-        ),
-        spine AS (
-            SELECT a.y, b.y_hat
-            FROM (VALUES (0), (1)) a(y)
-            CROSS JOIN (VALUES (0), (1)) b(y_hat)
-        ),
-        full_cm AS (
-            SELECT s.y, s.y_hat,
-                   CAST(COALESCE(cm.n, 0) AS BIGINT) AS n
-            FROM spine s
-            LEFT JOIN cm ON cm.y = s.y AND cm.y_hat = s.y_hat
-        ),
-        tot AS (
-            SELECT CAST(sum(n) AS BIGINT) AS n_conf,
-                   CAST(sum(CASE WHEN y <> y_hat THEN n ELSE 0 END)
-                        AS BIGINT) AS n_off
-            FROM full_cm
-        )
-        SELECT CAST(f.y AS BIGINT) AS y,
-               CAST(f.y_hat AS BIGINT) AS y_hat,
-               f.n,
-               {sql_rnd('f.n * 1.0 / t.n_conf', 4)} AS share,
-               CAST(CASE WHEN f.y <> f.y_hat THEN 1 ELSE 0 END
-                    AS BIGINT) AS off_diag,
-               {sql_rnd('t.n_off * 1.0 / t.n_conf', 4)}
-                   AS est_label_error
-        FROM full_cm f CROSS JOIN tot t
-    """,
-    scale=(
-        "Confident-learning label-noise estimation (Northcutt et al. "
-        "2021, binary form): per-class self-confidence thresholds "
-        "t_j = mean score-for-class-j among examples labeled j, then "
-        "the confident joint — examples whose score clears a class "
-        "threshold are counted into C[given_label][confident_label]; "
-        "the off-diagonal mass estimates the label-error rate the "
-        "quality classifier's training set carries. Score is the "
-        "deterministic integer-micro logistic (the calibration ops' "
-        "stand-in), so threshold comparisons are exact-integer vs a "
-        "double computed from BIGINT sums — bit-identical across "
-        "engines and partitionings. Shape: one map-only scoring pass, "
-        "a 1-row threshold agg broadcast back, a 4-key agg joined to "
-        "the literal 2x2 spine (absent cells register n=0, the "
-        "stratified-audit lesson). 100 TB: two scans, no shuffle "
-        "wider than 4 keys."
-    ),
-)
-def dq_label_noise_confident(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Confident-learning 2x2 joint over (given label, confident label)
-    with per-cell share and the global off-diagonal error estimate."""
-    docs = load_table(spark, sf_dir, "documents")
-    scored = docs.select(
-        F.floor(
-            F.lit(1000000.0)
-            / (
-                F.lit(1.0)
-                + F.exp(
-                    -((F.col("n_chars") - F.lit(250.0)) / F.lit(100.0))
-                )
-            )
-            + F.lit(0.505)
-        )
-        .cast("long")
-        .alias("s_micro"),
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-    )
-    thr = scored.agg(
-        (
-            F.sum(F.when(F.col("y") == 1, F.col("s_micro")).otherwise(0))
-            * F.lit(1.0)
-            / F.sum(F.when(F.col("y") == 1, 1).otherwise(0))
-        ).alias("t1"),
-        (
-            F.sum(
-                F.when(
-                    F.col("y") == 0, F.lit(1000000) - F.col("s_micro")
-                ).otherwise(0)
-            )
-            * F.lit(1.0)
-            / F.sum(F.when(F.col("y") == 0, 1).otherwise(0))
-        ).alias("t0"),
-    )
-    conf1 = F.col("s_micro") >= F.col("t1")
-    conf0 = (F.lit(1000000) - F.col("s_micro")) >= F.col("t0")
-    conf = scored.crossJoin(F.broadcast(thr)).select(
-        "y",
-        F.when(
-            conf1 & conf0,
-            F.when(F.lit(2) * F.col("s_micro") >= 1000000, 1).otherwise(0),
-        )
-        .when(conf1, 1)
-        .when(conf0, 0)
-        .otherwise(F.lit(None).cast("int"))
-        .alias("y_hat"),
-    )
-    cm = (
-        conf.where(F.col("y_hat").isNotNull())
-        .groupBy("y", "y_hat")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    spine = (
-        spark.range(1)
-        .select(F.explode(F.array(F.lit(0), F.lit(1))).alias("y"))
-        .crossJoin(
-            spark.range(1).select(
-                F.explode(F.array(F.lit(0), F.lit(1))).alias("y_hat")
-            )
-        )
-    )
-    full_cm = spine.join(cm, ["y", "y_hat"], "left").select(
-        "y",
-        "y_hat",
-        F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("n"),
-    )
-    tot = full_cm.agg(
-        F.sum("n").cast("long").alias("n_conf"),
-        F.sum(F.when(F.col("y") != F.col("y_hat"), F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("n_off"),
-    )
-    return full_cm.crossJoin(F.broadcast(tot)).select(
-        F.col("y").cast("long").alias("y"),
-        F.col("y_hat").cast("long").alias("y_hat"),
-        "n",
-        rnd(F.col("n") * F.lit(1.0) / F.col("n_conf"), 4).alias("share"),
-        F.when(F.col("y") != F.col("y_hat"), 1)
-        .otherwise(0)
-        .cast("long")
-        .alias("off_diag"),
-        rnd(F.col("n_off") * F.lit(1.0) / F.col("n_conf"), 4).alias(
-            "est_label_error"
         ),
     )
 

@@ -1,13 +1,8 @@
-"""Wave-13 pipeline ops (round 12, seventh batch) — quality-gate
-ablation, distance-concentration, b-bit minhash and
-pseudo-relevance-feedback retrieval.
+"""Wave-13 pipeline ops (round 12, seventh batch) — distance
+concentration, b-bit minhash and pseudo-relevance-feedback retrieval.
 
-Four capabilities extending the filter-tuning/dedup/IR story:
+Three capabilities extending the dedup/IR story:
 
-- ``dq_quality_gate_sweep``: threshold ablation for the quality
-  score — docs kept, token mass kept and lang-mix shift per literal
-  threshold grid; the table a filtering pipeline reads before picking
-  its gate (the sim_threshold_sweep pattern on the quality axis).
 - ``sim_distance_contrast_audit``: distance-concentration audit
   (Beyer et al. 1999): per query, min/mean/max squared L2 distance
   and the relative contrast (dmax-dmin)/dmin — the statistic that
@@ -37,128 +32,6 @@ from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.functions.vectors import dot, sq_norm
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
-
-
-# ---------------------------------------------------------------------------
-# quality-gate threshold ablation
-# ---------------------------------------------------------------------------
-
-_GATE_GRID = (300000, 500000, 700000, 900000)
-
-
-@op(
-    "dq_quality_gate_sweep",
-    oracle=f"""
-        WITH scored AS (
-            SELECT CAST(floor(1000000.0
-                       / (1.0 + exp(-((n_chars - 250.0) / 100.0)))
-                       + 0.505) AS BIGINT) AS s_micro,
-                   CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok,
-                   CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-            FROM documents
-        ),
-        grid(thr) AS (VALUES {", ".join(f"({t})" for t in _GATE_GRID)}),
-        tot AS (
-            SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                   CAST(sum(n_tok) AS BIGINT) AS n_tokens
-            FROM scored
-        ),
-        kept AS (
-            SELECT g.thr,
-                   CAST(count(*) FILTER (WHERE s.s_micro >= g.thr)
-                        AS BIGINT) AS n_kept,
-                   CAST(COALESCE(sum(s.n_tok)
-                            FILTER (WHERE s.s_micro >= g.thr), 0)
-                        AS BIGINT) AS tokens_kept,
-                   CAST(COALESCE(sum(s.y)
-                            FILTER (WHERE s.s_micro >= g.thr), 0)
-                        AS BIGINT) AS en_kept
-            FROM scored s CROSS JOIN grid g
-            GROUP BY g.thr
-        )
-        SELECT CAST(k.thr AS BIGINT) AS thr_micro,
-               k.n_kept, k.tokens_kept,
-               {sql_rnd("k.n_kept * 1.0 / t.n_docs", 4)}
-                   AS frac_docs_kept,
-               {sql_rnd("k.tokens_kept * 1.0 / t.n_tokens", 4)}
-                   AS frac_tokens_kept,
-               CASE WHEN k.n_kept = 0 THEN 0.0
-                    ELSE {sql_rnd("k.en_kept * 1.0 / k.n_kept", 4)}
-               END AS en_share_kept
-        FROM kept k CROSS JOIN tot t
-    """,
-    scale=(
-        "Quality-gate ablation — the table a filtering pipeline reads "
-        "before committing to a threshold: per literal gate, surviving "
-        "doc count, token mass (the quantity that actually prices the "
-        "training run) and the lang-mix shift the gate induces. "
-        "Monotone by construction (each row's kept-set nests the "
-        "next), which the twin test pins. Shape: one map-only scoring "
-        "pass fanned across the 4-row literal grid (the agg_ecdf_grid "
-        "pre-agg pattern), one 4-key agg, a 1-row total broadcast "
-        "back. The score is the calibration ops' deterministic "
-        "integer-micro logistic; at 100 TB the same sweep runs on the "
-        "trained classifier's scores with zero shape change."
-    ),
-)
-def dq_quality_gate_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Docs/token-mass/lang-mix survival per quality threshold."""
-    docs = load_table(spark, sf_dir, "documents")
-    scored = docs.select(
-        F.floor(
-            F.lit(1000000.0)
-            / (
-                F.lit(1.0)
-                + F.exp(
-                    -((F.col("n_chars") - F.lit(250.0)) / F.lit(100.0))
-                )
-            )
-            + F.lit(0.505)
-        )
-        .cast("long")
-        .alias("s_micro"),
-        F.size(F.split("text", " ")).cast("long").alias("n_tok"),
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-    )
-    grid = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(t) for t in _GATE_GRID])
-        ).alias("thr")
-    )
-    tot = scored.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum("n_tok").cast("long").alias("n_tokens"),
-    )
-    keep = F.col("s_micro") >= F.col("thr")
-    kept = (
-        scored.crossJoin(F.broadcast(grid))
-        .groupBy("thr")
-        .agg(
-            F.sum(F.when(keep, 1).otherwise(0)).cast("long").alias(
-                "n_kept"
-            ),
-            F.sum(F.when(keep, F.col("n_tok")).otherwise(0))
-            .cast("long")
-            .alias("tokens_kept"),
-            F.sum(F.when(keep, F.col("y")).otherwise(0))
-            .cast("long")
-            .alias("en_kept"),
-        )
-    )
-    return kept.crossJoin(F.broadcast(tot)).select(
-        F.col("thr").cast("long").alias("thr_micro"),
-        "n_kept",
-        "tokens_kept",
-        rnd(F.col("n_kept") * F.lit(1.0) / F.col("n_docs"), 4).alias(
-            "frac_docs_kept"
-        ),
-        rnd(
-            F.col("tokens_kept") * F.lit(1.0) / F.col("n_tokens"), 4
-        ).alias("frac_tokens_kept"),
-        F.when(F.col("n_kept") == 0, F.lit(0.0))
-        .otherwise(rnd(F.col("en_kept") * F.lit(1.0) / F.col("n_kept"), 4))
-        .alias("en_share_kept"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,7 @@
 """Wave-14 pipeline ops (round 12, eighth batch) — Kneser-Ney
-smoothing, count-min sketches, leave-one-out target encoding and graph
-beam-search retrieval.
+smoothing, count-min sketches and graph beam-search retrieval.
 
-Four capabilities extending the LM/sketch/feature/ANN story:
+Three capabilities extending the LM/sketch/ANN story:
 
 - ``text_kneser_ney_bigram``: interpolated Kneser-Ney bigram
   probabilities (the canonical LM smoothing — absolute discount
@@ -15,10 +14,6 @@ Four capabilities extending the LM/sketch/feature/ANN story:
   sums, so unlike MG the estimates are partition-order-FREE and can
   be emitted exactly, alongside the checked one-sided guarantee
   est >= cf.
-- ``feat_target_encode_loo``: leave-one-out target encoding with
-  m-estimate smoothing (the feature-store classic) — per-row encoding
-  (sum_y - y_i + m*prior) / (n - 1 + m) from exact integer group
-  sums, emitted for a deterministic 1-in-97 row sample.
 - ``sim_graph_beam_recall``: greedy beam search over the in-cell
   top-8 neighbor graph (two unrolled hops from a deterministic entry
   point, beam=8) with recall@5 against the exact in-cell ranking —
@@ -293,99 +288,6 @@ def text_count_min_sketch_audit(
         .cast("long")
         .alias("never_undercounts"),
         "n_tokens",
-    )
-
-
-# ---------------------------------------------------------------------------
-# leave-one-out target encoding
-# ---------------------------------------------------------------------------
-
-_TE_M = 20.0  # m-estimate smoothing mass
-
-
-@op(
-    "feat_target_encode_loo",
-    oracle=f"""
-        WITH base AS (
-            SELECT o_orderkey, o_orderpriority AS cat,
-                   CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
-            FROM orders
-        ),
-        grp AS (
-            SELECT cat, CAST(count(*) AS BIGINT) AS n_cat,
-                   CAST(sum(y) AS BIGINT) AS sum_y
-            FROM base GROUP BY cat
-        ),
-        pri AS (
-            SELECT sum(y) * 1.0 / count(*) AS prior FROM base
-        )
-        SELECT b.o_orderkey, b.cat, CAST(b.y AS BIGINT) AS y,
-               g.n_cat, g.sum_y,
-               {sql_rnd(
-                   f"(g.sum_y - b.y + {_TE_M} * p.prior)"
-                   f" / (g.n_cat - 1 + {_TE_M})", 6
-               )} AS loo_enc,
-               {sql_rnd(
-                   f"(g.sum_y + {_TE_M} * p.prior)"
-                   f" / (g.n_cat + {_TE_M})", 6
-               )} AS naive_enc
-        FROM base b
-        JOIN grp g USING (cat)
-        CROSS JOIN pri p
-        WHERE b.o_orderkey % 97 = 0
-    """,
-    scale=(
-        "Leave-one-out target encoding with m-estimate smoothing (the "
-        "feature-store classic): enc_i = (sum_y(cat) - y_i + "
-        "m*prior) / (n(cat) - 1 + m) — removing the row's own label "
-        "is what stops the encoding from leaking the target into "
-        "training. Exact integer group sums broadcast back onto rows "
-        "make the per-row encoding a rational of BIGINTs plus one "
-        "global prior — deterministic at any partitioning. The "
-        "emitted rows are the 1-in-97 orderkey sample (the encoding "
-        "exists for every row; the sample is the audit surface). "
-        "100 TB: one |categories|-key agg + a broadcast join — "
-        "map-only per row; high-cardinality categories fall back to "
-        "the same shape with the agg sharded on cat hash."
-    ),
-)
-def feat_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LOO + naive m-estimate target encodings for sampled orders."""
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.select(
-        "o_orderkey",
-        F.col("o_orderpriority").alias("cat"),
-        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
-    )
-    grp = base.groupBy("cat").agg(
-        F.count(F.lit(1)).cast("long").alias("n_cat"),
-        F.sum("y").cast("long").alias("sum_y"),
-    )
-    pri = base.agg(
-        (F.sum("y") * F.lit(1.0) / F.count(F.lit(1))).alias("prior")
-    )
-    m = _TE_M
-    return (
-        base.where(F.col("o_orderkey") % 97 == 0)
-        .join(F.broadcast(grp), "cat")
-        .crossJoin(F.broadcast(pri))
-        .select(
-            "o_orderkey",
-            "cat",
-            F.col("y").cast("long").alias("y"),
-            "n_cat",
-            "sum_y",
-            rnd(
-                (F.col("sum_y") - F.col("y") + F.lit(m) * F.col("prior"))
-                / (F.col("n_cat") - 1 + F.lit(m)),
-                6,
-            ).alias("loo_enc"),
-            rnd(
-                (F.col("sum_y") + F.lit(m) * F.col("prior"))
-                / (F.col("n_cat") + F.lit(m)),
-                6,
-            ).alias("naive_enc"),
-        )
     )
 
 

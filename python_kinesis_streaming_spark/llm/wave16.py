@@ -1,9 +1,8 @@
 """Wave-16 pipeline ops (round 12, tenth batch) — power analysis,
-hubness, priority sampling, Poisson-bootstrap intervals and annotator
-agreement.
+hubness, priority sampling and Poisson-bootstrap intervals.
 
-Five capabilities extending the experimentation/ANN-pathology/
-estimation/uncertainty/label-QA story:
+Four capabilities extending the experimentation/ANN-pathology/
+estimation/uncertainty story:
 
 - ``events_power_analysis_mde``: two-sample minimum-detectable-effect
   and required-n calculator from the measured metric variance — the
@@ -22,10 +21,6 @@ estimation/uncertainty/label-QA story:
   DETERMINISTIC md5-uniform draws through the literal inverse-CDF
   table — replicate means and their order-statistic interval,
   reproducible across retries and partitionings.
-- ``dq_annotator_agreement_kappa``: Cohen's kappa between two
-  deterministic quality annotators (length-gate vs stopword-gate) —
-  exact integer confusion counts, the agreement audit run before
-  trusting any labeling pipeline.
 
 Same discipline as waves 7-15: exact integers before any
 cross-partition sum, identical aliases, BIGINT casts in oracles,
@@ -609,109 +604,4 @@ def events_bootstrap_ci_hash(
             "ci_lo",
             "ci_hi",
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Cohen's kappa between two deterministic annotators
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "dq_annotator_agreement_kappa",
-    oracle=f"""
-        WITH ann AS (
-            SELECT CASE WHEN n_chars >= 250 THEN 1 ELSE 0 END AS a1,
-                   CASE WHEN len(list_filter(string_split(text, ' '),
-                                 t -> t IN ('the', 'a'))) * 10
-                             <= len(string_split(text, ' '))
-                        THEN 1 ELSE 0 END AS a2
-            FROM documents
-        ),
-        cm AS (
-            SELECT CAST(sum(CASE WHEN a1 = 1 AND a2 = 1 THEN 1 ELSE 0
-                        END) AS BIGINT) AS n11,
-                   CAST(sum(CASE WHEN a1 = 1 AND a2 = 0 THEN 1 ELSE 0
-                        END) AS BIGINT) AS n10,
-                   CAST(sum(CASE WHEN a1 = 0 AND a2 = 1 THEN 1 ELSE 0
-                        END) AS BIGINT) AS n01,
-                   CAST(sum(CASE WHEN a1 = 0 AND a2 = 0 THEN 1 ELSE 0
-                        END) AS BIGINT) AS n00,
-                   CAST(count(*) AS BIGINT) AS n
-            FROM ann
-        )
-        SELECT n11, n10, n01, n00, n,
-               {sql_rnd("(n11 + n00) * 1.0 / n", 4)} AS p_observed,
-               {sql_rnd(
-                   "((n11 + n10) * 1.0 / n) * ((n11 + n01) * 1.0 / n)"
-                   " + ((n01 + n00) * 1.0 / n) * ((n10 + n00) * 1.0 / n)",
-                   4
-               )} AS p_expected,
-               {sql_rnd(
-                   "((n11 + n00) * 1.0 / n"
-                   " - (((n11 + n10) * 1.0 / n) * ((n11 + n01) * 1.0 / n)"
-                   "    + ((n01 + n00) * 1.0 / n) * ((n10 + n00) * 1.0 / n)))"
-                   " / (1.0"
-                   " - (((n11 + n10) * 1.0 / n) * ((n11 + n01) * 1.0 / n)"
-                   "    + ((n01 + n00) * 1.0 / n) * ((n10 + n00) * 1.0 / n)))",
-                   4
-               )} AS kappa
-        FROM cm
-    """,
-    scale=(
-        "Cohen's kappa between two deterministic quality annotators — "
-        "annotator 1 gates on length (n_chars >= 250), annotator 2 on "
-        "stopword density (share of 'the'/'a' tokens <= 10%) — the "
-        "chance-corrected agreement audit run before trusting any "
-        "labeling pipeline (and the stand-in for human-vs-model label "
-        "QA at scale). The 2x2 confusion is four exact BIGINT counts; "
-        "kappa = (p_o - p_e)/(1 - p_e) is a rational of those counts, "
-        "bit-identical anywhere. 100 TB: one map-only double-gate "
-        "pass + a 1-row agg; k raters generalize via pairwise kappas "
-        "or Fleiss over the same count shapes."
-    ),
-)
-def dq_annotator_agreement_kappa(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """2x2 agreement counts + Cohen's kappa for two quality gates."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    stop = F.size(
-        F.filter(toks, lambda t: (t == F.lit("the")) | (t == F.lit("a")))
-    )
-    a1 = F.when(F.col("n_chars") >= 250, 1).otherwise(0)
-    a2 = F.when(stop * 10 <= F.size(toks), 1).otherwise(0)
-    ann = docs.select(a1.alias("a1"), a2.alias("a2"))
-    cm = ann.agg(
-        F.sum(F.when((F.col("a1") == 1) & (F.col("a2") == 1), 1).otherwise(0))
-        .cast("long")
-        .alias("n11"),
-        F.sum(F.when((F.col("a1") == 1) & (F.col("a2") == 0), 1).otherwise(0))
-        .cast("long")
-        .alias("n10"),
-        F.sum(F.when((F.col("a1") == 0) & (F.col("a2") == 1), 1).otherwise(0))
-        .cast("long")
-        .alias("n01"),
-        F.sum(F.when((F.col("a1") == 0) & (F.col("a2") == 0), 1).otherwise(0))
-        .cast("long")
-        .alias("n00"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-    po = (F.col("n11") + F.col("n00")) * F.lit(1.0) / F.col("n")
-    pe = (
-        ((F.col("n11") + F.col("n10")) * F.lit(1.0) / F.col("n"))
-        * ((F.col("n11") + F.col("n01")) * F.lit(1.0) / F.col("n"))
-        + ((F.col("n01") + F.col("n00")) * F.lit(1.0) / F.col("n"))
-        * ((F.col("n10") + F.col("n00")) * F.lit(1.0) / F.col("n"))
-    )
-    return cm.select(
-        "n11",
-        "n10",
-        "n01",
-        "n00",
-        "n",
-        rnd(po, 4).alias("p_observed"),
-        rnd(pe, 4).alias("p_expected"),
-        rnd((po - pe) / (F.lit(1.0) - pe), 4).alias("kappa"),
     )

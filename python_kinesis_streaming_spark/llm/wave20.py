@@ -1,14 +1,10 @@
-"""Round-13 wave-20 ops (SURVEY §2.32): whitening, calibration drift,
-packing waste, binarized retrieval, metric robustness.
+"""Round-13 wave-20 ops (SURVEY §2.32): whitening, packing waste,
+binarized retrieval, metric robustness.
 
 - ``emb_whitening_audit``: does per-dimension standardization (the
   "all-but-the-top" preprocessing) actually fix the space? Re-measures
   emb_isotropy_audit's anisotropy + top-16 variance share AFTER
   whitening, one row, before/after side by side.
-- ``dq_calibration_drift``: dq_calibration_report split by time — ECE
-  on the early vs late half of the event stream (a quality
-  classifier that drifts between ingestion batches silently corrupts
-  every downstream gate).
 - ``corpus_padding_waste_curve``: padding waste per (source, L) when
   packing whole documents into L-token sequences — the dual of
   corpus_truncation_loss_curve (truncation loses signal, padding
@@ -264,152 +260,6 @@ def emb_whitening_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         rnd(F.col("msq_a") / F.lit(1000000.0), 4).alias(
             "mean_norm_sq_after"
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# temporal calibration drift
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "dq_calibration_drift",
-    oracle="""
-        WITH t AS (
-            SELECT CAST(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000
-                        AS BIGINT) AS d,
-                   CAST(floor(1000000.0
-                       / (1.0 + exp(-((value - 50.0) / 25.0)))
-                       + 0.505) AS BIGINT) AS s_micro,
-                   CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-                       AS y
-            FROM events
-        ),
-        m AS (SELECT min(d) AS mn, max(d) AS mx FROM t),
-        binned AS (
-            SELECT CAST(CASE WHEN t.d * 2 <= m.mn + m.mx THEN 0
-                        ELSE 1 END AS BIGINT) AS half,
-                   least(CAST(floor(s_micro / 100000.0) AS BIGINT), 9)
-                       AS bin,
-                   s_micro, y
-            FROM t CROSS JOIN m
-        ),
-        bins AS (
-            SELECT half, bin,
-                   CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(s_micro) AS BIGINT) AS sum_s,
-                   CAST(sum(y) AS BIGINT) AS sum_y
-            FROM binned GROUP BY half, bin
-        ),
-        ece AS (
-            SELECT half,
-                   sum(n * abs(sum_y * 1.0 / n
-                               - sum_s / (1000000.0 * n))) / sum(n)
-                       AS e
-            FROM bins GROUP BY half
-        ),
-        drift AS (
-            SELECT abs(max(CASE WHEN half = 1 THEN e END)
-                       - max(CASE WHEN half = 0 THEN e END)) AS dr
-            FROM ece
-        )
-        SELECT b.half, b.bin, b.n,
-               floor((b.sum_s / (1000000.0 * b.n)) * 10000.0 + 0.505)
-                   / 10000.0 AS mean_conf,
-               floor((b.sum_y * 1.0 / b.n) * 10000.0 + 0.505) / 10000.0
-                   AS frac_pos,
-               floor(e.e * 10000.0 + 0.505) / 10000.0 AS ece_half,
-               floor(d.dr * 10000.0 + 0.505) / 10000.0 AS ece_drift
-        FROM bins b
-        JOIN ece e ON e.half = b.half
-        CROSS JOIN drift d
-    """,
-    scale=(
-        "Temporal calibration drift: dq_calibration_report's "
-        "reliability bins computed separately on the early and late "
-        "half of the event stream (split at the midpoint day, derived "
-        "from the data — no fixture-specific literal), with the ECE "
-        "delta as the drift statistic. A quality classifier that was "
-        "calibrated on January silently mis-gates July; this is the "
-        "audit that catches it before the gate ships. The logistic "
-        "score freezes to integer micro BEFORE binning/summing (the "
-        "calibration-family exp precedent: both engines evaluate exp "
-        "on identical doubles and the freeze bounds exposure); all "
-        "bin sums are BIGINTs. Shape: one scan, a (half, bin)-keyed "
-        "agg (20 keys), two 1-row scalars broadcast back. 100 TB: "
-        "map-only scoring + a 20-key agg — rerun per ingestion batch."
-    ),
-)
-def dq_calibration_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability bins + ECE per time-half, with the drift delta."""
-    ev = load_table(spark, sf_dir, "events")
-    t = ev.select(
-        F.expr("unix_micros(ts) div 86400000000").alias("d"),
-        F.floor(
-            F.lit(1000000.0)
-            / (
-                F.lit(1.0)
-                + F.exp(-((F.col("value") - F.lit(50.0)) / F.lit(25.0)))
-            )
-            + F.lit(0.505)
-        )
-        .cast("long")
-        .alias("s_micro"),
-        F.when(F.col("event_type") == "purchase", 1)
-        .otherwise(0)
-        .alias("y"),
-    )
-    m = t.agg(F.min("d").alias("mn"), F.max("d").alias("mx"))
-    binned = t.crossJoin(F.broadcast(m)).select(
-        F.when(F.col("d") * 2 <= F.col("mn") + F.col("mx"), F.lit(0))
-        .otherwise(F.lit(1))
-        .cast("long")
-        .alias("half"),
-        F.least(
-            F.floor(F.col("s_micro") / F.lit(100000.0)).cast("long"),
-            F.lit(9),
-        ).alias("bin"),
-        "s_micro",
-        "y",
-    )
-    bins = binned.groupBy("half", "bin").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("s_micro").cast("long").alias("sum_s"),
-        F.sum("y").cast("long").alias("sum_y"),
-    )
-    ece = bins.groupBy("half").agg(
-        (
-            F.sum(
-                F.col("n")
-                * F.abs(
-                    F.col("sum_y") * F.lit(1.0) / F.col("n")
-                    - F.col("sum_s") / (F.lit(1000000.0) * F.col("n"))
-                )
-            )
-            / F.sum("n")
-        ).alias("e")
-    )
-    drift = ece.agg(
-        F.abs(
-            F.max(F.when(F.col("half") == 1, F.col("e")))
-            - F.max(F.when(F.col("half") == 0, F.col("e")))
-        ).alias("dr")
-    )
-    return (
-        bins.join(ece, "half")
-        .crossJoin(F.broadcast(drift))
-        .select(
-            "half",
-            "bin",
-            "n",
-            rnd(F.col("sum_s") / (F.lit(1000000.0) * F.col("n")), 4)
-            .alias("mean_conf"),
-            rnd(F.col("sum_y") * F.lit(1.0) / F.col("n"), 4).alias(
-                "frac_pos"
-            ),
-            rnd(F.col("e"), 4).alias("ece_half"),
-            rnd(F.col("dr"), 4).alias("ece_drift"),
-        )
     )
 
 

@@ -1,10 +1,6 @@
-"""Round-14 wave-25 ops (SURVEY §2.37): feature encoding, hash-bit
-quality, distributional treatment effects, boilerplate detection.
+"""Round-14 wave-25 ops (SURVEY §2.37): hash-bit quality,
+distributional treatment effects, boilerplate detection.
 
-- ``feat_woe_iv_encoding``: weight-of-evidence / information value of
-  literal value bands against the purchase label — the classic
-  credit-scoring feature audit (pairs feat_target_encode_loo with an
-  interpretable strength score).
 - ``emb_sign_bit_balance_audit``: per-bit 1-share and adjacent-bit
   agreement of the 64-bit sign signatures — a usable binary index
   needs ~50/50 bits with independent neighbors (the index-quality
@@ -33,175 +29,6 @@ from pyspark.sql.window import Window
 from python_kinesis_streaming_spark.functions.rounding import cents, rnd, sql_rnd
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
-
-
-# ---------------------------------------------------------------------------
-# weight-of-evidence / information value
-# ---------------------------------------------------------------------------
-
-#: literal value-band upper bounds in cents (last band open-ended)
-_WOE_BANDS = (1000, 2500, 5000, 10000, 25000)
-
-
-def _band_case_sql() -> str:
-    parts = []
-    prev = 0
-    for i, ub in enumerate(_WOE_BANDS):
-        parts.append(f"WHEN cents <= {ub} THEN {i}")
-        prev = ub
-    return (
-        "CASE " + " ".join(parts) + f" ELSE {len(_WOE_BANDS)} END"
-    )
-
-
-@op(
-    "feat_woe_iv_encoding",
-    oracle=f"""
-        WITH t AS (
-            SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
-                   CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-                       AS label
-            FROM events
-        ),
-        b AS (
-            SELECT CAST({_band_case_sql()} AS BIGINT) AS band,
-                   label
-            FROM t
-        ),
-        per AS (
-            SELECT band,
-                   CAST(sum(label) AS BIGINT) AS goods,
-                   CAST(count(*) - sum(label) AS BIGINT) AS bads
-            FROM b GROUP BY band
-        ),
-        tot AS (
-            SELECT CAST(sum(goods) AS BIGINT) AS g,
-                   CAST(sum(bads) AS BIGINT) AS bb
-            FROM per
-        ),
-        woe AS (
-            -- WoE = ln((goods/G)/(bads/B)) = ln(goods*B / (bads*G)):
-            -- ln on an integer rational (Adamic-Adar precedent);
-            -- IV terms micro-frozen BEFORE the cross-band sum
-            SELECT p.band, p.goods, p.bads, t.g, t.bb,
-                   CASE WHEN p.goods > 0 AND p.bads > 0
-                        THEN ln(p.goods * 1.0::DOUBLE * t.bb
-                                / (p.bads * 1.0::DOUBLE * t.g))
-                        ELSE 0.0 END AS w,
-                   CASE WHEN p.goods > 0 AND p.bads > 0
-                        THEN CAST(floor(
-                            (p.goods * 1.0::DOUBLE / t.g
-                             - p.bads * 1.0::DOUBLE / t.bb)
-                            * ln(p.goods * 1.0::DOUBLE * t.bb
-                                 / (p.bads * 1.0::DOUBLE * t.g))
-                            * 1000000.0 + 0.505) AS BIGINT)
-                        ELSE 0 END AS iv_micro
-            FROM per p CROSS JOIN tot t
-        ),
-        ivt AS (
-            SELECT CAST(sum(iv_micro) AS BIGINT) AS iv_total_micro
-            FROM woe
-        )
-        SELECT w.band, w.goods, w.bads,
-               {sql_rnd("w.goods * 1.0 / w.g", 4)} AS good_share,
-               {sql_rnd("w.bads * 1.0 / w.bb", 4)} AS bad_share,
-               {sql_rnd("w.w", 4)} AS woe,
-               {sql_rnd("i.iv_total_micro / 1000000.0", 4)}
-                   AS iv_total
-        FROM woe w CROSS JOIN ivt i
-    """,
-    scale=(
-        "Weight-of-evidence encoding of literal value bands against "
-        "the purchase label, plus the information value of the whole "
-        "feature (IV < 0.02 useless, > 0.5 suspicious — the classic "
-        "credit-scoring vocabulary). WoE is ln of the integer "
-        "rational goods*B/(bads*G) (ln only on identical doubles); "
-        "each band's IV term is micro-frozen BEFORE the cross-band "
-        "BIGINT sum (order-free); empty-side bands emit 0 with the "
-        "standard guard in both engines. Shape: one map-side "
-        "combinable band agg, a 1-row total, a 6-row report. 100 TB: "
-        "one pass; WoE tables are the interpretable cousin of "
-        "feat_target_encode_loo and feed the same model prep."
-    ),
-)
-def feat_woe_iv_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WoE per literal value band + feature IV vs purchase label."""
-    ev = load_table(spark, sf_dir, "events")
-    band = F.lit(len(_WOE_BANDS)).cast("long")
-    for i in range(len(_WOE_BANDS) - 1, -1, -1):
-        band = F.when(
-            cents() <= _WOE_BANDS[i], F.lit(i).cast("long")
-        ).otherwise(band)
-    per = (
-        ev.select(
-            band.alias("band"),
-            F.when(F.col("event_type") == "purchase", 1)
-            .otherwise(0)
-            .alias("label"),
-        )
-        .groupBy("band")
-        .agg(
-            F.sum("label").cast("long").alias("goods"),
-            (F.count(F.lit(1)) - F.sum("label"))
-            .cast("long")
-            .alias("bads"),
-        )
-    )
-    tot = per.agg(
-        F.sum("goods").cast("long").alias("g"),
-        F.sum("bads").cast("long").alias("bb"),
-    )
-    both = F.broadcast(tot).crossJoin(per).select(
-        "band", "goods", "bads", "g", "bb"
-    )
-    ok = (F.col("goods") > 0) & (F.col("bads") > 0)
-    w_expr = F.log(
-        F.col("goods")
-        * F.lit(1.0)
-        * F.col("bb")
-        / (F.col("bads") * F.lit(1.0) * F.col("g"))
-    )
-    woe = both.select(
-        "band",
-        "goods",
-        "bads",
-        "g",
-        "bb",
-        F.when(ok, w_expr).otherwise(F.lit(0.0)).alias("w"),
-        F.when(
-            ok,
-            F.floor(
-                (
-                    F.col("goods") * F.lit(1.0) / F.col("g")
-                    - F.col("bads") * F.lit(1.0) / F.col("bb")
-                )
-                * w_expr
-                * F.lit(1000000.0)
-                + F.lit(0.505)
-            ).cast("long"),
-        )
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("iv_micro"),
-    )
-    ivt = woe.agg(
-        F.sum("iv_micro").cast("long").alias("iv_total_micro")
-    )
-    return woe.crossJoin(F.broadcast(ivt)).select(
-        "band",
-        "goods",
-        "bads",
-        rnd(F.col("goods") * F.lit(1.0) / F.col("g"), 4).alias(
-            "good_share"
-        ),
-        rnd(F.col("bads") * F.lit(1.0) / F.col("bb"), 4).alias(
-            "bad_share"
-        ),
-        rnd(F.col("w"), 4).alias("woe"),
-        rnd(F.col("iv_total_micro") / F.lit(1000000.0), 4).alias(
-            "iv_total"
-        ),
-    )
 
 
 # ---------------------------------------------------------------------------

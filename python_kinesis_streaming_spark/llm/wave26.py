@@ -1,15 +1,11 @@
 """Round-14 wave-26 ops (SURVEY §2.38): multi-touch attribution,
-instrumentation QA, metric-space labels, budget planning.
+metric-space labels, budget planning.
 
 - ``events_attribution_position``: U-shaped (40/20/40) position-based
   credit per touch type — the multi-touch member of the attribution
   family (first_touch and time_decay exist); credits are EXACT
   integer micros with a deterministic remainder rule, so the 1.0 per
   user conservation is an identity, not an approximation.
-- ``dq_event_double_fire_audit``: same-user same-type events closer
-  than a literal 1 s are client double-fires — the instrumentation
-  bug every funnel metric silently absorbs; per-type rates + the
-  minimum observed gap.
 - ``emb_triplet_margin_audit``: per sign-bit cell, sampled anchors'
   best same-label vs best other-label cosine — the margin that tells
   whether labels are metrically separable BEFORE anyone trains a
@@ -173,98 +169,6 @@ def events_attribution_position(
         (F.col("total_micro") == F.col("n_users") * 1000000).alias(
             "conservation_ok"
         ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# double-fire instrumentation audit
-# ---------------------------------------------------------------------------
-
-#: gap below which a same-user same-type repeat is a double-fire (µs)
-_DF_GAP_US = 1000000
-
-
-@op(
-    "dq_event_double_fire_audit",
-    oracle=f"""
-        WITH e AS (
-            SELECT user_id, event_type,
-                   CAST(epoch_us(CAST(ts AS TIMESTAMP)) AS BIGINT)
-                       AS ts_us,
-                   event_id
-            FROM events
-        ),
-        g AS (
-            SELECT event_type,
-                   ts_us - lag(ts_us) OVER (
-                       PARTITION BY user_id, event_type
-                       ORDER BY ts_us, event_id) AS gap_us
-            FROM e
-        ),
-        agg AS (
-            SELECT event_type,
-                   CAST(count(*) AS BIGINT) AS n_events,
-                   CAST(sum(CASE WHEN gap_us < {_DF_GAP_US}
-                            THEN 1 ELSE 0 END) AS BIGINT)
-                       AS n_double_fires,
-                   CAST(min(gap_us) AS BIGINT) AS min_gap_us
-            FROM g GROUP BY event_type
-        )
-        SELECT event_type, n_events, n_double_fires,
-               {sql_rnd("n_double_fires * 1.0 / n_events", 6)}
-                   AS double_fire_rate,
-               {sql_rnd("min_gap_us / 1000.0", 3)} AS min_gap_ms
-        FROM agg
-    """,
-    scale=(
-        "Client double-fire screen: a same-user same-type event "
-        "landing under 1 s after its predecessor is (with "
-        "overwhelming odds) a retry/double-tap, and every funnel and "
-        "count metric silently absorbs them. Per type: the "
-        "double-fire count, rate and the minimum observed gap (a "
-        "min_gap of ~0 ms is the smoking gun; a clean type bottoms "
-        "out at human-scale gaps). Gap arithmetic is exact BIGINT "
-        "micros from one (user, type)-keyed lag window. Shape: one "
-        "equi-keyed fact window + a |types|-key agg. 100 TB: the "
-        "same shuffle the dedup-within-watermark operator runs; this "
-        "is its offline calibration table (what dedup window would "
-        "kill the double-fires without eating real repeats)."
-    ),
-)
-def dq_event_double_fire_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-type double-fire counts/rates from one keyed lag window."""
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.unix_micros(F.col("ts")).alias("ts_us"),
-        "event_id",
-    )
-    w = Window.partitionBy("user_id", "event_type").orderBy(
-        "ts_us", "event_id"
-    )
-    g = ev.select(
-        "event_type",
-        (F.col("ts_us") - F.lag("ts_us").over(w)).alias("gap_us"),
-    )
-    agg = g.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(
-            F.when(F.col("gap_us") < _DF_GAP_US, 1).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_double_fires"),
-        F.min("gap_us").cast("long").alias("min_gap_us"),
-    )
-    return agg.select(
-        "event_type",
-        "n_events",
-        "n_double_fires",
-        rnd(
-            F.col("n_double_fires") * F.lit(1.0) / F.col("n_events"), 6
-        ).alias("double_fire_rate"),
-        rnd(F.col("min_gap_us") / F.lit(1000.0), 3).alias("min_gap_ms"),
     )
 
 

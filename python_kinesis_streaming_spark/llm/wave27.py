@@ -1,6 +1,6 @@
 """Round-14 wave-27 ops (SURVEY §2.39): probabilistic membership,
-hashing-trick quality, cluster geometry, segment-vs-aggregate
-honesty, clustered-sampling variance.
+cluster geometry, segment-vs-aggregate honesty, clustered-sampling
+variance.
 
 - ``agg_bloom_membership_audit``: a deterministic Bloom filter built
   relationally (k=4 md5 positions into m=65536 bits), probed over
@@ -8,10 +8,6 @@ honesty, clustered-sampling variance.
   NO-FALSE-NEGATIVE theorem as a boolean (the fourth mergeable
   structure after MG / count-min / the quantile summary: bit sets
   OR-merge).
-- ``feat_hash_collision_audit``: the hashing trick's collision cost
-  at a literal m grid — what share of the vocabulary shares a
-  bucket at each width (DSIR's hashed bigrams and the classifier's
-  hashed n-grams both ride on this).
 - ``emb_cluster_separation_db_index``: Davies-Bouldin index over the
   16 sign-bit cells — within-cell spread vs between-centroid
   distance, the geometry audit behind every "cells bound the pair
@@ -220,114 +216,6 @@ def agg_bloom_membership_audit(
         ).alias("measured_fpr"),
         (F.col("n_member_pass") == F.col("n_members")).alias(
             "no_false_negatives"
-        ),
-    )
-
-
-# ---------------------------------------------------------------------------
-# hashing-trick collision audit
-# ---------------------------------------------------------------------------
-
-#: literal hash-table widths priced
-_HC_MS = (1024, 4096, 16384)
-
-
-@op(
-    "feat_hash_collision_audit",
-    oracle=f"""
-        WITH vocab AS (
-            SELECT DISTINCT t.w AS w
-            FROM documents, unnest(string_split(text, ' ')) AS t(w)
-        ),
-        grid AS (SELECT CAST(u.m AS BIGINT) AS m
-                 FROM unnest([{", ".join(str(m) for m in _HC_MS)}])
-                      AS u(m)),
-        h AS (
-            SELECT g.m,
-                   {_sql_hash64("v.w")} % g.m AS bucket
-            FROM vocab v CROSS JOIN grid g
-        ),
-        per AS (
-            SELECT m, bucket, CAST(count(*) AS BIGINT) AS load
-            FROM h GROUP BY m, bucket
-        ),
-        agg AS (
-            SELECT m,
-                   CAST(sum(load) AS BIGINT) AS n_words,
-                   CAST(count(*) AS BIGINT) AS buckets_used,
-                   CAST(sum(CASE WHEN load > 1 THEN load ELSE 0 END)
-                        AS BIGINT) AS colliding_words,
-                   CAST(max(load) AS BIGINT) AS max_load
-            FROM per GROUP BY m
-        )
-        SELECT m, n_words, buckets_used, colliding_words, max_load,
-               {sql_rnd("colliding_words * 1.0 / n_words", 4)}
-                   AS collision_share,
-               {sql_rnd("n_words * 1.0 / m", 4)} AS load_factor,
-               {sql_rnd("buckets_used * 1.0 / m", 4)}
-                   AS occupancy
-        FROM agg
-    """,
-    scale=(
-        "What the hashing trick costs at each width: the share of "
-        "the distinct vocabulary that shares a bucket with another "
-        "word, buckets used, and the worst load, per literal m. "
-        "corpus_dsir_weights (hashed bigrams) and the hashed n-gram "
-        "classifier both accept this collision noise — this table "
-        "says how much, and whether doubling m buys anything (when "
-        "occupancy is already low, collisions come from the hash, "
-        "not the width). All counts exact BIGINTs over the md5 "
-        "bucket assignment (identical both engines). Shape: one "
-        "vocab distinct, a 3-row literal grid fan-out, a (m, "
-        "bucket)-key agg, 3-row report. 100 TB: the vocab table is "
-        "the corpus sufficient statistic; the audit is one agg over "
-        "it."
-    ),
-)
-def feat_hash_collision_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Collision/occupancy stats per literal hash width."""
-    docs = load_table(spark, sf_dir, "documents")
-    vocab = (
-        docs.select(F.explode(F.split("text", " ")).alias("w"))
-        .distinct()
-    )
-    grid = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(int(m)) for m in _HC_MS])
-        ).alias("m0")
-    ).select(F.col("m0").cast("long").alias("m"))
-    h = vocab.crossJoin(F.broadcast(grid)).select(
-        "m", (md5_hash64(F.col("w")) % F.col("m")).alias("bucket")
-    )
-    per = h.groupBy("m", "bucket").agg(
-        F.count(F.lit(1)).cast("long").alias("load")
-    )
-    agg = per.groupBy("m").agg(
-        F.sum("load").cast("long").alias("n_words"),
-        F.count(F.lit(1)).cast("long").alias("buckets_used"),
-        F.sum(
-            F.when(F.col("load") > 1, F.col("load")).otherwise(0)
-        )
-        .cast("long")
-        .alias("colliding_words"),
-        F.max("load").cast("long").alias("max_load"),
-    )
-    return agg.select(
-        "m",
-        "n_words",
-        "buckets_used",
-        "colliding_words",
-        "max_load",
-        rnd(
-            F.col("colliding_words") * F.lit(1.0) / F.col("n_words"), 4
-        ).alias("collision_share"),
-        rnd(F.col("n_words") * F.lit(1.0) / F.col("m"), 4).alias(
-            "load_factor"
-        ),
-        rnd(F.col("buckets_used") * F.lit(1.0) / F.col("m"), 4).alias(
-            "occupancy"
         ),
     )
 

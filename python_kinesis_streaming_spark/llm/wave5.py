@@ -1,8 +1,7 @@
-"""Wave-5 pipeline ops (round 11, second batch) — governance, sampling
-and retrieval-diversity compositions.
+"""Wave-5 pipeline ops (round 11, second batch) — sampling and
+retrieval-diversity compositions.
 
-Five capabilities the registry does not yet cover: a k-anonymity audit
-over quasi-identifiers (the privacy gate before releasing a corpus), a
+Four capabilities the registry does not yet cover: a
 deterministic mergeable uniform sample (hash-rank reservoir — the
 distributed replacement for sequential reservoir sampling), greedy MMR
 diversification of retrieval results (Carbonell & Goldstein 1998, five
@@ -25,63 +24,6 @@ from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.functions.vectors import cosine
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# k-anonymity audit over quasi-identifiers
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "dq_k_anonymity",
-    oracle="""
-        WITH g AS (
-            SELECT lang, source,
-                   CAST(floor(n_chars / 100.0) AS BIGINT) AS len_band,
-                   count(*) AS grp_n
-            FROM documents GROUP BY 1, 2, 3
-        )
-        SELECT lang,
-               CAST(count(*) AS BIGINT) AS n_groups,
-               CAST(count(*) FILTER (grp_n < 5) AS BIGINT)
-                   AS n_small_groups,
-               CAST(sum(CASE WHEN grp_n < 5 THEN grp_n ELSE 0 END)
-                    AS BIGINT) AS rows_at_risk,
-               CAST(sum(grp_n) AS BIGINT) AS n_rows,
-               floor((sum(CASE WHEN grp_n < 5 THEN grp_n ELSE 0 END)
-                      * 1.0 / sum(grp_n)) * 10000.0 + 0.505) / 10000.0
-                   AS pct_at_risk
-        FROM g GROUP BY lang
-    """,
-    scale=(
-        "k-anonymity audit (k=5) over the quasi-identifier tuple "
-        "(lang, source, 100-char length band) — the privacy gate a "
-        "corpus release runs before publication: any QI group smaller "
-        "than k re-identifies its members. Two-level aggregation: the "
-        "QI groupBy shuffles map-side partial counts on the QI hash "
-        "(never row payloads), then the per-lang rollup is "
-        "|QI groups| rows — at 100 TB both stages are count-only "
-        "shuffles and the report is |langs| rows. Integer counts are "
-        "BIGINT on both engines; the at-risk ratio rounds at 1e-4."
-    ),
-)
-def dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-lang k<5 quasi-identifier group counts and rows at risk."""
-    docs = load_table(spark, sf_dir, "documents")
-    g = docs.groupBy(
-        "lang",
-        "source",
-        F.floor(F.col("n_chars") / 100.0).cast("long").alias("len_band"),
-    ).agg(F.count("*").alias("grp_n"))
-    small = F.when(F.col("grp_n") < 5, F.col("grp_n")).otherwise(F.lit(0))
-    return g.groupBy("lang").agg(
-        F.count("*").cast("long").alias("n_groups"),
-        F.count_if(F.col("grp_n") < 5).cast("long").alias("n_small_groups"),
-        F.sum(small).cast("long").alias("rows_at_risk"),
-        F.sum("grp_n").cast("long").alias("n_rows"),
-        rnd(F.sum(small) * F.lit(1.0) / F.sum("grp_n"), 4).alias(
-            "pct_at_risk"
-        ),
-    )
 
 
 # ---------------------------------------------------------------------------

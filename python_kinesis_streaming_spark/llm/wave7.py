@@ -1,7 +1,7 @@
 """Wave-7 pipeline ops (round 12) — semantic dedup, exact substring
-spans, DSIR importance weighting and probability calibration.
+spans and DSIR importance weighting.
 
-Five capabilities the r11 verdict called out as the remaining
+Four capabilities the r11 verdict called out as the remaining
 new-capability territory:
 
 - ``dedup_semdedup_prune`` / ``dedup_semdedup_eps_sweep``: SemDeDup
@@ -21,10 +21,6 @@ new-capability territory:
   importance weights toward a target slice (lang='en'), realized as
   integer-micro log-likelihood-ratio sums — exact integer arithmetic,
   so the per-doc weight is partition-order-independent.
-- ``dq_calibration_report``: reliability diagram + expected
-  calibration error for a deterministic quality score vs the lang='en'
-  label — the audit a quality-classifier gate needs before its
-  threshold means anything.
 
 All JVM-only DataFrame code with the repo's hash discipline: identical
 aliases, ``rnd``/``sql_rnd`` (or exact integer micro-units) before
@@ -612,111 +608,4 @@ def corpus_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             4,
         ).alias("mean_w"),
         rnd(F.max("w_micro") / F.lit(1000000.0), 4).alias("max_w"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# reliability diagram + expected calibration error
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "dq_calibration_report",
-    oracle="""
-        WITH scored AS (
-            -- deterministic logistic score in integer micro-units
-            SELECT CAST(floor(1000000.0
-                       / (1.0 + exp(-((n_chars - 250.0) / 100.0)))
-                       + 0.505) AS BIGINT) AS s_micro,
-                   CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-            FROM documents
-        ),
-        binned AS (
-            SELECT least(CAST(floor(s_micro / 100000.0) AS BIGINT), 9)
-                       AS bin,
-                   s_micro, y
-            FROM scored
-        ),
-        bins AS (
-            SELECT bin, CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(s_micro) AS BIGINT) AS sum_s,
-                   CAST(sum(y) AS BIGINT) AS sum_y
-            FROM binned GROUP BY bin
-        ),
-        tot AS (
-            SELECT sum(n * abs(sum_y * 1.0 / n
-                               - sum_s / (1000000.0 * n))) / sum(n)
-                       AS ece
-            FROM bins
-        )
-        SELECT b.bin, b.n,
-               floor((b.sum_s / (1000000.0 * b.n)) * 10000.0 + 0.505)
-                   / 10000.0 AS mean_conf,
-               floor((b.sum_y * 1.0 / b.n) * 10000.0 + 0.505) / 10000.0
-                   AS frac_pos,
-               floor(abs(b.sum_y * 1.0 / b.n
-                         - b.sum_s / (1000000.0 * b.n))
-                     * 10000.0 + 0.505) / 10000.0 AS gap,
-               floor(t.ece * 10000.0 + 0.505) / 10000.0 AS ece
-        FROM bins b CROSS JOIN tot t
-    """,
-    scale=(
-        "Reliability diagram + ECE — the audit a quality-classifier "
-        "gate needs before its probability threshold means anything "
-        "(Guo et al. 2017). Score = deterministic logistic of doc "
-        "length, label = the lang='en' slice; both are stand-ins for "
-        "the trained classifier's prob and the human label at scale. "
-        "The score is frozen to integer micro-units BEFORE binning so "
-        "bin membership can't flip on a float boundary; per-bin "
-        "conf/acc come from exact integer sums; ECE is the n-weighted "
-        "gap over the 10-row bin table (one partial agg + a 1-row "
-        "broadcast back — the events_score_decile_lift shape). 100 TB: "
-        "map-only scoring, a 10-key agg, no second scan."
-    ),
-)
-def dq_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """10-bin reliability table (conf vs accuracy) + global ECE."""
-    docs = load_table(spark, sf_dir, "documents")
-    scored = docs.select(
-        F.floor(
-            F.lit(1000000.0)
-            / (
-                F.lit(1.0)
-                + F.exp(-((F.col("n_chars") - F.lit(250.0)) / F.lit(100.0)))
-            )
-            + F.lit(0.505)
-        )
-        .cast("long")
-        .alias("s_micro"),
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-    )
-    binned = scored.select(
-        F.least(
-            F.floor(F.col("s_micro") / F.lit(100000.0)).cast("long"),
-            F.lit(9).cast("long"),
-        ).alias("bin"),
-        "s_micro",
-        "y",
-    )
-    bins = binned.groupBy("bin").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("s_micro").cast("long").alias("sum_s"),
-        F.sum("y").cast("long").alias("sum_y"),
-    )
-    gap_expr = F.abs(
-        F.col("sum_y") * F.lit(1.0) / F.col("n")
-        - F.col("sum_s") / (F.lit(1000000.0) * F.col("n"))
-    )
-    tot = bins.agg(
-        (F.sum(F.col("n") * gap_expr) / F.sum("n")).alias("ece")
-    )
-    return bins.crossJoin(F.broadcast(tot)).select(
-        "bin",
-        "n",
-        rnd(F.col("sum_s") / (F.lit(1000000.0) * F.col("n")), 4).alias(
-            "mean_conf"
-        ),
-        rnd(F.col("sum_y") * F.lit(1.0) / F.col("n"), 4).alias("frac_pos"),
-        rnd(gap_expr, 4).alias("gap"),
-        rnd(F.col("ece"), 4).alias("ece"),
     )

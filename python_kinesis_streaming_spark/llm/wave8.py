@@ -1,19 +1,11 @@
 """Wave-8 pipeline ops (round 12, second batch) — repeated-content
-inventory, calibration fitting, digit-law auditing, dedup bias
-measurement and corpus novelty curves.
+inventory, dedup bias measurement and corpus novelty curves.
 
-Five more capabilities composed on the wave-7 foundations:
+Three more capabilities composed on the wave-7 foundations:
 
 - ``dedup_substring_top_repeats``: the top-20 most-repeated cross-doc
   word-4-grams — the "what content is duplicated" inventory an
   operator reads after dedup_substring_spans says *how much* is.
-- ``dq_temperature_scaling``: post-hoc calibration fitting (Guo et
-  al. 2017) as a literal temperature grid over the logit — per-T NLL
-  and ECE from exact integer-micro sums, the argmin flagged.
-- ``dq_benford_audit``: first-significant-digit distribution of
-  lineitem prices vs Benford's law with chi-square contributions —
-  digit extraction goes through exact integer cents -> string, never
-  log10 (cross-engine ulp-safe).
 - ``emb_semdedup_centroid_shift``: does SemDeDup pruning move the
   per-cell mean? Pre- vs post-prune centroid drift per cell — the
   distribution-bias audit the SemDeDup paper calls for.
@@ -114,247 +106,6 @@ def dedup_substring_top_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .limit(20)
         .select("gram", "n_docs", "n_occurrences")
-    )
-
-
-# ---------------------------------------------------------------------------
-# temperature-scaling calibration fit
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "dq_temperature_scaling",
-    oracle="""
-        WITH scored AS (
-            SELECT (n_chars - 250.0) / 100.0 AS z,
-                   CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-            FROM documents
-        ),
-        grid AS (SELECT unnest([0.5, 1.0, 2.0, 4.0]) AS t),
-        clamped AS (
-            -- |z/T| <= 30 keeps ln(1-p) finite for any pathological
-            -- doc length (1-p underflows to exactly 0 near |x|~37)
-            SELECT g.t, s.y,
-                   greatest(least(s.z / g.t, 30.0), -30.0) AS x
-            FROM scored s CROSS JOIN grid g
-        ),
-        per_row AS (
-            -- integer-micro NLL and score per (row, T): exact sums
-            SELECT t, y,
-                   CAST(floor(1000000.0
-                        / (1.0 + exp(-x)) + 0.505) AS BIGINT)
-                       AS p_micro,
-                   CAST(floor(-(y * ln(1.0 / (1.0 + exp(-x)))
-                        + (1 - y)
-                          * ln(1.0 - 1.0 / (1.0 + exp(-x))))
-                        * 1000000.0 + 0.505) AS BIGINT) AS nll_micro
-            FROM clamped
-        ),
-        binned AS (
-            SELECT t, y, p_micro, nll_micro,
-                   least(CAST(floor(p_micro / 100000.0) AS BIGINT), 9)
-                       AS bin
-            FROM per_row
-        ),
-        bins AS (
-            SELECT t, bin, count(*) AS n,
-                   sum(p_micro) AS sum_p, sum(y) AS sum_y
-            FROM binned GROUP BY t, bin
-        ),
-        per_t AS (
-            SELECT t,
-                   sum(n * abs(sum_y * 1.0 / n
-                               - sum_p / (1000000.0 * n))) / sum(n) AS ece
-            FROM bins GROUP BY t
-        ),
-        nll_t AS (
-            SELECT t, CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(nll_micro) AS BIGINT) AS nll_sum
-            FROM per_row GROUP BY t
-        ),
-        best AS (
-            SELECT t AS best_t FROM nll_t
-            ORDER BY nll_sum ASC, t ASC LIMIT 1
-        )
-        SELECT n.t, n.n,
-               floor((n.nll_sum / (1000000.0 * n.n)) * 10000.0 + 0.505)
-                   / 10000.0 AS mean_nll,
-               floor(p.ece * 10000.0 + 0.505) / 10000.0 AS ece,
-               CASE WHEN n.t = b.best_t THEN 1 ELSE 0 END AS is_best
-        FROM nll_t n
-        JOIN per_t p ON p.t = n.t
-        CROSS JOIN best b
-    """,
-    scale=(
-        "Temperature scaling (Guo et al. 2017) — the one-parameter "
-        "post-hoc calibration fix — fitted by a literal 4-point "
-        "temperature grid instead of gradient steps: per (row, T) the "
-        "NLL freezes to integer micro-units (floor(nll*1e6) — "
-        "partition-order-exact sums), the per-T aggregate is one "
-        "4x|bins|-key partial agg, and the argmin-NLL temperature is "
-        "flagged with a total (nll, t) tie-break. The same bins feed "
-        "the post-scaling ECE so the report shows WHY the winner wins. "
-        "100 TB: the grid crosses each row with 4 literal values "
-        "before the partial agg — map-side fan-out, one shuffle of "
-        "40 rows; a finer grid is a longer literal list, same plan."
-    ),
-)
-def dq_temperature_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NLL + ECE per temperature in {0.5, 1, 2, 4}; argmin flagged."""
-    from pyspark.sql.window import Window
-
-    docs = load_table(spark, sf_dir, "documents")
-    scored = docs.select(
-        ((F.col("n_chars") - F.lit(250.0)) / F.lit(100.0)).alias("z"),
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-    )
-    grid = spark.createDataFrame(
-        [(0.5,), (1.0,), (2.0,), (4.0,)], "t double"
-    )
-    x = F.greatest(
-        F.least(F.col("z") / F.col("t"), F.lit(30.0)), F.lit(-30.0)
-    )
-    p = F.lit(1.0) / (F.lit(1.0) + F.exp(-x))
-    per_row = scored.crossJoin(F.broadcast(grid)).select(
-        "t",
-        "y",
-        F.floor(F.lit(1000000.0) * p + F.lit(0.505))
-        .cast("long")
-        .alias("p_micro"),
-        F.floor(
-            -(
-                F.col("y") * F.log(p)
-                + (F.lit(1) - F.col("y")) * F.log(F.lit(1.0) - p)
-            )
-            * F.lit(1000000.0)
-            + F.lit(0.505)
-        )
-        .cast("long")
-        .alias("nll_micro"),
-    )
-    binned = per_row.select(
-        "t",
-        "y",
-        "p_micro",
-        "nll_micro",
-        F.least(
-            F.floor(F.col("p_micro") / F.lit(100000.0)).cast("long"),
-            F.lit(9).cast("long"),
-        ).alias("bin"),
-    )
-    bins = binned.groupBy("t", "bin").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("p_micro").alias("sum_p"),
-        F.sum("y").alias("sum_y"),
-    )
-    gap = F.abs(
-        F.col("sum_y") * F.lit(1.0) / F.col("n")
-        - F.col("sum_p") / (F.lit(1000000.0) * F.col("n"))
-    )
-    per_t = bins.groupBy("t").agg(
-        (F.sum(F.col("n") * gap) / F.sum("n")).alias("ece")
-    )
-    nll_t = per_row.groupBy("t").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("nll_micro").cast("long").alias("nll_sum"),
-    )
-    wbest = Window.orderBy(F.asc("nll_sum"), F.asc("t"))
-    flagged = nll_t.withColumn(
-        "is_best",
-        F.when(F.row_number().over(wbest) == 1, 1).otherwise(0),
-    )
-    return flagged.join(per_t, "t").select(
-        "t",
-        "n",
-        rnd(F.col("nll_sum") / (F.lit(1000000.0) * F.col("n")), 4).alias(
-            "mean_nll"
-        ),
-        rnd(F.col("ece"), 4).alias("ece"),
-        "is_best",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Benford first-digit audit
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "dq_benford_audit",
-    oracle=f"""
-        WITH cents AS (
-            -- exact integer cents -> string -> first char: digit
-            -- extraction never touches log10 (cross-engine ulp-safe)
-            SELECT CAST(floor(CAST(l_extendedprice AS DOUBLE) * 100.0
-                              + 0.5) AS BIGINT) AS c
-            FROM lineitem
-        ),
-        digits AS (
-            SELECT CAST(substring(CAST(c AS VARCHAR), 1, 1) AS BIGINT)
-                       AS digit
-            FROM cents WHERE c > 0
-        ),
-        obs AS (
-            SELECT digit, CAST(count(*) AS BIGINT) AS n
-            FROM digits GROUP BY digit
-        ),
-        tot AS (SELECT CAST(sum(n) AS BIGINT) AS nt FROM obs)
-        SELECT o.digit, o.n,
-               {sql_rnd("o.n * 1.0 / t.nt", 4)} AS obs_share,
-               {sql_rnd("ln(1.0 + 1.0 / o.digit) / ln(10.0)", 4)}
-                   AS exp_share,
-               {sql_rnd(
-                   "((o.n - t.nt * (ln(1.0 + 1.0 / o.digit) / ln(10.0)))"
-                   " ^ 2) / (t.nt * (ln(1.0 + 1.0 / o.digit)"
-                   " / ln(10.0)))", 4)} AS chi2_part
-        FROM obs o CROSS JOIN tot t
-    """,
-    scale=(
-        "Benford first-significant-digit audit over lineitem prices — "
-        "the classic fabricated-data / unit-mixing screen. Digit "
-        "extraction goes through exact integer cents (floor(x*100+.5)) "
-        "and integer-to-string, identical on both engines; log10 of "
-        "the value would risk a 1-ulp digit flip at powers of ten. One "
-        "9-key partial agg + a 1-row total broadcast back; the "
-        "chi-square contribution per digit lets the reader see WHICH "
-        "digit deviates (TPC-H prices are uniform-ish, so the audit "
-        "correctly screams — that is the point of an audit op). 100 TB "
-        "shape: map-only digit extraction, 9-row shuffle."
-    ),
-)
-def dq_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-digit distribution of l_extendedprice vs Benford's law."""
-    li = load_table(spark, sf_dir, "lineitem")
-    cents = li.select(
-        F.floor(
-            F.col("l_extendedprice").cast("double") * F.lit(100.0)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("c")
-    ).where(F.col("c") > 0)
-    digits = cents.select(
-        F.substring(F.col("c").cast("string"), 1, 1).cast("long").alias(
-            "digit"
-        )
-    )
-    obs = digits.groupBy("digit").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    tot = obs.agg(F.sum("n").cast("long").alias("nt"))
-    exp_share = F.log(F.lit(1.0) + F.lit(1.0) / F.col("digit")) / F.log(
-        F.lit(10.0)
-    )
-    return obs.crossJoin(F.broadcast(tot)).select(
-        "digit",
-        "n",
-        rnd(F.col("n") * F.lit(1.0) / F.col("nt"), 4).alias("obs_share"),
-        rnd(exp_share, 4).alias("exp_share"),
-        rnd(
-            F.pow(F.col("n") - F.col("nt") * exp_share, F.lit(2.0))
-            / (F.col("nt") * exp_share),
-            4,
-        ).alias("chi2_part"),
     )
 
 

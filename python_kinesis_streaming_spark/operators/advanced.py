@@ -706,86 +706,6 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @op(
-    "dq_constraint_check",
-    oracle="""
-        SELECT 'orders_custkey_fk' AS constraint_name,
-               (SELECT count(*) FROM orders) AS n_checked,
-               (SELECT count(*) FROM orders o
-                WHERE NOT EXISTS (SELECT 1 FROM customer c
-                                  WHERE c.c_custkey = o.o_custkey))
-                   AS n_violations
-        UNION ALL
-        SELECT 'lineitem_qty_range',
-               (SELECT count(*) FROM lineitem),
-               (SELECT count(*) FROM lineitem
-                WHERE l_quantity < 1 OR l_quantity > 50)
-        UNION ALL
-        SELECT 'events_props_json',
-               (SELECT count(*) FROM events),
-               (SELECT count(*) FROM events WHERE NOT json_valid(props))
-        UNION ALL
-        SELECT 'customer_acctbal_notnull',
-               (SELECT count(*) FROM customer),
-               (SELECT count(*) FROM customer WHERE c_acctbal IS NULL)
-    """,
-    scale=(
-        "Declarative data-quality gate (the Deequ/expectations shape): "
-        "each constraint is a partial-agg count — null-rate and range "
-        "checks fold into ONE scan per table (count_if), the FK check is "
-        "a broadcast anti join against the dim. Output is |constraints| "
-        "rows regardless of input size; at 100 TB this runs as the "
-        "admission test before data enters the lake, with the violation "
-        "COUNT (not a boolean) so thresholds can be tuned per constraint."
-    ),
-)
-def dq_constraint_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Four declarative constraints (FK integrity, numeric range, JSON
-    validity, not-null) as one (constraint, n_checked, n_violations)
-    report."""
-    orders = load_table(spark, sf_dir, "orders")
-    cust = load_table(spark, sf_dir, "customer")
-    li = load_table(spark, sf_dir, "lineitem")
-    ev = load_table(spark, sf_dir, "events")
-
-    def report(name, n_checked_col, n_viol_col, df):
-        return df.agg(
-            F.lit(name).alias("constraint_name"),
-            n_checked_col.alias("n_checked"),
-            n_viol_col.alias("n_violations"),
-        )
-
-    fk = report(
-        "orders_custkey_fk",
-        F.count(F.lit(1)),
-        F.count_if(F.col("c_custkey").isNull()),
-        orders.join(
-            F.broadcast(cust.select("c_custkey")),
-            orders["o_custkey"] == cust["c_custkey"],
-            "left",
-        ),
-    )
-    rng = report(
-        "lineitem_qty_range",
-        F.count(F.lit(1)),
-        F.count_if((F.col("l_quantity") < 1) | (F.col("l_quantity") > 50)),
-        li,
-    )
-    js = report(
-        "events_props_json",
-        F.count(F.lit(1)),
-        F.count_if(F.from_json("props", "k INT").isNull()),
-        ev,
-    )
-    nn = report(
-        "customer_acctbal_notnull",
-        F.count(F.lit(1)),
-        F.count_if(F.col("c_acctbal").isNull()),
-        cust,
-    )
-    return fk.unionByName(rng).unionByName(js).unionByName(nn)
-
-
-@op(
     "market_basket_lift",
     oracle="""
         WITH items AS (

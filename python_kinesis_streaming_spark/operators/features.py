@@ -1,9 +1,7 @@
-"""ML feature-engineering + data-quality profiling operators.
-
-The training-data-pipeline surface beyond text/dedup: the standard tabular
-feature transforms (target encoding, quantile binning, min-max scaling,
-one-hot of top-k categories, the hashing trick) plus dataset health probes
-(per-column null/distinct profile, freshness lag, degree distribution).
+"""The feature-engineering family: every ``feat_*`` operator (encoders,
+scalers and binning, point-in-time and velocity features), plus
+``graph_degree_stats`` until the graph family gets its own module. The
+dataset health probes live in ``operators/data_quality.py``.
 
 Scale notes (100 TB):
 - Every encoder here is the two-pass shape: a tiny aggregate (|categories|,
@@ -12,9 +10,9 @@ Scale notes (100 TB):
 - Determinism: money flows as integer cents (`floor(x*100+0.5)`), hash
   buckets via the md5-derived 60-bit int (`llm.dedup.md5_hash64`) — both
   bit-reproducible across Spark and DuckDB, so every op is SQL-oracled.
-- The null/distinct profile uses exact count(distinct) per column; at 100 TB
-  swap each for approx_count_distinct (one pass, mergeable HLL partials) —
-  the op shape (wide agg → stack/unpivot) is unchanged.
+- WoE/IV (``feat_woe_iv_encoding``) takes ln only of identical integer
+  rationals and freezes each IV term to integer micros, with a guard for
+  a band empty on one side.
 """
 
 from __future__ import annotations
@@ -237,90 +235,6 @@ def feat_hashing_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @op(
-    "dq_null_profile",
-    oracle="""
-        SELECT 'event_id' AS col_name,
-               CAST(count(*) - count(event_id) AS BIGINT) AS n_null,
-               CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct
-        FROM events
-        UNION ALL
-        SELECT 'ts', CAST(count(*) - count(ts) AS BIGINT),
-               CAST(count(DISTINCT ts) AS BIGINT) FROM events
-        UNION ALL
-        SELECT 'user_id', CAST(count(*) - count(user_id) AS BIGINT),
-               CAST(count(DISTINCT user_id) AS BIGINT) FROM events
-        UNION ALL
-        SELECT 'event_type', CAST(count(*) - count(event_type) AS BIGINT),
-               CAST(count(DISTINCT event_type) AS BIGINT) FROM events
-        UNION ALL
-        SELECT 'value', CAST(count(*) - count(value) AS BIGINT),
-               CAST(count(DISTINCT value) AS BIGINT) FROM events
-        UNION ALL
-        SELECT 'props', CAST(count(*) - count(props) AS BIGINT),
-               CAST(count(DISTINCT props) AS BIGINT) FROM events
-    """,
-    scale=(
-        "Whole-table column profile in ONE scan: all per-column null + "
-        "distinct aggregates evaluate in a single wide agg, then unpivot to "
-        "(column, metric) rows with stack — never N scans for N columns. "
-        "Exact count(distinct) per column multiplies the agg via expand; at "
-        "100 TB swap each for approx_count_distinct (single-pass mergeable "
-        "HLL) — the profile shape is unchanged."
-    ),
-)
-def dq_null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-column null-count + distinct-count profile of the events table."""
-    ev = load_table(spark, sf_dir, "events")
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    aggs = []
-    for c in cols:
-        aggs.append((F.count(F.lit(1)) - F.count(c)).alias(f"null_{c}"))
-        aggs.append(F.countDistinct(c).alias(f"dist_{c}"))
-    wide = ev.agg(*aggs)
-    stack_args = ", ".join(f"'{c}', null_{c}, dist_{c}" for c in cols)
-    return wide.select(
-        F.expr(
-            f"stack({len(cols)}, {stack_args}) AS (col_name, n_null, n_distinct)"
-        )
-    )
-
-
-@op(
-    "dq_freshness",
-    oracle="""
-        WITH g AS (SELECT max(CAST(ts AS TIMESTAMP)) AS global_max FROM events),
-        per_type AS (
-            SELECT event_type, max(CAST(ts AS TIMESTAMP)) AS last_ts
-            FROM events GROUP BY event_type
-        )
-        SELECT event_type, last_ts,
-               CAST(epoch_us(global_max) - epoch_us(last_ts) AS BIGINT)
-                   AS staleness_us
-        FROM per_type, g
-    """,
-    scale=(
-        "Freshness lag per stream partition: two tiny max() aggregates "
-        "(order-independent, mergeable) and a 1-row broadcast for the "
-        "global watermark — scans once, shuffles |event_type| rows. This is "
-        "the standard ingestion-health probe a 100 TB pipeline runs per "
-        "batch; max(ts) also comes free from parquet footer stats."
-    ),
-)
-def dq_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type last-seen timestamp and staleness vs the global max."""
-    ev = load_table(spark, sf_dir, "events")
-    per_type = ev.groupBy("event_type").agg(F.max("ts").alias("last_ts"))
-    g = ev.agg(F.max("ts").alias("global_max"))
-    return per_type.crossJoin(F.broadcast(g)).select(
-        "event_type",
-        "last_ts",
-        (F.unix_micros("global_max") - F.unix_micros("last_ts")).alias(
-            "staleness_us"
-        ),
-    )
-
-
-@op(
     "graph_degree_stats",
     oracle="""
         WITH deg AS (
@@ -417,231 +331,6 @@ def feat_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @op(
-    "dq_referential_integrity",
-    oracle="""
-        SELECT 'orders.o_custkey->customer' AS fk,
-               CAST(count(*) AS BIGINT) AS n_child,
-               CAST(count(*) FILTER (WHERE c_custkey IS NULL) AS BIGINT)
-                   AS n_orphans
-        FROM orders LEFT JOIN customer ON o_custkey = c_custkey
-        UNION ALL
-        SELECT 'lineitem.l_partkey->part',
-               CAST(count(*) AS BIGINT),
-               CAST(count(*) FILTER (WHERE p_partkey IS NULL) AS BIGINT)
-        FROM lineitem LEFT JOIN part ON l_partkey = p_partkey
-        UNION ALL
-        SELECT 'lineitem.l_suppkey->supplier',
-               CAST(count(*) AS BIGINT),
-               CAST(count(*) FILTER (WHERE s_suppkey IS NULL) AS BIGINT)
-        FROM lineitem LEFT JOIN supplier ON l_suppkey = s_suppkey
-        UNION ALL
-        SELECT 'customer.c_nationkey->nation',
-               CAST(count(*) AS BIGINT),
-               CAST(count(*) FILTER (WHERE n_nationkey IS NULL) AS BIGINT)
-        FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-    """,
-    scale=(
-        "Referential-integrity audit across every declared FK in one "
-        "report: each check is a broadcast left join (dim side) counted "
-        "with a conditional agg — the child table scans once per FK and "
-        "never shuffles. At 100 TB run the orphan probes as "
-        "bloom-prefiltered anti joins (join_bloom_prefilter shape) and "
-        "union the 1-row summaries; the report schema is the contract "
-        "a pipeline gate asserts on before publishing a snapshot."
-    ),
-)
-def dq_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orphan counts for the four declared foreign keys, one audit row each."""
-    t = {
-        n: load_table(spark, sf_dir, n)
-        for n in ("orders", "lineitem", "customer", "part", "supplier", "nation")
-    }
-
-    def check(label, child, ckey, parent, pkey):
-        j = child.join(
-            F.broadcast(parent.select(pkey)), child[ckey] == parent[pkey], "left"
-        )
-        return j.agg(
-            F.lit(label).alias("fk"),
-            F.count(F.lit(1)).alias("n_child"),
-            F.count(F.when(F.col(pkey).isNull(), 1)).alias("n_orphans"),
-        )
-
-    checks = [
-        check("orders.o_custkey->customer", t["orders"], "o_custkey",
-              t["customer"], "c_custkey"),
-        check("lineitem.l_partkey->part", t["lineitem"], "l_partkey",
-              t["part"], "p_partkey"),
-        check("lineitem.l_suppkey->supplier", t["lineitem"], "l_suppkey",
-              t["supplier"], "s_suppkey"),
-        check("customer.c_nationkey->nation", t["customer"], "c_nationkey",
-              t["nation"], "n_nationkey"),
-    ]
-    out = checks[0]
-    for c in checks[1:]:
-        out = out.unionAll(c)
-    return out
-
-
-@op(
-    "dq_distribution_drift",
-    oracle="""
-        WITH binned AS (
-            SELECT event_type,
-                   CASE WHEN CAST(CAST(ts AS TIMESTAMP) AS DATE)
-                             < DATE '2024-01-16' THEN 0 ELSE 1 END AS half,
-                   CASE WHEN value < 1 THEN 0 WHEN value < 5 THEN 1
-                        WHEN value < 10 THEN 2 WHEN value < 50 THEN 3
-                        WHEN value < 100 THEN 4 WHEN value < 200 THEN 5
-                        WHEN value < 500 THEN 6 ELSE 7 END AS bin
-            FROM events
-        ),
-        counts AS (
-            SELECT event_type, b.bin,
-                   count(*) FILTER (WHERE half = 0 AND binned.bin = b.bin)
-                       AS n_ref,
-                   count(*) FILTER (WHERE half = 1 AND binned.bin = b.bin)
-                       AS n_cur,
-                   sum(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS tot_ref,
-                   sum(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS tot_cur
-            FROM binned, unnest(range(8)) AS b(bin)
-            GROUP BY event_type, b.bin
-        ),
-        psi_terms AS (
-            SELECT event_type,
-                   ((n_ref + 1.0) / (tot_ref + 8.0)
-                    - (n_cur + 1.0) / (tot_cur + 8.0))
-                   * ln(((n_ref + 1.0) / (tot_ref + 8.0))
-                        / ((n_cur + 1.0) / (tot_cur + 8.0))) AS term
-            FROM counts
-        )
-        SELECT event_type,
-               floor(sum(term) * 10000.0 + 0.505) / 10000.0 AS psi
-        FROM psi_terms GROUP BY event_type
-    """,
-    scale=(
-        "Population-stability-index drift monitor — the standard check "
-        "before trusting a model/feature on a new data window: fixed "
-        "value bins (so the binning is a map-only CASE, no quantile "
-        "pass), Laplace-smoothed shares, PSI per segment. The fact stream "
-        "is aggregated FIRST; the 8-bin spine fills empty bins on the "
-        "40-row aggregated side, so no fact-side row blowup at any "
-        "input size. The reference/current split generalizes to any two "
-        "snapshots. PSI rounded at 4 dp — ulp-level ln() divergence "
-        "can't flip it."
-    ),
-)
-def dq_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PSI between the first and second half-month of events, per type."""
-    ev = load_table(spark, sf_dir, "events")
-    binned = ev.select(
-        "event_type",
-        F.when(F.to_date("ts") < F.lit("2024-01-16").cast("date"), 0)
-        .otherwise(1)
-        .alias("half"),
-        F.when(F.col("value") < 1, 0)
-        .when(F.col("value") < 5, 1)
-        .when(F.col("value") < 10, 2)
-        .when(F.col("value") < 50, 3)
-        .when(F.col("value") < 100, 4)
-        .when(F.col("value") < 200, 5)
-        .when(F.col("value") < 500, 6)
-        .otherwise(7)
-        .alias("bin"),
-    )
-    # Aggregate FIRST (the only pass over the fact stream), then fill the
-    # 8-bin spine on the 40-row aggregated side — never a ×8 fact blowup.
-    present = binned.groupBy("event_type", "bin").agg(
-        F.count(F.when(F.col("half") == 0, 1)).alias("p_ref"),
-        F.count(F.when(F.col("half") == 1, 1)).alias("p_cur"),
-    )
-    tot = binned.groupBy("event_type").agg(
-        F.sum(F.when(F.col("half") == 0, 1).otherwise(0)).alias("tot_ref"),
-        F.sum(F.when(F.col("half") == 1, 1).otherwise(0)).alias("tot_cur"),
-    )
-    spine = tot.crossJoin(
-        F.broadcast(
-            spark.range(8).select(F.col("id").cast("int").alias("gbin"))
-        )
-    )
-    counts = (
-        spine.join(
-            present,
-            (spine.event_type == present.event_type)
-            & (F.col("gbin") == F.col("bin")),
-            "left",
-        )
-        .select(
-            spine.event_type,
-            "gbin",
-            F.coalesce("p_ref", F.lit(0)).alias("n_ref"),
-            F.coalesce("p_cur", F.lit(0)).alias("n_cur"),
-            "tot_ref",
-            "tot_cur",
-        )
-    )
-    p = (F.col("n_ref") + 1.0) / (F.col("tot_ref") + 8.0)
-    q = (F.col("n_cur") + 1.0) / (F.col("tot_cur") + 8.0)
-    terms = counts.select(
-        "event_type", ((p - q) * F.log(p / q)).alias("term")
-    )
-    return terms.groupBy("event_type").agg(rnd(F.sum("term"), 4).alias("psi"))
-
-
-@op(
-    "dq_row_quarantine",
-    oracle="""
-        WITH checked AS (
-            SELECT event_id,
-                   CASE
-                     WHEN event_type = 'error' THEN 'error_event'
-                     WHEN value < 0.5 THEN 'suspect_low_value'
-                     WHEN CAST(regexp_extract(props, '[0-9]+') AS BIGINT) >= 95
-                          THEN 'prop_k_out_of_range'
-                     ELSE 'ok'
-                   END AS reason
-            FROM events
-        )
-        SELECT reason,
-               CAST(count(*) AS BIGINT) AS n_rows,
-               CAST(min(event_id) AS BIGINT) AS sample_event_id
-        FROM checked WHERE reason != 'ok' GROUP BY reason
-        UNION ALL
-        SELECT 'ok', CAST(count(*) AS BIGINT), CAST(min(event_id) AS BIGINT)
-        FROM checked WHERE reason = 'ok'
-    """,
-    scale=(
-        "Row-level quarantine (dead-letter routing for batch): every row "
-        "classified by its FIRST failing expectation in one map-only "
-        "CASE pass; bad rows route to a quarantine sink with reason "
-        "codes, good rows flow on — the scan happens once, not once per "
-        "rule. The per-reason counts + sample ids emitted here are the "
-        "triage report; at 100 TB the same projection feeds a "
-        "partitioned-by-reason quarantine write so reprocessing one "
-        "failure class doesn't re-read the rest."
-    ),
-)
-def dq_row_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classify events by first failing expectation; per-reason counts with
-    a sample row id (the 'ok' row included for mass-balance)."""
-    ev = load_table(spark, sf_dir, "events")
-    reason = (
-        F.when(F.col("event_type") == "error", "error_event")
-        .when(F.col("value") < 0.5, "suspect_low_value")
-        .when(
-            F.regexp_extract("props", "[0-9]+", 0).cast("long") >= 95,
-            "prop_k_out_of_range",
-        )
-        .otherwise("ok")
-    )
-    checked = ev.select("event_id", reason.alias("reason"))
-    return checked.groupBy("reason").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.min("event_id").alias("sample_event_id"),
-    )
-
-
-@op(
     "feat_pit_training_set",
     oracle="""
         WITH scanned AS (
@@ -728,96 +417,6 @@ def feat_pit_training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @op(
-    "dq_daily_metrics",
-    oracle="""
-        WITH daily AS (
-            SELECT CAST(CAST(ts AS TIMESTAMP) AS DATE) AS d,
-                   CAST(count(*) AS BIGINT) AS n_rows,
-                   CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-                   CAST(count(*) FILTER (WHERE event_type = 'error')
-                        AS BIGINT) AS n_errors
-            FROM events GROUP BY 1
-        )
-        SELECT CAST(d AS TIMESTAMP) AS d, n_rows, n_users, n_errors,
-               CAST(n_rows - lag(n_rows) OVER (ORDER BY d) AS BIGINT)
-                   AS rows_dod_delta
-        FROM daily
-    """,
-    scale=(
-        "Data-quality metrics as a TIME SERIES (volume, reach, error "
-        "count per day) with day-over-day deltas — the trend view that "
-        "catches slow degradation a point-in-time gate misses. One "
-        "partial agg to |days| rows, one tiny lag window over the "
-        "aggregate; at 100 TB each day's row appends incrementally "
-        "(metrics are mergeable) and the DoD delta drives alerting "
-        "(events_error_rate_alert is the control-band consumer)."
-    ),
-)
-def dq_daily_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day row/user/error counts with day-over-day row delta."""
-    ev = load_table(spark, sf_dir, "events")
-    daily = ev.groupBy(F.to_date("ts").alias("d")).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.countDistinct("user_id").alias("n_users"),
-        F.count(F.when(F.col("event_type") == "error", 1)).alias("n_errors"),
-    )
-    w = Window.orderBy("d")
-    return daily.select(
-        F.col("d").cast("timestamp").alias("d"),
-        "n_rows",
-        "n_users",
-        "n_errors",
-        (F.col("n_rows") - F.lag("n_rows").over(w)).cast("long").alias(
-            "rows_dod_delta"
-        ),
-    )
-
-
-@op(
-    "dq_observe_metrics",
-    oracle="""
-        SELECT CAST(count(*) AS BIGINT) AS n_rows,
-               CAST(count(*) FILTER (WHERE event_type = 'error') AS BIGINT)
-                   AS n_errors,
-               CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT)
-                   AS sum_cents,
-               CAST(max(event_id) AS BIGINT) AS max_id
-        FROM events
-    """,
-    scale=(
-        "The Observation API: metrics (row counts, error counts, sums) "
-        "collected DURING an existing action's execution — zero extra "
-        "scan, zero extra job. This is how a 100 TB pipeline gets its "
-        "per-run health metrics for free: attach observe() to the write "
-        "job and the aggregates ride the same pass as the data "
-        "(Spark's accumulator-backed CollectMetrics node). The op "
-        "returns the observed values as a 1-row frame; the oracle "
-        "recomputes them directly — identical by construction."
-    ),
-)
-def dq_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Collect row/error/sum/max metrics via df.observe() piggybacked on a
-    count() action; emit the observed values."""
-    from pyspark.sql import Observation
-
-    ev = load_table(spark, sf_dir, "events")
-    obs = Observation("dq")
-    observed = ev.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(F.when(F.col("event_type") == "error", 1)).alias("n_errors"),
-        F.sum(cents()).alias("sum_cents"),
-        F.max("event_id").alias("max_id"),
-    )
-    observed.count()  # the host action the metrics piggyback on
-    m = obs.get
-    return spark.createDataFrame(
-        [(m["n_rows"], m["n_errors"], m["sum_cents"], m["max_id"])],
-        "n_rows long, n_errors long, sum_cents long, max_id long",
-    )
-
-
-@op(
     "feat_velocity_multi_horizon",
     oracle="""
         WITH e AS (
@@ -871,202 +470,6 @@ def feat_velocity_multi_horizon(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PK_COLUMNS = [
-    ("customer", "c_custkey"),
-    ("supplier", "s_suppkey"),
-    ("part", "p_partkey"),
-    ("orders", "o_orderkey"),
-    ("events", "event_id"),
-    ("documents", "doc_id"),
-    ("embeddings", "vec_id"),
-]
-
-
-@op(
-    "dq_pk_uniqueness",
-    oracle="""
-        """
-    + "\n        UNION ALL\n".join(
-        f"""SELECT '{t}' AS tbl, '{c}' AS pk_col,
-               CAST(count(*) AS BIGINT) AS n_rows,
-               CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
-               count(*) = count(DISTINCT {c}) AS pk_ok
-        FROM {t}"""
-        for t, c in _PK_COLUMNS
-    ),
-    scale=(
-        "Primary-key uniqueness audit across every keyed table: each leg "
-        "is a two-aggregate scan (count + count distinct) that reduces "
-        "to ONE row before the union, so the combined result is "
-        "|tables| rows regardless of data volume. count(DISTINCT pk) "
-        "is the exact form; at 100 TB the drop-in is "
-        "approx_count_distinct with a tolerance band (the HLL partials "
-        "merge map-side, converting the global distinct into a "
-        "single-pass sketch) — the report schema stays identical. The "
-        "per-table legs are independent jobs Spark schedules "
-        "concurrently; none shares a shuffle with another."
-    ),
-)
-def dq_pk_uniqueness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """n_rows vs n_distinct(pk) per keyed table — the PK contract check."""
-    out = None
-    for t, c in _PK_COLUMNS:
-        leg = load_table(spark, sf_dir, t).agg(
-            F.lit(t).alias("tbl"),
-            F.lit(c).alias("pk_col"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count_distinct(F.col(c)).alias("n_distinct"),
-        ).select(
-            "tbl",
-            "pk_col",
-            "n_rows",
-            "n_distinct",
-            (F.col("n_rows") == F.col("n_distinct")).alias("pk_ok"),
-        )
-        out = leg if out is None else out.unionByName(leg)
-    return out
-
-
-@op(
-    "dq_unit_price_consistency",
-    oracle="""
-        WITH u AS (
-            SELECT l_partkey, l_extendedprice / l_quantity AS unit
-            FROM lineitem
-        ),
-        s AS (
-            SELECT l_partkey,
-                   CAST(count(*) AS BIGINT) AS n_sales,
-                   avg(unit) AS mean_u,
-                   stddev_samp(unit) AS sd_u,
-                   min(unit) AS min_u,
-                   max(unit) AS max_u
-            FROM u GROUP BY l_partkey HAVING count(*) >= 5
-        )
-        SELECT l_partkey, n_sales,
-               floor(mean_u * 100.0 + 0.505) / 100.0 AS mean_unit_price,
-               floor((sd_u / mean_u) * 10000.0 + 0.505) / 10000.0 AS cv,
-               floor((max_u / min_u) * 10000.0 + 0.505) / 10000.0
-                   AS max_min_ratio,
-               sd_u / mean_u > 0.25 AS inconsistent
-        FROM s
-    """,
-    scale=(
-        "Pricing-integrity audit: per-part unit-price dispersion "
-        "(coefficient of variation + max/min ratio) from one partial-agg "
-        "groupBy — count/sum/sumsq/min/max all merge map-side, so the "
-        "audit costs one shuffle of |parts| skinny rows however large "
-        "the fact is. The HAVING floor keeps noise groups out; the CV "
-        "threshold is the quarantine predicate a dq pipeline would "
-        "route rows on (compose with dq_row_quarantine). stddev_samp "
-        "is Welford-mergeable in both engines; the ratio rounds at 1e-4 "
-        "for cross-engine stability."
-    ),
-)
-def dq_unit_price_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-part unit-price dispersion audit (CV, range ratio, flag)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    u = li.select(
-        "l_partkey",
-        (F.col("l_extendedprice") / F.col("l_quantity")).alias("unit"),
-    )
-    s = (
-        u.groupBy("l_partkey")
-        .agg(
-            F.count(F.lit(1)).alias("n_sales"),
-            F.avg("unit").alias("mean_u"),
-            F.stddev_samp("unit").alias("sd_u"),
-            F.min("unit").alias("min_u"),
-            F.max("unit").alias("max_u"),
-        )
-        .where(F.col("n_sales") >= 5)
-    )
-    return s.select(
-        "l_partkey",
-        "n_sales",
-        rnd(F.col("mean_u"), 2).alias("mean_unit_price"),
-        rnd(F.col("sd_u") / F.col("mean_u"), 4).alias("cv"),
-        rnd(F.col("max_u") / F.col("min_u"), 4).alias("max_min_ratio"),
-        (F.col("sd_u") / F.col("mean_u") > 0.25).alias("inconsistent"),
-    )
-
-
-@op(
-    "dq_order_total_reconciliation",
-    oracle="""
-        WITH li AS (
-            SELECT l_orderkey,
-                   CAST(sum(CAST(floor(l_extendedprice
-                                       * (1 - l_discount) * (1 + l_tax)
-                                       * 100 + 0.505) AS BIGINT))
-                        AS BIGINT) AS items_cents
-            FROM lineitem GROUP BY l_orderkey
-        ),
-        j AS (
-            SELECT o.o_orderkey,
-                   CAST(floor(o.o_totalprice * 100 + 0.505) AS BIGINT)
-                       AS header_cents,
-                   li.items_cents
-            FROM orders o JOIN li ON li.l_orderkey = o.o_orderkey
-        )
-        SELECT
-            CAST(count(*) AS BIGINT) AS n_orders,
-            CAST(sum(CASE WHEN abs(header_cents - items_cents) <= 1
-                          THEN 1 ELSE 0 END) AS BIGINT) AS n_reconciled,
-            CAST(sum(CASE WHEN header_cents < items_cents - 1
-                          THEN 1 ELSE 0 END) AS BIGINT) AS n_under,
-            CAST(sum(CASE WHEN header_cents > items_cents + 1
-                          THEN 1 ELSE 0 END) AS BIGINT) AS n_over,
-            CAST(max(abs(header_cents - items_cents)) AS BIGINT)
-                AS max_abs_diff_cents
-        FROM j
-    """,
-    scale=(
-        "Cross-table financial reconciliation (header total vs computed "
-        "item total): the item side reduces to |orders| rows BEFORE the "
-        "join (partial agg on the fact's own key — co-partitioned with "
-        "orders, one shuffle each), the comparison is integer cents "
-        "with a 1-cent rounding tolerance, and the verdict collapses to "
-        "one summary row. This is the ledger-integrity job every "
-        "billing pipeline schedules; at 100 TB both sides bucket by "
-        "orderkey and the join is exchange-free. (On this synthetic "
-        "fixture the headers do NOT reconcile — the op is the detector, "
-        "and the mismatch distribution is the finding.)"
-    ),
-)
-def dq_order_total_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Header o_totalprice vs recomputed lineitem totals, cent-exact."""
-    od = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    items = li.groupBy("l_orderkey").agg(
-        F.sum(
-            F.floor(
-                F.col("l_extendedprice")
-                * (1 - F.col("l_discount"))
-                * (1 + F.col("l_tax"))
-                * 100
-                + F.lit(0.505)
-            ).cast("long")
-        ).alias("items_cents")
-    )
-    j = od.select(
-        "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.505))
-        .cast("long")
-        .alias("header_cents"),
-    ).join(items, F.col("o_orderkey") == F.col("l_orderkey"))
-    diff = F.col("header_cents") - F.col("items_cents")
-    return j.agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.when(F.abs(diff) <= 1, 1).otherwise(0)).alias(
-            "n_reconciled"
-        ),
-        F.sum(F.when(diff < -1, 1).otherwise(0)).alias("n_under"),
-        F.sum(F.when(diff > 1, 1).otherwise(0)).alias("n_over"),
-        F.max(F.abs(diff)).alias("max_abs_diff_cents"),
-    )
-
-
 @op(
     "feat_percentile_rank_normalize",
     oracle="""
@@ -1098,4 +501,360 @@ def feat_percentile_rank_normalize(spark: SparkSession, sf_dir: str) -> DataFram
         "event_id",
         "event_type",
         rnd(F.percent_rank().over(w), 6).alias("value_pctile"),
+    )
+
+
+_TE_M = 20.0  # m-estimate smoothing mass
+
+
+@op(
+    "feat_target_encode_loo",
+    oracle=f"""
+        WITH base AS (
+            SELECT o_orderkey, o_orderpriority AS cat,
+                   CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y
+            FROM orders
+        ),
+        grp AS (
+            SELECT cat, CAST(count(*) AS BIGINT) AS n_cat,
+                   CAST(sum(y) AS BIGINT) AS sum_y
+            FROM base GROUP BY cat
+        ),
+        pri AS (
+            SELECT sum(y) * 1.0 / count(*) AS prior FROM base
+        )
+        SELECT b.o_orderkey, b.cat, CAST(b.y AS BIGINT) AS y,
+               g.n_cat, g.sum_y,
+               {sql_rnd(
+                   f"(g.sum_y - b.y + {_TE_M} * p.prior)"
+                   f" / (g.n_cat - 1 + {_TE_M})", 6
+               )} AS loo_enc,
+               {sql_rnd(
+                   f"(g.sum_y + {_TE_M} * p.prior)"
+                   f" / (g.n_cat + {_TE_M})", 6
+               )} AS naive_enc
+        FROM base b
+        JOIN grp g USING (cat)
+        CROSS JOIN pri p
+        WHERE b.o_orderkey % 97 = 0
+    """,
+    scale=(
+        "Leave-one-out target encoding with m-estimate smoothing (the "
+        "feature-store classic): enc_i = (sum_y(cat) - y_i + "
+        "m*prior) / (n(cat) - 1 + m) — removing the row's own label "
+        "is what stops the encoding from leaking the target into "
+        "training. Exact integer group sums broadcast back onto rows "
+        "make the per-row encoding a rational of BIGINTs plus one "
+        "global prior — deterministic at any partitioning. The "
+        "emitted rows are the 1-in-97 orderkey sample (the encoding "
+        "exists for every row; the sample is the audit surface). "
+        "100 TB: one |categories|-key agg + a broadcast join — "
+        "map-only per row; high-cardinality categories fall back to "
+        "the same shape with the agg sharded on cat hash."
+    ),
+)
+def feat_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LOO + naive m-estimate target encodings for sampled orders."""
+    orders = load_table(spark, sf_dir, "orders")
+    base = orders.select(
+        "o_orderkey",
+        F.col("o_orderpriority").alias("cat"),
+        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
+    )
+    grp = base.groupBy("cat").agg(
+        F.count(F.lit(1)).cast("long").alias("n_cat"),
+        F.sum("y").cast("long").alias("sum_y"),
+    )
+    pri = base.agg(
+        (F.sum("y") * F.lit(1.0) / F.count(F.lit(1))).alias("prior")
+    )
+    m = _TE_M
+    return (
+        base.where(F.col("o_orderkey") % 97 == 0)
+        .join(F.broadcast(grp), "cat")
+        .crossJoin(F.broadcast(pri))
+        .select(
+            "o_orderkey",
+            "cat",
+            F.col("y").cast("long").alias("y"),
+            "n_cat",
+            "sum_y",
+            rnd(
+                (F.col("sum_y") - F.col("y") + F.lit(m) * F.col("prior"))
+                / (F.col("n_cat") - 1 + F.lit(m)),
+                6,
+            ).alias("loo_enc"),
+            rnd(
+                (F.col("sum_y") + F.lit(m) * F.col("prior"))
+                / (F.col("n_cat") + F.lit(m)),
+                6,
+            ).alias("naive_enc"),
+        )
+    )
+
+
+#: literal value-band upper bounds in cents (last band open-ended)
+_WOE_BANDS = (1000, 2500, 5000, 10000, 25000)
+
+
+def _band_case_sql() -> str:
+    parts = []
+    for i, ub in enumerate(_WOE_BANDS):
+        parts.append(f"WHEN cents <= {ub} THEN {i}")
+    return (
+        "CASE " + " ".join(parts) + f" ELSE {len(_WOE_BANDS)} END"
+    )
+
+
+@op(
+    "feat_woe_iv_encoding",
+    oracle=f"""
+        WITH t AS (
+            SELECT CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents,
+                   CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
+                       AS label
+            FROM events
+        ),
+        b AS (
+            SELECT CAST({_band_case_sql()} AS BIGINT) AS band,
+                   label
+            FROM t
+        ),
+        per AS (
+            SELECT band,
+                   CAST(sum(label) AS BIGINT) AS goods,
+                   CAST(count(*) - sum(label) AS BIGINT) AS bads
+            FROM b GROUP BY band
+        ),
+        tot AS (
+            SELECT CAST(sum(goods) AS BIGINT) AS g,
+                   CAST(sum(bads) AS BIGINT) AS bb
+            FROM per
+        ),
+        woe AS (
+            -- WoE = ln((goods/G)/(bads/B)) = ln(goods*B / (bads*G)):
+            -- ln on an integer rational (Adamic-Adar precedent);
+            -- IV terms micro-frozen BEFORE the cross-band sum
+            SELECT p.band, p.goods, p.bads, t.g, t.bb,
+                   CASE WHEN p.goods > 0 AND p.bads > 0
+                        THEN ln(p.goods * 1.0::DOUBLE * t.bb
+                                / (p.bads * 1.0::DOUBLE * t.g))
+                        ELSE 0.0 END AS w,
+                   CASE WHEN p.goods > 0 AND p.bads > 0
+                        THEN CAST(floor(
+                            (p.goods * 1.0::DOUBLE / t.g
+                             - p.bads * 1.0::DOUBLE / t.bb)
+                            * ln(p.goods * 1.0::DOUBLE * t.bb
+                                 / (p.bads * 1.0::DOUBLE * t.g))
+                            * 1000000.0 + 0.505) AS BIGINT)
+                        ELSE 0 END AS iv_micro
+            FROM per p CROSS JOIN tot t
+        ),
+        ivt AS (
+            SELECT CAST(sum(iv_micro) AS BIGINT) AS iv_total_micro
+            FROM woe
+        )
+        SELECT w.band, w.goods, w.bads,
+               {sql_rnd("w.goods * 1.0 / w.g", 4)} AS good_share,
+               {sql_rnd("w.bads * 1.0 / w.bb", 4)} AS bad_share,
+               {sql_rnd("w.w", 4)} AS woe,
+               {sql_rnd("i.iv_total_micro / 1000000.0", 4)}
+                   AS iv_total
+        FROM woe w CROSS JOIN ivt i
+    """,
+    scale=(
+        "Weight-of-evidence encoding of literal value bands against "
+        "the purchase label, plus the information value of the whole "
+        "feature (IV < 0.02 useless, > 0.5 suspicious — the classic "
+        "credit-scoring vocabulary). WoE is ln of the integer "
+        "rational goods*B/(bads*G) (ln only on identical doubles); "
+        "each band's IV term is micro-frozen BEFORE the cross-band "
+        "BIGINT sum (order-free); empty-side bands emit 0 with the "
+        "standard guard in both engines. Shape: one map-side "
+        "combinable band agg, a 1-row total, a 6-row report. 100 TB: "
+        "one pass; WoE tables are the interpretable cousin of "
+        "feat_target_encode_loo and feed the same model prep."
+    ),
+)
+def feat_woe_iv_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WoE per literal value band + feature IV vs purchase label."""
+    ev = load_table(spark, sf_dir, "events")
+    band = F.lit(len(_WOE_BANDS)).cast("long")
+    for i in range(len(_WOE_BANDS) - 1, -1, -1):
+        band = F.when(
+            cents() <= _WOE_BANDS[i], F.lit(i).cast("long")
+        ).otherwise(band)
+    per = (
+        ev.select(
+            band.alias("band"),
+            F.when(F.col("event_type") == "purchase", 1)
+            .otherwise(0)
+            .alias("label"),
+        )
+        .groupBy("band")
+        .agg(
+            F.sum("label").cast("long").alias("goods"),
+            (F.count(F.lit(1)) - F.sum("label"))
+            .cast("long")
+            .alias("bads"),
+        )
+    )
+    tot = per.agg(
+        F.sum("goods").cast("long").alias("g"),
+        F.sum("bads").cast("long").alias("bb"),
+    )
+    both = F.broadcast(tot).crossJoin(per).select(
+        "band", "goods", "bads", "g", "bb"
+    )
+    ok = (F.col("goods") > 0) & (F.col("bads") > 0)
+    w_expr = F.log(
+        F.col("goods")
+        * F.lit(1.0)
+        * F.col("bb")
+        / (F.col("bads") * F.lit(1.0) * F.col("g"))
+    )
+    woe = both.select(
+        "band",
+        "goods",
+        "bads",
+        "g",
+        "bb",
+        F.when(ok, w_expr).otherwise(F.lit(0.0)).alias("w"),
+        F.when(
+            ok,
+            F.floor(
+                (
+                    F.col("goods") * F.lit(1.0) / F.col("g")
+                    - F.col("bads") * F.lit(1.0) / F.col("bb")
+                )
+                * w_expr
+                * F.lit(1000000.0)
+                + F.lit(0.505)
+            ).cast("long"),
+        )
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("iv_micro"),
+    )
+    ivt = woe.agg(
+        F.sum("iv_micro").cast("long").alias("iv_total_micro")
+    )
+    return woe.crossJoin(F.broadcast(ivt)).select(
+        "band",
+        "goods",
+        "bads",
+        rnd(F.col("goods") * F.lit(1.0) / F.col("g"), 4).alias(
+            "good_share"
+        ),
+        rnd(F.col("bads") * F.lit(1.0) / F.col("bb"), 4).alias(
+            "bad_share"
+        ),
+        rnd(F.col("w"), 4).alias("woe"),
+        rnd(F.col("iv_total_micro") / F.lit(1000000.0), 4).alias(
+            "iv_total"
+        ),
+    )
+
+
+#: literal hash-table widths priced
+_HC_MS = (1024, 4096, 16384)
+
+
+@op(
+    "feat_hash_collision_audit",
+    oracle=f"""
+        WITH vocab AS (
+            SELECT DISTINCT t.w AS w
+            FROM documents, unnest(string_split(text, ' ')) AS t(w)
+        ),
+        grid AS (SELECT CAST(u.m AS BIGINT) AS m
+                 FROM unnest([{", ".join(str(m) for m in _HC_MS)}])
+                      AS u(m)),
+        h AS (
+            SELECT g.m,
+                   {_sql_hash64("v.w")} % g.m AS bucket
+            FROM vocab v CROSS JOIN grid g
+        ),
+        per AS (
+            SELECT m, bucket, CAST(count(*) AS BIGINT) AS load
+            FROM h GROUP BY m, bucket
+        ),
+        agg AS (
+            SELECT m,
+                   CAST(sum(load) AS BIGINT) AS n_words,
+                   CAST(count(*) AS BIGINT) AS buckets_used,
+                   CAST(sum(CASE WHEN load > 1 THEN load ELSE 0 END)
+                        AS BIGINT) AS colliding_words,
+                   CAST(max(load) AS BIGINT) AS max_load
+            FROM per GROUP BY m
+        )
+        SELECT m, n_words, buckets_used, colliding_words, max_load,
+               {sql_rnd("colliding_words * 1.0 / n_words", 4)}
+                   AS collision_share,
+               {sql_rnd("n_words * 1.0 / m", 4)} AS load_factor,
+               {sql_rnd("buckets_used * 1.0 / m", 4)}
+                   AS occupancy
+        FROM agg
+    """,
+    scale=(
+        "What the hashing trick costs at each width: the share of "
+        "the distinct vocabulary that shares a bucket with another "
+        "word, buckets used, and the worst load, per literal m. "
+        "corpus_dsir_weights (hashed bigrams) and the hashed n-gram "
+        "classifier both accept this collision noise — this table "
+        "says how much, and whether doubling m buys anything (when "
+        "occupancy is already low, collisions come from the hash, "
+        "not the width). All counts exact BIGINTs over the md5 "
+        "bucket assignment (identical both engines). Shape: one "
+        "vocab distinct, a 3-row literal grid fan-out, a (m, "
+        "bucket)-key agg, 3-row report. 100 TB: the vocab table is "
+        "the corpus sufficient statistic; the audit is one agg over "
+        "it."
+    ),
+)
+def feat_hash_collision_audit(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Collision/occupancy stats per literal hash width."""
+    docs = load_table(spark, sf_dir, "documents")
+    vocab = (
+        docs.select(F.explode(F.split("text", " ")).alias("w"))
+        .distinct()
+    )
+    grid = spark.range(1).select(
+        F.explode(
+            F.array(*[F.lit(int(m)) for m in _HC_MS])
+        ).alias("m0")
+    ).select(F.col("m0").cast("long").alias("m"))
+    h = vocab.crossJoin(F.broadcast(grid)).select(
+        "m", (md5_hash64(F.col("w")) % F.col("m")).alias("bucket")
+    )
+    per = h.groupBy("m", "bucket").agg(
+        F.count(F.lit(1)).cast("long").alias("load")
+    )
+    agg = per.groupBy("m").agg(
+        F.sum("load").cast("long").alias("n_words"),
+        F.count(F.lit(1)).cast("long").alias("buckets_used"),
+        F.sum(
+            F.when(F.col("load") > 1, F.col("load")).otherwise(0)
+        )
+        .cast("long")
+        .alias("colliding_words"),
+        F.max("load").cast("long").alias("max_load"),
+    )
+    return agg.select(
+        "m",
+        "n_words",
+        "buckets_used",
+        "colliding_words",
+        "max_load",
+        rnd(
+            F.col("colliding_words") * F.lit(1.0) / F.col("n_words"), 4
+        ).alias("collision_share"),
+        rnd(F.col("n_words") * F.lit(1.0) / F.col("m"), 4).alias(
+            "load_factor"
+        ),
+        rnd(F.col("buckets_used") * F.lit(1.0) / F.col("m"), 4).alias(
+            "occupancy"
+        ),
     )

@@ -70,41 +70,96 @@ def _split_top_level(body: str) -> list[str]:
     return parts
 
 
-def _sort_expand_groups(line: str) -> str:
-    """Sort the projection groups of an ``Expand`` argument list
-    (``[[g0], [g1], ...], [output]``) found at the first ``[[``."""
+def _bracket_end(text: str, start: int) -> int:
+    """Index of the bracket that closes the one at ``start``."""
+    depth = 0
+    for end in range(start, len(text)):
+        depth += text[end] in "[("
+        depth -= text[end] in "])"
+        if depth == 0:
+            return end
+    return len(text)
+
+
+def _sorted_items(line: str, start: int) -> str:
+    """``line`` with the items of the bracket opened at ``start`` sorted."""
+    end = _bracket_end(line, start)
+    items = sorted(_split_top_level(line[start + 1 : end]))
+    return line[: start + 1] + ", ".join(items) + line[end:]
+
+
+def _canonical_expand(line: str, gids: dict[str, dict[str, str]]) -> str:
+    """``line`` with the ``Expand`` argument list found at its first ``[[``
+    (``[[g0], [g1], ...], [output]``) in canonical order: each group's
+    ``gid`` literal renumbered by the rank of the group's (output, value)
+    pairs (recorded in ``gids`` for the aggregates' ``gid = n`` tests),
+    then the items of each group, the groups and the output sorted."""
     start = line.find("[[")
     if start < 0:
         return line
-    depth = 0
-    for end in range(start, len(line)):
-        depth += line[end] in "[("
-        depth -= line[end] in "])"
-        if depth == 0:
-            break
-    groups = sorted(_split_top_level(line[start + 1 : end]))
-    return line[:start] + "[" + ", ".join(groups) + "]" + line[end + 1 :]
+    mid = _bracket_end(line, start)
+    out = line.find("[", mid)
+    end = _bracket_end(line, out)
+    groups = [_split_top_level(g[1:-1]) for g in _split_top_level(line[start + 1 : mid])]
+    output = _split_top_level(line[out + 1 : end])
+    names = [re.sub(r"#\d+", "", o) for o in output]
+    if "gid" in names:
+        k = names.index("gid")
+
+        def pairs(g: list[str]) -> list[str]:
+            return sorted(
+                names[i] + "=" + re.sub(r"#\d+", "", v)
+                for i, v in enumerate(g)
+                if i != k and v != "null"
+            )
+
+        renumber = {g[k]: str(rank) for rank, g in enumerate(sorted(groups, key=pairs))}
+        gids[output[k]] = renumber
+        for g in groups:
+            g[k] = renumber[g[k]]
+    body = ", ".join(sorted("[" + ", ".join(sorted(g)) + "]" for g in groups))
+    return f"{line[:start]}[{body}], [{', '.join(sorted(output))}]{line[end + 1 :]}"
 
 
 def normalized_plan(plan: str) -> str:
     """``plan`` with everything that varies between two builds of the same
     query stripped, so two dumps compare as text: expression ``#id``s,
-    ``plan_id=``, ``RDD[n]``, the checkout path, the numeric suffix of
-    lambda variables, and the order of each ``Expand``'s projection groups
-    (Spark lists the groups of several ``count(DISTINCT ...)`` aggregates
-    in a different order from one session to the next)."""
-    text = plan.replace(_ROOT, "<root>")
-    text = re.sub(r"#\d+", "", text)
-    text = re.sub(r"plan_id=\d+", "plan_id=", text)
-    text = re.sub(r"RDD\[\d+\]", "RDD[]", text)
-    text = re.sub(r"\b(lambda \w+?)_\d+\b", r"\1", text)
-    lines = text.splitlines()
+    ``plan_id=``, ``RDD[n]``, the checkout path and the numeric suffix of
+    lambda variables.
+
+    The ``Expand`` of several ``count(DISTINCT ...)`` aggregates lists its
+    groups, its output and the ``gid`` literals in per-session set order,
+    and the key lists of the aggregates and exchanges above it follow.
+    In a plan with an ``Expand`` these are put in canonical order (see
+    ``_canonical_expand``) and every ``Input``/``Output``/``Keys``/
+    ``Results`` list and ``hashpartitioning`` argument list is sorted."""
+    lines = plan.replace(_ROOT, "<root>").splitlines()
+    gids: dict[str, dict[str, str]] = {}
     in_expand = False
     for i, line in enumerate(lines):
         if re.match(r"^\(\d+\) ", line):
             in_expand = line.split()[1] == "Expand"
         if (in_expand and line.startswith("Arguments: ")) or "Expand [[" in line:
-            lines[i] = _sort_expand_groups(line)
+            lines[i] = _canonical_expand(line, gids)
+
+    def renumbered(m: re.Match) -> str:
+        # a literal that no group carries keeps a mark, so it cannot pass as one
+        known = gids.get(m[1])
+        return m[0] if known is None else f"{m[1]} = {known.get(m[2], m[2] + '?')}"
+
+    text = re.sub(r"\b(gid#\d+) = (\d+)", renumbered, "\n".join(lines))
+    text = re.sub(r"#\d+", "", text)
+    text = re.sub(r"plan_id=\d+", "plan_id=", text)
+    text = re.sub(r"RDD\[\d+\]", "RDD[]", text)
+    text = re.sub(r"\b(lambda \w+?)_\d+\b", r"\1", text)
+    if not gids:
+        return text
+    lines = text.splitlines()
+    for i, line in enumerate(lines):
+        if m := re.match(r"(Input|Output|Keys|Results)( \[\d+\])?: \[", line):
+            lines[i] = _sorted_items(line, m.end() - 1)
+        elif (j := line.find("hashpartitioning(")) >= 0:
+            lines[i] = _sorted_items(line, j + len("hashpartitioning"))
     return "\n".join(lines)
 
 

@@ -141,9 +141,11 @@ def test_broadcast_partial_takeordered_predicates():
     assert is_take_ordered("TakeOrderedAndProject(limit=10, ...)")
 
 
-# Two builds of one count(DISTINCT a), count(DISTINCT b) query: fresh
-# expression ids, exchange ids and lambda suffixes, and the Expand groups
-# listed in the other order.
+# Three builds of one count(DISTINCT a), count(DISTINCT b) query: fresh
+# expression ids, exchange ids and lambda suffixes; B lists the Expand
+# groups in the other order; C lists the distinct columns in the other
+# order, so the Expand output, the gid literals and the key lists of the
+# aggregate and exchange above it change with them.
 EXPAND_PLAN_A = """\
 (3) Expand [codegen id : 1]
 Input [2]: [a#11L, b#12]
@@ -151,6 +153,11 @@ Arguments: [[a#11L, null, 1], [null, b#12, 2]], [a#20L, b#21, gid#19]
 (4) Exchange
 Arguments: hashpartitioning(a#20L, 8), ENSURE_REQUIREMENTS, [plan_id=41]
 Output [1]: [transform(v#7, lambdafunction(lambda x_12#30, lambda x_12#30, false)) AS t#31]
+(5) HashAggregate
+Keys [3]: [a#20L, b#21, gid#19]
+Functions [2]: [partial_count(a#20L) FILTER (WHERE (gid#19 = 1)), partial_count(b#21) FILTER (WHERE (gid#19 = 2))]
+(6) Exchange
+Arguments: hashpartitioning(a#20L, b#21, gid#19, 8), ENSURE_REQUIREMENTS, [plan_id=42]
 """
 EXPAND_PLAN_B = """\
 (3) Expand [codegen id : 1]
@@ -159,15 +166,37 @@ Arguments: [[null, b#512, 2], [a#511L, null, 1]], [a#520L, b#521, gid#519]
 (4) Exchange
 Arguments: hashpartitioning(a#520L, 8), ENSURE_REQUIREMENTS, [plan_id=977]
 Output [1]: [transform(v#507, lambdafunction(lambda x_98#530, lambda x_98#530, false)) AS t#531]
+(5) HashAggregate
+Keys [3]: [a#520L, b#521, gid#519]
+Functions [2]: [partial_count(a#520L) FILTER (WHERE (gid#519 = 1)), partial_count(b#521) FILTER (WHERE (gid#519 = 2))]
+(6) Exchange
+Arguments: hashpartitioning(a#520L, b#521, gid#519, 8), ENSURE_REQUIREMENTS, [plan_id=978]
+"""
+EXPAND_PLAN_C = """\
+(3) Expand [codegen id : 1]
+Input [2]: [b#12, a#11L]
+Arguments: [[b#12, null, 1], [null, a#11L, 2]], [b#21, a#20L, gid#19]
+(4) Exchange
+Arguments: hashpartitioning(a#20L, 8), ENSURE_REQUIREMENTS, [plan_id=41]
+Output [1]: [transform(v#7, lambdafunction(lambda x_12#30, lambda x_12#30, false)) AS t#31]
+(5) HashAggregate
+Keys [3]: [b#21, a#20L, gid#19]
+Functions [2]: [partial_count(a#20L) FILTER (WHERE (gid#19 = 2)), partial_count(b#21) FILTER (WHERE (gid#19 = 1))]
+(6) Exchange
+Arguments: hashpartitioning(b#21, a#20L, gid#19, 8), ENSURE_REQUIREMENTS, [plan_id=42]
 """
 
 
 def test_normalized_plan_strips_ids_and_sorts_expand_groups():
-    assert EXPAND_PLAN_A != EXPAND_PLAN_B
+    assert len({EXPAND_PLAN_A, EXPAND_PLAN_B, EXPAND_PLAN_C}) == 3
     assert normalized_plan(EXPAND_PLAN_A) == normalized_plan(EXPAND_PLAN_B)
+    assert normalized_plan(EXPAND_PLAN_A) == normalized_plan(EXPAND_PLAN_C)
     # a real difference survives normalization
     changed = EXPAND_PLAN_B.replace("hashpartitioning(a#520L, 8)", "hashpartitioning(a#520L, 16)")
     assert normalized_plan(EXPAND_PLAN_A) != normalized_plan(changed)
+    # so does a distinct aggregate tested against the other group
+    swapped = EXPAND_PLAN_C.replace("(gid#19 = 2)", "(gid#19 = 1)")
+    assert normalized_plan(EXPAND_PLAN_A) != normalized_plan(swapped)
 
 
 def test_live_plan_modes_agree(spark, sf_dir):

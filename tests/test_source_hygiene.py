@@ -1,7 +1,7 @@
 """Source hygiene read from the AST alone (no Spark): test modules define
 each ``test_*`` name once, package and test modules import nothing they
-never use, the ``ts`` op family lives in one module, and the cents freeze
-is written once."""
+never use, the ``ts``, ``dq`` and ``feat`` op families each live in one
+module, and the cents and micro-score freezes are each written once."""
 
 from __future__ import annotations
 
@@ -70,18 +70,28 @@ def test_no_unused_module_level_import():
     assert found == {}
 
 
-def test_ts_ops_are_defined_in_timeseries():
-    """Every ``@op("ts_...")`` is registered by ``operators/timeseries.py``."""
+#: op-name prefix -> the one module that registers that family
+FAMILY_HOMES = {
+    "ts_": PKG / "operators" / "timeseries.py",
+    "dq_": PKG / "operators" / "data_quality.py",
+    "feat_": PKG / "operators" / "features.py",
+}
+
+
+def test_op_families_are_defined_in_their_home_module():
+    """Every ``@op("ts_...")``, ``@op("dq_...")`` and ``@op("feat_...")``
+    is registered by its family's module (``FAMILY_HOMES``)."""
     stray = [
-        f"{path.relative_to(ROOT)}: {node.args[0].value}"
+        f"{path.relative_to(ROOT)}: {name}"
         for path in sorted(PKG.glob("**/*.py"))
-        if path != PKG / "operators" / "timeseries.py"
         for node in ast.walk(ast.parse(path.read_text()))
         if isinstance(node, ast.Call)
         and getattr(node.func, "id", None) == "op"
         and node.args
         and isinstance(node.args[0], ast.Constant)
-        and str(node.args[0].value).startswith("ts_")
+        for name in [str(node.args[0].value)]
+        for prefix, home in FAMILY_HOMES.items()
+        if name.startswith(prefix) and path != home
     ]
     assert stray == []
 
@@ -96,3 +106,16 @@ def test_cents_freeze_is_written_once():
         if needle in line
     ]
     assert copies == []
+
+
+def test_micro_score_freeze_is_written_once():
+    """Spark code freezes a logistic score to integer micro-units through
+    ``data_quality.micro_score`` (the needle is matched with whitespace
+    removed, since the expression spans lines)."""
+    needle = "F.lit(1000000.0)/(F.lit(1.0)+F.exp("
+    copies = {
+        str(path.relative_to(ROOT)): n
+        for path in sorted(PKG.glob("**/*.py"))
+        if (n := "".join(path.read_text().split()).count(needle))
+    }
+    assert copies == {"python_kinesis_streaming_spark/operators/data_quality.py": 1}

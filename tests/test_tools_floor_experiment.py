@@ -10,11 +10,8 @@ import sys
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
-from sf1_floor_experiment import (  # noqa: E402
-    ID_SHIFTS,
-    replicate,
-    run_experiment,
-)
+from measure_scale import ID_SHIFTS  # noqa: E402
+from sf1_floor_experiment import TABLES, replicate, run_experiment  # noqa: E402
 from python_kinesis_streaming_spark.sources.tables import load_table  # noqa: E402
 
 SRC = "/root/testdata/sf0.001"
@@ -22,8 +19,9 @@ SRC = "/root/testdata/sf0.001"
 
 def test_replicate_scales_rows_with_disjoint_ids(spark, tmp_path):
     dest = str(tmp_path / "synth")
-    replicate(spark, SRC, dest, factor=3)
-    for name, shifts in ID_SHIFTS.items():
+    replicate(spark, SRC, dest, 3, TABLES)
+    for name in TABLES:
+        shifts = ID_SHIFTS[name]
         base = load_table(spark, SRC, name).count()
         synth = load_table(spark, dest, name)
         assert synth.count() == 3 * base

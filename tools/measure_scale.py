@@ -50,17 +50,19 @@ FACTOR = int(os.environ.get("X10_FACTOR", "10"))
 SYNTH = os.path.join(REPO, ".scratch", f"sf_synth_x{FACTOR}")
 
 
-def replicate(spark, src: str, tables: list[str]) -> None:
+def replicate(spark, src: str, dest: str, factor: int, tables) -> None:
+    """Write ``factor``-x id-shifted unions of ``tables`` from ``src``
+    into ``dest``; a table already written there is kept."""
     from python_kinesis_streaming_spark.sources.tables import load_table
 
-    os.makedirs(SYNTH, exist_ok=True)
+    os.makedirs(dest, exist_ok=True)
     for name in tables:
-        path = os.path.join(SYNTH, f"{name}.parquet")
+        path = os.path.join(dest, f"{name}.parquet")
         if os.path.isdir(path):
             continue
         df = load_table(spark, src, name)
         parts = []
-        for i in range(FACTOR):
+        for i in range(factor):
             d = df
             for col, step in ID_SHIFTS.get(name, {}).items():
                 d = d.withColumn(col, F.col(col) + F.lit(i * step))
@@ -69,7 +71,7 @@ def replicate(spark, src: str, tables: list[str]) -> None:
         for p in parts[1:]:
             out = out.unionAll(p)
         out.coalesce(8).write.mode("overwrite").parquet(path)
-        print(f"replicated {name} x{FACTOR}", file=sys.stderr)
+        print(f"replicated {name} x{factor}", file=sys.stderr)
 
 
 def best3(fn, warm: int = 1) -> float:
@@ -104,8 +106,7 @@ def main() -> int:
         extra_confs={"spark.sql.adaptive.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-    replicate(spark, os.environ.get(
-        "X10_SRC", "/root/testdata/sf0.1"), tables)
+    replicate(spark, os.environ.get("X10_SRC", "/root/testdata/sf0.1"), SYNTH, FACTOR, tables)
 
     import duckdb
 

@@ -8,10 +8,10 @@ work starts to dominate the fixed overhead.
 
 Method: union-replicate events/documents/embeddings by FACTOR from a source
 scale dir into `.scratch/sf1_synth/` with id columns shifted per replica
-(so distinct-key work scales with the data instead of collapsing onto
-duplicate keys), then run the floor-suspect queries AND their DuckDB twins
-(4 threads, best-of-3 after warmup, fully fetched — the BASELINE.md
-measurement method) on the same synthetic parquet.
+(`tools/measure_scale.py::replicate`, so distinct-key work scales with the
+data instead of collapsing onto duplicate keys), then run the floor-suspect
+queries AND their DuckDB twins (4 threads, best-of-3 after warmup, fully
+fetched — the BASELINE.md measurement method) on the same synthetic parquet.
 
 Usage:
     python tools/sf1_floor_experiment.py                  # x10 from sf0.1
@@ -28,40 +28,16 @@ import json
 import os
 import shutil
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
-# id-shift steps: larger than any real id range in the fixtures, so every
-# replica's keys are disjoint from every other's
-ID_SHIFTS = {
-    "events": {"event_id": 10**10, "user_id": 10**7},
-    "documents": {"doc_id": 10**9},
-    "embeddings": {"vec_id": 10**7},
-}
+from measure_scale import best3, replicate  # noqa: E402
 
-
-def replicate(spark, src: str, dest: str, factor: int) -> None:
-    """Write factor-x id-shifted unions of the three LLM-side tables."""
-    from python_kinesis_streaming_spark.sources.tables import load_table
-
-    os.makedirs(dest, exist_ok=True)
-    for name, shifts in ID_SHIFTS.items():
-        df = load_table(spark, src, name)
-        parts = []
-        for i in range(factor):
-            d = df
-            for col, step in shifts.items():
-                d = d.withColumn(col, F.col(col) + F.lit(i * step))
-            parts.append(d)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionAll(p)
-        path = os.path.join(dest, f"{name}.parquet")
-        out.coalesce(8).write.mode("overwrite").parquet(path)
+#: the LLM-side tables the floor-suspect queries read
+TABLES = ("events", "documents", "embeddings")
 
 
 def build_queries(spark, synth_dir: str) -> dict:
@@ -98,38 +74,27 @@ DUCK_SQL = {
 }
 
 
-def _best3(fn, warm: int = 3) -> float:
-    for _ in range(warm):
-        fn()
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
 def run_experiment(
     spark, src: str, synth_dir: str, factor: int, rebuild: bool = False
 ) -> dict:
     if rebuild and os.path.isdir(synth_dir):
         shutil.rmtree(synth_dir)
     if not os.path.isdir(synth_dir):
-        replicate(spark, src, synth_dir, factor)
+        replicate(spark, src, synth_dir, factor, TABLES)
 
     import duckdb
 
     con = duckdb.connect()
     con.execute("SET threads TO 4")
-    for t in ID_SHIFTS:
+    for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{synth_dir}/{t}.parquet/*.parquet')"
         )
     out = {}
     for name, df in build_queries(spark, synth_dir).items():
-        s = _best3(lambda: df.toPandas())
-        d = _best3(lambda: con.execute(DUCK_SQL[name]).fetchall())
+        s = best3(lambda: df.toPandas(), warm=3)
+        d = best3(lambda: con.execute(DUCK_SQL[name]).fetchall(), warm=3)
         out[name] = {
             "spark_s": round(s, 4),
             "duckdb_s": round(d, 4),
