@@ -77,10 +77,11 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "list":
         oracles = all_oracles()
-        for name in queries:
+        for name, fn in queries.items():
             if args.filter in name:
                 mark = "sql-oracled" if name in oracles else "rows-only"
-                print(f"{name}\t{mark}")
+                module = fn.__module__.removeprefix("python_kinesis_streaming_spark.")
+                print(f"{name}\t{mark}\t{module}")
         return 0
 
     if args.op not in queries:

@@ -137,7 +137,7 @@ from python_kinesis_streaming_spark.llm.shards import (
     write_zip_shards,
 )
 from python_kinesis_streaming_spark.llm.warc import read_warc
-from python_kinesis_streaming_spark.operators.analytics import triangle_stats
+from python_kinesis_streaming_spark.operators.graph import triangle_stats
 from python_kinesis_streaming_spark.operators.timeseries import (
     ewma,  # noqa: F401  (re-exported, not in __all__)
     interpolate_hourly,

@@ -1,12 +1,12 @@
 """Corpus-curation operators: repetition quality gates, PII-style scrubbing,
-source-mix planning, and two-stage IVF probe search (SURVEY §2.12).
+and source-mix planning (SURVEY §2.12).
 
 These are the remaining pieces of a training-data curation pass that the
 first-wave llm/ modules don't cover: Gopher-style repetition ratios (the
 classic "most common word" / distinct-fraction filters), regex scrubbing
-with audit counts, deciding per-source sampling rates to hit a target mix,
-and the probe half of an IVF vector index (assign query → nearest centroid,
-search only that cluster).
+with audit counts, and deciding per-source sampling rates to hit a target
+mix. The IVF probe search (``sim_ivf_probe``) and the truncated-dims
+prefilter (``sim_truncated_dims``) live in ``llm/similarity.py``.
 
 Scale notes (100 TB):
 - text_repetition is explode + two-level agg (word counts, then per-doc
@@ -19,11 +19,6 @@ Scale notes (100 TB):
   grand total back — the planner output (per-source keep-rate) then drives
   a Bernoulli sample of the full corpus in a later map-only pass; the
   planning cost is independent of corpus size.
-- sim_ivf_probe is the query path of an IVF index: centroid table is
-  |labels|×dims (tiny, broadcast); each query computes |labels| centroid
-  similarities instead of |corpus| — then scans exactly ONE cluster.
-  Candidate set shrinks by the cluster fan-out factor; recall loss is the
-  standard IVF nprobe=1 trade-off.
 """
 
 from __future__ import annotations
@@ -31,7 +26,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
-from python_kinesis_streaming_spark.functions.vectors import cosine
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -178,114 +172,6 @@ def corpus_mix_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op(
-    "sim_ivf_probe",
-    oracle="""
-        WITH cent AS (
-            SELECT label, i.i AS pos,
-                   floor((avg(embedding[i.i])) * 10000.0 + 0.505) / 10000.0 AS cv
-            FROM embeddings, range(1, 65) i(i)
-            GROUP BY label, i.i
-        ),
-        queries AS (
-            SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
-            FROM embeddings WHERE vec_id < 5
-        ),
-        qc AS (
-            SELECT q.query_id, c.label,
-                   floor((sum(q.qe[c.pos] * c.cv)
-                          / (sqrt(sum(q.qe[c.pos] * q.qe[c.pos]))
-                             * sqrt(sum(c.cv * c.cv))))
-                         * 10000.0 + 0.505) / 10000.0 AS csim
-            FROM queries q, cent c
-            GROUP BY q.query_id, c.label
-        ),
-        best AS (
-            SELECT query_id, label FROM (
-                SELECT query_id, label,
-                       row_number() OVER (PARTITION BY query_id
-                                          ORDER BY csim DESC, label) AS rn
-                FROM qc
-            ) WHERE rn = 1
-        )
-        SELECT b.query_id AS query_id, e.vec_id AS vec_id,
-               floor((list_cosine_similarity(e.embedding::DOUBLE[], q.qe))
-                     * 10000.0 + 0.505) / 10000.0 AS sim
-        FROM best b
-        JOIN embeddings e ON e.label = b.label
-        JOIN queries q ON q.query_id = b.query_id
-        WHERE e.vec_id <> b.query_id  -- probe cluster, drop self-match
-        QUALIFY row_number() OVER (
-            PARTITION BY b.query_id
-            ORDER BY floor((list_cosine_similarity(e.embedding::DOUBLE[], q.qe))
-                           * 10000.0 + 0.505) / 10000.0 DESC, e.vec_id) <= 5
-    """,
-    scale=(
-        "IVF probe (nprobe=1): queries rank |labels| centroids (tiny "
-        "broadcast table built once by sim_centroids' plan), then scan "
-        "exactly one cluster for the exact top-k. At billions of vectors "
-        "the probed fraction is 1/|labels| of the corpus; raising nprobe "
-        "trades scan cost for recall. Ties broken on (sim desc, vec_id) on "
-        "the ROUNDED similarity so both engines pick identical rows."
-    ),
-)
-def sim_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-stage ANN: route 5 queries to their nearest label centroid, then
-    exact cosine top-5 inside that single cluster."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    cent = (
-        emb.select("label", F.posexplode("embedding").alias("p", "v"))
-        .groupBy("label", (F.col("p") + 1).alias("pos"))
-        .agg(rnd(F.avg(F.col("v").cast("double")), 4).alias("cv"))
-    )
-    queries = (
-        emb.where(F.col("vec_id") < 5)
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            F.posexplode("embedding").alias("qpos", "qv"),
-        )
-    )
-    qc = (
-        queries.join(F.broadcast(cent), F.col("qpos") + 1 == F.col("pos"))
-        .groupBy("query_id", "label")
-        .agg(
-            rnd(
-                F.sum(F.col("qv").cast("double") * F.col("cv"))
-                / (
-                    F.sqrt(F.sum(F.col("qv").cast("double") * F.col("qv").cast("double")))
-                    * F.sqrt(F.sum(F.col("cv") * F.col("cv")))
-                ),
-                4,
-            ).alias("csim")
-        )
-    )
-    w_best = Window.partitionBy("query_id").orderBy(F.desc("csim"), F.asc("label"))
-    best = (
-        qc.withColumn("rn", F.row_number().over(w_best))
-        .where(F.col("rn") == 1)
-        .select("query_id", "label")
-    )
-    qvecs = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-    )
-    w_k = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        F.broadcast(best)
-        .join(emb, "label")
-        .join(F.broadcast(qvecs), "query_id")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            rnd(cosine(F.col("embedding"), F.col("qe")), 4).alias("sim"),
-        )
-        .withColumn("rk", F.row_number().over(w_k))
-        .where(F.col("rk") <= 5)
-        .drop("rk")
-    )
-
-
 def decontaminate(
     train: DataFrame,
     eval_df: DataFrame,
@@ -413,89 +299,6 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             rnd(F.col("n_shared") * F.lit(1.0) / F.col("n_sh"), 4).alias(
                 "containment_a"
             ),
-        )
-    )
-
-
-@op(
-    "sim_truncated_dims",
-    oracle="""
-        WITH q AS (SELECT embedding::DOUBLE[] AS qe FROM embeddings WHERE vec_id = 0),
-        sims AS (
-            SELECT vec_id,
-                   floor((list_cosine_similarity(embedding::DOUBLE[], qe))
-                         * 10000.0 + 0.505) / 10000.0 AS sim_full,
-                   floor((list_cosine_similarity((embedding[1:16])::DOUBLE[],
-                                                 qe[1:16]))
-                         * 10000.0 + 0.505) / 10000.0 AS sim_trunc
-            FROM embeddings, q WHERE vec_id <> 0
-        ),
-        top_full AS (
-            SELECT vec_id FROM sims ORDER BY sim_full DESC, vec_id LIMIT 10
-        ),
-        top_trunc AS (
-            SELECT vec_id FROM sims ORDER BY sim_trunc DESC, vec_id LIMIT 10
-        )
-        SELECT s.vec_id, s.sim_full, s.sim_trunc,
-               (s.vec_id IN (SELECT vec_id FROM top_full)) AS in_full,
-               (s.vec_id IN (SELECT vec_id FROM top_trunc)) AS in_trunc
-        FROM sims s
-        WHERE s.vec_id IN (SELECT vec_id FROM top_full)
-           OR s.vec_id IN (SELECT vec_id FROM top_trunc)
-    """,
-    scale=(
-        "Matryoshka-style truncated-dimension retrieval check: rank by "
-        "cosine on the first 16 of 64 dims vs the full vector, report both "
-        "top-10 sets. The cheap 4× scan-bandwidth cut for a first-stage "
-        "retrieval cascade; the overlap columns quantify the recall cost. "
-        "Both rankings are TakeOrdered (no global window), sets compared "
-        "via two 10-row broadcast semi/anti membership joins."
-    ),
-)
-def sim_truncated_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full-dim vs 16-dim cosine top-10 for the fixed query vector: union
-    of both sets with membership flags."""
-    from python_kinesis_streaming_spark.llm.similarity import QUERY_VEC_ID
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") == QUERY_VEC_ID).select(
-        F.col("embedding").alias("qe")
-    )
-    sims = (
-        emb.where(F.col("vec_id") != QUERY_VEC_ID)
-        .join(F.broadcast(q))
-        .select(
-            "vec_id",
-            rnd(cosine(F.col("embedding"), F.col("qe")), 4).alias("sim_full"),
-            rnd(
-                cosine(
-                    F.slice(F.col("embedding"), 1, 16), F.slice(F.col("qe"), 1, 16)
-                ),
-                4,
-            ).alias("sim_trunc"),
-        )
-    )
-    top_full = sims.orderBy(F.desc("sim_full"), F.asc("vec_id")).limit(10).select("vec_id")
-    top_trunc = sims.orderBy(F.desc("sim_trunc"), F.asc("vec_id")).limit(10).select("vec_id")
-    cand = top_full.union(top_trunc).distinct()
-    return (
-        sims.join(F.broadcast(cand), "vec_id", "left_semi")
-        .join(
-            F.broadcast(top_full.withColumn("in_full", F.lit(True))),
-            "vec_id",
-            "left",
-        )
-        .join(
-            F.broadcast(top_trunc.withColumn("in_trunc", F.lit(True))),
-            "vec_id",
-            "left",
-        )
-        .select(
-            "vec_id",
-            "sim_full",
-            "sim_trunc",
-            F.coalesce(F.col("in_full"), F.lit(False)).alias("in_full"),
-            F.coalesce(F.col("in_trunc"), F.lit(False)).alias("in_trunc"),
         )
     )
 

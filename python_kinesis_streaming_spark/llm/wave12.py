@@ -37,6 +37,7 @@ from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.functions.vectors import sq_norm
+from python_kinesis_streaming_spark.llm.similarity import vectors
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -567,9 +568,7 @@ def emb_isotropy_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine, top-16 variance share."""
     from python_kinesis_streaming_spark.functions.vectors import cosine
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     x = emb.select("vec_id", F.posexplode(F.col("v")).alias("j", "x"))
     dim = x.groupBy("j").agg(
         rnd(F.avg("x"), 6).alias("c"),

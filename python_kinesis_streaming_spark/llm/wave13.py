@@ -1,13 +1,8 @@
-"""Wave-13 pipeline ops (round 12, seventh batch) — distance
-concentration, b-bit minhash and pseudo-relevance-feedback retrieval.
+"""Wave-13 pipeline ops (round 12, seventh batch) — b-bit minhash and
+pseudo-relevance-feedback retrieval.
 
-Three capabilities extending the dedup/IR story:
+Two capabilities extending the dedup/IR story:
 
-- ``sim_distance_contrast_audit``: distance-concentration audit
-  (Beyer et al. 1999): per query, min/mean/max squared L2 distance
-  and the relative contrast (dmax-dmin)/dmin — the statistic that
-  decides whether nearest-neighbor search is meaningful in this
-  space at all.
 - ``dedup_bbit_minhash_estimate``: b-bit minwise hashing (Li & König
   2010) with b=1 over the standard 16-perm signatures — estimated
   Jaccard 2*m-1 from low-bit agreement vs the exact shingle Jaccard,
@@ -28,110 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
-from python_kinesis_streaming_spark.functions.vectors import dot, sq_norm
+from python_kinesis_streaming_spark.functions.rounding import rnd
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
-
-
-# ---------------------------------------------------------------------------
-# distance-concentration audit (Beyer et al. 1999)
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "sim_distance_contrast_audit",
-    oracle=f"""
-        WITH e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v,
-                   list_sum(list_transform(embedding::DOUBLE[],
-                                           t -> t * t)) AS n2
-            FROM embeddings
-        ),
-        d AS (
-            SELECT q.vec_id AS qid,
-                   CAST(floor((q.n2 + x.n2
-                       - 2 * list_sum(list_transform(range(1, 65),
-                             i -> q.v[CAST(i AS INTEGER)]
-                                  * x.v[CAST(i AS INTEGER)])))
-                       * 1000000.0 + 0.505) AS BIGINT) AS d2_micro
-            FROM e q JOIN e x ON x.vec_id <> q.vec_id
-            WHERE q.vec_id % 50 = 0
-        )
-        SELECT qid,
-               CAST(count(*) AS BIGINT) AS n_others,
-               {sql_rnd("min(d2_micro) / 1000000.0", 4)} AS d2_min,
-               {sql_rnd(
-                   "sum(d2_micro) / (1000000.0 * count(*))", 4
-               )} AS d2_mean,
-               {sql_rnd("max(d2_micro) / 1000000.0", 4)} AS d2_max,
-               -- duplicate vectors (d2_min = 0) make contrast
-               -- undefined: emit 0 instead of dividing (DuckDB NULLs,
-               -- ANSI Spark throws — the wave-4 zero-guard class)
-               CASE WHEN min(d2_micro) = 0 THEN 0.0
-                    ELSE {sql_rnd(
-                        "(max(d2_micro) - min(d2_micro)) * 1.0"
-                        " / min(d2_micro)", 4
-                    )} END AS rel_contrast
-        FROM d GROUP BY qid
-    """,
-    scale=(
-        "Distance-concentration audit (Beyer et al. 1999 'When is "
-        "nearest neighbor meaningful?'): per query, min/mean/max "
-        "squared L2 distance and the relative contrast "
-        "(dmax-dmin)/dmin. As dimensionality concentrates distances, "
-        "contrast -> 0 and EVERY index (IVF, LSH, graphs) degrades to "
-        "a scan — this is the audit run before buying an ANN index at "
-        "all. Determinism: norms and dots are in-row folds over the "
-        "same element order; each pair's d2 = n2_q + n2_x - 2*dot "
-        "freezes to integer micro, and min/max/sum over BIGINTs are "
-        "partition-order-free. The query side is the broadcast "
-        "1-in-50 sample (|sample|*N pairs, never N^2). 100 TB: the "
-        "same sample-bounded pass; contrast is the cheapest statistic "
-        "that predicts ANN recall cliffs before they cost a cluster."
-    ),
-)
-def sim_distance_contrast_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Per-query min/mean/max squared distance + relative contrast."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    e = emb.withColumn("n2", sq_norm("v"))
-    q = e.select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("n2").alias("qn2"),
-    ).where(F.col("qid") % 50 == 0)
-    d = e.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
-        "qid",
-        F.floor(
-            (F.col("qn2") + F.col("n2") - 2 * dot("qv", "v"))
-            * F.lit(1000000.0)
-            + F.lit(0.505)
-        )
-        .cast("long")
-        .alias("d2_micro"),
-    )
-    return d.groupBy("qid").agg(
-        F.count(F.lit(1)).cast("long").alias("n_others"),
-        rnd(F.min("d2_micro") / F.lit(1000000.0), 4).alias("d2_min"),
-        rnd(
-            F.sum("d2_micro") / (F.lit(1000000.0) * F.count(F.lit(1))), 4
-        ).alias("d2_mean"),
-        rnd(F.max("d2_micro") / F.lit(1000000.0), 4).alias("d2_max"),
-        F.when(F.min("d2_micro") == 0, F.lit(0.0))
-        .otherwise(
-            rnd(
-                (F.max("d2_micro") - F.min("d2_micro"))
-                * F.lit(1.0)
-                / F.min("d2_micro"),
-                4,
-            )
-        )
-        .alias("rel_contrast"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,7 +1,7 @@
 """Wave-14 pipeline ops (round 12, eighth batch) — Kneser-Ney
-smoothing, count-min sketches and graph beam-search retrieval.
+smoothing and count-min sketches.
 
-Three capabilities extending the LM/sketch/ANN story:
+Two capabilities extending the LM/sketch story:
 
 - ``text_kneser_ney_bigram``: interpolated Kneser-Ney bigram
   probabilities (the canonical LM smoothing — absolute discount
@@ -14,11 +14,6 @@ Three capabilities extending the LM/sketch/ANN story:
   sums, so unlike MG the estimates are partition-order-FREE and can
   be emitted exactly, alongside the checked one-sided guarantee
   est >= cf.
-- ``sim_graph_beam_recall``: greedy beam search over the in-cell
-  top-8 neighbor graph (two unrolled hops from a deterministic entry
-  point, beam=8) with recall@5 against the exact in-cell ranking —
-  the HNSW-style QUERY path to pair emb_nndescent_round's graph
-  CONSTRUCTION path.
 
 Same discipline as waves 7-13: exact integers before any
 cross-partition sum, identical aliases, BIGINT casts in oracles,
@@ -28,7 +23,6 @@ bounded candidate sets everywhere.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.registry import op
@@ -288,264 +282,4 @@ def text_count_min_sketch_audit(
         .cast("long")
         .alias("never_undercounts"),
         "n_tokens",
-    )
-
-
-# ---------------------------------------------------------------------------
-# graph beam-search retrieval over the in-cell neighbor graph
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "sim_graph_beam_recall",
-    oracle=f"""
-        WITH cent AS (
-            SELECT vec_id AS cid, embedding::DOUBLE[] AS cv
-            FROM embeddings WHERE vec_id < 8
-        ),
-        assigned AS (
-            SELECT e.vec_id,
-                   min_by(c.cid,
-                          CAST(floor(list_sum(list_transform(range(1, 65),
-                               i -> (e.embedding[CAST(i AS INTEGER)]::DOUBLE
-                                     - c.cv[CAST(i AS INTEGER)]) ^ 2))
-                               * 1000000.0 + 0.505) AS BIGINT) * 8 + c.cid)
-                       AS cid
-            FROM embeddings e, cent c
-            GROUP BY e.vec_id
-        ),
-        e AS (
-            SELECT a.vec_id, a.cid, x.embedding::DOUBLE[] AS v
-            FROM assigned a JOIN embeddings x USING (vec_id)
-        ),
-        edges AS (
-            SELECT src, dst FROM (
-                SELECT a.vec_id AS src, b.vec_id AS dst,
-                       row_number() OVER (
-                           PARTITION BY a.vec_id
-                           ORDER BY floor(list_cosine_similarity(a.v, b.v)
-                                    * 10000.0 + 0.505) / 10000.0 DESC,
-                                    b.vec_id
-                       ) AS rk
-                FROM e a JOIN e b
-                  ON b.cid = a.cid AND b.vec_id <> a.vec_id
-            ) WHERE rk <= 8
-        ),
-        q AS (
-            SELECT vec_id AS qid, cid, v AS qv FROM e
-            WHERE vec_id % 50 = 0
-        ),
-        entry AS (
-            SELECT q.qid, min(e2.vec_id) AS node
-            FROM q JOIN e e2 ON e2.cid = q.cid
-            GROUP BY q.qid
-        ),
-        f1 AS (
-            SELECT qid, node FROM entry
-            UNION
-            SELECT en.qid, ed.dst AS node
-            FROM entry en JOIN edges ed ON ed.src = en.node
-        ),
-        b1 AS (
-            SELECT qid, node FROM (
-                SELECT f1.qid, f1.node, row_number() OVER (
-                    PARTITION BY f1.qid
-                    ORDER BY floor(list_cosine_similarity(e2.v, q.qv)
-                             * 10000.0 + 0.505) / 10000.0 DESC, f1.node
-                ) AS rk
-                FROM f1
-                JOIN e e2 ON e2.vec_id = f1.node
-                JOIN q ON q.qid = f1.qid
-                WHERE f1.node <> f1.qid
-            ) WHERE rk <= 8
-        ),
-        f2 AS (
-            SELECT qid, node FROM b1
-            UNION
-            SELECT b1.qid, ed.dst AS node
-            FROM b1 JOIN edges ed ON ed.src = b1.node
-        ),
-        beam AS (
-            SELECT qid, node FROM (
-                SELECT f2.qid, f2.node, row_number() OVER (
-                    PARTITION BY f2.qid
-                    ORDER BY floor(list_cosine_similarity(e2.v, q.qv)
-                             * 10000.0 + 0.505) / 10000.0 DESC, f2.node
-                ) AS rk
-                FROM f2
-                JOIN e e2 ON e2.vec_id = f2.node
-                JOIN q ON q.qid = f2.qid
-                WHERE f2.node <> f2.qid
-            ) WHERE rk <= 5
-        ),
-        etop AS (
-            SELECT qid, vec_id FROM (
-                SELECT q.qid, x.vec_id, row_number() OVER (
-                    PARTITION BY q.qid
-                    ORDER BY floor(list_cosine_similarity(x.v, q.qv)
-                             * 10000.0 + 0.505) / 10000.0 DESC, x.vec_id
-                ) AS rk
-                FROM q JOIN e x
-                  ON x.cid = q.cid AND x.vec_id <> q.qid
-            ) WHERE rk <= 5
-        ),
-        h AS (
-            SELECT b.qid, CAST(count(*) AS BIGINT) AS hits
-            FROM beam b JOIN etop t
-              ON t.qid = b.qid AND t.vec_id = b.node
-            GROUP BY b.qid
-        )
-        SELECT q.qid, CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
-               {sql_rnd("COALESCE(h.hits, 0) / 5.0", 4)} AS recall_at_5
-        FROM q LEFT JOIN h ON h.qid = q.qid
-    """,
-    scale=(
-        "Greedy beam search over the in-cell top-8 neighbor graph — "
-        "the HNSW-style QUERY path pairing emb_nndescent_round's "
-        "graph-CONSTRUCTION path: start at a deterministic entry "
-        "point (lowest vec_id in the query's cell), expand neighbors, "
-        "keep the 8 best by exact similarity to the query, expand "
-        "once more, return the top-5; recall graded against the exact "
-        "in-cell ranking. Two unrolled hops = the fixture graph's "
-        "diameter budget; every frontier is <= beam * degree = 64 "
-        "rows per query, every ranking rounds sims at 1e-4 with "
-        "vec_id ties. 100 TB: the graph lives sharded by cell, the "
-        "beam state is k node ids per query — the search cost is "
-        "hops * beam * degree dot products, independent of corpus "
-        "size; this op is the recall evidence for that trade."
-    ),
-)
-def sim_graph_beam_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-hop beam-8 graph search recall@5 vs the exact in-cell
-    top-5, per sampled query."""
-    from python_kinesis_streaming_spark.functions.vectors import dot
-    from python_kinesis_streaming_spark.llm.wave7 import (
-        _semdedup_assigned_pairs,
-    )
-
-    assigned, _ = _semdedup_assigned_pairs(spark, sf_dir)
-    e = assigned.select(
-        "vec_id",
-        "cid",
-        F.col("embedding").cast("array<double>").alias("v"),
-        "norm",
-    )
-    a, b = e.alias("a"), e.alias("b")
-    sim_ab = rnd(
-        dot(F.col("a.v"), F.col("b.v"))
-        / (F.col("a.norm") * F.col("b.norm")),
-        4,
-    )
-    edges = (
-        a.join(
-            b,
-            (F.col("b.cid") == F.col("a.cid"))
-            & (F.col("b.vec_id") != F.col("a.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src"),
-            F.col("b.vec_id").alias("dst"),
-            sim_ab.alias("s"),
-        )
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("src").orderBy(F.desc("s"), "dst")
-            ),
-        )
-        .where(F.col("rk") <= 8)
-        .select("src", "dst")
-        .localCheckpoint(eager=True)
-    )
-    q = e.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("qid"),
-        F.col("cid").alias("qcid"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qnorm"),
-    )
-    entry = (
-        q.join(e, F.col("cid") == F.col("qcid"))
-        .groupBy("qid")
-        .agg(F.min("vec_id").alias("node"))
-    )
-
-    def rescore_top(frontier: DataFrame, k: int) -> DataFrame:
-        scored = (
-            frontier.join(e, F.col("vec_id") == F.col("node"))
-            .join(q, "qid")
-            .where(F.col("node") != F.col("qid"))
-            .select(
-                "qid",
-                "node",
-                rnd(
-                    dot(F.col("v"), F.col("qv"))
-                    / (F.col("norm") * F.col("qnorm")),
-                    4,
-                ).alias("s"),
-            )
-        )
-        return (
-            scored.withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("qid").orderBy(
-                        F.desc("s"), "node"
-                    )
-                ),
-            )
-            .where(F.col("rk") <= k)
-            .select("qid", "node")
-        )
-
-    f1 = entry.select("qid", "node").unionByName(
-        entry.join(edges, entry.node == edges.src).select(
-            "qid", F.col("dst").alias("node")
-        )
-    ).distinct()
-    b1 = rescore_top(f1, 8).localCheckpoint(eager=True)
-    f2 = b1.unionByName(
-        b1.join(edges, b1.node == edges.src).select(
-            "qid", F.col("dst").alias("node")
-        )
-    ).distinct()
-    beam = rescore_top(f2, 5)
-    ex = (
-        q.join(
-            e,
-            (F.col("cid") == F.col("qcid"))
-            & (F.col("vec_id") != F.col("qid")),
-        )
-        .select(
-            "qid",
-            "vec_id",
-            rnd(
-                dot(F.col("v"), F.col("qv"))
-                / (F.col("norm") * F.col("qnorm")),
-                4,
-            ).alias("s"),
-        )
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("s"), "vec_id")
-            ),
-        )
-        .where(F.col("rk") <= 5)
-        .select("qid", "vec_id")
-    )
-    h = (
-        beam.join(ex, (beam.qid == ex.qid) & (beam.node == ex.vec_id))
-        .groupBy(beam.qid)
-        .agg(F.count(F.lit(1)).cast("long").alias("hits"))
-    )
-    return (
-        q.select("qid")
-        .join(h, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            rnd(
-                F.coalesce(F.col("hits"), F.lit(0)) / F.lit(5.0), 4
-            ).alias("recall_at_5"),
-        )
     )

@@ -1,8 +1,7 @@
 """Wave-15 pipeline ops (round 12, ninth batch) — CUPED variance
-reduction, Horvitz-Thompson estimation, PQ-ADC retrieval and span-mask
-planning.
+reduction, Horvitz-Thompson estimation and span-mask planning.
 
-Four capabilities extending the experimentation/estimation/ANN/
+Three capabilities extending the experimentation/estimation/
 training-prep story:
 
 - ``events_cuped_adjustment``: CUPED (Deng et al. 2013) — the
@@ -13,11 +12,6 @@ training-prep story:
   deterministic hash-rank sample at k in {50, 100, 200} — the
   estimator that turns sample_reservoir_hash's sample into unbiased
   corpus totals, with measured relative error per k.
-- ``sim_pq_adc_recall``: product-quantization ASYMMETRIC distance
-  computation (Jégou et al. 2011) — the query path for sim_pq_assign's
-  codes: a 64-entry query-to-codeword LUT replaces full-vector
-  arithmetic; recall@10 vs the exact ranking quantifies the
-  compression trade.
 - ``corpus_span_mask_plan``: T5-style span-corruption planning — one
   deterministic 3-token span per 20-token block (exactly 15% mask,
   mean span 3) placed by the md5 hash of (doc, block); per-doc and
@@ -34,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import cents, rnd, sql_rnd
-from python_kinesis_streaming_spark.functions.vectors import sq_l2
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -256,201 +249,6 @@ def sample_ht_estimator_audit(
         rnd(
             F.abs(est - F.col("exact_total")) / F.col("exact_total"), 4
         ).alias("rel_err"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# PQ asymmetric distance computation (ADC) recall
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "sim_pq_adc_recall",
-    oracle=f"""
-        WITH e AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb
-            FROM embeddings
-        ),
-        sub AS (
-            SELECT vec_id, s.s AS s,
-                   emb[CAST(s.s*8+1 AS BIGINT) : CAST(s.s*8+8 AS BIGINT)]
-                       AS v
-            FROM e, unnest(range(8)) AS s(s)
-        ),
-        cw AS (
-            SELECT vec_id AS code, s, v AS c FROM sub WHERE vec_id < 8
-        ),
-        d AS (
-            SELECT sub.vec_id, sub.s, cw.code,
-                   CAST(floor(list_aggregate(
-                       list_transform(range(1, 9),
-                           i -> (sub.v[i]-cw.c[i])*(sub.v[i]-cw.c[i])),
-                       'sum') * 10000 + 0.505) AS BIGINT) AS idist
-            FROM sub JOIN cw USING (s)
-        ),
-        codes AS (
-            SELECT vec_id, s, code FROM (
-                SELECT vec_id, s, code,
-                       row_number() OVER (PARTITION BY vec_id, s
-                                          ORDER BY idist, code) AS rk
-                FROM d
-            ) WHERE rk = 1
-        ),
-        q AS (SELECT s, v AS qv FROM sub WHERE vec_id = 0),
-        lut AS (
-            SELECT q.s, cw.code,
-                   CAST(floor(list_aggregate(
-                       list_transform(range(1, 9),
-                           i -> (q.qv[i]-cw.c[i])*(q.qv[i]-cw.c[i])),
-                       'sum') * 1000000.0 + 0.505) AS BIGINT) AS ld
-            FROM q JOIN cw USING (s)
-        ),
-        adc AS (
-            SELECT c.vec_id, CAST(sum(l.ld) AS BIGINT) AS adc_micro
-            FROM codes c JOIN lut l ON l.s = c.s AND l.code = c.code
-            WHERE c.vec_id <> 0
-            GROUP BY c.vec_id
-        ),
-        atop AS (
-            SELECT vec_id FROM (
-                SELECT vec_id, row_number() OVER (
-                    ORDER BY adc_micro, vec_id) AS rk FROM adc
-            ) WHERE rk <= 10
-        ),
-        ex AS (
-            SELECT x.vec_id,
-                   CAST(floor(list_aggregate(
-                       list_transform(range(1, 65),
-                           i -> (x.emb[i]-qq.emb[i])*(x.emb[i]-qq.emb[i])),
-                       'sum') * 1000000.0 + 0.505) AS BIGINT) AS d_micro
-            FROM e x CROSS JOIN (SELECT emb FROM e WHERE vec_id = 0) qq
-            WHERE x.vec_id <> 0
-        ),
-        etop AS (
-            SELECT vec_id, rk FROM (
-                SELECT vec_id, row_number() OVER (
-                    ORDER BY d_micro, vec_id) AS rk FROM ex
-            ) WHERE rk <= 10
-        )
-        SELECT et.rk AS exact_rank, et.vec_id,
-               CAST(CASE WHEN a.vec_id IS NOT NULL THEN 1 ELSE 0 END
-                    AS BIGINT) AS in_adc_top10,
-               (SELECT {sql_rnd("sum(CASE WHEN a2.vec_id IS NOT NULL "
-                                "THEN 1 ELSE 0 END) / 10.0", 4)}
-                FROM etop et2 LEFT JOIN atop a2
-                  ON a2.vec_id = et2.vec_id) AS recall_at_10
-        FROM etop et LEFT JOIN atop a ON a.vec_id = et.vec_id
-    """,
-    scale=(
-        "PQ asymmetric distance computation (Jegou et al. 2011) — the "
-        "QUERY path for sim_pq_assign's codes: the query builds one "
-        "64-entry LUT (8 subspaces x 8 codewords, exact squared "
-        "distances frozen to integer micro), and every database "
-        "vector's approximate distance is just 8 LUT adds on its "
-        "codes — no full-vector arithmetic at query time. Recall@10 "
-        "of the ADC ranking vs the exact ranking is the compression "
-        "trade quantified (8 bytes/vector vs 256). Both engines "
-        "derive identical codes (the integer-ordinal argmin), "
-        "identical LUTs and identical BIGINT ADC sums. 100 TB: codes "
-        "are 32x smaller than vectors — the scan becomes "
-        "memory-bandwidth-bound LUT adds; the exact leg here exists "
-        "only to grade recall at test scale."
-    ),
-)
-def sim_pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-10 flagged by ADC-top-10 membership + recall@10."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("emb")
-    )
-    sub = emb.select(
-        "vec_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(0, 7), "
-                "s -> struct(s AS s, slice(emb, s*8+1, 8) AS v))"
-            )
-        ).alias("e"),
-    ).select("vec_id", F.col("e.s").alias("s"), F.col("e.v").alias("v"))
-    cw = sub.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("code"), "s", F.col("v").alias("c")
-    )
-    sqd = sq_l2("v", "c")
-    d = sub.join(F.broadcast(cw), "s").select(
-        "vec_id",
-        "s",
-        "code",
-        F.floor(sqd * F.lit(10000) + F.lit(0.505)).cast("long").alias(
-            "idist"
-        ),
-    )
-    codes = (
-        d.withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("vec_id", "s").orderBy("idist", "code")
-            ),
-        )
-        .where(F.col("rk") == 1)
-        .select("vec_id", "s", "code")
-    )
-    q = sub.where(F.col("vec_id") == 0).select(
-        "s", F.col("v").alias("qv")
-    )
-    lutd = sq_l2("qv", "c")
-    lut = q.join(cw, "s").select(
-        "s",
-        "code",
-        F.floor(lutd * F.lit(1000000.0) + F.lit(0.505))
-        .cast("long")
-        .alias("ld"),
-    )
-    adc = (
-        codes.where(F.col("vec_id") != 0)
-        .join(F.broadcast(lut), ["s", "code"])
-        .groupBy("vec_id")
-        .agg(F.sum("ld").cast("long").alias("adc_micro"))
-    )
-    atop = (
-        adc.withColumn(
-            "rk",
-            F.row_number().over(Window.orderBy("adc_micro", "vec_id")),
-        )
-        .where(F.col("rk") <= 10)
-        .select("vec_id")
-        .withColumn("in_adc", F.lit(1))
-    )
-    qq = emb.where(F.col("vec_id") == 0).select(
-        F.col("emb").alias("qemb")
-    )
-    exd = sq_l2("emb", "qemb")
-    ex = emb.where(F.col("vec_id") != 0).crossJoin(F.broadcast(qq)).select(
-        "vec_id",
-        F.floor(exd * F.lit(1000000.0) + F.lit(0.505))
-        .cast("long")
-        .alias("d_micro"),
-    )
-    etop = (
-        ex.withColumn(
-            "rk", F.row_number().over(Window.orderBy("d_micro", "vec_id"))
-        )
-        .where(F.col("rk") <= 10)
-        .select(F.col("rk").alias("exact_rank"), "vec_id")
-    )
-    joined = etop.join(atop, "vec_id", "left").select(
-        "exact_rank",
-        "vec_id",
-        F.coalesce(F.col("in_adc"), F.lit(0)).cast("long").alias(
-            "in_adc_top10"
-        ),
-    )
-    recall = joined.agg(
-        rnd(F.sum("in_adc_top10") / F.lit(10.0), 4).alias("recall_at_10")
-    )
-    return joined.crossJoin(F.broadcast(recall)).select(
-        F.col("exact_rank").cast("long").alias("exact_rank"),
-        "vec_id",
-        "in_adc_top10",
-        "recall_at_10",
     )
 
 

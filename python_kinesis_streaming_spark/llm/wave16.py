@@ -1,17 +1,13 @@
 """Wave-16 pipeline ops (round 12, tenth batch) — power analysis,
-hubness, priority sampling and Poisson-bootstrap intervals.
+priority sampling and Poisson-bootstrap intervals.
 
-Four capabilities extending the experimentation/ANN-pathology/
-estimation/uncertainty story:
+Three capabilities extending the experimentation/estimation/
+uncertainty story:
 
 - ``events_power_analysis_mde``: two-sample minimum-detectable-effect
   and required-n calculator from the measured metric variance — the
   sizing table read before launching any A/B; z constants are shared
   Python literals, everything else exact BIGINT moments.
-- ``sim_hubness_audit``: hubness (Radovanovic et al. 2010) — the
-  k-occurrence distribution of in-cell 10-NN lists, its skewness and
-  antihub rate; the high-dimensional pathology that silently breaks
-  kNN ground truth, paired with the distance-contrast audit.
 - ``sample_pps_priority_audit``: priority sampling (Duffield et al.
   2007) — weight-proportional sampling via deterministic hash
   priorities q = w/u, threshold estimator max(w, tau), measured
@@ -129,167 +125,6 @@ def events_power_analysis_mde(
         )
         .cast("long")
         .alias("n_per_arm_for_1pct"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# hubness audit over in-cell 10-NN lists
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "sim_hubness_audit",
-    oracle=f"""
-        WITH cent AS (
-            SELECT vec_id AS cid, embedding::DOUBLE[] AS cv
-            FROM embeddings WHERE vec_id < 8
-        ),
-        assigned AS (
-            SELECT e.vec_id,
-                   min_by(c.cid,
-                          CAST(floor(list_sum(list_transform(range(1, 65),
-                               i -> (e.embedding[CAST(i AS INTEGER)]::DOUBLE
-                                     - c.cv[CAST(i AS INTEGER)]) ^ 2))
-                               * 1000000.0 + 0.505) AS BIGINT) * 8 + c.cid)
-                       AS cid
-            FROM embeddings e, cent c
-            GROUP BY e.vec_id
-        ),
-        e AS (
-            SELECT a.vec_id, a.cid, x.embedding::DOUBLE[] AS v
-            FROM assigned a JOIN embeddings x USING (vec_id)
-        ),
-        edges AS (
-            SELECT src, dst FROM (
-                SELECT a.vec_id AS src, b.vec_id AS dst,
-                       row_number() OVER (
-                           PARTITION BY a.vec_id
-                           ORDER BY floor(list_cosine_similarity(a.v, b.v)
-                                    * 10000.0 + 0.505) / 10000.0 DESC,
-                                    b.vec_id
-                       ) AS rk
-                FROM e a JOIN e b
-                  ON b.cid = a.cid AND b.vec_id <> a.vec_id
-            ) WHERE rk <= 10
-        ),
-        kocc AS (
-            SELECT e.vec_id,
-                   CAST(COALESCE(k.c, 0) AS BIGINT) AS nk
-            FROM e LEFT JOIN (
-                SELECT dst, CAST(count(*) AS BIGINT) AS c
-                FROM edges GROUP BY dst
-            ) k ON k.dst = e.vec_id
-        ),
-        m AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(nk) AS BIGINT) AS s1,
-                   CAST(sum(nk * nk) AS BIGINT) AS s2,
-                   CAST(sum(nk * nk * nk) AS BIGINT) AS s3,
-                   CAST(max(nk) AS BIGINT) AS max_k,
-                   CAST(sum(CASE WHEN nk = 0 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_antihubs
-            FROM kocc
-        )
-        SELECT n,
-               {sql_rnd("s1 * 1.0 / n", 4)} AS mean_k,
-               {sql_rnd(
-                   "(s3 * 1.0 / n"
-                   " - 3.0 * (s1 * 1.0 / n) * (s2 * 1.0 / n)"
-                   " + 2.0 * (s1 * 1.0 / n) * (s1 * 1.0 / n)"
-                   "   * (s1 * 1.0 / n))"
-                   " / pow(s2 * 1.0 / n"
-                   "       - (s1 * 1.0 / n) * (s1 * 1.0 / n), 1.5)", 4
-               )} AS skewness,
-               max_k,
-               {sql_rnd("n_antihubs * 1.0 / n", 4)} AS antihub_rate
-        FROM m
-    """,
-    scale=(
-        "Hubness audit (Radovanovic et al. 2010): the k-occurrence "
-        "N_k(x) = how often x appears in other points' 10-NN lists; "
-        "its skewness grows with intrinsic dimensionality, and hubs/"
-        "antihubs silently distort every kNN-derived ground truth "
-        "(SemDeDup pairs, NN-descent graphs, beam entry points). "
-        "Paired with sim_distance_contrast_audit, this is the "
-        "two-statistic health check run before trusting the space. "
-        "The NN lists are the in-cell top-10 (cell-blocked, never "
-        "all-pairs); N_k values are exact BIGINT counts and the "
-        "skewness a closed form of integer moment sums (counts are "
-        "bounded by cell size, cubes stay far inside int64). "
-        "100 TB: the edge table is N*k rows sharded by cell; the "
-        "moment agg is 1 row."
-    ),
-)
-def sim_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-occurrence skewness + antihub rate over in-cell 10-NN lists."""
-    from python_kinesis_streaming_spark.functions.vectors import dot
-    from python_kinesis_streaming_spark.llm.wave7 import (
-        _semdedup_assigned_pairs,
-    )
-
-    assigned, _ = _semdedup_assigned_pairs(spark, sf_dir)
-    e = assigned.select("vec_id", "cid", "embedding", "norm")
-    a, b = e.alias("a"), e.alias("b")
-    sim_ab = rnd(
-        dot(F.col("a.embedding"), F.col("b.embedding"))
-        / (F.col("a.norm") * F.col("b.norm")),
-        4,
-    )
-    edges = (
-        a.join(
-            b,
-            (F.col("b.cid") == F.col("a.cid"))
-            & (F.col("b.vec_id") != F.col("a.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src"),
-            F.col("b.vec_id").alias("dst"),
-            sim_ab.alias("s"),
-        )
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("src").orderBy(F.desc("s"), "dst")
-            ),
-        )
-        .where(F.col("rk") <= 10)
-        .select("src", "dst")
-    )
-    k = edges.groupBy("dst").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    kocc = (
-        e.select("vec_id")
-        .join(k, e.vec_id == k.dst, "left")
-        .select(
-            F.coalesce(F.col("c"), F.lit(0)).cast("long").alias("nk")
-        )
-    )
-    m = kocc.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("nk").cast("long").alias("s1"),
-        F.sum(F.col("nk") * F.col("nk")).cast("long").alias("s2"),
-        F.sum(F.col("nk") * F.col("nk") * F.col("nk"))
-        .cast("long")
-        .alias("s3"),
-        F.max("nk").cast("long").alias("max_k"),
-        F.sum(F.when(F.col("nk") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_antihubs"),
-    )
-    m1 = F.col("s1") * F.lit(1.0) / F.col("n")
-    m2 = F.col("s2") * F.lit(1.0) / F.col("n")
-    m3 = F.col("s3") * F.lit(1.0) / F.col("n")
-    return m.select(
-        "n",
-        rnd(m1, 4).alias("mean_k"),
-        rnd(
-            (m3 - F.lit(3.0) * m1 * m2 + F.lit(2.0) * m1 * m1 * m1)
-            / F.pow(m2 - m1 * m1, F.lit(1.5)),
-            4,
-        ).alias("skewness"),
-        "max_k",
-        rnd(F.col("n_antihubs") * F.lit(1.0) / F.col("n"), 4).alias(
-            "antihub_rate"
-        ),
     )
 
 

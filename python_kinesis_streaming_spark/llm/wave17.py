@@ -1,19 +1,14 @@
 """Wave-17 pipeline ops (round 12, eleventh batch) — lexical
-diversity, link prediction, Bayesian A/B and context-window
-truncation planning.
+diversity, Bayesian A/B and context-window truncation planning.
 
-Four capabilities extending the corpus-quality/graph/
-experimentation/training-prep story:
+Three capabilities extending the corpus-quality/experimentation/
+training-prep story:
 
 - ``text_mattr_lexical_diversity``: moving-average type-token ratio
   (Covington & McFall 2010) over non-overlapping 50-token windows —
   the length-robust lexical-diversity statistic (plain TTR collapses
   with document length; Heaps' law fits growth, MATTR scores docs);
   per-window TTRs are exact rationals (distinct*20000 micro).
-- ``graph_adamic_adar_linkpred``: Adamic-Adar link prediction over
-  the symmetrized in-cell 8-NN graph — AA(a,b) = sum 1/ln(deg(z))
-  over common neighbors, per-term frozen to integer micro; the top-20
-  predicted links.
 - ``events_bayes_ab_posterior``: Bayesian A/B on conversion (hash
   split, purchase conversion) — posterior P(B>A) via the documented
   logistic approximation to the normal CDF (1/(1+exp(-1.702 z))),
@@ -30,7 +25,6 @@ literal tables shared verbatim between engines.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.registry import op
@@ -124,173 +118,6 @@ def text_mattr_lexical_diversity(
         ).alias("mattr"),
         rnd(F.min("ttr_micro") / F.lit(1000000.0), 4).alias("min_ttr"),
         rnd(F.max("ttr_micro") / F.lit(1000000.0), 4).alias("max_ttr"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Adamic-Adar link prediction on the in-cell graph
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "graph_adamic_adar_linkpred",
-    oracle=f"""
-        WITH cent AS (
-            SELECT vec_id AS cid, embedding::DOUBLE[] AS cv
-            FROM embeddings WHERE vec_id < 8
-        ),
-        assigned AS (
-            SELECT e.vec_id,
-                   min_by(c.cid,
-                          CAST(floor(list_sum(list_transform(range(1, 65),
-                               i -> (e.embedding[CAST(i AS INTEGER)]::DOUBLE
-                                     - c.cv[CAST(i AS INTEGER)]) ^ 2))
-                               * 1000000.0 + 0.505) AS BIGINT) * 8 + c.cid)
-                       AS cid
-            FROM embeddings e, cent c
-            GROUP BY e.vec_id
-        ),
-        e AS (
-            SELECT a.vec_id, a.cid, x.embedding::DOUBLE[] AS v
-            FROM assigned a JOIN embeddings x USING (vec_id)
-        ),
-        knn AS (
-            SELECT src, dst FROM (
-                SELECT a.vec_id AS src, b.vec_id AS dst,
-                       row_number() OVER (
-                           PARTITION BY a.vec_id
-                           ORDER BY floor(list_cosine_similarity(a.v, b.v)
-                                    * 10000.0 + 0.505) / 10000.0 DESC,
-                                    b.vec_id
-                       ) AS rk
-                FROM e a JOIN e b
-                  ON b.cid = a.cid AND b.vec_id <> a.vec_id
-            ) WHERE rk <= 8
-        ),
-        und AS (
-            SELECT src, dst FROM knn
-            UNION
-            SELECT dst AS src, src AS dst FROM knn
-        ),
-        deg AS (
-            SELECT src AS node, CAST(count(*) AS BIGINT) AS degree
-            FROM und GROUP BY src
-        ),
-        cand AS (
-            SELECT e1.src AS a, e2.src AS b, e1.dst AS z
-            FROM und e1 JOIN und e2
-              ON e2.dst = e1.dst AND e1.src < e2.src
-            WHERE NOT EXISTS (
-                SELECT 1 FROM und x
-                WHERE x.src = e1.src AND x.dst = e2.src
-            )
-        ),
-        aa AS (
-            SELECT c.a, c.b,
-                   CAST(count(*) AS BIGINT) AS n_common,
-                   CAST(sum(CAST(floor(1000000.0 / ln(d.degree)
-                        + 0.505) AS BIGINT)) AS BIGINT) AS aa_micro
-            FROM cand c JOIN deg d ON d.node = c.z
-            GROUP BY c.a, c.b
-        )
-        SELECT a, b, n_common,
-               {sql_rnd("aa_micro / 1000000.0", 4)} AS aa_score
-        FROM aa
-        ORDER BY aa_micro DESC, a, b
-        LIMIT 20
-    """,
-    scale=(
-        "Adamic-Adar link prediction (Adamic & Adar 2003) on the "
-        "symmetrized in-cell 8-NN graph: AA(a,b) = sum over common "
-        "neighbors z of 1/ln(deg(z)) — rare shared neighbors count "
-        "more. The missing-edge candidates are 2-hop wedges within "
-        "cells (bounded by cell size, never all-pairs); per-neighbor "
-        "terms freeze to integer micro before the per-pair BIGINT "
-        "sum (ln ulps can't reorder ranks), and the top-20 is "
-        "orderBy+limit. In the pipeline this IS the edge-repair "
-        "proposal step for the NN-descent graph: high-AA non-edges "
-        "are exactly the candidates the next descent round should "
-        "test. 100 TB: wedges shard by cell; degree is a |V|-key "
-        "agg; the join order (wedge build -> degree broadcast) keeps "
-        "everything edge-count-bounded."
-    ),
-)
-def graph_adamic_adar_linkpred(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Top-20 Adamic-Adar predicted links on the in-cell 8-NN graph."""
-    from python_kinesis_streaming_spark.functions.vectors import dot
-    from python_kinesis_streaming_spark.llm.wave7 import (
-        _semdedup_assigned_pairs,
-    )
-
-    assigned, _ = _semdedup_assigned_pairs(spark, sf_dir)
-    e = assigned.select("vec_id", "cid", "embedding", "norm")
-    a, b = e.alias("a"), e.alias("b")
-    sim_ab = rnd(
-        dot(F.col("a.embedding"), F.col("b.embedding"))
-        / (F.col("a.norm") * F.col("b.norm")),
-        4,
-    )
-    knn = (
-        a.join(
-            b,
-            (F.col("b.cid") == F.col("a.cid"))
-            & (F.col("b.vec_id") != F.col("a.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src"),
-            F.col("b.vec_id").alias("dst"),
-            sim_ab.alias("s"),
-        )
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("src").orderBy(F.desc("s"), "dst")
-            ),
-        )
-        .where(F.col("rk") <= 8)
-        .select("src", "dst")
-    )
-    und = knn.unionByName(
-        knn.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    deg = und.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    )
-    e1 = und.select(F.col("src").alias("a"), F.col("dst").alias("z"))
-    e2 = und.select(F.col("src").alias("b"), F.col("dst").alias("z"))
-    wedges = e1.join(e2, "z").where(F.col("a") < F.col("b"))
-    edge_pairs = und.select(
-        F.col("src").alias("a"), F.col("dst").alias("b")
-    )
-    cand = wedges.join(edge_pairs, ["a", "b"], "left_anti")
-    aa = (
-        cand.join(deg, cand.z == deg.node)
-        .groupBy("a", "b")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_common"),
-            F.sum(
-                F.floor(
-                    F.lit(1000000.0) / F.log(F.col("degree"))
-                    + F.lit(0.505)
-                ).cast("long")
-            )
-            .cast("long")
-            .alias("aa_micro"),
-        )
-    )
-    return (
-        aa.orderBy(F.desc("aa_micro"), "a", "b")
-        .limit(20)
-        .select(
-            "a",
-            "b",
-            "n_common",
-            rnd(F.col("aa_micro") / F.lit(1000000.0), 4).alias(
-                "aa_score"
-            ),
-        )
     )
 
 

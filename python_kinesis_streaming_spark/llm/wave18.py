@@ -43,6 +43,7 @@ from python_kinesis_streaming_spark.llm.wave17 import (
     _LOGI_TABLE_SQL,
     _LOGI_ZMIN_MICRO,
 )
+from python_kinesis_streaming_spark.llm.similarity import vectors
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -615,9 +616,7 @@ def emb_ivf_staleness_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Per-cell staleness report: reassignment + distance + shift."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     cent = emb.where(
         (F.col("vec_id") < 10) & (F.col("vec_id") % 5 != 0)
     ).select(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))

@@ -31,6 +31,7 @@ from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.functions.vectors import centroid_ord, sq_l2
+from python_kinesis_streaming_spark.llm.similarity import vectors
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -407,9 +408,7 @@ _PQ_K = 4  # codewords per subspace (init: vec_id 0..3)
 )
 def emb_pq_train_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-subspace PQ Lloyd-iteration cost audit."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     sgrid = spark.range(1).select(
         F.explode(
             F.array(*[F.lit(s) for s in range(_PQ_NSUB)])

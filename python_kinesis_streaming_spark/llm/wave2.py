@@ -1,10 +1,10 @@
-"""Wave-2 pipeline ops (round 9) — retrieval-cascade and dedup-pipeline
-audits composed from the proven r1-r8 kernels.
+"""Wave-2 pipeline ops (round 9) — dedup-pipeline audits composed from
+the proven r1-r8 kernels.
 
-VERDICT r8 item 7 asked for two compositions (an nprobe-parameterized
-IVF sweep and the PCA/variance-prune → truncated-prefilter → exact
-rerank cascade); the rest round out the training-data-pipeline story:
-a dedup stage funnel, a train/test split leakage audit, a candidate-
+The two retrieval-cascade compositions of this round (the nprobe sweep
+and the truncated-prefilter cascade) live in ``llm/similarity.py``;
+the ops here round out the training-data-pipeline story: a dedup stage
+funnel, a train/test split leakage audit, a candidate-
 generator comparison, PII scrub statistics, per-shard embedding
 drift, and a STREAMING MinHash dedup (the one stateful op here — an
 applyInPandasWithState kernel whose body is nested for cloudpickle-by-
@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
-from python_kinesis_streaming_spark.functions.vectors import cosine
 from python_kinesis_streaming_spark.llm.dedup import (
     LSH_BANDS,
     LSH_ROWS,
@@ -33,7 +32,6 @@ from python_kinesis_streaming_spark.llm.dedup import (
     minhash_signatures,
     word_shingles,
 )
-from python_kinesis_streaming_spark.llm.similarity import ivf_centroid_dists
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -130,415 +128,6 @@ def _confirmed_pairs(pairs: DataFrame, sh: DataFrame) -> DataFrame:
             >= F.col("sa.n") + F.col("sb.n") - F.col("isect")
         )
         .select("doc_a", "doc_b")
-    )
-
-
-# ---------------------------------------------------------------------------
-# retrieval cascade (VERDICT r8 item 7)
-# ---------------------------------------------------------------------------
-
-_IVF_CENTROID_SQL = """
-        c AS (
-            SELECT j.j,
-                   list_transform(
-                       generate_series(0, 63),
-                       d -> (((j.j * 37 + d * 11) % 19) - 9) / 9.0
-                   ) AS cv
-            FROM generate_series(0, 15) j(j)
-        ),
-        e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        ),
-        dist AS (
-            SELECT e.vec_id, c.j,
-                   floor(list_sum(list_transform(
-                       generate_series(1, 64),
-                       i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i])
-                   )) * 1000000.0 + 0.505) / 1000000.0 AS d2
-            FROM e, c
-        ),
-        ranked AS (
-            SELECT vec_id, j,
-                   row_number() OVER (
-                       PARTITION BY vec_id ORDER BY d2, j
-                   ) AS rk
-            FROM dist
-        )"""
-
-
-@op(
-    "sim_ivf_nprobe_sweep",
-    oracle=f"""
-        WITH {_IVF_CENTROID_SQL},
-        assign AS (SELECT vec_id, j AS bucket FROM ranked WHERE rk = 1),
-        probes AS (
-            SELECT vec_id AS qid, j AS bucket, rk AS probe_rank
-            FROM ranked WHERE rk <= 4 AND vec_id % 50 = 0
-        ),
-        cand AS (
-            SELECT p.qid, a.vec_id, p.probe_rank,
-                   floor(list_cosine_similarity(eq.v, ev.v)
-                         * 10000.0 + 0.505) / 10000.0 AS sim
-            FROM probes p
-            JOIN assign a ON a.bucket = p.bucket
-            JOIN e eq ON eq.vec_id = p.qid
-            JOIN e ev ON ev.vec_id = a.vec_id
-            WHERE a.vec_id <> p.qid
-        ),
-        levels AS (SELECT * FROM (VALUES (1), (2), (4)) t(nprobe)),
-        lc AS (
-            SELECT l.nprobe, c2.qid, c2.vec_id, c2.sim
-            FROM levels l JOIN cand c2 ON c2.probe_rank <= l.nprobe
-        ),
-        atop AS (
-            SELECT nprobe, qid, vec_id FROM (
-                SELECT nprobe, qid, vec_id,
-                       row_number() OVER (
-                           PARTITION BY nprobe, qid
-                           ORDER BY sim DESC, vec_id
-                       ) AS rank
-                FROM lc
-            ) WHERE rank <= 5
-        ),
-        ex AS (
-            SELECT q.vec_id AS qid, v.vec_id,
-                   floor(list_cosine_similarity(q.v, v.v)
-                         * 10000.0 + 0.505) / 10000.0 AS sim
-            FROM e q JOIN e v ON v.vec_id <> q.vec_id
-            WHERE q.vec_id % 50 = 0
-        ),
-        etop AS (
-            SELECT qid, vec_id FROM (
-                SELECT qid, vec_id,
-                       row_number() OVER (
-                           PARTITION BY qid ORDER BY sim DESC, vec_id
-                       ) AS rank
-                FROM ex
-            ) WHERE rank <= 5
-        ),
-        candn AS (
-            SELECT nprobe, qid, count(*) AS cand_n FROM lc GROUP BY 1, 2
-        ),
-        hits AS (
-            SELECT a.nprobe, a.qid, count(*) AS h
-            FROM atop a
-            JOIN etop e2 ON e2.qid = a.qid AND e2.vec_id = a.vec_id
-            GROUP BY 1, 2
-        ),
-        spine AS (
-            SELECT l.nprobe, e.vec_id AS qid FROM levels l, e
-            WHERE e.vec_id % 50 = 0
-        )
-        SELECT CAST(s.nprobe AS INTEGER) AS nprobe,
-               CAST(count(*) AS BIGINT) AS n_queries,
-               {sql_rnd("avg(COALESCE(c3.cand_n, 0))")} AS avg_candidates,
-               {sql_rnd("avg(COALESCE(h.h, 0) / 5.0)", 4)} AS mean_recall_at_5
-        FROM spine s
-        LEFT JOIN candn c3 ON c3.nprobe = s.nprobe AND c3.qid = s.qid
-        LEFT JOIN hits h ON h.nprobe = s.nprobe AND h.qid = s.qid
-        GROUP BY s.nprobe
-    """,
-    scale=(
-        "The nprobe knob of sim_ann_ivf made measurable (VERDICT r8 item "
-        "7): one candidate build probing rank ≤ 4 lists, then nprobe ∈ "
-        "{1, 2, 4} evaluated by FILTERING that set on probe_rank — no "
-        "per-level rescans. Reports avg candidates scanned (cost) and "
-        "recall@5 vs the exact top-5 (quality) per level, the curve an "
-        "operator tunes nprobe on. Exact baseline runs only on the "
-        "1-in-50 query sample, so the full-scan term is |sample|·N, not "
-        "N²; the IVF side shuffles candidates, never the corpus. Both "
-        "engines round distances at 1e-6 and similarities at 1e-4 before "
-        "any ranking, ties break on vec_id."
-    ),
-)
-def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@5 vs candidates-scanned for IVF at nprobe = 1, 2, 4."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    tagged = emb.withColumn("ds", ivf_centroid_dists(F.col("v")))
-    assigned = tagged.select(
-        "vec_id", F.col("v").alias("cv"),
-        F.array_min("ds").getField("j").alias("bucket"),
-    )
-    probes = (
-        tagged.where(F.col("vec_id") % 50 == 0)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.posexplode(F.slice(F.array_sort("ds"), 1, 4)).alias("pos", "s"),
-        )
-        .select(
-            "qid", "qv",
-            (F.col("pos") + 1).alias("probe_rank"),
-            F.col("s.j").alias("bucket"),
-        )
-    )
-    cand = (
-        probes.join(assigned, "bucket")
-        .where(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id", "probe_rank",
-            rnd(cosine(F.col("qv"), F.col("cv")), 4).alias("sim"),
-        )
-    )
-    levels = F.explode(F.array(F.lit(1), F.lit(2), F.lit(4)))
-    lc = cand.withColumn("nprobe", levels).where(
-        F.col("probe_rank") <= F.col("nprobe")
-    )
-    atop = (
-        lc.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("nprobe", "qid").orderBy(
-                    F.desc("sim"), "vec_id"
-                )
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("nprobe", "qid", "vec_id")
-    )
-    q = tagged.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    ex = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id", rnd(cosine(F.col("qv"), F.col("v")), 4).alias("sim")
-        )
-    )
-    etop = (
-        ex.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("qid", "vec_id")
-    )
-    candn = lc.groupBy("nprobe", "qid").agg(F.count("*").alias("cand_n"))
-    hits = (
-        atop.join(etop, ["qid", "vec_id"])
-        .groupBy("nprobe", "qid")
-        .agg(F.count("*").alias("h"))
-    )
-    spine = q.select("qid").withColumn("nprobe", levels)
-    return (
-        spine.join(candn, ["nprobe", "qid"], "left")
-        .join(hits, ["nprobe", "qid"], "left")
-        .groupBy(F.col("nprobe").cast("int").alias("nprobe"))
-        .agg(
-            F.count("*").alias("n_queries"),
-            rnd(F.avg(F.coalesce(F.col("cand_n"), F.lit(0)))).alias(
-                "avg_candidates"
-            ),
-            rnd(
-                F.avg(F.coalesce(F.col("h"), F.lit(0)) / 5.0), 4
-            ).alias("mean_recall_at_5"),
-        )
-    )
-
-
-@op(
-    "sim_cascade_recall_audit",
-    oracle=f"""
-        WITH e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        ),
-        x AS (
-            SELECT vec_id, CAST(u.i AS INTEGER) AS j, v[u.i + 1] AS x
-            FROM e, unnest(range(0, 64)) AS u(i)
-        ),
-        vr AS (
-            SELECT j, {sql_rnd("var_pop(x)", 6)} AS variance
-            FROM x GROUP BY j
-        ),
-        dims AS (
-            SELECT j FROM (
-                SELECT j, row_number() OVER (
-                    ORDER BY variance DESC, j
-                ) AS rk FROM vr
-            ) WHERE rk <= 16
-        ),
-        xk AS (SELECT x.* FROM x JOIN dims USING (j)),
-        tn AS (
-            SELECT vec_id, sqrt(sum(x * x)) AS tn FROM xk GROUP BY vec_id
-        ),
-        td AS (
-            SELECT q.vec_id AS qid, v.vec_id, sum(q.x * v.x) AS tdot
-            FROM xk q JOIN xk v ON v.j = q.j AND v.vec_id <> q.vec_id
-            WHERE q.vec_id % 50 = 0
-            GROUP BY 1, 2
-        ),
-        ts AS (
-            SELECT td.qid, td.vec_id,
-                   {sql_rnd("td.tdot / (nq.tn * nv.tn)", 4)} AS tsim
-            FROM td
-            JOIN tn nq ON nq.vec_id = td.qid
-            JOIN tn nv ON nv.vec_id = td.vec_id
-        ),
-        cand AS (
-            SELECT qid, vec_id FROM (
-                SELECT qid, vec_id, row_number() OVER (
-                    PARTITION BY qid ORDER BY tsim DESC, vec_id
-                ) AS rank FROM ts
-            ) WHERE rank <= 50
-        ),
-        rr AS (
-            SELECT c.qid, c.vec_id,
-                   floor(list_cosine_similarity(q.v, v.v)
-                         * 10000.0 + 0.505) / 10000.0 AS sim
-            FROM cand c
-            JOIN e q ON q.vec_id = c.qid
-            JOIN e v ON v.vec_id = c.vec_id
-        ),
-        rtop AS (
-            SELECT qid, vec_id FROM (
-                SELECT qid, vec_id, row_number() OVER (
-                    PARTITION BY qid ORDER BY sim DESC, vec_id
-                ) AS rank FROM rr
-            ) WHERE rank <= 5
-        ),
-        ex AS (
-            SELECT q.vec_id AS qid, v.vec_id,
-                   floor(list_cosine_similarity(q.v, v.v)
-                         * 10000.0 + 0.505) / 10000.0 AS sim
-            FROM e q JOIN e v ON v.vec_id <> q.vec_id
-            WHERE q.vec_id % 50 = 0
-        ),
-        etop AS (
-            SELECT qid, vec_id FROM (
-                SELECT qid, vec_id, row_number() OVER (
-                    PARTITION BY qid ORDER BY sim DESC, vec_id
-                ) AS rank FROM ex
-            ) WHERE rank <= 5
-        ),
-        h AS (
-            SELECT r.qid, count(*) AS hits
-            FROM rtop r JOIN etop e2
-              ON e2.qid = r.qid AND e2.vec_id = r.vec_id
-            GROUP BY r.qid
-        )
-        SELECT CAST(q.vec_id AS BIGINT) AS qid,
-               CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
-               {sql_rnd("COALESCE(h.hits, 0) / 5.0", 4)} AS recall_at_5
-        FROM e q LEFT JOIN h ON h.qid = q.vec_id
-        WHERE q.vec_id % 50 = 0
-    """,
-    scale=(
-        "The composed retrieval cascade VERDICT r8 item 7 asked for: "
-        "emb_dim_variance_prune's top-16 dims become a truncated-cosine "
-        "prefilter (75% of the dot-product FLOPs dropped), its top-50 "
-        "candidates are reranked with the exact 64-dim cosine, and the "
-        "audit reports per-query recall@5 vs the exact full-scan top-5. "
-        "At 100 TB the truncated stage is the one that gets an index "
-        "(IVF/PQ over 16 dims); here it runs on the 1-in-50 query "
-        "sample so the audit costs |sample|·N·16, and the rerank only "
-        "|sample|·50·64. Variances round at 1e-6 before the dim cut, "
-        "similarities at 1e-4 before every ranking, ties on vec_id — "
-        "both engines pick identical dims, candidates and top-5."
-    ),
-)
-def sim_cascade_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncated-dims prefilter → exact rerank; per-query recall@5."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    x = emb.select(
-        "vec_id", F.posexplode(F.col("v")).alias("j", "x")
-    )
-    vr = x.groupBy("j").agg(rnd(F.var_pop("x"), 6).alias("variance"))
-    dims = (
-        vr.withColumn(
-            "rk",
-            F.row_number().over(Window.orderBy(F.desc("variance"), "j")),
-        )
-        .where(F.col("rk") <= 16)
-        .select("j")
-    )
-    xk = x.join(F.broadcast(dims), "j")
-    tn = xk.groupBy("vec_id").agg(
-        F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("tn")
-    )
-    xq = xk.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("qid"), "j", F.col("x").alias("xq")
-    )
-    td = (
-        xq.join(xk, "j")
-        .where(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "vec_id")
-        .agg(F.sum(F.col("xq") * F.col("x")).alias("tdot"))
-    )
-    nq, nv = tn.alias("nq"), tn.alias("nv")
-    ts = (
-        td.alias("td")
-        .join(nq, F.col("nq.vec_id") == F.col("td.qid"))
-        .join(nv, F.col("nv.vec_id") == F.col("td.vec_id"))
-        .select(
-            F.col("td.qid").alias("qid"),
-            F.col("td.vec_id").alias("vec_id"),
-            rnd(F.col("td.tdot") / (F.col("nq.tn") * F.col("nv.tn")), 4).alias(
-                "tsim"
-            ),
-        )
-    )
-    cand = (
-        ts.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("tsim"), "vec_id")
-            ),
-        )
-        .where(F.col("rank") <= 50)
-        .select("qid", "vec_id")
-    )
-    eq = emb.select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"))
-    rr = (
-        cand.join(F.broadcast(eq), "qid")
-        .join(emb, "vec_id")
-        .select("qid", "vec_id", rnd(cosine(F.col("qv"), F.col("v")), 4).alias("sim"))
-    )
-    rtop = (
-        rr.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("qid", "vec_id")
-    )
-    q = eq.where(F.col("qid") % 50 == 0)
-    ex = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", rnd(cosine(F.col("qv"), F.col("v")), 4).alias("sim"))
-    )
-    etop = (
-        ex.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("qid", "vec_id")
-    )
-    h = (
-        rtop.join(etop, ["qid", "vec_id"])
-        .groupBy("qid")
-        .agg(F.count("*").alias("hits"))
-    )
-    return (
-        q.select("qid")
-        .join(h, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            rnd(F.coalesce(F.col("hits"), F.lit(0)) / 5.0, 4).alias(
-                "recall_at_5"
-            ),
-        )
     )
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import cents, rnd, sql_rnd
+from python_kinesis_streaming_spark.llm.similarity import vectors
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -156,9 +157,7 @@ from python_kinesis_streaming_spark.sources.tables import load_table
 )
 def emb_whitening_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-row before/after whitening isotropy report (analytic z)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     x = emb.select(
         "vec_id", F.posexplode("v").alias("j", "xd")
     ).select(
@@ -446,9 +445,7 @@ def emb_sign_binarize_recall(
     """Recall@10 of 64-bit sign-Hamming retrieval vs exact cosine."""
     from python_kinesis_streaming_spark.functions.vectors import dot, l2norm
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     sig = emb.select(
         "vec_id",
         "v",

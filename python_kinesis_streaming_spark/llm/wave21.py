@@ -35,6 +35,7 @@ from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.functions.vectors import centroid_ord, sq_l2
+from python_kinesis_streaming_spark.llm.similarity import vectors
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -294,9 +295,7 @@ def emb_kmeans_init_sensitivity(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """8x8 init-sensitivity purity + cost report."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     ca = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
@@ -599,9 +598,7 @@ def emb_dim_redundancy_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Adjacent-dim Pearson r from frozen integer moments."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     x = emb.select(
         "vec_id", F.posexplode("v").alias("j", "xd")
     ).select(

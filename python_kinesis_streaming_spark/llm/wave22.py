@@ -45,6 +45,7 @@ from python_kinesis_streaming_spark.llm.wave2 import (
     _funnel_inject,
     _mh_cand_sql,
 )
+from python_kinesis_streaming_spark.llm.similarity import vectors
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -392,9 +393,7 @@ def emb_peak_outlier_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Exact median/MAD peak-coordinate screen with a BIGINT flag."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     peak = F.array_max(F.transform(F.col("v"), lambda t: F.abs(t)))
     e = emb.select(
         "vec_id",

@@ -1,5 +1,5 @@
 """Round-14 wave-24 ops (SURVEY §2.36): session planning, vocabulary
-growth, graph mixing, manifest pruning, ablation planning.
+growth, manifest pruning, ablation planning.
 
 - ``events_session_gap_sweep``: sessionize_30min's gap threshold is a
   guess — this op prices the WHOLE gap grid (session counts, mean
@@ -9,10 +9,6 @@ growth, graph mixing, manifest pruning, ablation planning.
   half-corpus vs full-corpus vocabulary sizes + hapax shares — the
   scaling signal that predicts tokenizer OOV when the corpus grows
   10x (pairs with text_vocab_coverage_curve / overlap matrix).
-- ``graph_degree_assortativity``: degree-degree Pearson r across the
-  user-event_type bipartite edges (do heavy users touch broad types?)
-  — the wave-21 BIGINT-moment Pearson template applied to graph
-  mixing.
 - ``lakehouse_manifest_prune_audit``: REAL manifest-level file
   skipping through sources/snapshots.py — eight range-append commits,
   then per literal probe interval: files pruned via footer stats,
@@ -321,142 +317,6 @@ def text_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 4,
             ).alias("beta_heaps"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# bipartite degree assortativity
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "graph_degree_assortativity",
-    oracle=f"""
-        WITH edges AS (
-            -- order-supplier bipartite edges (the user-type graph is
-            -- COMPLETE on this fixture — zero degree variance — so
-            -- assortativity lives on the lineitem graph)
-            SELECT DISTINCT l_orderkey AS o, l_suppkey AS s
-            FROM lineitem
-        ),
-        du AS (
-            SELECT o, CAST(count(*) AS BIGINT) AS deg_o
-            FROM edges GROUP BY o
-        ),
-        dt AS (
-            SELECT s, CAST(count(*) AS BIGINT) AS deg_s
-            FROM edges GROUP BY s
-        ),
-        j AS (
-            SELECT du.deg_o AS x, dt.deg_s AS y
-            FROM edges e
-            JOIN du ON du.o = e.o
-            JOIN dt ON dt.s = e.s
-        ),
-        mom AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(x) AS BIGINT) AS sx,
-                   CAST(sum(y) AS BIGINT) AS sy,
-                   CAST(sum(x * x) AS BIGINT) AS sxx,
-                   CAST(sum(y * y) AS BIGINT) AS syy,
-                   CAST(sum(x * y) AS BIGINT) AS sxy,
-                   CAST(max(x) AS BIGINT) AS max_deg_order,
-                   CAST(max(y) AS BIGINT) AS max_deg_supp
-            FROM j
-        )
-        SELECT n AS n_edges, max_deg_order, max_deg_supp,
-               {sql_rnd("sx * 1.0 / n", 4)} AS mean_deg_order,
-               {sql_rnd("sy * 1.0 / n", 4)} AS mean_deg_supp,
-               -- Pearson r from BIGINT moments; 1.0::DOUBLE
-               -- load-bearing (the r13 DECIMAL(38) lesson); the
-               -- zero-variance guard emits 0.0 in both engines
-               CASE WHEN (n * 1.0::DOUBLE * sxx - sx * 1.0::DOUBLE * sx)
-                         * (n * 1.0::DOUBLE * syy
-                            - sy * 1.0::DOUBLE * sy) > 0
-               THEN {sql_rnd(
-                   "(n * 1.0::DOUBLE * sxy - sx * 1.0::DOUBLE * sy)"
-                   " / sqrt((n * 1.0::DOUBLE * sxx"
-                   "         - sx * 1.0::DOUBLE * sx)"
-                   "        * (n * 1.0::DOUBLE * syy"
-                   "           - sy * 1.0::DOUBLE * sy))", 4
-               )} ELSE 0.0 END AS assortativity_r
-        FROM mom
-    """,
-    scale=(
-        "Degree-degree mixing of the order-supplier bipartite graph: "
-        "Pearson r of (order degree, supplier degree) over the "
-        "distinct edges — r near 0 means supplier popularity is "
-        "independent of order breadth (healthy marketplace mixing); "
-        "strongly negative means big orders concentrate on niche "
-        "suppliers. The wave-21 emb_dim_redundancy template verbatim: "
-        "all six moments are order-free BIGINT sums over the edge "
-        "list; r derived in identical-operand-order doubles, frozen "
-        "at 1e-4, with an explicit zero-variance guard both engines "
-        "(the user-type graph is complete on this fixture — that "
-        "degenerate case is exactly what the guard covers). Shape: "
-        "one distinct, two degree aggs, one equi-join back to edges "
-        "(broadcast supplier side), a 1-row moment agg. 100 TB: the "
-        "degree join co-partitions with the distinct's shuffle; "
-        "assortativity is the standard first diagnostic before "
-        "sampling a bipartite graph."
-    ),
-)
-def graph_degree_assortativity(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """One-row bipartite degree-assortativity report (order-supplier)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # edges feeds both degree aggs AND the moment join — cached so the
-    # distinct plans once (wave-22 Exchange-count precedent)
-    edges = (
-        li.select(
-            F.col("l_orderkey").alias("o"), F.col("l_suppkey").alias("s")
-        )
-        .distinct()
-        .cache()
-    )
-    du = edges.groupBy("o").agg(
-        F.count(F.lit(1)).cast("long").alias("deg_o")
-    )
-    dt = edges.groupBy("s").agg(
-        F.count(F.lit(1)).cast("long").alias("deg_s")
-    )
-    j = edges.join(du, "o").join(F.broadcast(dt), "s")
-    mom = j.select(
-        F.col("deg_o").alias("x"), F.col("deg_s").alias("y")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.max("x").cast("long").alias("max_deg_order"),
-        F.max("y").cast("long").alias("max_deg_supp"),
-    )
-    vx = F.col("n") * F.lit(1.0) * F.col("sxx") - F.col("sx") * F.lit(
-        1.0
-    ) * F.col("sx")
-    vy = F.col("n") * F.lit(1.0) * F.col("syy") - F.col("sy") * F.lit(
-        1.0
-    ) * F.col("sy")
-    rr = (
-        F.col("n") * F.lit(1.0) * F.col("sxy")
-        - F.col("sx") * F.lit(1.0) * F.col("sy")
-    ) / F.sqrt(vx * vy)
-    return mom.select(
-        F.col("n").alias("n_edges"),
-        "max_deg_order",
-        "max_deg_supp",
-        rnd(F.col("sx") * F.lit(1.0) / F.col("n"), 4).alias(
-            "mean_deg_order"
-        ),
-        rnd(F.col("sy") * F.lit(1.0) / F.col("n"), 4).alias(
-            "mean_deg_supp"
-        ),
-        F.when(vx * vy > 0, rnd(rr, 4))
-        .otherwise(F.lit(0.0))
-        .alias("assortativity_r"),
     )
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import cents, rnd, sql_rnd
+from python_kinesis_streaming_spark.llm.similarity import vectors
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -104,9 +105,7 @@ def emb_sign_bit_balance_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Per-bit balance + adjacent independence of sign signatures."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     bits = emb.select(
         "vec_id", F.posexplode("v").alias("j", "xd")
     ).select(

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from python_kinesis_streaming_spark.functions.rounding import cents, rnd, sql_rnd
 from python_kinesis_streaming_spark.llm.dedup import md5_hash64, _sql_hash64
+from python_kinesis_streaming_spark.llm.similarity import vectors
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -334,9 +335,7 @@ def emb_cluster_separation_db_index(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Per-cell spread + DB_i + the global Davies-Bouldin index."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     cid = (
         F.when(F.element_at("v", 1) >= 0, 8).otherwise(0)
         + F.when(F.element_at("v", 2) >= 0, 4).otherwise(0)

@@ -1,5 +1,5 @@
 """Round-14 wave-29 ops (SURVEY §2.41, r15 queue): out-of-order
-arrivals, truncation planning, bipartite cohesion, shard balance.
+arrivals, truncation planning, shard balance.
 
 - ``events_arrival_inversion_audit``: under hash-jittered arrivals,
   how often does a later event overtake an earlier one (the
@@ -10,10 +10,6 @@ arrivals, truncation planning, bipartite cohesion, shard balance.
   at literal dim cuts — the Matryoshka planning table (prefix recall
   measures outcomes; this measures the cause: how much signal mass
   the first D dims carry).
-- ``graph_bipartite_square_density``: 4-cycle (square) cohesion of
-  the order-supplier graph — supplier pairs sharing 2+ orders are
-  the bipartite analogue of triangles, the redundancy structure
-  sampling and link prediction both lean on.
 - ``corpus_shard_balance_plan``: hash-shard assignment balance (16
   shards): per-shard doc/token mass, imbalance ratio, largest-shard
   share vs the uniform ideal — the pre-write audit for
@@ -290,123 +286,6 @@ def emb_prefix_energy_share(
             - F.col("cut") / F.lit(64.0),
             4,
         ).alias("excess_share"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# bipartite square (4-cycle) density
-# ---------------------------------------------------------------------------
-
-
-@op(
-    "graph_bipartite_square_density",
-    oracle=f"""
-        WITH edges AS (
-            SELECT DISTINCT l_orderkey AS o, l_suppkey AS s
-            FROM lineitem
-        ),
-        co AS (
-            -- supplier pairs sharing an order (s1 < s2): the 2-path
-            -- census, bounded by per-order degree (C(deg,2) pairs)
-            SELECT a.s AS s1, b.s AS s2,
-                   CAST(count(*) AS BIGINT) AS m
-            FROM edges a JOIN edges b
-              ON b.o = a.o AND b.s > a.s
-            GROUP BY a.s, b.s
-        ),
-        agg AS (
-            SELECT CAST(count(*) AS BIGINT) AS n_copairs,
-                   CAST(sum(m) AS BIGINT) AS n_wedges,
-                   CAST(sum(CASE WHEN m >= 2 THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_copairs_2plus,
-                   CAST(sum(m * (m - 1) // 2) AS BIGINT) AS n_squares,
-                   CAST(max(m) AS BIGINT) AS max_shared
-            FROM co
-        ),
-        ne AS (SELECT CAST(count(*) AS BIGINT) AS n_edges FROM edges)
-        SELECT ne.n_edges, a.n_copairs, a.n_wedges, a.n_copairs_2plus,
-               a.n_squares, a.max_shared,
-               {sql_rnd("a.n_copairs_2plus * 1.0 / a.n_copairs", 6)}
-                   AS repeat_pair_share,
-               {sql_rnd("a.n_wedges * 1.0 / a.n_copairs", 4)}
-                   AS mean_shared_orders
-        FROM agg a CROSS JOIN ne
-    """,
-    scale=(
-        "Bipartite cohesion: supplier pairs co-occurring in an order "
-        "are 2-paths; a pair sharing >= 2 orders closes a 4-cycle "
-        "(the bipartite triangle). The square census — C(m,2) summed "
-        "over co-pair multiplicities, exact BIGINTs — measures "
-        "whether the order-supplier graph has real community "
-        "structure (squares abound) or is a random bipartite sprawl "
-        "(squares ~ 0), which decides if graph sampling / link "
-        "prediction (graph_adamic_adar_linkpred) has anything to "
-        "find. Pair volume is bounded per order by C(order-degree, "
-        "2) — never supplier-quadratic. Shape: ONE "
-        "order-keyed shuffle collecting per-order supplier arrays "
-        "(bounded by basket size), in-row pair expansion, a "
-        "pair-keyed agg, 1-row report — the order-keyed SMJ "
-        "self-join sorted the whole edge list twice and OOM'd a 1g "
-        "heap at x10, so the array shape is load-bearing, not "
-        "stylistic. 100 TB: one shuffle; skew = the largest "
-        "order's degree squared, bounded by basket size."
-    ),
-)
-def graph_bipartite_square_density(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """One-row 4-cycle cohesion census of the order-supplier graph."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # ONE shuffle: suppliers collected per order (arrays bounded by
-    # basket size), pairs generated IN-ROW — the order-keyed SMJ
-    # self-join sorted the whole edge list twice and blew a 1g heap
-    # at x10 (measured); this shape never materializes it
-    perorder = (
-        li.select(
-            F.col("l_orderkey").alias("o"), F.col("l_suppkey").alias("s")
-        )
-        .groupBy("o")
-        .agg(F.sort_array(F.collect_set("s")).alias("ss"))
-        .cache()  # feeds the pair explode AND the edge count
-    )
-    pair = perorder.select(
-        F.explode(
-            F.expr(
-                "flatten(transform(ss, (x, i) -> "
-                "transform(slice(ss, i + 2, size(ss) - i - 1), "
-                "y -> struct(x AS s1, y AS s2))))"
-            )
-        ).alias("p")
-    ).select(F.col("p.s1").alias("s1"), F.col("p.s2").alias("s2"))
-    co = pair.groupBy("s1", "s2").agg(
-        F.count(F.lit(1)).cast("long").alias("m")
-    )
-    agg = co.agg(
-        F.count(F.lit(1)).cast("long").alias("n_copairs"),
-        F.sum("m").cast("long").alias("n_wedges"),
-        F.sum(F.when(F.col("m") >= 2, 1).otherwise(0))
-        .cast("long")
-        .alias("n_copairs_2plus"),
-        F.sum(F.expr("m * (m - 1) div 2")).cast("long").alias("n_squares"),
-        F.max("m").cast("long").alias("max_shared"),
-    )
-    ne = perorder.agg(
-        F.sum(F.size("ss")).cast("long").alias("n_edges")
-    )
-    return agg.crossJoin(F.broadcast(ne)).select(
-        "n_edges",
-        "n_copairs",
-        "n_wedges",
-        "n_copairs_2plus",
-        "n_squares",
-        "max_shared",
-        rnd(
-            F.col("n_copairs_2plus") * F.lit(1.0) / F.col("n_copairs"),
-            6,
-        ).alias("repeat_pair_share"),
-        rnd(
-            F.col("n_wedges") * F.lit(1.0) / F.col("n_copairs"), 4
-        ).alias("mean_shared_orders"),
     )
 
 

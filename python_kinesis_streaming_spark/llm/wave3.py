@@ -1,19 +1,7 @@
-"""Wave-3 pipeline ops (round 10) — the VERDICT r9 item-7 cascade
-upgrade plus three training-data-pipeline audits that round out the
-corpus-planning story.
+"""Wave-3 pipeline ops (round 10) — three training-data-pipeline audits
+that round out the corpus-planning story (the round's cascade upgrade,
+``sim_cascade_sketch_recall_audit``, lives in ``llm/similarity.py``).
 
-- ``sim_cascade_sketch_recall_audit``: VERDICT r9 asked to fold PCA-16
-  into the retrieval cascade's prefilter. True 16-component PCA needs
-  16 deflation rounds (an unreviewable SQL oracle), so this audits the
-  public-knowledge ladder instead: the data-oblivious JL random
-  projection (control) vs a one-iteration randomized subspace sketch
-  (the range-finder of Halko, Martinsson & Tropp, "Finding structure
-  with randomness", SIAM Rev. 2011) — Y = Xᵀ(XΩ) with a deterministic
-  ±1 Rademacher Ω, two broadcast matvecs in both engines (the exact
-  pattern already proven by ``emb_pca_power_iter``). Measured offline
-  on this fixture: JL 0.54 < sketch 0.56 ≤ variance-16 0.60 < true
-  PCA-16 0.74 (the PCA gap needs QR orthogonalization, off-SQL) —
-  the op pins the recoverable part of that ladder with full parity.
 - ``corpus_contamination_ngram``: eval-set contamination screening —
   the audit every training run publishes before a benchmark claim
   (8-token-gram overlap between the train split and an injected eval
@@ -41,358 +29,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
-from python_kinesis_streaming_spark.functions.vectors import (
-    dot,
-    guarded_cos,
-    l2norm,
-    sql_guarded_cos,
-)
+from python_kinesis_streaming_spark.llm.similarity import _DIMS
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
-
-# ---------------------------------------------------------------------------
-# retrieval cascade with a randomized-subspace-sketch prefilter
-# ---------------------------------------------------------------------------
-
-_SKETCH_K = 16  # sketch columns (the "PCA-16" budget)
-_DIMS = 64  # embedding dimensionality (FIXTURES.md)
-
-
-@op(
-    "sim_cascade_sketch_recall_audit",
-    oracle=f"""
-        WITH e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        ),
-        x AS (
-            SELECT vec_id, CAST(u.i AS INTEGER) AS j, v[u.i + 1] AS x
-            FROM e, unnest(range(0, {_DIMS})) AS u(i)
-        ),
-        omega AS (
-            SELECT CAST(t1.j AS INTEGER) AS j, CAST(t2.c AS INTEGER) AS c,
-                   1 - 2 * (CAST(('0x' || substring(
-                       md5(t1.j || ':' || t2.c), 1, 1)) AS BIGINT) % 2) AS w
-            FROM range(0, {_DIMS}) t1(j), range(0, {_SKETCH_K}) t2(c)
-        ),
-        s AS (
-            SELECT x.vec_id, o.c, sum(x.x * o.w) AS p
-            FROM x JOIN omega o USING (j) GROUP BY x.vec_id, o.c
-        ),
-        y AS (
-            SELECT x.j, s.c, {sql_rnd("sum(x.x * s.p)", 6)} AS y
-            FROM x JOIN s ON s.vec_id = x.vec_id GROUP BY x.j, s.c
-        ),
-        z AS (
-            SELECT x.vec_id, y.c, sum(x.x * y.y) AS p
-            FROM x JOIN y USING (j) GROUP BY x.vec_id, y.c
-        ),
-        coords AS (
-            SELECT 'randproj16' AS prefilter, vec_id, c, p FROM s
-            UNION ALL
-            SELECT 'sketch16' AS prefilter, vec_id, c, p FROM z
-        ),
-        cn AS (
-            SELECT prefilter, vec_id, c, p,
-                   sqrt(sum(p * p) OVER (
-                       PARTITION BY prefilter, vec_id)) AS nn
-            FROM coords
-        ),
-        td AS (
-            SELECT q.prefilter, q.vec_id AS qid, v.vec_id,
-                   sum(q.p * v.p) AS tdot,
-                   max(q.nn) AS nnq, max(v.nn) AS nnv
-            FROM cn q
-            JOIN cn v ON v.prefilter = q.prefilter AND v.c = q.c
-                     AND v.vec_id <> q.vec_id
-            WHERE q.vec_id % 50 = 0
-            GROUP BY 1, 2, 3
-        ),
-        ts AS (
-            SELECT prefilter, qid, vec_id,
-                   {sql_rnd(sql_guarded_cos("tdot", "nnq", "nnv"), 4)} AS tsim
-            FROM td
-        ),
-        cand AS (
-            SELECT prefilter, qid, vec_id FROM (
-                SELECT prefilter, qid, vec_id, row_number() OVER (
-                    PARTITION BY prefilter, qid ORDER BY tsim DESC, vec_id
-                ) AS rank FROM ts
-            ) WHERE rank <= 50
-        ),
-        rr AS (
-            SELECT c.prefilter, c.qid, c.vec_id,
-                   floor(list_cosine_similarity(q.v, v.v)
-                         * 10000.0 + 0.505) / 10000.0 AS sim
-            FROM cand c
-            JOIN e q ON q.vec_id = c.qid
-            JOIN e v ON v.vec_id = c.vec_id
-        ),
-        rtop AS (
-            SELECT prefilter, qid, vec_id FROM (
-                SELECT prefilter, qid, vec_id, row_number() OVER (
-                    PARTITION BY prefilter, qid ORDER BY sim DESC, vec_id
-                ) AS rank FROM rr
-            ) WHERE rank <= 5
-        ),
-        ex AS (
-            SELECT q.vec_id AS qid, v.vec_id,
-                   floor(list_cosine_similarity(q.v, v.v)
-                         * 10000.0 + 0.505) / 10000.0 AS sim
-            FROM e q JOIN e v ON v.vec_id <> q.vec_id
-            WHERE q.vec_id % 50 = 0
-        ),
-        etop AS (
-            SELECT qid, vec_id FROM (
-                SELECT qid, vec_id, row_number() OVER (
-                    PARTITION BY qid ORDER BY sim DESC, vec_id
-                ) AS rank FROM ex
-            ) WHERE rank <= 5
-        ),
-        h AS (
-            SELECT r.prefilter, r.qid, count(*) AS hits
-            FROM rtop r JOIN etop e2
-              ON e2.qid = r.qid AND e2.vec_id = r.vec_id
-            GROUP BY r.prefilter, r.qid
-        ),
-        legs AS (SELECT unnest(['randproj16', 'sketch16']) AS prefilter)
-        SELECT l.prefilter,
-               CAST(q.vec_id AS BIGINT) AS qid,
-               CAST(COALESCE(h.hits, 0) AS BIGINT) AS hits,
-               {sql_rnd("COALESCE(h.hits, 0) / 5.0", 4)} AS recall_at_5
-        FROM e q CROSS JOIN legs l
-        LEFT JOIN h ON h.qid = q.vec_id AND h.prefilter = l.prefilter
-        WHERE q.vec_id % 50 = 0
-    """,
-    scale=(
-        "Prefilter BAKE-OFF for the retrieval cascade (VERDICT r9 item "
-        "7): the same top-50 -> exact-rerank tail is driven by two "
-        "16-dim projections and audited per query against the exact "
-        "top-5 — (a) randproj16, the data-oblivious Johnson-"
-        "Lindenstrauss control (a deterministic md5-parity Rademacher "
-        "Omega, so both engines derive bit-identical matrices), and "
-        "(b) sketch16, one randomized subspace iteration Y = Xt(X "
-        "Omega) (the Halko-Martinsson-Tropp 2011 range finder) whose "
-        "extra corpus pass adapts the basis to the covariance. On "
-        "this near-flat-spectrum fixture the adaptive sketch buys a "
-        "small but strictly non-negative recall gain over JL at both "
-        "SFs (pinned in tests), while the axis-aligned variance cut "
-        "(sim_cascade_recall_audit) stays competitive — exactly the "
-        "regime theory predicts; true PCA-16 (offline eigh) scores "
-        "0.74 vs 0.60 here, the gap an orthogonalized (QR) sketch "
-        "closes off-SQL. Cost shape at 100 TB: the sketch is two "
-        "corpus passes, each a map-side product against a broadcast "
-        "64x16 matrix with a d*k-row shuffle (never N, never d^2 — "
-        "the emb_pca_power_iter Krylov pattern); both audit legs "
-        "reuse the proven cascade shape (|sample|*N*16 prefilter, "
-        "|sample|*50*64 rerank, sample-bounded exact baseline). The "
-        "sketch basis is rounded at 1e-6 before projection and "
-        "similarities at 1e-4 before every ranking with vec_id "
-        "tie-breaks, so both engines pick identical candidates."
-    ),
-)
-def sim_cascade_sketch_recall_audit(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """JL randproj vs one-iteration covariance sketch, same exact tail."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    x = emb.select("vec_id", F.posexplode(F.col("v")).alias("j", "x"))
-
-    # deterministic Rademacher Omega: sign from md5("j:c") first-hex parity
-    omega = (
-        spark.range(_DIMS)
-        .select(F.col("id").cast("int").alias("j"))
-        .crossJoin(
-            spark.range(_SKETCH_K).select(F.col("id").cast("int").alias("c"))
-        )
-        .select(
-            "j",
-            "c",
-            (
-                F.lit(1)
-                - F.lit(2)
-                * (
-                    F.conv(
-                        F.substring(
-                            F.md5(F.concat_ws(":", F.col("j"), F.col("c"))),
-                            1,
-                            1,
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                    % 2
-                )
-            ).alias("w"),
-        )
-    )
-    # s feeds BOTH the sketch's second pass (y) and the coords union —
-    # cache the diamond so the Ω-projection agg runs once (wave-18/22
-    # cached-diamond pattern; r14 measured 4.28 → 1.97 s warm at
-    # sf0.01 with the cn cache below).
-    s = (
-        x.join(F.broadcast(omega), "j")
-        .groupBy("vec_id", "c")
-        .agg(F.sum(F.col("x") * F.col("w")).alias("p"))
-    ).cache()
-    y = (
-        x.join(s, "vec_id")
-        .groupBy("j", "c")
-        .agg(rnd(F.sum(F.col("x") * F.col("p")), 6).alias("y"))
-    )
-    z = (
-        x.join(F.broadcast(y), "j")
-        .groupBy("vec_id", "c")
-        .agg(F.sum(F.col("x") * F.col("y")).alias("p"))
-    )
-    coords = s.withColumn("prefilter", F.lit("randproj16")).unionByName(
-        z.withColumn("prefilter", F.lit("sketch16"))
-    )
-    # r15 spill-proof reshape (VERDICT r14 item 5 — same fix as
-    # sim_prefilter_quality_report, see wave4.py for the full rationale):
-    # per-vector c-sorted coord arrays + precomputed norms replace the
-    # k-fold (prefilter, c) join and its 2·N·|sample|-group hash
-    # aggregate, which OOM'd a 1 GB heap at ×10. The pair stream is one
-    # in-row HOF dot per (query, vector); the rank window's sort spills.
-    # Cores-proportional fan-out before the pair join (same rationale as
-    # sim_prefilter_quality_report in wave4.py): the partial
-    # WindowGroupLimit sorts the pair stream's pre-exchange partitions;
-    # fanning out the N-row vector side keeps each of those sorts a few
-    # MB at any scale, so the ×10/1 GB harness never hits the spill-merge
-    # buffer blow-up. Only N vector rows move, never pairs. No unpersist
-    # on cna/s: they feed the RETURNED lazy plan; MEMORY_AND_DISK + LRU
-    # bounds a long session (VERDICT r14 item 7).
-    fan = 4 * spark.sparkContext.defaultParallelism
-    cna = (
-        coords.groupBy("prefilter", "vec_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("c", "p"))),
-                lambda st: st["p"],
-            ).alias("arr")
-        )
-        .withColumn("nn", l2norm(F.col("arr")))
-        .repartition(fan, "prefilter", "vec_id")
-    ).cache()
-    cqa = cna.where(F.col("vec_id") % 50 == 0).select(
-        "prefilter",
-        F.col("vec_id").alias("qid"),
-        F.col("arr").alias("qarr"),
-        F.col("nn").alias("nnq"),
-    )
-
-    # the query side is sample-bounded (|sample| x k coords) — it
-    # broadcasts at any corpus size, so the only full-size shuffles
-    # are the sketch groupBys themselves. Top-50 rank runs PER LEG over
-    # pure-numeric rows (prefilter constant within a branch — identical
-    # candidate sets, smaller narrower sorts; see wave4).
-    def leg_cand(tag: str) -> DataFrame:
-        pairs = (
-            cna.where(F.col("prefilter") == tag)
-            .join(
-                F.broadcast(cqa.where(F.col("prefilter") == tag)),
-                "prefilter",
-            )
-            .where(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid",
-                "vec_id",
-                rnd(
-                    guarded_cos(dot("arr", "qarr"), F.col("nnq"), F.col("nn")), 4
-                ).alias("tsim"),
-            )
-        )
-        return (
-            pairs.withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy("qid").orderBy(
-                        F.desc("tsim"), "vec_id"
-                    )
-                ),
-            )
-            .where(F.col("rank") <= 50)
-            .select(F.lit(tag).alias("prefilter"), "qid", "vec_id")
-        )
-
-    cand = leg_cand("randproj16").unionByName(leg_cand("sketch16"))
-    # Norm-hoist (r15, the wave-7 kernel): per-pair cosine = dot/(nq·nv)
-    # with per-row norms computed once — identical arithmetic, one HOF
-    # per pair instead of three.
-    embn = emb.withColumn("nv", l2norm(F.col("v"))).repartition(
-        fan, "vec_id"
-    )
-    eq = embn.select(
-        F.col("vec_id").alias("qid"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("nq"),
-    )
-    rr = (
-        embn.join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(eq), "qid")
-        .select(
-            "prefilter",
-            "qid",
-            "vec_id",
-            rnd(
-                dot(F.col("qv"), F.col("v")) / (F.col("nq") * F.col("nv")),
-                4,
-            ).alias("sim"),
-        )
-    )
-    rtop = (
-        rr.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("prefilter", "qid").orderBy(
-                    F.desc("sim"), "vec_id"
-                )
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("prefilter", "qid", "vec_id")
-    )
-    q = eq.where(F.col("qid") % 50 == 0)
-    ex = embn.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
-        "qid",
-        "vec_id",
-        rnd(
-            dot(F.col("qv"), F.col("v")) / (F.col("nq") * F.col("nv")),
-            4,
-        ).alias("sim"),
-    )
-    etop = (
-        ex.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("qid", "vec_id")
-    )
-    h = (
-        rtop.join(F.broadcast(etop), ["qid", "vec_id"])
-        .groupBy("prefilter", "qid")
-        .agg(F.count("*").alias("hits"))
-    )
-    legs = spark.createDataFrame(
-        [("randproj16",), ("sketch16",)], "prefilter string"
-    )
-    return (
-        q.select("qid")
-        .crossJoin(F.broadcast(legs))
-        .join(F.broadcast(h), ["prefilter", "qid"], "left")
-        .select(
-            "prefilter",
-            "qid",
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            rnd(F.coalesce(F.col("hits"), F.lit(0)) / 5.0, 4).alias(
-                "recall_at_5"
-            ),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

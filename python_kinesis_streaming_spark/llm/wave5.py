@@ -1,11 +1,9 @@
 """Wave-5 pipeline ops (round 11, second batch) — sampling and
-retrieval-diversity compositions.
+index-health compositions.
 
-Four capabilities the registry does not yet cover: a
+Three capabilities the registry does not yet cover: a
 deterministic mergeable uniform sample (hash-rank reservoir — the
-distributed replacement for sequential reservoir sampling), greedy MMR
-diversification of retrieval results (Carbonell & Goldstein 1998, five
-unrolled selection steps), a per-source corpus datasheet (the
+distributed replacement for sequential reservoir sampling), a per-source corpus datasheet (the
 dataset-card summary table), and an IVF list-balance audit (the index
 health check before freezing a coarse quantizer).
 
@@ -20,8 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
+from python_kinesis_streaming_spark.functions.rounding import rnd
 from python_kinesis_streaming_spark.functions.vectors import cosine
+from python_kinesis_streaming_spark.llm.similarity import vectors
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -96,215 +95,6 @@ def sample_reservoir_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "expected"
             ),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# greedy MMR diversification (5 unrolled selection steps)
-# ---------------------------------------------------------------------------
-
-_MMR_SQL_STEPS = ""
-for _t in range(2, 6):
-    _prev = f"pk{_t - 1}"
-    _MMR_SQL_STEPS += f"""
-        m{_t} AS (
-            SELECT ps.qid, ps.a AS vec_id, max(ps.s) AS ms
-            FROM ps JOIN {_prev} p ON p.qid = ps.qid AND p.vec_id = ps.b
-            GROUP BY ps.qid, ps.a
-        ),
-        s{_t} AS (
-            SELECT c.qid, c.vec_id,
-                   floor((0.7 * c.rel - 0.3 * m.ms) * 1000000.0 + 0.505)
-                       / 1000000.0 AS score
-            FROM cand c JOIN m{_t} m
-              ON m.qid = c.qid AND m.vec_id = c.vec_id
-            WHERE NOT EXISTS (
-                SELECT 1 FROM {_prev} p
-                WHERE p.qid = c.qid AND p.vec_id = c.vec_id
-            )
-        ),
-        p{_t} AS (
-            SELECT qid, vec_id, score FROM (
-                SELECT qid, vec_id, score, row_number() OVER (
-                    PARTITION BY qid ORDER BY score DESC, vec_id
-                ) AS rn FROM s{_t}
-            ) WHERE rn = 1
-        ),
-        pk{_t} AS (
-            SELECT qid, vec_id FROM pk{_t - 1}
-            UNION ALL SELECT qid, vec_id FROM p{_t}
-        ),"""
-
-
-@op(
-    "sim_mmr_diversify",
-    oracle=f"""
-        WITH e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        ),
-        relr AS (
-            SELECT q.vec_id AS qid, v.vec_id,
-                   floor(list_cosine_similarity(q.v, v.v)
-                         * 10000.0 + 0.505) / 10000.0 AS rel
-            FROM e q JOIN e v ON v.vec_id <> q.vec_id
-            WHERE q.vec_id % 50 = 0
-        ),
-        cand AS (
-            SELECT qid, vec_id, rel FROM (
-                SELECT qid, vec_id, rel, row_number() OVER (
-                    PARTITION BY qid ORDER BY rel DESC, vec_id
-                ) AS rn FROM relr
-            ) WHERE rn <= 20
-        ),
-        ps AS (
-            SELECT a.qid, a.vec_id AS a, b.vec_id AS b,
-                   floor(list_cosine_similarity(va.v, vb.v)
-                         * 10000.0 + 0.505) / 10000.0 AS s
-            FROM cand a
-            JOIN cand b ON b.qid = a.qid AND b.vec_id <> a.vec_id
-            JOIN e va ON va.vec_id = a.vec_id
-            JOIN e vb ON vb.vec_id = b.vec_id
-        ),
-        p1 AS (
-            SELECT qid, vec_id,
-                   floor((0.7 * rel) * 1000000.0 + 0.505) / 1000000.0
-                       AS score
-            FROM (
-                SELECT qid, vec_id, rel, row_number() OVER (
-                    PARTITION BY qid ORDER BY rel DESC, vec_id
-                ) AS rn FROM cand
-            ) WHERE rn = 1
-        ),
-        pk1 AS (SELECT qid, vec_id FROM p1),{_MMR_SQL_STEPS}
-        allp AS (
-            SELECT 1 AS step, qid, vec_id, score FROM p1
-            UNION ALL SELECT 2, qid, vec_id, score FROM p2
-            UNION ALL SELECT 3, qid, vec_id, score FROM p3
-            UNION ALL SELECT 4, qid, vec_id, score FROM p4
-            UNION ALL SELECT 5, qid, vec_id, score FROM p5
-        )
-        SELECT CAST(step AS INTEGER) AS step,
-               CAST(qid AS BIGINT) AS qid,
-               CAST(vec_id AS BIGINT) AS vec_id,
-               {sql_rnd("score", 6)} AS mmr_score
-        FROM allp
-    """,
-    scale=(
-        "Greedy Maximal-Marginal-Relevance diversification (Carbonell "
-        "& Goldstein 1998), lambda=0.7, five unrolled selection steps "
-        "over the exact top-20 candidates of each sampled query — the "
-        "result-diversity stage a RAG retrieval stack runs after ANN. "
-        "Everything past the first ranking is candidate-bounded: the "
-        "pairwise-similarity table is |sample| x 20 x 19 rows, each "
-        "step is a groupBy + 1-row-per-query argmax window, and the "
-        "picked set is at most 5 rows/query, so at 100 TB the only "
-        "corpus-scale stage is the initial (sample-broadcast) "
-        "relevance scan — the iteration cost is independent of N. "
-        "Relevance and pair similarities round at 1e-4, MMR scores at "
-        "1e-6 BEFORE each argmax with vec_id tie-breaks, so both "
-        "engines trace identical greedy paths. The loop-invariant "
-        "candidate/pair tables and the per-step picked set are "
-        "localCheckpoint'ed (the llm/bpe.py iterative-lineage rule) — "
-        "without it the unrolled plan re-expands them per consumer "
-        "per step (measured 441 static Exchanges; ~4 with). More "
-        "steps = extend the unroll; on a cluster the same shape "
-        "serves k up to ~50 before an applyInPandas per-query kernel "
-        "wins."
-    ),
-)
-def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy MMR top-5 (lambda=0.7) from each query's exact top-20."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    q = emb.where(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    relr = emb.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
-        "qid",
-        "vec_id",
-        rnd(cosine(F.col("qv"), F.col("v")), 4).alias("rel"),
-    )
-    wq = Window.partitionBy("qid")
-    cand = (
-        relr.withColumn(
-            "rn", F.row_number().over(wq.orderBy(F.desc("rel"), "vec_id"))
-        )
-        .where(F.col("rn") <= 20)
-        .select("qid", "vec_id", "rel")
-    )
-    ca = cand.select("qid", F.col("vec_id").alias("a"))
-    cb = cand.select("qid", F.col("vec_id").alias("b"))
-    ea = emb.select(F.col("vec_id").alias("a"), F.col("v").alias("va"))
-    eb = emb.select(F.col("vec_id").alias("b"), F.col("v").alias("vb"))
-    ps = (
-        ca.join(cb, "qid")
-        .where(F.col("a") != F.col("b"))
-        .join(F.broadcast(ea), "a")
-        .join(F.broadcast(eb), "b")
-        .select(
-            "qid",
-            "a",
-            "b",
-            rnd(cosine(F.col("va"), F.col("vb")), 4).alias("s"),
-        )
-    )
-    # iterative-loop lineage rule (llm/bpe.py precedent): checkpoint the
-    # loop-invariant tables once and the picked set per step, or the
-    # unrolled plan re-expands cand/ps per consumer per step — measured
-    # 441 static Exchanges without this, ~4 with it. Both tables are
-    # candidate-bounded (|sample|*20 and |sample|*380 rows), so the
-    # materialization is trivially small at any corpus size.
-    cand = cand.localCheckpoint(eager=True)
-    ps = ps.localCheckpoint(eager=True)
-    p1 = (
-        cand.withColumn(
-            "rn", F.row_number().over(wq.orderBy(F.desc("rel"), "vec_id"))
-        )
-        .where(F.col("rn") == 1)
-        .select(
-            "qid",
-            "vec_id",
-            rnd(F.lit(0.7) * F.col("rel"), 6).alias("score"),
-            F.lit(1).alias("step"),
-        )
-    )
-    picked = p1
-    for t in range(2, 6):
-        pk = picked.select("qid", "vec_id")
-        ms = (
-            ps.join(
-                pk.select("qid", F.col("vec_id").alias("b")), ["qid", "b"]
-            )
-            .groupBy("qid", "a")
-            .agg(F.max("s").alias("ms"))
-            .select("qid", F.col("a").alias("vec_id"), "ms")
-        )
-        st = (
-            cand.join(pk, ["qid", "vec_id"], "left_anti")
-            .join(ms, ["qid", "vec_id"])
-            .select(
-                "qid",
-                "vec_id",
-                rnd(
-                    F.lit(0.7) * F.col("rel") - F.lit(0.3) * F.col("ms"), 6
-                ).alias("score"),
-            )
-        )
-        nxt = (
-            st.withColumn(
-                "rn",
-                F.row_number().over(wq.orderBy(F.desc("score"), "vec_id")),
-            )
-            .where(F.col("rn") == 1)
-            .select("qid", "vec_id", "score", F.lit(t).alias("step"))
-        )
-        picked = picked.unionByName(nxt).localCheckpoint(eager=True)
-    return picked.select(
-        F.col("step").cast("int").alias("step"),
-        F.col("qid").cast("long").alias("qid"),
-        F.col("vec_id").cast("long").alias("vec_id"),
-        rnd(F.col("score"), 6).alias("mmr_score"),
     )
 
 
@@ -464,9 +254,7 @@ def corpus_datasheet_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_ivf_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-list sizes + max/mean imbalance for an 8-seed IVF assign."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = vectors(spark, sf_dir)
     seeds = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("list_id"), F.col("v").alias("sv")
     )

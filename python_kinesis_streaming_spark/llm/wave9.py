@@ -1,14 +1,9 @@
-"""Wave-9 pipeline ops (round 12, third batch) — incremental top-k
-maintenance, dedup/length bias, lexicon scoring and near-dup label
-agreement.
+"""Wave-9 pipeline ops (round 12, third batch) — dedup/length bias,
+lexicon scoring and near-dup label agreement.
 
-Four capabilities rounding out the retrieval/quality story, two of
-them keyed to the retrieved-paper corpus (PAPERS.md):
+Three capabilities rounding out the quality story, one of them keyed
+to the retrieved-paper corpus (PAPERS.md):
 
-- ``sim_topk_incremental_delta``: incremental top-k similarity
-  maintenance (the EDBT 2020 interactive-session pattern) — a frozen
-  base top-k plus a scored DELTA batch merge into the updated top-k
-  without rescoring the base corpus.
 - ``corpus_length_dup_bias``: is duplication concentrated in long or
   short documents? Repeated-span coverage (wave-7's islands) crossed
   with value-bucketed length bands.
@@ -34,107 +29,6 @@ from python_kinesis_streaming_spark.sources.tables import load_table
 from python_kinesis_streaming_spark.llm.wave7 import (
     _semdedup_assigned_pairs,
 )
-
-
-# ---------------------------------------------------------------------------
-# incremental top-k similarity maintenance
-# ---------------------------------------------------------------------------
-
-#: Base/delta split point: vectors below are the "indexed corpus", at or
-#: above are the "newly arrived batch" (top 20% of vec_ids at every SF).
-_DELTA_FRAC_SQL = "(SELECT CAST(max(vec_id) * 0.8 AS BIGINT) FROM embeddings)"
-
-
-@op(
-    "sim_topk_incremental_delta",
-    oracle=f"""
-        WITH cut AS (SELECT {_DELTA_FRAC_SQL} AS c),
-        q AS (
-            SELECT embedding::DOUBLE[] AS qv FROM embeddings
-            WHERE vec_id = 0
-        ),
-        scored AS (
-            SELECT e.vec_id,
-                   CASE WHEN e.vec_id >= cut.c THEN 1 ELSE 0 END
-                       AS from_delta,
-                   floor(list_cosine_similarity(e.embedding::DOUBLE[],
-                                                q.qv)
-                         * 10000.0 + 0.505) / 10000.0 AS sim
-            FROM embeddings e CROSS JOIN q CROSS JOIN cut
-            WHERE e.vec_id <> 0
-        )
-        SELECT CAST(rank AS BIGINT) AS rank, vec_id, sim,
-               CAST(from_delta AS BIGINT) AS from_delta
-        FROM (
-            SELECT *, row_number() OVER (
-                ORDER BY sim DESC, vec_id) AS rank
-            FROM scored
-        ) WHERE rank <= 10
-    """,
-    scale=(
-        "Incremental top-k maintenance (the interactive-session "
-        "pattern, EDBT 2020): when a delta batch arrives, only the "
-        "delta is scored — the base corpus contributes its FROZEN "
-        "top-k (k rows), and the merge is top-k over (k + |delta|) "
-        "rows. Correctness: any base vector outside the old top-k can "
-        "never enter the new one (scores are static), so the merge is "
-        "exact, and the oracle proves it by full rescan. 100 TB "
-        "shape: the base top-k is k rows from the index/cache, the "
-        "delta scan is |delta| rows — per-batch cost is independent "
-        "of corpus size, the property that makes continuous ingestion "
-        "affordable. Sims round at 1e-4 with vec_id tie-breaks."
-    ),
-)
-def sim_topk_incremental_delta(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Top-10 for query vec 0: frozen base top-10 merged with the
-    scored delta batch (vec_id >= 0.8*max) — delta-only scoring."""
-    from pyspark.sql.window import Window
-    from python_kinesis_streaming_spark.functions.vectors import cosine
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cut = emb.agg(
-        (F.max("vec_id") * F.lit(0.8)).cast("long").alias("c")
-    )
-    q = emb.where(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("qv")
-    )
-    scored = (
-        emb.where(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .crossJoin(F.broadcast(cut))
-        .select(
-            "vec_id",
-            F.when(F.col("vec_id") >= F.col("c"), 1).otherwise(0).alias(
-                "from_delta"
-            ),
-            rnd(cosine(F.col("embedding"), F.col("qv")), 4).alias("sim"),
-        )
-    )
-    # the incremental shape: base contributes only its frozen top-10,
-    # the delta is scored in full, and the merge takes top-10 of
-    # (10 + |delta|) rows — orderBy+limit compiles each take to
-    # TakeOrderedAndProject; the rank window then sits ABOVE the Limit
-    # so it only ever numbers 10 rows (bounded global window)
-    base_topk = (
-        scored.where(F.col("from_delta") == 0)
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(10)
-    )
-    delta = scored.where(F.col("from_delta") == 1)
-    top10 = (
-        base_topk.unionByName(delta)
-        .orderBy(F.desc("sim"), F.asc("vec_id"))
-        .limit(10)
-    )
-    wtop = Window.orderBy(F.desc("sim"), F.asc("vec_id"))
-    return top10.withColumn("rank", F.row_number().over(wtop)).select(
-        F.col("rank").cast("long").alias("rank"),
-        "vec_id",
-        "sim",
-        F.col("from_delta").cast("long").alias("from_delta"),
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,9 @@
-"""Advanced composite operators: iterative graph ranking, robust anomaly
-detection, Pareto concentration, point-in-time dimension joins, and
-nearest-event attribution (SURVEY §2.12).
+"""Advanced composite operators: robust anomaly detection, Pareto
+concentration, point-in-time dimension joins, and nearest-event
+attribution (SURVEY §2.12). Iterative graph ranking
+(``graph_pagerank_lite``) lives in ``operators/graph.py``.
 
 Scale notes (100 TB):
-- PageRank runs the standard DataFrame-iteration shape (like
-  dedup_clusters): the rank state is |nodes|-sized, edges are the only big
-  table, and each round is one join + one partial agg. Rounds are
-  persisted, never recursive SQL.
 - The MAD pass is two grouped exact-percentile passes over ONE user_id
   shuffle each; at 100 TB swap `percentile` for `percentile_approx`
   (mergeable sketch) without changing the plan shape.
@@ -34,104 +31,6 @@ from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
 _TS = "CAST(ts AS TIMESTAMP)"
-
-
-@op(
-    "graph_pagerank_lite",
-    oracle="""
-        WITH edges AS (
-            SELECT event_type AS src,
-                   lead(event_type) OVER (PARTITION BY user_id
-                                          ORDER BY CAST(ts AS TIMESTAMP), event_id)
-                       AS dst
-            FROM events
-        ),
-        e AS (
-            SELECT src, dst, count(*) AS n FROM edges
-            WHERE dst IS NOT NULL GROUP BY src, dst
-        ),
-        outw AS (SELECT src, sum(n) AS tot FROM e GROUP BY src),
-        nodes AS (SELECT DISTINCT event_type AS node FROM events),
-        nn AS (SELECT count(*) AS n_nodes FROM nodes),
-        ew AS (
-            SELECT e.src, e.dst, e.n * 1.0 / outw.tot AS wgt
-            FROM e JOIN outw ON outw.src = e.src
-        ),
-        r0 AS (SELECT node, 1.0 / (SELECT n_nodes FROM nn) AS rank FROM nodes),
-        r1 AS (
-            SELECT n.node,
-                   0.15 / (SELECT n_nodes FROM nn) + 0.85 * coalesce(c.c, 0) AS rank
-            FROM nodes n LEFT JOIN (
-                SELECT ew.dst, sum(r0.rank * ew.wgt) AS c
-                FROM ew JOIN r0 ON r0.node = ew.src GROUP BY ew.dst
-            ) c ON c.dst = n.node
-        ),
-        r2 AS (
-            SELECT n.node,
-                   0.15 / (SELECT n_nodes FROM nn) + 0.85 * coalesce(c.c, 0) AS rank
-            FROM nodes n LEFT JOIN (
-                SELECT ew.dst, sum(r1.rank * ew.wgt) AS c
-                FROM ew JOIN r1 ON r1.node = ew.src GROUP BY ew.dst
-            ) c ON c.dst = n.node
-        ),
-        r3 AS (
-            SELECT n.node,
-                   0.15 / (SELECT n_nodes FROM nn) + 0.85 * coalesce(c.c, 0) AS rank
-            FROM nodes n LEFT JOIN (
-                SELECT ew.dst, sum(r2.rank * ew.wgt) AS c
-                FROM ew JOIN r2 ON r2.node = ew.src GROUP BY ew.dst
-            ) c ON c.dst = n.node
-        )
-        SELECT node, floor(rank * 1000000.0 + 0.505) / 1000000.0 AS rank
-        FROM r3
-    """,
-    scale=(
-        "Weighted PageRank, 3 fixed rounds over the event-type transition "
-        "graph. The iterative-DataFrame shape: per round one broadcast join "
-        "of the tiny rank state against the edge list + one partial agg; "
-        "edge list is computed ONCE. At web scale the same loop runs with "
-        "checkpointed rank state and the edge table pre-bucketed on src — "
-        "round cost is a single co-partitioned join. Ranks are summed in "
-        "double; only the emitted value is rounded (6 dp, eps-floor), so "
-        "sub-ulp association differences between engines cannot flip it."
-    ),
-)
-def graph_pagerank_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-iteration weighted PageRank over the event_type transition graph."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    e = (
-        ev.select("event_type", F.lead("event_type").over(w).alias("dst"))
-        .where(F.col("dst").isNotNull())
-        .groupBy(F.col("event_type").alias("src"), "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    outw = e.groupBy("src").agg(F.sum("n").alias("tot"))
-    nodes = ev.select(F.col("event_type").alias("node")).distinct()
-    n_nodes = nodes.count()
-    # weight = n / out_total, fixed across rounds: precompute once.
-    ew = e.join(outw, "src").select(
-        "src", "dst", (F.col("n") / F.col("tot")).alias("wgt")
-    )
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
-    for _ in range(3):
-        contrib = (
-            F.broadcast(ranks)
-            .join(ew, F.col("node") == F.col("src"))
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("wgt")).alias("c"))
-        )
-        ranks = (
-            nodes.join(F.broadcast(contrib), F.col("node") == F.col("dst"), "left")
-            .select(
-                "node",
-                (
-                    F.lit(0.15 / n_nodes)
-                    + F.lit(0.85) * F.coalesce(F.col("c"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-    return ranks.select("node", rnd(F.col("rank"), 6).alias("rank"))
 
 
 @op(

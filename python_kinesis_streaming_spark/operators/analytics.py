@@ -1385,117 +1385,6 @@ def agg_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stat.crossJoin(F.broadcast(dof))
 
 
-def triangle_stats(edges: DataFrame, u_col: str = "u", v_col: str = "v") -> DataFrame:
-    """Edge/wedge/triangle counts + clustering coefficient of an undirected
-    graph. ``edges`` must hold each undirected edge once with u < v;
-    triangles enumerate once via the u<v<w ordering. See
-    ``graph_triangle_count``'s scale note for the degree-ordered-orientation
-    refinement at web-graph scale."""
-    e = edges.select(F.col(u_col).alias("u"), F.col(v_col).alias("v")).persist()
-    deg = (
-        e.select(F.col("u").alias("n"))
-        .unionAll(e.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    wedges = deg.agg(
-        F.sum(F.col("d") * (F.col("d") - 1) / F.lit(2))
-        .cast("long")
-        .alias("n_wedges")
-    )
-    e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.v") == F.col("e2.u"))
-        .join(
-            e3,
-            (F.col("e3.u") == F.col("e1.u"))
-            & (F.col("e3.v") == F.col("e2.v")),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    )
-    n_edges = e.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
-    return (
-        n_edges.crossJoin(F.broadcast(wedges))
-        .crossJoin(F.broadcast(tri))
-        .select(
-            "n_edges",
-            "n_wedges",
-            "n_triangles",
-            (F.lit(3.0) * F.col("n_triangles") / F.col("n_wedges")).alias(
-                "clustering_coeff"
-            ),
-        )
-    )
-
-
-@op(
-    "graph_triangle_count",
-    oracle=f"""
-        WITH pairs AS (
-            SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-        ),
-        e AS (
-            SELECT DISTINCT a.l_suppkey AS u, b.l_suppkey AS v
-            FROM pairs a
-            JOIN pairs b ON a.l_orderkey = b.l_orderkey
-                        AND a.l_suppkey < b.l_suppkey
-        ),
-        deg AS (
-            SELECT n, count(*) AS d
-            FROM (SELECT u AS n FROM e UNION ALL SELECT v AS n FROM e)
-            GROUP BY n
-        ),
-        tri AS (
-            SELECT count(*) AS t
-            FROM e e1
-            JOIN e e2 ON e1.v = e2.u
-            JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v
-        )
-        SELECT CAST((SELECT count(*) FROM e) AS BIGINT) AS n_edges,
-               CAST((SELECT sum(d * (d - 1) / 2) FROM deg) AS BIGINT)
-                   AS n_wedges,
-               CAST((SELECT t FROM tri) AS BIGINT) AS n_triangles,
-               {sql_rnd("(SELECT 3.0 * t FROM tri)"
-                        " / (SELECT sum(d * (d - 1) / 2) FROM deg)", 6)}
-                   AS clustering_coeff
-    """,
-    scale=(
-        "Triangle counting + global clustering coefficient on the "
-        "co-fulfilment graph (suppliers sharing an order). Edges come from "
-        "a per-order self-join of the DISTINCT (order, supplier) relation "
-        "— bounded by suppliers-per-order (~4), never all-pairs. The "
-        "triangle join e(u,v)-e(v,w)-e(u,w) enumerates each triangle once "
-        "via u<v<w ordering. At 100 TB the refinement is degree-ordered "
-        "orientation (point each edge at the higher-(degree,id) endpoint) "
-        "so every wedge is enumerated at its lowest-degree apex — "
-        "O(|E|^1.5) worst case — plus per-node degree caps for the "
-        "celebrity-vertex skew the same way join_skew_salted handles keys."
-    ),
-)
-def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edge, wedge, and triangle counts of the supplier co-order graph."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pairs = li.select("l_orderkey", "l_suppkey").distinct()
-    a, b = pairs.alias("a"), pairs.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_suppkey") < F.col("b.l_suppkey")),
-        )
-        .select(
-            F.col("a.l_suppkey").alias("u"), F.col("b.l_suppkey").alias("v")
-        )
-        .distinct()
-    )
-    return triangle_stats(edges).select(
-        "n_edges",
-        "n_wedges",
-        "n_triangles",
-        rnd(F.col("clustering_coeff"), 6).alias("clustering_coeff"),
-    )
-
-
 @op(
     "agg_benford_law",
     oracle=f"""

@@ -766,7 +766,7 @@ def dq_row_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
         WITH pk AS (
             -- orders PK: lineitem has NO unique key in this fixture
-            -- (the _PK_COLUMNS inventory in operators/features.py
+            -- (the _PK_COLUMNS inventory in operators/data_quality.py
             -- deliberately excludes it)
             SELECT CAST(COALESCE(sum(cnt - 1), 0) AS BIGINT) AS v FROM (
                 SELECT count(*) AS cnt FROM orders GROUP BY o_orderkey

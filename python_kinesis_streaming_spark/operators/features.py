@@ -1,7 +1,7 @@
 """The feature-engineering family: every ``feat_*`` operator (encoders,
-scalers and binning, point-in-time and velocity features), plus
-``graph_degree_stats`` until the graph family gets its own module. The
-dataset health probes live in ``operators/data_quality.py``.
+scalers and binning, point-in-time and velocity features). The dataset
+health probes live in ``operators/data_quality.py`` and the graph ops in
+``operators/graph.py``.
 
 Scale notes (100 TB):
 - Every encoder here is the two-pass shape: a tiny aggregate (|categories|,
@@ -232,35 +232,6 @@ def feat_hashing_trick(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").alias("sum_value_cents"),
         )
     )
-
-
-@op(
-    "graph_degree_stats",
-    oracle="""
-        WITH deg AS (
-            SELECT user_id,
-                   CAST(count(DISTINCT (event_type, CAST(CAST(ts AS TIMESTAMP)
-                        AS DATE))) AS BIGINT) AS degree
-            FROM events GROUP BY user_id
-        )
-        SELECT degree, CAST(count(*) AS BIGINT) AS n_users
-        FROM deg GROUP BY degree
-    """,
-    scale=(
-        "Bipartite degree distribution as two chained partial aggs: the "
-        "(user, type, day) dedup collapses map-side before the user "
-        "shuffle, the histogram shuffle carries |distinct degrees| rows. "
-        "The same two-level shape computes any power-law degree audit at "
-        "100 TB — swap the edge definition, keep the plan."
-    ),
-)
-def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree histogram of the user ↔ (event_type, day) bipartite graph."""
-    ev = load_table(spark, sf_dir, "events")
-    deg = ev.groupBy("user_id").agg(
-        F.countDistinct("event_type", F.to_date("ts")).alias("degree")
-    )
-    return deg.groupBy("degree").agg(F.count("*").alias("n_users"))
 
 
 @op(

@@ -4160,115 +4160,3 @@ def txn_exactly_once_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "last_batch"
         ),
     )
-
-
-@op(
-    "sim_ann_ivf",
-    oracle="""
-        WITH c AS (
-            SELECT j.j,
-                   list_transform(
-                       generate_series(0, 63),
-                       d -> (((j.j * 37 + d * 11) % 19) - 9) / 9.0
-                   ) AS cv
-            FROM generate_series(0, 15) j(j)
-        ), e AS (
-            SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-        ), dist AS (
-            SELECT e.vec_id, c.j,
-                   floor(list_sum(list_transform(
-                       generate_series(1, 64),
-                       i -> (e.v[i] - c.cv[i]) * (e.v[i] - c.cv[i])
-                   )) * 1000000.0 + 0.505) / 1000000.0 AS d2
-            FROM e, c
-        ), ranked AS (
-            SELECT vec_id, j,
-                   row_number() OVER (
-                       PARTITION BY vec_id ORDER BY d2, j
-                   ) AS rk
-            FROM dist
-        ), assign AS (
-            SELECT vec_id, j AS bucket FROM ranked WHERE rk = 1
-        ), probes AS (
-            SELECT vec_id AS qid, j AS bucket FROM ranked
-            WHERE rk <= 2 AND vec_id % 50 = 0
-        ), cand AS (
-            SELECT p.qid, a.vec_id,
-                   floor(list_cosine_similarity(eq.v, ev.v)
-                         * 10000.0 + 0.505) / 10000.0 AS sim
-            FROM probes p
-            JOIN assign a ON a.bucket = p.bucket
-            JOIN e eq ON eq.vec_id = p.qid
-            JOIN e ev ON ev.vec_id = a.vec_id
-            WHERE a.vec_id <> p.qid
-        ), topk AS (
-            SELECT qid, vec_id, sim,
-                   row_number() OVER (
-                       PARTITION BY qid ORDER BY sim DESC, vec_id
-                   ) AS rank
-            FROM cand
-        )
-        SELECT CAST(qid AS BIGINT) AS qid,
-               CAST(rank AS INTEGER) AS rank,
-               CAST(vec_id AS BIGINT) AS vec_id,
-               sim
-        FROM topk WHERE rank <= 5
-    """,
-    scale=(
-        "IVF-style ANN, the coarse-quantizer scale path the LSH op's "
-        "docstring promises: 16 deterministic hyper-grid centroids, "
-        "JVM-only assignment (argmin over a literal centroid array — "
-        "map-side, zero shuffle), queries probe their 2 nearest lists "
-        "and scan ONLY those candidates. At scale the centroid count "
-        "grows ~sqrt(N) and assignment stays a broadcast argmin; the "
-        "probe join shuffles candidates, not the corpus. Distances "
-        "are rounded at 1e-6 on BOTH sides before the argmin so a "
-        "ULP difference between engines cannot flip a bucket."
-    ),
-)
-def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Formula-centroid IVF: assign → probe 2 lists → top-5 cosine."""
-    from python_kinesis_streaming_spark.functions.rounding import rnd
-    from python_kinesis_streaming_spark.functions.vectors import cosine
-    from python_kinesis_streaming_spark.llm.similarity import ivf_centroid_dists
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    tagged = emb.withColumn("ds", ivf_centroid_dists(F.col("v")))
-    assigned = tagged.select(
-        "vec_id", "v", F.array_min("ds").getField("j").alias("bucket")
-    )
-    probes = (
-        tagged.where(F.col("vec_id") % 50 == 0)
-        .select(
-            F.col("vec_id").alias("qid"),
-            F.col("v").alias("qv"),
-            F.explode(
-                F.slice(F.array_sort("ds"), 1, 2).getField("j")
-            ).alias("bucket"),
-        )
-    )
-    cand = (
-        probes.join(assigned, "bucket")
-        .where(F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid",
-            "vec_id",
-            rnd(cosine(F.col("qv"), F.col("v")), 4).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("vec_id")
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select(
-            F.col("qid").cast("long"),
-            F.col("rank").cast("int"),
-            F.col("vec_id").cast("long"),
-            "sim",
-        )
-    )

@@ -66,17 +66,30 @@ EXECUTING_OPS = {
     "txn_exactly_once_agg",
 }
 
-PROMOTIONS_MODULE = "python_kinesis_streaming_spark.promotions"
+#: the lazy promotion ops: Arrow-seam kernels whose returned plan IS the
+#: op, so the corpus gates it (shuffle budget 4 wherever the op is defined;
+#: census at r8: the codec/transport parity ops plan 0, the text/web ops
+#: 0-4)
+PROMOTED_LAZY_OPS = (
+    "audio_resample_parity", "audio_standardize_roundtrip",
+    "eventstream_framing_parity", "gopher_quality_parity",
+    "html_extract_parity", "image_transform_pipeline_checksum",
+    "kpl_roundtrip_parity", "media_aiff_au_mulaw_stats",
+    "media_au_roundtrip_stats", "media_avi_demux_index",
+    "media_bmp_decode_stats", "media_exif_orientation_parity",
+    "media_flac_roundtrip_stats", "media_gif_roundtrip_stats",
+    "media_image_resize_checksum", "media_jpeg_tolerance_audit",
+    "media_mkv_demux_parity", "media_mp4_demux_parity",
+    "media_png_roundtrip_stats", "media_tiff_decode_stats",
+    "media_wav_roundtrip_stats", "mpegts_psi_parity",
+    "pack_best_fit_audit", "pack_chunk_histogram", "pack_concat_audit",
+    "robots_verdict_parity", "sim_ann_ivf", "span_dedup_parity",
+    "subtitles_align_parity", "urls_normalize_parity",
+    "video_frames_seam_stats",
+)
 
-
-def promotion_names() -> list[str]:
-    """The ops ``promotions.py`` registers, in ``queries()`` order."""
-    from python_kinesis_streaming_spark.registry import all_queries
-
-    return [
-        n for n, fn in all_queries().items()
-        if fn.__module__ == PROMOTIONS_MODULE
-    ]
+#: the 51 ops of the r6-r8 promotion (PROMOTION.md), by name
+PROMOTED_OPS = EXECUTING_OPS | set(PROMOTED_LAZY_OPS)
 
 
 def executing_on_build() -> set[str]:
@@ -106,5 +119,5 @@ def scratch_or_stateful() -> set[str]:
     )
     out = {n for n in names if n.startswith(prefixes)}
     out |= {"join_bucketed", "join_dpp_partition_pruned"} & names
-    out |= set(promotion_names())
+    out |= PROMOTED_OPS & names
     return out

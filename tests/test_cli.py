@@ -8,7 +8,14 @@ from python_kinesis_streaming_spark.__main__ import main
 def test_cli_list_filters(capsys):
     assert main(["list", "--filter", "dedup_exact"]) == 0
     out = capsys.readouterr().out
-    assert "dedup_exact\tsql-oracled" in out
+    assert "dedup_exact\tsql-oracled\tllm.dedup" in out
+
+
+def test_cli_list_names_each_ops_module(capsys):
+    assert main(["list", "--filter", "sim_"]) == 0
+    rows = [line.split("\t") for line in capsys.readouterr().out.splitlines()]
+    assert len(rows) == 25
+    assert {module for _name, _mark, module in rows} == {"llm.similarity"}
 
 
 def test_cli_oracle_prints_sql(capsys):

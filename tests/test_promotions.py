@@ -1,8 +1,9 @@
 """Pins for the promotion ops (PROMOTION.md).
 
 Promotion ops are the r6-r8 library surface in the driver contract
-shape, registered with ``@op`` in ``promotions.py`` like every other
-operator module. Their twin gates run registry-wide in
+shape, named in ``tests/corpus_sets.py::PROMOTED_OPS`` and registered
+with ``@op`` like every other op (by ``promotions.py``, except
+``sim_ann_ivf``, which lives with its family in ``llm/similarity.py``). Their twin gates run registry-wide in
 tests/test_oracle_parity.py; the registry total is pinned by
 test_correctness_canary::test_claude_md_registry_count. This file pins
 what is specific to them: every promotion carries an oracle and scale
@@ -14,11 +15,11 @@ from __future__ import annotations
 import os
 
 from python_kinesis_streaming_spark.registry import get_op
-from tests.corpus_sets import promotion_names
+from tests.corpus_sets import PROMOTED_OPS
 
 
 def test_promotions_all_have_oracles_and_scale_notes():
-    for name in promotion_names():
+    for name in sorted(PROMOTED_OPS):
         spec = get_op(name)
         assert spec.oracle, f"{name}: missing oracle"
         assert spec.scale_notes, f"{name}: missing scale notes"
@@ -29,7 +30,7 @@ def test_promotion_names_match_promotion_md():
         os.path.join(os.path.dirname(os.path.dirname(__file__)),
                      "PROMOTION.md")
     ).read()
-    missing = [n for n in promotion_names() if n not in md]
+    missing = [n for n in sorted(PROMOTED_OPS) if n not in md]
     assert not missing, f"ops not documented in PROMOTION.md: {missing}"
 
 

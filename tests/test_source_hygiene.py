@@ -1,7 +1,8 @@
 """Source hygiene read from the AST alone (no Spark): test modules define
 each ``test_*`` name once, package and test modules import nothing they
-never use, the ``ts``, ``dq`` and ``feat`` op families each live in one
-module, and the cents and micro-score freezes are each written once."""
+never use, the ``ts``, ``dq``, ``feat``, ``sim`` and ``graph`` op families
+each live in one module, and the cents and micro-score freezes and the
+``(sim DESC, vec_id)`` ranking are each written once."""
 
 from __future__ import annotations
 
@@ -75,12 +76,14 @@ FAMILY_HOMES = {
     "ts_": PKG / "operators" / "timeseries.py",
     "dq_": PKG / "operators" / "data_quality.py",
     "feat_": PKG / "operators" / "features.py",
+    "sim_": PKG / "llm" / "similarity.py",
+    "graph_": PKG / "operators" / "graph.py",
 }
 
 
 def test_op_families_are_defined_in_their_home_module():
-    """Every ``@op("ts_...")``, ``@op("dq_...")`` and ``@op("feat_...")``
-    is registered by its family's module (``FAMILY_HOMES``)."""
+    """Every op whose name starts with a ``FAMILY_HOMES`` prefix is
+    registered by that family's module."""
     stray = [
         f"{path.relative_to(ROOT)}: {name}"
         for path in sorted(PKG.glob("**/*.py"))
@@ -119,3 +122,25 @@ def test_micro_score_freeze_is_written_once():
         if (n := "".join(path.read_text().split()).count(needle))
     }
     assert copies == {"python_kinesis_streaming_spark/operators/data_quality.py": 1}
+
+
+def test_sim_ranking_is_written_once():
+    """Spark code ranks by ``(sim DESC, vec_id)`` per query through
+    ``similarity.top_k``. Two rankings keep their own window because
+    ``top_k`` would change their plan: ``sim_rank_quality_ndcg`` names its
+    rank ``erank`` and ``emb_quantization_recall`` ranks per ``q_id``."""
+    needle = '.orderBy(F.desc("sim"),"vec_id")'
+    copies = {
+        f"{path.relative_to(PKG)}::{node.name}": n
+        for path in sorted(PKG.glob("**/*.py"))
+        for lines in [path.read_text().splitlines()]
+        for node in ast.parse("\n".join(lines)).body
+        if isinstance(node, ast.FunctionDef)
+        for body in ["".join(lines[node.lineno - 1 : node.end_lineno])]
+        if (n := "".join(body.split()).count(needle))
+    }
+    assert copies == {
+        "llm/similarity.py::top_k": 1,
+        "llm/similarity.py::emb_quantization_recall": 1,
+        "llm/similarity.py::sim_rank_quality_ndcg": 1,
+    }
